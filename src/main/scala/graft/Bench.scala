@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: runs the representative query subset at the target
   * scale factor and prints one JSON line for the driver. Results are fully
   * materialized through the noop sink so the measurement covers the whole
@@ -253,25 +251,22 @@ object Bench {
     "q_docs_bootstrap_ci",
     "q_events_assortativity")
 
+  /** Session confs of the timed sweep, on top of [[Graft.session]]'s. */
+  val sessionConf: Seq[(String, String)] = Seq(
+    // memory-sink Complete-mode results collect to the driver; the
+    // sf10 session table overflows the 1g default (oracle surface
+    // only — production streams write to real sinks, never memory)
+    "spark.driver.maxResultSize" -> "8g",
+    // test files are ~10 MB; split scans so all cores participate
+    // (at production scale the 128 MB default is correct)
+    "spark.sql.files.maxPartitionBytes" -> "1048576",
+    "spark.sql.files.openCostInBytes" -> "131072",
+    "spark.ui.enabled" -> "false")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // memory-sink Complete-mode results collect to the driver; the
-      // sf10 session table overflows the 1g default (oracle surface
-      // only — production streams write to real sinks, never memory)
-      .config("spark.driver.maxResultSize", "8g")
-      // test files are ~10 MB; split scans so all cores participate
-      // (at production scale the 128 MB default is correct)
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt, sessionConf)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/parquet-footer startup shouldn't be
     // attributed to the first measured query

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
+import graft.sources.ProtocolRegistry.pubkey
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory each
   * query key maps to. Every oracle is ANSI-ish SQL in DuckDB dialect over
@@ -22,7 +23,8 @@ object SparkEntry {
     * OHLC candles joined map-side with per-type counters.
     */
   def entry(spark: SparkSession): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
+    // entry() is handed a session that graft did not build
+    Graft.attach(spark)
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.events(spark, dir)
     // wire round trip: encode -> raw payloads -> columnar decode
@@ -95,7 +97,6 @@ object SparkEntry {
     // same semantics through the custom whole-operator physical plan
     // (AsOfMergeExec: streaming merge, O(1) state per key)
     "q_events_asof_merge" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val ev = Tables.events(s, d)
         .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
           col("event_id"), col("event_type"))
@@ -745,8 +746,6 @@ object SparkEntry {
     "q_events_pumpfun_real" -> ((s, d) => {
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val trades = ProtocolRegistry.encode(
         ev.filter(col("event_type").isin("purchase", "view")).select(
           expr("cast(round(value * 100, 0) as bigint)").as("sol_amount"),
@@ -767,18 +766,19 @@ object SparkEntry {
           (col("event_id") * 23).as("total_claimed_tokens"),
           (col("event_id") * 29).as("current_sol_volume"),
           expr("unix_micros(ts) div 1000000").as("last_update_timestamp"),
-          mk("user_id % 100").as("mint"), mk("user_id").as("user"),
-          mk("1").as("fee_recipient"), mk("user_id % 50").as("creator")),
+          pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
+          pubkey("1").as("fee_recipient"),
+          pubkey("user_id % 50").as("creator")),
         RealLayouts.PumpFun.layouts(0))
       val migrates = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
-          mk("user_id").as("user"), mk("user_id % 100").as("mint"),
+          pubkey("user_id").as("user"), pubkey("user_id % 100").as("mint"),
           (col("event_id") * 2).as("mint_amount"),
           expr("cast(round(value * 100, 0) as bigint)").as("sol_amount"),
           (col("event_id") % 1000).as("pool_migration_fee"),
-          mk("3").as("bonding_curve"),
+          pubkey("3").as("bonding_curve"),
           expr("unix_micros(ts) div 1000000").as("timestamp"),
-          mk("4").as("pool")),
+          pubkey("4").as("pool")),
         RealLayouts.PumpFun.layouts(1))
       val junk = ev.filter(col("event_type") === "error")
         .select(expr(
@@ -807,8 +807,6 @@ object SparkEntry {
       // logs carry the SAME anchor TradeEvent hash — program id routes
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val pf = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
           expr("cast(round(value * 100, 0) as bigint)").as("sol_amount"),
@@ -825,13 +823,13 @@ object SparkEntry {
           lit(0L).as("total_claimed_tokens"),
           lit(0L).as("current_sol_volume"),
           lit(0L).as("last_update_timestamp"),
-          mk("user_id % 100").as("mint"), mk("user_id").as("user"),
-          mk("1").as("fee_recipient"), mk("2").as("creator")),
+          pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
+          pubkey("1").as("fee_recipient"), pubkey("2").as("creator")),
         RealLayouts.PumpFun.layouts(0))
         .select(col("payload"), lit(RealLayouts.PumpFunProgram).as("program_id"))
       val bonk = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "view").select(
-          mk("user_id % 100").as("pool_state"),
+          pubkey("user_id % 100").as("pool_state"),
           (col("event_id") * 19).as("total_base_sell"),
           (col("event_id") * 3).as("virtual_base"),
           (col("event_id") * 5).as("virtual_quote"),
@@ -852,8 +850,9 @@ object SparkEntry {
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("program_id"))
       val creates = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
-          mk("user_id % 100").as("pool_state"), mk("user_id").as("creator"),
-          mk("5").as("config"), (col("user_id") % 10).as("base_decimals"),
+          pubkey("user_id % 100").as("pool_state"),
+          pubkey("user_id").as("creator"),
+          pubkey("5").as("config"), (col("user_id") % 10).as("base_decimals"),
           concat(lit("tok_"), col("event_id")).as("name")),
         RealLayouts.Bonk.layouts(1))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("program_id"))
@@ -871,17 +870,15 @@ object SparkEntry {
     "q_events_pumpswap_real" -> ((s, d) => {
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val common = Seq(
         expr("unix_micros(ts) div 1000000").as("timestamp"),
         (col("event_id") * 2).as("user_base_token_reserves"),
         (col("event_id") * 3).as("user_quote_token_reserves"),
         (col("event_id") * 5).as("pool_base_token_reserves"),
         (col("event_id") * 7).as("pool_quote_token_reserves"),
-        mk("user_id % 100").as("pool"), mk("user_id").as("user"),
-        mk("11").as("user_base_token_account"),
-        mk("12").as("user_quote_token_account"))
+        pubkey("user_id % 100").as("pool"), pubkey("user_id").as("user"),
+        pubkey("11").as("user_base_token_account"),
+        pubkey("12").as("user_quote_token_account"))
       val buys = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(common ++ Seq(
           expr("cast(round(value * 100, 0) as bigint)").as("base_amount_out"),
@@ -893,9 +890,9 @@ object SparkEntry {
           (col("event_id") % 500).as("protocol_fee"),
           (col("event_id") * 4 + 1).as("quote_amount_in_with_lp_fee"),
           (col("event_id") * 4 + 2).as("user_quote_amount_in"),
-          mk("13").as("protocol_fee_recipient"),
-          mk("14").as("protocol_fee_recipient_token_account"),
-          mk("user_id % 50").as("coin_creator"),
+          pubkey("13").as("protocol_fee_recipient"),
+          pubkey("14").as("protocol_fee_recipient_token_account"),
+          pubkey("user_id % 50").as("coin_creator"),
           lit(30L).as("coin_creator_fee_basis_points"),
           (col("event_id") % 300).as("coin_creator_fee"),
           (col("event_id") % 2).as("track_volume"),
@@ -916,9 +913,9 @@ object SparkEntry {
           (col("event_id") % 500).as("protocol_fee"),
           (col("event_id") * 4 + 1).as("quote_amount_out_without_lp_fee"),
           (col("event_id") * 4 + 2).as("user_quote_amount_out"),
-          mk("13").as("protocol_fee_recipient"),
-          mk("14").as("protocol_fee_recipient_token_account"),
-          mk("user_id % 50").as("coin_creator"),
+          pubkey("13").as("protocol_fee_recipient"),
+          pubkey("14").as("protocol_fee_recipient_token_account"),
+          pubkey("user_id % 50").as("coin_creator"),
           lit(30L).as("coin_creator_fee_basis_points"),
           (col("event_id") % 300).as("coin_creator_fee")): _*),
         RealLayouts.PumpSwap.layouts(1))
@@ -931,7 +928,7 @@ object SparkEntry {
           (col("event_id") * 6).as("base_amount_in"),
           (col("event_id") * 8).as("quote_amount_in"),
           (col("event_id") * 9).as("lp_mint_supply"),
-          mk("15").as("user_pool_token_account")): _*),
+          pubkey("15").as("user_pool_token_account")): _*),
         RealLayouts.PumpSwap.layouts(3))
       val wdrs = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(common ++ Seq(
@@ -942,7 +939,7 @@ object SparkEntry {
           (col("event_id") * 6).as("base_amount_out"),
           (col("event_id") * 8).as("quote_amount_out"),
           (col("event_id") * 9).as("lp_mint_supply"),
-          mk("15").as("user_pool_token_account")): _*),
+          pubkey("15").as("user_pool_token_account")): _*),
         RealLayouts.PumpSwap.layouts(4))
       val frames = Seq(buys, sells, deps, wdrs).map(_.select("payload"))
         .reduce(_ union _)
@@ -1098,11 +1095,9 @@ object SparkEntry {
     "q_events_damm_real" -> ((s, d) => {
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val swaps = ProtocolRegistry.encode(
         ev.filter(col("event_type").isin("purchase", "view")).select(
-          mk("user_id % 100").as("pool"),
+          pubkey("user_id % 100").as("pool"),
           (col("event_id") % 2).as("trade_direction"),
           (col("event_id") % 3).as("collect_fee_mode"),
           (col("event_id") % 5 === 0).cast("long").as("has_referral"),
@@ -1188,8 +1183,6 @@ object SparkEntry {
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val curves = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
           (col("event_id") * 11).as("virtual_token_reserves"),
@@ -1197,18 +1190,20 @@ object SparkEntry {
           (col("event_id") * 13).as("real_token_reserves"),
           (col("event_id") * 17).as("real_sol_reserves"),
           (col("event_id") * 19).as("token_total_supply"),
-          (col("event_id") % 2).as("complete"), mk("user_id").as("creator"),
+          (col("event_id") % 2).as("complete"), pubkey("user_id").as("creator"),
           lit(0L).as("is_mayhem_mode")),
         RealLayouts.PumpFunAccounts.layouts(0))
         .select(col("payload"), lit(RealLayouts.PumpFunProgram).as("owner"))
       val pools = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "click").select(
           (col("user_id") % 256).as("pool_bump"),
-          (col("event_id") % 65536).as("index"), mk("user_id").as("creator"),
-          mk("21").as("base_mint"), mk("22").as("quote_mint"),
-          mk("23").as("lp_mint"), mk("24").as("pool_base_token_account"),
-          mk("25").as("pool_quote_token_account"), cents.as("lp_supply"),
-          mk("user_id % 50").as("coin_creator"),
+          (col("event_id") % 65536).as("index"),
+          pubkey("user_id").as("creator"),
+          pubkey("21").as("base_mint"), pubkey("22").as("quote_mint"),
+          pubkey("23").as("lp_mint"),
+          pubkey("24").as("pool_base_token_account"),
+          pubkey("25").as("pool_quote_token_account"), cents.as("lp_supply"),
+          pubkey("user_id % 50").as("coin_creator"),
           lit(0L).as("is_mayhem_mode")),
         RealLayouts.PumpSwapAccounts.layouts(0))
         .select(col("payload"), lit(RealLayouts.PumpSwapProgram).as("owner"))
@@ -1234,9 +1229,9 @@ object SparkEntry {
           (col("event_id") % 11).as("unlock_period"),
           (col("event_id") % 13).as("start_time"),
           (col("event_id") % 17).as("allocated_share_amount"),
-          mk("31").as("global_config"), mk("32").as("platform_config"),
-          mk("33").as("base_mint"), mk("34").as("quote_mint"),
-          mk("35").as("base_vault"), mk("36").as("quote_vault")),
+          pubkey("31").as("global_config"), pubkey("32").as("platform_config"),
+          pubkey("33").as("base_mint"), pubkey("34").as("quote_mint"),
+          pubkey("35").as("base_vault"), pubkey("36").as("quote_vault")),
         RealLayouts.BonkAccounts.layouts(0))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("owner"))
       val dispatched = ProtocolRegistry.dispatch(
@@ -1398,32 +1393,31 @@ object SparkEntry {
       // platform name (trailing str)
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       def lay(p: ProtocolRegistry.ProtocolSpec, k: String) =
         p.layouts.find(_.kind == k).get
       val pfGlobal = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
-          lit(1L).as("initialized"), mk("1").as("authority"),
-          mk("2").as("fee_recipient"),
+          lit(1L).as("initialized"), pubkey("1").as("authority"),
+          pubkey("2").as("fee_recipient"),
           (col("event_id") * 2).as("initial_virtual_token_reserves"),
           (col("event_id") * 3).as("initial_virtual_sol_reserves"),
           (col("event_id") * 5).as("initial_real_token_reserves"),
           (col("event_id") * 7).as("token_total_supply"),
-          lit(100L).as("fee_basis_points"), mk("3").as("withdraw_authority"),
+          lit(100L).as("fee_basis_points"),
+          pubkey("3").as("withdraw_authority"),
           (col("event_id") % 2).as("enable_migrate"),
           (col("event_id") % 1000).as("pool_migration_fee"),
           lit(30L).as("creator_fee_basis_points"),
-          mk("4").as("set_creator_authority")),
+          pubkey("4").as("set_creator_authority")),
         lay(RealLayouts.PumpFunGlobalAccount, "pf_global"))
         .select(col("payload"), lit(RealLayouts.PumpFunProgram).as("owner"))
       val psCfg = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "view").select(
-          mk("5").as("admin"), lit(25L).as("lp_fee_basis_points"),
+          pubkey("5").as("admin"), lit(25L).as("lp_fee_basis_points"),
           (col("event_id") % 500).as("protocol_fee_basis_points"),
           (col("user_id") % 4).as("disable_flags"),
           lit(30L).as("coin_creator_fee_basis_points"),
-          mk("6").as("admin_set_coin_creator_authority")),
+          pubkey("6").as("admin_set_coin_creator_authority")),
         lay(RealLayouts.PumpSwapGlobalConfig, "ps_global_config"))
         .select(col("payload"), lit(RealLayouts.PumpSwapProgram).as("owner"))
       val bonkCfg = ProtocolRegistry.encode(
@@ -1439,17 +1433,17 @@ object SparkEntry {
           lit(100L).as("min_base_sell_rate"),
           lit(200L).as("min_base_migrate_rate"),
           (col("event_id") * 3).as("min_quote_fund_raising"),
-          mk("7").as("quote_mint"), mk("8").as("protocol_fee_owner"),
-          mk("9").as("migrate_fee_owner"),
-          mk("10").as("migrate_to_amm_wallet"),
-          mk("11").as("migrate_to_cpswap_wallet")),
+          pubkey("7").as("quote_mint"), pubkey("8").as("protocol_fee_owner"),
+          pubkey("9").as("migrate_fee_owner"),
+          pubkey("10").as("migrate_to_amm_wallet"),
+          pubkey("11").as("migrate_to_cpswap_wallet")),
         lay(RealLayouts.BonkConfigAccounts, "bonk_global_config"))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("owner"))
       val bonkPlat = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
           (col("event_id") % 512).as("epoch"),
-          mk("12").as("platform_fee_wallet"),
-          mk("13").as("platform_nft_wallet"),
+          pubkey("12").as("platform_fee_wallet"),
+          pubkey("13").as("platform_nft_wallet"),
           lit(2500L).as("platform_scale"), lit(2500L).as("creator_scale"),
           lit(0L).as("burn_scale"), (col("event_id") % 97).as("fee_rate"),
           concat(lit("plat_"), col("event_id")).as("name")),
@@ -1462,8 +1456,8 @@ object SparkEntry {
         (col("event_id") % 89).as("protocol_fee_rate"),
         (col("event_id") % 83).as("fund_fee_rate"),
         (col("event_id") % 79).as("create_pool_fee"),
-        mk("14").as("protocol_owner"), mk("15").as("fund_owner"),
-        (col("user_id") % 16).as("tick_spacing"), mk("16").as("owner"))
+        pubkey("14").as("protocol_owner"), pubkey("15").as("fund_owner"),
+        (col("user_id") % 16).as("tick_spacing"), pubkey("16").as("owner"))
       val cpmmCfg = ProtocolRegistry.encode(err,
         lay(RealLayouts.CpmmAccounts, "cpmm_amm_config"))
         .select(col("payload"),
@@ -1496,18 +1490,16 @@ object SparkEntry {
       // registry and reduced to a TVL-style rollup
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       def lay(p: ProtocolRegistry.ProtocolSpec, k: String) =
         p.layouts.find(_.kind == k).get
       val pool = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
-          mk("event_id % 16").as("amm_config"),
-          mk("user_id").as("pool_creator"),
-          mk("2").as("token0_vault"), mk("3").as("token1_vault"),
-          mk("4").as("lp_mint"), mk("5").as("token0_mint"),
-          mk("6").as("token1_mint"), mk("7").as("token0_program"),
-          mk("8").as("token1_program"), mk("9").as("observation_key"),
+          pubkey("event_id % 16").as("amm_config"),
+          pubkey("user_id").as("pool_creator"),
+          pubkey("2").as("token0_vault"), pubkey("3").as("token1_vault"),
+          pubkey("4").as("lp_mint"), pubkey("5").as("token0_mint"),
+          pubkey("6").as("token1_mint"), pubkey("7").as("token0_program"),
+          pubkey("8").as("token1_program"), pubkey("9").as("observation_key"),
           lit(254L).as("auth_bump"), (col("event_id") % 4).as("status"),
           lit(9L).as("lp_mint_decimals"), lit(6L).as("mint0_decimals"),
           lit(9L).as("mint1_decimals"),
@@ -1550,11 +1542,10 @@ object SparkEntry {
       // program + fixed length are the whole guard, as in the reference
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       def tokFrames(t: String, owner: String) = ProtocolRegistry.encode(
         ev.filter(col("event_type") === t).select(
-          mk("user_id % 100").as("mint"), mk("user_id").as("token_owner"),
+          pubkey("user_id % 100").as("mint"),
+          pubkey("user_id").as("token_owner"),
           expr("cast(round(value * 100, 0) as bigint)").as("amount")),
         RealLayouts.SplAccounts.layouts(0))
         .select(col("payload"), lit(owner).as("owner"))
@@ -1565,7 +1556,7 @@ object SparkEntry {
       val nonce = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "view").select(
           lit(1L).as("version"), lit(1L).as("state"),
-          mk("user_id").as("authority"), mk("event_id").as("blockhash"),
+          pubkey("user_id").as("authority"), pubkey("event_id").as("blockhash"),
           (col("event_id") % 5000 + 5000).as("fee")),
         RealLayouts.NonceAccounts.layouts(0))
         .select(col("payload"), lit(RealLayouts.SystemProgram).as("owner"))
@@ -1695,13 +1686,10 @@ object SparkEntry {
             col("price6").cast("decimal(18,6)"), 6).cast("double"))
     }),
     "q_events_range_join_auto" -> ((s, d) => {
-      // the DECLARATIVE range join: no explicit bucketing — the injected
-      // RangeJoinRewrite optimizer rule turns the nested-loop sandwich
-      // into the bucketed equi-join at plan time
-      s.experimental.extraOptimizations =
-        (s.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.RangeJoinRewrite) :+
-          graft.plans.RangeJoinRewrite)
+      // the DECLARATIVE range join: no explicit bucketing — the
+      // RangeJoinRewrite rule that Graft.session's extensions inject
+      // turns the nested-loop sandwich into the bucketed equi-join at
+      // plan time
       val ev = Tables.events(s, d)
       val points = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), expr("unix_micros(ts)").as("ts_us"))
@@ -2065,8 +2053,6 @@ object SparkEntry {
       // the "how far along the curve do people buy" board
       import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-        s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
       val curves = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
           col("user_id"), expr("unix_micros(ts)").as("ts_us"),
@@ -2077,7 +2063,7 @@ object SparkEntry {
           (col("event_id") * 17).as("real_sol_reserves"),
           lit(1000L).as("token_total_supply"),
           (col("event_id") % 2).as("complete"),
-          mk("user_id").as("creator"), lit(0L).as("is_mayhem_mode")),
+          pubkey("user_id").as("creator"), lit(0L).as("is_mayhem_mode")),
         RealLayouts.PumpFunAccounts.layouts(0))
       val decodedSnaps = curves.select(
         Seq(col("user_id"), col("ts_us"), col("event_id")) ++

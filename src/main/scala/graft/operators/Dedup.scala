@@ -136,25 +136,27 @@ object Dedup {
     * false positives) anti-join the corpus for exact confirmation. At
     * 100 TB the filter is a few MB broadcast while the join side shrinks
     * from the whole batch to the near-duplicate sliver — the standard
-    * "don't re-shuffle the corpus every ingest" pattern.
+    * "don't re-shuffle the corpus every ingest" pattern. Built as
+    * Columns, so it needs no registered function or temp view.
     */
   def incrementalDedup(newBatch: DataFrame, corpus: DataFrame,
       expectedItems: Long = 1000000L, numBits: Long = 8000000L): DataFrame = {
-    graft.plans.GraftExtensions.register(newBatch.sparkSession)
-    val view = s"graft_incr_corpus_${viewCounter.incrementAndGet()}"
-    corpus.select(col("text")).createOrReplaceTempView(view)
-    val seen = expr(
-      s"graft_might_contain((SELECT graft_bloom_agg(xxhash64(text), " +
-        s"CAST($expectedItems AS BIGINT), CAST($numBits AS BIGINT)) " +
-        s"FROM $view), xxhash64(text))")
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.{
+      BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate
+      .BloomFilterAggregate
+    val hash = expression(xxhash64(col("text")))
+    val bloom = corpus.select(column(new BloomFilterAggregate(hash,
+      Literal(expectedItems), Literal(numBits)).toAggregateExpression()))
+      .scalar()
+    val seen = column(BloomFilterMightContain(expression(bloom), hash))
     val definitelyNew = newBatch.filter(!seen)
     val confirmed = newBatch.filter(seen)
       .join(corpus.select(col("text")).distinct(), Seq("text"), "left_anti")
     definitelyNew.unionByName(confirmed)
       .select(col("doc_id"), col("source"))
   }
-
-  private val viewCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** C26: corpus snapshot diff — added/removed/changed/unchanged between
     * two versions of a document set (dataset-versioning audit before a

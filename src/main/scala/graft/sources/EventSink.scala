@@ -50,27 +50,16 @@ object EventSink {
     */
   def backfillDates(events: DataFrame, path: String,
       buckets: Int = 8): Unit = {
-    val spark = events.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      events
-        .withColumn("event_date", to_date(col("ts")))
-        .repartition(buckets, col("event_date"),
-          pmod(col("event_id"), lit(buckets)))
-        .sortWithinPartitions("event_date", "ts", "event_id")
-        .write
-        .partitionBy("event_date")
-        .mode("overwrite")
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    events
+      .withColumn("event_date", to_date(col("ts")))
+      .repartition(buckets, col("event_date"),
+        pmod(col("event_id"), lit(buckets)))
+      .sortWithinPartitions("event_date", "ts", "event_id")
+      .write
+      .partitionBy("event_date")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
   }
 
   /** A29e: row-level MERGE (upsert) — corrected or late rows replace the
@@ -105,25 +94,15 @@ object EventSink {
       // materialize before the write: the rewrite reads the same path it
       // overwrites, so the plan must not still reference the source files
       .localCheckpoint()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      merged
-        .repartition(buckets, col("event_date"),
-          pmod(col("event_id"), lit(buckets)))
-        .sortWithinPartitions("event_date", "ts", "event_id")
-        .write
-        .partitionBy("event_date")
-        .mode("overwrite")
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    merged
+      .repartition(buckets, col("event_date"),
+        pmod(col("event_id"), lit(buckets)))
+      .sortWithinPartitions("event_date", "ts", "event_id")
+      .write
+      .partitionBy("event_date")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
   }
 
   /** D9: Z-order clustered layout — multi-dimensional file clustering so

@@ -224,6 +224,13 @@ object ProtocolRegistry {
   val registry: Seq[ProtocolSpec] =
     Seq(Swap, Amm, Account, Launch, Clmm, Perp, Meta, Cpmm, Block)
 
+  /** Deterministic 32-byte pubkey for the SQL integer expression `e`:
+    * `md5(e) ++ md5(e + 1)` over the decimal renderings. Fills the b32
+    * fields when synthetic frames are encoded from the events table. */
+  def pubkey(e: String): Column =
+    expr(s"unhex(concat(md5(cast(cast($e as string) " +
+      s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
+
   /** Per-field decode expression (all codegen'd builtins / graft exprs). */
   private def fieldCol(payload: String, f: FieldSpec): Column = f.kind match {
     case "u64" | "i64" => le_long(col(payload), f.offset)

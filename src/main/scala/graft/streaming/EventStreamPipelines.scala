@@ -18,6 +18,21 @@ import org.apache.spark.sql.types.LongType
 object EventStreamPipelines {
   private val memCounter = new AtomicInteger(0)
 
+  /** Run `body` with the RocksDB state store provider (required by
+    * transformWithState), restoring the session's previous provider
+    * afterwards. A streaming query reads the provider when it starts. */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   final case class SessionUpdate(
       user_id: Long, start_us: Long, end_us: Long, n_events: Int)
 
@@ -307,12 +322,11 @@ object EventStreamPipelines {
   def realDispatchAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{ProtocolRegistry, RealLayouts, wire}
+    import ProtocolRegistry.pubkey
     val name = s"graft_wire_real_${memCounter.incrementAndGet()}"
     val tmp = System.getProperty("java.io.tmpdir")
     val hex = Integer.toHexString(sfDir.hashCode)
     val ev = graft.Tables.events(spark, sfDir)
-    def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-      s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
     val pfDir = s"$tmp/graft_wire_pf_$hex"
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "purchase").select(
@@ -328,13 +342,13 @@ object EventStreamPipelines {
         lit(0L).as("track_volume"), lit(0L).as("total_unclaimed_tokens"),
         lit(0L).as("total_claimed_tokens"), lit(0L).as("current_sol_volume"),
         lit(0L).as("last_update_timestamp"),
-        mk("user_id % 100").as("mint"), mk("user_id").as("user"),
-        mk("1").as("fee_recipient"), mk("2").as("creator")),
+        pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
+        pubkey("1").as("fee_recipient"), pubkey("2").as("creator")),
       RealLayouts.PumpFun.layouts(0)), pfDir)
     val bkDir = s"$tmp/graft_wire_bk_$hex"
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "view").select(
-        mk("user_id % 100").as("pool_state"),
+        pubkey("user_id % 100").as("pool_state"),
         (col("event_id") * 19).as("total_base_sell"),
         (col("event_id") * 3).as("virtual_base"),
         (col("event_id") * 5).as("virtual_quote"),
@@ -841,11 +855,7 @@ object EventStreamPipelines {
   /** A94b availableNow harness (oracle ≡ EventOps.cusumFixed's SQL). */
   def cusumAlarmsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_cusum_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val q = cusumAlarmStream(eventsStream(spark, dir)).writeStream
         .format("memory")
         .queryName(name)
@@ -853,13 +863,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     spark.table(name)
   }
@@ -940,11 +943,7 @@ object EventStreamPipelines {
   def typeCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val name = s"graft_stream_tc_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"), col("event_type"))
         .as[(Long, String)]
@@ -960,13 +959,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     spark.table(name)
       .groupBy("user_id", "event_type").agg(max("n").as("n"))
@@ -1021,11 +1013,7 @@ object EventStreamPipelines {
       keep: Int = 5): DataFrame = {
     import spark.implicits._
     val name = s"graft_stream_rt_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"),
           expr("unix_micros(ts)").as("ts_us"),
@@ -1044,13 +1032,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     // keep each wallet's FINAL snapshot: Append mode leaves one row per
     // (key, micro-batch) in the sink, so a multi-batch availableNow run
@@ -1151,10 +1132,6 @@ object EventStreamPipelines {
   def sessionTimeoutAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Append-mode output goes to the native parquet file sink (append
     // is exactly what the file sink supports): emitted sessions land as
     // executor-written parquet instead of accumulating in a driver-heap
@@ -1165,7 +1142,7 @@ object EventStreamPipelines {
       .createTempDirectory("graft_timer_sink").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_timer_ckpt").toString
-    try {
+    withRocksDb(spark) {
       val q = sessionTimeoutStream(
         eventsStream(spark, dir), gapMinutes, watermarkDelay).writeStream
         .format("parquet")
@@ -1175,13 +1152,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     spark.read.parquet(sinkDir)
       .select(col("user_id"), col("start_us"), col("end_us"),
@@ -1212,11 +1182,7 @@ object EventStreamPipelines {
     * count/sum — the driver oracle-checks it against plain SQL. */
   def walletVolumeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_tws_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val q = walletVolumeStream(eventsStream(spark, dir)).writeStream
         .format("memory")
         .queryName(name)
@@ -1224,13 +1190,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     spark.table(name)
       .groupBy("user_id")
@@ -1250,11 +1209,7 @@ object EventStreamPipelines {
     * decimation as the batch query so both feed one oracle. */
   def realizedPnlAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_pnl_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val marks = realizedPnlStream(
         eventsStream(spark, dir).filter(col("user_id") % 10 === 0))
       val q = marks.writeStream
@@ -1264,13 +1219,6 @@ object EventStreamPipelines {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
     spark.table(name)
       .select(col("user_id"), col("event_id"), col("sell_cents"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -67,14 +67,8 @@ object ParaphraseBench {
     val variants = if (args.length > 1) args(1).toInt else 10
     val outJson = if (args.length > 2) args(2) else "BENCH_PARA.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(s"local[$cpus]", cpus.toInt,
+      Seq("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
 
     // per-run scratch root: fixed /tmp paths let concurrent or stale

@@ -26,12 +26,10 @@ object GraftBridge {
         s +: spark.experimental.extraStrategies
 
   /** Post-hoc function registration for sessions created without
-    * `spark.sql.extensions` (same builders as GraftExtensions). */
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+    * `spark.sql.extensions` (same descriptions as GraftExtensions). */
+  def registerFunction(spark: SparkSession,
+      f: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+        Seq[Expression] => Expression)): Unit =
+    spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
 }

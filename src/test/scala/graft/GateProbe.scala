@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, EventOps, Similarity}
 
@@ -13,13 +13,8 @@ import graft.operators.{Dedup, EventOps, Similarity}
 object GateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[16]", 16,
+      Seq("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
 
     def recallTopK(exact: DataFrame, approx: DataFrame): Double = {

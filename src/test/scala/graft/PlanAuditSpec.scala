@@ -77,7 +77,6 @@ class PlanAuditSpec extends TestSparkSession {
 
   test("custom as-of merge exec: parity with window formulation, one " +
     "shuffle, no WindowExec buffering") {
-    graft.plans.GraftExtensions.register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
         col("event_id"), col("event_type"))
@@ -104,7 +103,6 @@ class PlanAuditSpec extends TestSparkSession {
     // receiving a torrent of state updates (dashmap-cache hot row). The
     // window formulation buffers the whole group; the merge must stream
     // it and still produce exact results.
-    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     val right = spark.range(100000).select(
       lit(7L).as("k"), (col("id") * 10).as("ts_us"), col("id").as("rid"),

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventOps
-import graft.plans.GraftExtensions
+import graft.plans.{AsOfMergeStrategy, GraftExtensions}
 import graft.streaming.{EventStreamPipelines, EventSubscription, SubscriptionConfig}
 
 class StreamingExtensionsSpec extends TestSparkSession {
@@ -55,7 +56,7 @@ class StreamingExtensionsSpec extends TestSparkSession {
   }
 
   test("graft SQL functions register and evaluate") {
-    GraftExtensions.register(spark)
+    Graft.attach(spark)
     val row = spark.sql(
       "SELECT graft_base58(graft_le_bytes(9999L, 8)) AS b58, " +
         "graft_le_long(graft_le_bytes(-42L, 8), 0) AS back, " +
@@ -76,9 +77,6 @@ class StreamingExtensionsSpec extends TestSparkSession {
   }
 
   test("optimizer rule eliminates graft_nop") {
-    GraftExtensions.register(spark)
-    spark.experimental.extraOptimizations =
-      Seq(GraftExtensions.GraftNopElimination)
     val df = spark.sql("SELECT graft_nop(1 + 2) AS v")
     assert(!df.queryExecution.optimizedPlan.toString.contains("graft_nop"))
     assert(df.collect()(0).getInt(0) == 3)
@@ -116,9 +114,6 @@ class StreamingExtensionsSpec extends TestSparkSession {
   test("base58 literal rewrite avoids per-row encoding") {
     import graft.functions.Base58
     import graft.functions.exprs._
-    spark.experimental.extraOptimizations =
-      Seq(GraftExtensions.GraftNopElimination,
-        GraftExtensions.Base58LiteralRewrite)
     val needle = Base58.encode(graft.functions.CodecOps.leBytes(77777L, 8))
     val df = spark.range(100000)
       .withColumn("pk", le_bytes(col("id"), 8))
@@ -142,6 +137,27 @@ class StreamingExtensionsSpec extends TestSparkSession {
     // the planner strategy is installed exactly once
     assert(spark.experimental.extraStrategies
       .count(_ == graft.plans.AsOfMergeStrategy) == 1)
+  }
+
+  test("Graft.session upgrades an existing session that lacks the extensions") {
+    // getOrCreate hands back the active session as is; stand in for one
+    // built without graft's extensions by dropping its graft_* functions
+    val plain = spark.newSession()
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      plain.sql(s"DROP TEMPORARY FUNCTION ${id.funcName}")
+    }
+    assert(!plain.catalog.functionExists("graft_nop"))
+    val active = SparkSession.getActiveSession
+    SparkSession.setActiveSession(plain)
+    try {
+      assert(Graft.session("local[4]", 4) eq plain)
+      assert(plain.sql("SELECT graft_checksum(X'0102')").head.getLong(0)
+        == 3L)
+      assert(plain.experimental.extraStrategies.contains(AsOfMergeStrategy))
+    } finally active match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 
   test("subscription facade filters, observes metrics, and calls back") {
@@ -577,24 +593,25 @@ class StreamingExtensionsSpec extends TestSparkSession {
     def naive = points.join(ivals,
       col("ts_us") >= col("start_us") && col("ts_us") < col("end_us"))
     // without the rule: nested loop
-    spark.experimental.extraOptimizations = Seq()
-    val before = naive.queryExecution.executedPlan.toString
-    assert(before.contains("NestedLoopJoin") || before.contains("CartesianProduct"),
-      "precondition: naive plan is a nested loop")
-    val expected = naive.collect().map(_.toSeq).toSet
-    // with the rule: bucketed equi-join, same rows
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
-    try {
-      val after = naive.queryExecution.executedPlan.toString
-      assert(!after.contains("NestedLoopJoin") && !after.contains("CartesianProduct"),
-        s"rule must remove the nested loop:\n${after.take(600)}")
-      assert(naive.collect().map(_.toSeq).toSet == expected)
-      // inclusive upper bound and flipped operand order rewrite too
-      val flipped = points.join(ivals,
-        col("start_us") <= col("ts_us") && col("ts_us") <= col("end_us"))
-      assert(!flipped.queryExecution.executedPlan.toString
-        .contains("NestedLoopJoin"))
-    } finally spark.experimental.extraOptimizations = Seq()
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, RangeJoinRewrite.ruleName)
+    val expected = try {
+      val before = naive.queryExecution.executedPlan.toString
+      assert(before.contains("NestedLoopJoin") || before.contains("CartesianProduct"),
+        "precondition: naive plan is a nested loop")
+      naive.collect().map(_.toSeq).toSet
+    } finally spark.conf.unset(excluded)
+    // with the rule (injected by Graft.session): bucketed equi-join,
+    // same rows
+    val after = naive.queryExecution.executedPlan.toString
+    assert(!after.contains("NestedLoopJoin") && !after.contains("CartesianProduct"),
+      s"rule must remove the nested loop:\n${after.take(600)}")
+    assert(naive.collect().map(_.toSeq).toSet == expected)
+    // inclusive upper bound and flipped operand order rewrite too
+    val flipped = points.join(ivals,
+      col("start_us") <= col("ts_us") && col("ts_us") <= col("end_us"))
+    assert(!flipped.queryExecution.executedPlan.toString
+      .contains("NestedLoopJoin"))
   }
 
   test("A17b: flatMapGroupsWithState emits only closed sessions") {
