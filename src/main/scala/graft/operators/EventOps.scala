@@ -1763,25 +1763,39 @@ object EventOps {
       events: DataFrame,
       maxBucketWallets: Int = 1024): DataFrame = {
     // materialized once: the side-count aggregate feeds both ranked side
-    // tables — unmaterialized, the raw event shuffle runs twice
+    // tables — unmaterialized, the raw event shuffle runs twice. Its row
+    // count rides the checkpoint's own job (observe), for nPart below.
+    val sidesRows = org.apache.spark.sql.Observation()
     val sides = events
       .filter(col("event_type").isin("purchase", "view"))
       .groupBy(expr("unix_micros(ts) div 3600000000").as("mb"),
         col("user_id"))
       .agg(count(when(col("event_type") === "purchase", 1)).as("nb"),
         count(when(col("event_type") === "view", 1)).as("ns"))
+      .observe(sidesRows, count(lit(1)).as("n"))
       .localCheckpoint()
-    val nPart = math.max(256,
-      events.sparkSession.sessionState.conf.numShufflePartitions)
-    // EXPLICIT hour repartition before the rank windows: the wallet-hour
-    // table is tiny (~400k rows at sf1.0) so AQE coalesces its exchange
-    // to ONE partition — but the downstream join fans those rows out
-    // 140× (54.6M), and the window, join, and shuffle write all share
-    // that stage. AQE sizes by map INPUT and cannot see output blow-up,
-    // so the whole fan-out ran in a single task (measured 31.6 s of the
-    // 34 s total). An explicit partition count opts the exchange out of
-    // coalescing; one fan-out task then covers ~nHours/nPart hours,
-    // worst case one hour = maxBucketWallets² rows.
+    // EXPLICIT hour repartition before the rank windows, sized from the
+    // wallet-hour row count: one partition per 1,024 rows, clamped to
+    // [shuffle.partitions, 256] (shuffle.partitions wins when larger).
+    // AQE would coalesce this exchange to ONE partition — the table is
+    // tiny (~400k rows at sf1.0) — but the downstream join fans those
+    // rows out 140× (54.6M), and the window, join and shuffle write all
+    // share that stage. AQE sizes by map INPUT and cannot see output
+    // blow-up, so the whole fan-out ran in a single task (measured
+    // 31.6 s of the 34 s total); an explicit count opts the exchange out
+    // of coalescing, and one fan-out task covers ~nHours/nPart hours,
+    // worst case one hour = maxBucketWallets² rows. The former fixed
+    // floor of 256 ran every stage at 256 tasks over small tables too
+    // (25k wallet-hour rows on 4 cores: 7.1 s to run the query, 2.1 s
+    // at 25 partitions), so the count follows the rows: sf0.1 (39k
+    // rows) gets 39, sf1 (~400k) and sf10 keep 256. Results cannot
+    // depend on it: uid is a dense rank in user_id order, and every
+    // rank window orders on a total key.
+    val nPart = {
+      val sp = events.sparkSession.sessionState.conf.numShufflePartitions
+      val n = sidesRows.get("n").asInstanceOf[Number].longValue
+      math.max(sp, math.min(256L, (n + 1023) / 1024).toInt)
+    }
     // string-order-preserving wallet ids: rank over the (user_id) total
     // order. localCheckpoint freezes the range boundaries so pid and the
     // in-partition order agree between the two passes.

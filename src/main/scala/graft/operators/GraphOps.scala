@@ -29,14 +29,26 @@ import org.apache.spark.sql.functions._
   * are built once, `localCheckpoint`ed (iterating on a live lineage
   * re-derives the whole upstream pipeline every round and the plan
   * grows combinatorially — same lesson as `Dedup.canonicalize`).
-  * Iteration cost is regime-dependent: node-sized rank state under
-  * [[BroadcastNodeLimit]] broadcasts into the per-round join, so a
-  * round never re-shuffles or re-sorts the edge list — the only
-  * exchange left moves the map-side-combined partial sums, whose
-  * volume is per-partition-distinct dst keys (node-sized), not edge
-  * rows. Past the limit each round falls back to the shuffle join on
-  * `src` plus the same combined `dst` aggregate. Rank state is one
-  * row per node — metadata-sized next to the event table.
+  * Iteration cost is regime-dependent. The pagerank, taint and
+  * label-propagation loops have three regimes, picked by two gates:
+  *  - driver: at most [[DefaultDriverEdgeLimit]] directed edges (the
+  *    count is observed inside the edge checkpoint's job). The edge list
+  *    is collected once into a [[LocalGraph]] and every round runs on
+  *    the driver with the same integer arithmetic; building the query
+  *    costs the edge build plus one collect, not a job per round. A
+  *    graph of a few thousand wallets runs faster on one thread than
+  *    spread over a scheduler.
+  *  - broadcast: more edges, at most [[DefaultBroadcastNodeLimit]]
+  *    nodes. Node-sized rank state broadcasts into the per-round join,
+  *    so a round never re-shuffles or re-sorts the edge list — the only
+  *    exchange left moves the map-side-combined partial sums, whose
+  *    volume is per-partition-distinct dst keys (node-sized), not edge
+  *    rows.
+  *  - shuffle: past the node limit each round joins on `src` by
+  *    shuffle, plus the same combined `dst` aggregate.
+  * All three return equal rows (`GraphRegimeSpec` forces each). The
+  * other graph operators (k-core, clusters, assortativity) have only
+  * the broadcast and shuffle regimes.
   */
 object GraphOps {
 
@@ -81,17 +93,54 @@ object GraphOps {
     private[graft] def check(): Unit = ()
   }
 
-  /** Node-sized iteration state (two longs per row) is broadcast into
-    * the per-round joins when the graph is small enough that shipping
-    * ~32 MB beats re-sorting the edge list every round; past the limit
-    * the loops fall back to the shuffle join. The node count is already
-    * on the driver (the loops count it once for the rank seed), so the
-    * choice costs nothing extra. Every loop takes the limit as a
-    * parameter (default this constant) so the at-scale shuffle-join
-    * regime is testable: GraphOpsSpec forces the limit to 0 and pins
-    * bit-equality with the broadcast path — both regimes are the same
-    * integer arithmetic, only the join strategy differs. */
+  /** Node-count gate between the broadcast and shuffle regimes (the
+    * second and third; graphs under [[DefaultDriverEdgeLimit]] edges
+    * never reach it in the pagerank, taint and label-propagation
+    * loops). Node-sized iteration state (two longs per row) is
+    * broadcast into the per-round joins when the graph is small enough
+    * that shipping ~32 MB beats re-sorting the edge list every round;
+    * past the limit the loops fall back to the shuffle join. The node
+    * count is already on the driver (the loops count it once for the
+    * rank seed), so the choice costs nothing extra. Every loop takes
+    * the limit as a parameter (default this constant) so the at-scale
+    * shuffle-join regime is testable: the specs force the limit to 0
+    * (with `driverEdgeLimit = 0` where the loop has a driver regime)
+    * and pin bit-equality with the broadcast path — both regimes are
+    * the same integer arithmetic, only the join strategy differs. */
   val DefaultBroadcastNodeLimit: Long = 2L * 1000 * 1000
+
+  /** Edge-count gate of the driver regime, the first of the three
+    * regimes of the pagerank, taint and label-propagation loops. At or
+    * below it the loop collects its checkpointed edge list once into a
+    * [[LocalGraph]] (16 B per edge as collected: 4M edges ≈ 64 MiB) and
+    * runs every round on the driver with the same integer arithmetic —
+    * no job per round, no per-round checkpoint. The count it compares
+    * is observed inside the edge checkpoint's own job. Every loop takes
+    * the limit as a parameter (default this constant), so a spec can
+    * force the distributed regimes on a small graph with 0. */
+  val DefaultDriverEdgeLimit: Long = 4L << 20
+
+  /** The edge build's checkpoint, with the directed-edge count observed
+    * in the same job (`spark.graft.reliableCheckpoint` applies). */
+  private def countedEdges(raw: DataFrame): (DataFrame, Long) =
+    Checkpoints.truncateObserved(raw, count(lit(1)))
+
+  /** The driver-regime gate: `m` edges within the limit, and BIGINT
+    * wallet keys — the events table's `user_id`; other key types (test
+    * fixtures with string ids) iterate the distributed loops. */
+  private def onDriver(edges: DataFrame, m: Long,
+      driverEdgeLimit: Long): Boolean =
+    m <= math.min(driverEdgeLimit, LocalGraph.MaxEdges) &&
+      edges.schema("src").dataType == org.apache.spark.sql.types.LongType
+
+  /** A driver-regime result: (node, deg, `name`) per node. */
+  private def nodeFrame(edges: DataFrame, g: LocalGraph, v: Array[Long],
+      name: String): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    g.ids.indices.map(u => (g.ids(u), g.deg(u).toLong, v(u)))
+      .toDF("node", "deg", name)
+  }
 
   /** Pin an iterated table's partitioning to the column its per-round
     * aggregate/join re-clusters on. The partition COUNT is left to AQE
@@ -247,9 +296,10 @@ object GraphOps {
       iterations: Int = 10,
       maxGroupSize: Int = 16,
       broadcastNodeLimit: Long = DefaultBroadcastNodeLimit,
-      policy: OverCapPolicy = CapTop): DataFrame =
+      policy: OverCapPolicy = CapTop,
+      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame =
     integerPagerankOn(coactivityEdges(events, maxGroupSize, policy),
-      iterations, broadcastNodeLimit)
+      iterations, broadcastNodeLimit, driverEdgeLimit)
 
   /** A71c: PageRank over the capped co-activity graph — since round 9
     * identical to [[coactivityPagerank]]'s default; kept as a named
@@ -269,11 +319,22 @@ object GraphOps {
   private def integerPagerankOn(
       rawEdges: DataFrame,
       iterations: Int,
-      broadcastNodeLimit: Long): DataFrame = {
+      broadcastNodeLimit: Long,
+      driverEdgeLimit: Long): DataFrame = {
     // checkpoint the edge list BEFORE deriving degrees: it feeds both the
     // degree count and the annotated join, and an unmaterialized lineage
     // would re-run the whole activity build once per consumer
-    val edges = Checkpoints.truncate(rawEdges)
+    val (edges, m) = countedEdges(rawEdges)
+    val scale = 1000000000000L // total rank mass
+    if (onDriver(edges, m, driverEdgeLimit)) {
+      val g = LocalGraph.collect(edges)
+      val n = g.n
+      val pr =
+        if (n == 0) Array.emptyLongArray
+        else g.rankRounds(Array.fill(n)(scale / n),
+          Array.fill(n)((15L * scale / 100L) / n), iterations)
+      return nodeFrame(edges, g, pr, "pr")
+    }
     // node count observed inside the checkpoint job, not a second action
     val (nodes, n) = Checkpoints.truncateObserved(
       edges.groupBy("src").agg(count(lit(1)).as("deg")), count(lit(1)))
@@ -295,7 +356,6 @@ object GraphOps {
     val withDeg = Checkpoints.truncate(keyed(edges
       .join(if (bcast) broadcast(nodes) else nodes, "src"),
       if (bcast) col("dst") else col("src")))
-    val scale = 1000000000000L // total rank mass
     val base = (15L * scale / 100L) / n // (1 - d) / n, d = 0.85
     var ranks = nodes.select(col("src").as("node"),
       lit(scale / n).as("pr"))
@@ -342,9 +402,30 @@ object GraphOps {
       maxGroupSize: Int = 16,
       nSeeds: Int = 10,
       broadcastNodeLimit: Long = DefaultBroadcastNodeLimit,
-      policy: OverCapPolicy = CapTop): DataFrame = {
-    val edges = Checkpoints.truncate(
-      coactivityEdges(events, maxGroupSize, policy))
+      policy: OverCapPolicy = CapTop,
+      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
+    val (edges, m) =
+      countedEdges(coactivityEdges(events, maxGroupSize, policy))
+    // the nSeeds most active wallets — (cnt desc, id) is a total order
+    val topSeeds = events.groupBy("user_id")
+      .agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("user_id"))
+      .limit(nSeeds)
+    val scale = 1000000000000L
+    if (onDriver(edges, m, driverEdgeLimit)) {
+      val g = LocalGraph.collect(edges)
+      // restart only to seeds found in the graph; a null id never is
+      val seeds = topSeeds.select("user_id").collect()
+        .filterNot(_.isNullAt(0)).map(r => g.indexOf(r.getLong(0)))
+        .filter(_ >= 0)
+      if (seeds.isEmpty)
+        return nodeFrame(edges, g, new Array[Long](g.n), "taint").limit(0)
+      val restart = new Array[Long](g.n)
+      seeds.foreach(restart(_) = (15L * scale / 100L) / seeds.length)
+      val pr0 = restart.map(r => if (r > 0) scale / seeds.length else 0L)
+      return nodeFrame(edges, g, g.rankRounds(pr0, restart, iterations),
+        "taint")
+    }
     // node count observed inside the checkpoint job, not a second action
     val (nodes, nNodes) = Checkpoints.truncateObserved(
       edges.groupBy("src").agg(count(lit(1)).as("deg")), count(lit(1)))
@@ -354,19 +435,16 @@ object GraphOps {
     val withDeg = Checkpoints.truncate(keyed(edges
       .join(if (bcast) broadcast(nodes) else nodes, "src"),
       if (bcast) col("dst") else col("src")))
-    val seeds = events.groupBy("user_id")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("user_id"))
-      .limit(nSeeds)
-      .join(nodes, col("user_id") === col("src"))
-      .select(col("user_id").as("seed"))
-      .localCheckpoint() // read once below; restart carries it forward
-    val nSeedsInGraph = seeds.count()
+    // read once below (restart carries it forward); counted inside its
+    // own checkpoint job
+    val (seeds, nSeedsInGraph) = Checkpoints.truncateObserved(
+      topSeeds.join(nodes, col("user_id") === col("src"))
+        .select(col("user_id").as("seed")),
+      count(lit(1)))
     if (nSeedsInGraph == 0) {
       return nodes.select(col("src").as("node"), col("deg"),
         col("deg").as("taint")).limit(0)
     }
-    val scale = 1000000000000L
     val base = (15L * scale / 100L) / nSeedsInGraph
     // loop-invariant state joined every round — truncated through
     // Checkpoints so the reliable mode covers it too
@@ -763,7 +841,9 @@ object GraphOps {
     * result bit-identical to the oracle's k chained CTE steps (the
     * [[coactivityPagerank]] lesson). Initial label = own wallet id.
     *
-    * Scale shape: per round, one edge-sized join against node-sized
+    * Scale shape: up to `driverEdgeLimit` edges every round runs on
+    * the driver ([[LocalGraph.labelRounds]]). Past it, per round, one
+    * edge-sized join against node-sized
     * label state (broadcast under `broadcastNodeLimit`, shuffle-join
     * fallback above), one (node, label)-keyed count, and a rank-1
     * filter directly on the count window so Catalyst plans a
@@ -775,14 +855,24 @@ object GraphOps {
       iterations: Int = 4,
       maxGroupSize: Int = 16,
       broadcastNodeLimit: Long = DefaultBroadcastNodeLimit,
-      policy: OverCapPolicy = CapTop): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      policy: OverCapPolicy = CapTop,
+      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
     // keyed on src once at build: each synchronous round's label count
     // groups by (src, lbl) and its top-1 window partitions by src, so
     // hash(src) satisfies both and a broadcast-regime round runs as one
     // exchange-free stage (the shuffle-join fallback is unchanged)
-    val edges = Checkpoints.truncate(
+    val (edges, m) = countedEdges(
       keyed(coactivityEdges(events, maxGroupSize, policy), col("src")))
+    if (onDriver(edges, m, driverEdgeLimit)) {
+      val g = LocalGraph.collect(edges)
+      val (lbl, has) = g.labelRounds(iterations)
+      val live = g.ids.indices.filter(has(_))
+      val size = live.groupMapReduce(lbl(_))(_ => 1L)(_ + _)
+      val spark = events.sparkSession
+      import spark.implicits._
+      return live.map(u => (g.ids(u), lbl(u), size(lbl(u))))
+        .toDF("wallet", "community", "community_size")
+    }
     // node count observed inside the checkpoint job, not a second action
     val (labels0, nNodes) = Checkpoints.truncateObserved(
       edges.select(col("src").as("node")).distinct()

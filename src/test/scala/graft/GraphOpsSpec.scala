@@ -93,14 +93,20 @@ class GraphOpsSpec extends TestSparkSession {
       "to the broadcast regime on the real sf0.001 graph") {
     // the >2M-node regime is what actually runs at 100 TB; forcing the
     // limit to 0 exercises that join strategy under the same integer
-    // arithmetic, so results must be EQUAL, not approximately equal
+    // arithmetic, so results must be EQUAL, not approximately equal.
+    // driverEdgeLimit = 0 keeps both sides off the driver regime, which
+    // the sf0.001 graph would otherwise take
     val events = Tables.events(spark, sfDir)
     def rows(df: DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
-    assert(rows(GraphOps.coactivityPagerank(events, broadcastNodeLimit = 0))
-      === rows(GraphOps.coactivityPagerank(events)), "pagerank")
-    assert(rows(GraphOps.seededPagerank(events, broadcastNodeLimit = 0))
-      === rows(GraphOps.seededPagerank(events)), "seeded pagerank")
+    assert(rows(GraphOps.coactivityPagerank(events, broadcastNodeLimit = 0,
+        driverEdgeLimit = 0))
+      === rows(GraphOps.coactivityPagerank(events, driverEdgeLimit = 0)),
+      "pagerank")
+    assert(rows(GraphOps.seededPagerank(events, broadcastNodeLimit = 0,
+        driverEdgeLimit = 0))
+      === rows(GraphOps.seededPagerank(events, driverEdgeLimit = 0)),
+      "seeded pagerank")
     assert(rows(GraphOps.kCore(events, broadcastNodeLimit = 0))
       === rows(GraphOps.kCore(events)), "k-core")
     assert(rows(GraphOps.walletClusters(events, broadcastNodeLimit = 0))

@@ -672,8 +672,10 @@ class PlanAuditSpec extends TestSparkSession {
   test("seeded pagerank final assembly joins on the node key only") {
     // the per-iteration aggregates sit behind localCheckpoint lineage
     // cuts; the visible plan is the node ⋈ taint assembly — it must be
-    // a keyed join, never a cross product
-    val df = GraphOps.seededPagerank(Tables.events(spark, sfDir))
+    // a keyed join, never a cross product (driverEdgeLimit = 0: the
+    // sf0.001 graph would otherwise return a driver-built local frame)
+    val df = GraphOps.seededPagerank(Tables.events(spark, sfDir),
+      driverEdgeLimit = 0)
     val plan = planOf(df)
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
