@@ -356,8 +356,8 @@ object SparkEntry {
     "q_events_sink_roundtrip" -> ((s, d) => {
       // production layout round trip: date-partitioned time-sorted write,
       // partition-discovering read, per-date rollup ≡ direct aggregation
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_sink_q_" +
-        Integer.toHexString(d.hashCode)
+      val dir = java.nio.file.Files.createTempDirectory("graft_sink_q_")
+        .toString
       graft.sources.EventSink.writePartitionedByDay(
         Tables.events(s, d), dir, buckets = 4)
       graft.sources.EventSink.readPartitioned(s, dir)
@@ -371,8 +371,8 @@ object SparkEntry {
       // capture-side write (one frame file per partition) → DSv2 read →
       // columnar decode: the full wire path the reference implements with
       // gRPC connections + per-event parser callbacks
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_q_" +
-        Integer.toHexString(d.hashCode)
+      val dir = java.nio.file.Files.createTempDirectory("graft_wire_q_")
+        .toString
       graft.sources.wire.GraftWireWriter.writeFrames(
         graft.sources.EventCodec.encodeTrade(Tables.events(s, d)), dir)
       graft.sources.EventCodec.decodeTrade(
@@ -400,15 +400,17 @@ object SparkEntry {
     // resync scan: find_pattern locates the discriminator behind a
     // variable-length junk prefix and decode recovers every event
     "q_events_wire_resync" -> ((s, d) => {
-      import graft.sources.EventCodec
-      import graft.functions.exprs._
+      import graft.sources.{EventCodec, ProtocolRegistry}
       val wire = EventCodec.encodeTrade(Tables.events(s, d)).select(
         col("event_id"),
         concat(expr("unhex(repeat('aa', cast(event_id % 7 + 3 as int)))"),
           col("payload")).as("stream"))
+      // event_id is the trade layout's first field
+      val recovered =
+        ProtocolRegistry.decodeCols(EventCodec.TradeLayout, "payload").head
       EventCodec.resyncTrade(wire)
-        .select(col("sync_offset"),
-          le_long(col("payload"), 8).as("recovered_id"), col("event_id"))
+        .select(col("sync_offset"), recovered.as("recovered_id"),
+          col("event_id"))
         .groupBy("sync_offset").agg(count(lit(1)).as("n"),
           sum(when(col("recovered_id") === col("event_id"), 1L)
             .otherwise(0L)).as("n_recovered"))
@@ -436,8 +438,8 @@ object SparkEntry {
     // publish), read back and decoded ≡ the events table.
     // file/frame_idx are storage-assigned; the write ignores them.
     "q_events_wire_dsv2_write" -> ((s, d) => {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_w_" +
-        Integer.toHexString(d.hashCode)
+      val dir = java.nio.file.Files.createTempDirectory("graft_wire_w_")
+        .toString
       graft.sources.EventCodec.encodeTrade(Tables.events(s, d))
         .select(lit("").as("file"), lit(0L).as("frame_idx"), col("payload"))
         .write.format("graft-wire").mode("overwrite").save(dir)
@@ -2792,7 +2794,7 @@ object SparkEntry {
 
   /** [[cappedBucketCtes]] plus the directed distinct edge set `e` —
     * the capped family's shared edge source (GraphOps
-    * .cappedCoactivityEdges). Kept separate from the bucket CTEs
+    * .coactivityEdges under its CapTop default). Kept separate from the bucket CTEs
     * because DuckDB evaluates MATERIALIZED CTEs EAGERLY even when
     * unreferenced — a consumer that never reads `e` must not pay for
     * (or spill on) it. */

@@ -35,15 +35,19 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsFrom(s)(s.read.parquet(s"$d/events.parquet"))
+
   /** The events table carries TIMESTAMP(NANOS) parquet, which Spark's
-    * vectorized reader rejects; read it as long nanos (legacy flag) and
-    * normalize to a micros TimestampType column — the same truncation
-    * DuckDB's epoch_us applies, so oracles agree.
+    * vectorized reader rejects; `read` (a batch or a streaming reader of
+    * the events layout) runs with the legacy flag that reads it as long
+    * nanos, and `ts` is normalized to a micros TimestampType column —
+    * the same truncation DuckDB's epoch_us applies, so oracles agree.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def eventsFrom(s: SparkSession)(read: => DataFrame): DataFrame = {
     scala.util.Try(
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
-    val raw = table(s, d, "events")
+    val raw = tzNormalize(read)
     if (raw.schema("ts").dataType == LongType)
       raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else raw

@@ -6,10 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // memory-sink Complete-mode results collect to the driver; the
-    // sf10 session table overflows the 1g default and the sf100 one
-    // brushes 8g (oracle surface only — production streams write to
-    // real sinks, never memory)
+    // a ceiling on task results gathered on the driver (broadcast
+    // builds, the collects behind driver-side loops); streaming harness
+    // results are written by the executors and never come back here
     val spark = Graft.session(s"local[$cpus]", cpus.toInt, Seq(
       "spark.driver.maxResultSize" -> "16g", "spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")

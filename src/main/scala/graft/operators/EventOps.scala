@@ -1665,21 +1665,12 @@ object EventOps {
           .filter(col("rk") <= maxBucketTrades)
           .drop("rk")
         sandwichOn(tt)
-      case d: GraphOps.DropAll =>
-        d.check()
+      case _: GraphOps.DropAll =>
         val t = sandwichTradeRows(events)
         val sized = t.groupBy("mb").agg(count(lit(1)).as("c"))
           .filter(col("c") <= maxBucketTrades).select("mb")
         sandwichOn(t.join(sized, "mb"))
     }
-
-  /** A72b: sandwich detection under the degrade-not-drop prefix cap —
-    * since round 9 identical to [[sandwichTrades]]'s default; kept as
-    * a named alias. */
-  def sandwichTradesCapped(
-      events: DataFrame,
-      maxBucketTrades: Int = 1024): DataFrame =
-    sandwichTrades(events, maxBucketTrades, GraphOps.CapTop)
 
   private def sandwichTradeRows(events: DataFrame): DataFrame =
     events

@@ -71,26 +71,21 @@ object GraphOps {
     * vacuous when density crosses the cap everywhere. Because that
     * vacuity is SILENT (a caller at production density gets 0 rows
     * with no error — the round-8 sf100 witness), constructing the
-    * policy requires spelling out `acknowledgeVacuous = true`: every
-    * consumer calls [[check]] before applying the drop filter and
-    * refuses an unacknowledged instance. [[EventOps.capAccounting]]
+    * policy requires spelling out `acknowledgeVacuous = true`; the
+    * constructor refuses an unacknowledged instance. [[EventOps.capAccounting]]
     * reports how much each family's cap would drop — run it first. */
   final case class DropAll(acknowledgeVacuous: Boolean = false)
       extends OverCapPolicy {
     // enforced at CONSTRUCTION, not per consumer: an unacknowledged
-    // instance must not exist, or a future consumer that pattern-matches
-    // `case d: DropAll` without remembering to call check() would
-    // silently revert to the legacy silent-emptiness behavior this
-    // guard exists to prevent
+    // instance must not exist, so no consumer that pattern-matches
+    // `case _: DropAll` can revert to the legacy silent-emptiness
+    // behavior this guard exists to prevent
     require(acknowledgeVacuous,
       "DropAll deletes every over-cap bucket whole and returns ZERO " +
       "rows when density crosses the cap everywhere (witnessed at " +
       "sf100). Pass DropAll(acknowledgeVacuous = true) to confirm " +
       "that is intended, or use the CapTop default (degrade, never " +
       "drop); EventOps.capAccounting quantifies what the cap drops.")
-    /** Retained for source compatibility: validation now happens in the
-      * constructor, so an instance that exists is always acknowledged. */
-    private[graft] def check(): Unit = ()
   }
 
   /** Node-count gate between the broadcast and shuffle regimes (the
@@ -255,18 +250,9 @@ object GraphOps {
   private def bucketsFor(events: DataFrame, maxGroupSize: Int,
       policy: OverCapPolicy): DataFrame = policy match {
     case CapTop => cappedBuckets(events, maxGroupSize)
-    case d: DropAll =>
-      d.check()
+    case _: DropAll =>
       droppedBuckets(events, maxGroupSize)
   }
-
-  /** Directed co-activity edge list under the degrade-not-drop rank cap
-    * ([[cappedBuckets]]) — since round 9 this IS
-    * `coactivityEdges(_, _, CapTop)`, the default; kept as a named
-    * alias for callers/specs that spell the policy out. */
-  def cappedCoactivityEdges(
-      events: DataFrame, maxGroupSize: Int): DataFrame =
-    coactivityEdges(events, maxGroupSize, CapTop)
 
   /** Wallets ranked by 10 rounds of damped (0.85) integer PageRank over
     * the "active in the same market-hour" graph. Output: one row per
@@ -300,17 +286,6 @@ object GraphOps {
       driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame =
     integerPagerankOn(coactivityEdges(events, maxGroupSize, policy),
       iterations, broadcastNodeLimit, driverEdgeLimit)
-
-  /** A71c: PageRank over the capped co-activity graph — since round 9
-    * identical to [[coactivityPagerank]]'s default; kept as a named
-    * alias. */
-  def coactivityPagerankCapped(
-      events: DataFrame,
-      iterations: Int = 10,
-      maxGroupSize: Int = 16,
-      broadcastNodeLimit: Long = DefaultBroadcastNodeLimit): DataFrame =
-    coactivityPagerank(events, iterations, maxGroupSize,
-      broadcastNodeLimit, CapTop)
 
   /** The shared 10-round integer-PageRank loop over a prebuilt directed
     * edge list — extracted so the dropped-bucket and capped-bucket edge
@@ -503,18 +478,6 @@ object GraphOps {
     kCoreOn(coactivityEdges(events, maxGroupSize, policy), k, maxPeels,
       broadcastNodeLimit)
 
-  /** A76b: k-core over the capped edge set — since round 9 identical
-    * to [[kCore]]'s default; kept as a named alias. The rank cap keeps
-    * each hot hour's heaviest wallets in play, which is where the ring
-    * signal lives. */
-  def kCoreCapped(
-      events: DataFrame,
-      k: Int = 8,
-      maxPeels: Int = 12,
-      maxGroupSize: Int = 16,
-      broadcastNodeLimit: Long = DefaultBroadcastNodeLimit): DataFrame =
-    kCore(events, k, maxPeels, maxGroupSize, broadcastNodeLimit, CapTop)
-
   private def kCoreOn(
       rawEdges: DataFrame,
       k: Int,
@@ -574,15 +537,6 @@ object GraphOps {
     walletClustersOn(coactivityEdges(events, maxGroupSize, policy),
       broadcastNodeLimit)
 
-  /** A74b: connected components over the capped edge set — since
-    * round 9 identical to [[walletClusters]]'s default; kept as a
-    * named alias. Same label-propagation fixed point. */
-  def walletClustersCapped(
-      events: DataFrame,
-      maxGroupSize: Int = 16,
-      broadcastNodeLimit: Long = DefaultBroadcastNodeLimit): DataFrame =
-    walletClusters(events, maxGroupSize, broadcastNodeLimit, CapTop)
-
   private def walletClustersOn(
       edges: DataFrame,
       broadcastNodeLimit: Long): DataFrame = {
@@ -626,18 +580,6 @@ object GraphOps {
       maxDeg: Int = 256): DataFrame =
     triangleStatsOn(coactivityEdges(events, maxGroupSize, policy),
       maxDeg)
-
-  /** A73b: triangles/clustering over the capped edge set — since
-    * round 9 identical to [[triangleStats]]'s default; kept as a named
-    * alias. The per-node degree bound the wedge enumeration needs
-    * holds under the rank cap (each bucket contributes ≤ cap wallets),
-    * so wedge fan-out stays Σ deg² over capped degrees at ANY
-    * density. */
-  def triangleStatsCapped(
-      events: DataFrame,
-      maxGroupSize: Int = 16,
-      maxDeg: Int = 256): DataFrame =
-    triangleStats(events, maxGroupSize, CapTop, maxDeg)
 
   private def triangleStatsOn(
       directedEdges: DataFrame, maxDeg: Int): DataFrame = {
@@ -699,15 +641,6 @@ object GraphOps {
       policy: OverCapPolicy = CapTop): DataFrame =
     edgeGrowthOn(bucketsFor(events, maxGroupSize, policy))
 
-  /** A102b: edge formation over the capped buckets — since round 9
-    * identical to [[edgeGrowth]]'s default; kept as a named alias. The
-    * new-edge-burst signal this operator exists for (a ring spinning
-    * up) happens exactly when buckets densify past the cap — which is
-    * when the drop policy deletes the burst. */
-  def edgeGrowthCapped(
-      events: DataFrame, maxGroupSize: Int = 16): DataFrame =
-    edgeGrowth(events, maxGroupSize, CapTop)
-
   private def edgeGrowthOn(buckets: DataFrame): DataFrame = {
     val dayPairs = buckets
       .select(expr("mb div 24").as("db"),
@@ -759,18 +692,6 @@ object GraphOps {
       policy: OverCapPolicy = CapTop): DataFrame =
     neighborSimilarityOn(coactivityEdges(events, maxGroupSize, policy),
       maxDeg, minCommon)
-
-  /** A95b: neighbor-overlap similarity over the capped edge set —
-    * since round 9 identical to [[neighborSimilarity]]'s default; kept
-    * as a named alias. The hub guard (`maxDeg` wedge-center cap)
-    * composes with the bucket rank cap, so the wedge fan-out stays
-    * bounded on BOTH axes at any density. */
-  def neighborSimilarityCapped(
-      events: DataFrame,
-      maxGroupSize: Int = 16,
-      maxDeg: Int = 256,
-      minCommon: Int = 2): DataFrame =
-    neighborSimilarity(events, maxGroupSize, maxDeg, minCommon, CapTop)
 
   private def neighborSimilarityOn(
       directedEdges: DataFrame,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.exprs._
@@ -12,15 +12,9 @@ import graft.functions.exprs._
   * (reference `src/streaming/event_parser/protocols/pumpfun/parser.rs:20-35`
   * dispatches on `discriminators::BUY_IX` etc.). Here the same wire format
   * is decoded by codegen'd column expressions over a `binary` column —
-  * vectorized across the whole partition instead of row callbacks.
-  *
-  * Layout (41 bytes, all LE):
-  *   [0..8)   discriminator
-  *   [8..16)  event_id   u64
-  *   [16..24) user_id    u64
-  *   [24..32) ts_us      i64 (event time, micros)
-  *   [32]     is_buy     u8
-  *   [33..41) amount     u64 (cents)
+  * vectorized across the whole partition instead of row callbacks. The
+  * trade frame is declared once, as [[TradeLayout]], and encoded and
+  * decoded through [[ProtocolRegistry]].
   */
 object EventCodec {
   val Discriminator: Array[Byte] =
@@ -31,16 +25,29 @@ object EventCodec {
   val CreateDiscriminator: Array[Byte] =
     Array(0x67, 0x72, 0x61, 0x66, 0x74, 0x0a, 0x0b, 0x0c).map(_.toByte)
 
-  /** Encode events rows into the wire format (test/round-trip path). */
-  def encodeTrade(events: DataFrame): DataFrame =
-    events.withColumn("payload", concat(
-      lit(Discriminator),
-      le_bytes(col("event_id"), 8),
-      le_bytes(col("user_id"), 8),
-      le_bytes(expr("unix_micros(ts)"), 8),
-      when(col("event_type") === "purchase", lit(Array(1.toByte)))
-        .otherwise(lit(Array(0.toByte))),
-      le_bytes(expr("cast(round(value * 100, 0) as bigint)"), 8)))
+  /** The 41-byte trade frame: [[Discriminator]], then little-endian
+    * event_id, user_id, ts_us (event time, micros), the is_buy byte and
+    * amount_cents. Not in [[ProtocolRegistry.registry]]: trade frames
+    * dispatch through [[dispatch]] here. */
+  val TradeLayout: ProtocolRegistry.LayoutSpec = ProtocolRegistry.LayoutSpec(
+    "trade", Discriminator, ProtocolRegistry.borsh(Discriminator.length,
+      "event_id" -> "u64", "user_id" -> "u64", "ts_us" -> "i64",
+      "is_buy" -> "bool", "amount_cents" -> "u64"))
+
+  /** `is_buy` is 1 only for byte 0x01; the layout's bool reads the raw
+    * byte. */
+  private def buyFlag(raw: Column): Column = (raw === 1).cast("int")
+
+  /** Encode events rows into the wire format (test/round-trip path):
+    * adds `payload` to the events columns. */
+  def encodeTrade(events: DataFrame): DataFrame = {
+    val derived = Map(
+      "ts_us" -> expr("unix_micros(ts)"),
+      "is_buy" -> when(col("event_type") === "purchase", 1L).otherwise(0L),
+      "amount_cents" -> expr("cast(round(value * 100, 0) as bigint)"))
+    ProtocolRegistry.encode(events.withColumns(derived), TradeLayout)
+      .drop(derived.keys.toSeq: _*)
+  }
 
   private def lenPrefixed(strCol: String): org.apache.spark.sql.Column =
     concat(
@@ -131,13 +138,10 @@ object EventCodec {
         // length-guarded like decodeTrade: a truncated trade payload keeps
         // its kind tag but decodes to a null body (same contract as the
         // create-token decoder's null-on-malformed)
-        when(col("event_kind") === "trade" &&
-            expr(s"octet_length($payload)") >= 41, struct(
-          le_long(col(payload), 8).as("event_id"),
-          le_long(col(payload), 16).as("user_id"),
-          le_long(col(payload), 24).as("ts_us"),
-          expr(s"cast(substring($payload, 33, 1) = X'01' as int)").as("is_buy"),
-          le_long(col(payload), 33).as("amount_cents"))))
+        when(ProtocolRegistry.discMatches(payload, TradeLayout),
+          struct(ProtocolRegistry.decodeCols(TradeLayout, payload): _*)))
+      .withColumn("trade",
+        col("trade").withField("is_buy", buyFlag(col("trade.is_buy"))))
       .withColumn("create_token",
         when(col("event_kind") === "create_token",
           decode_create_token(col(payload))))
@@ -186,12 +190,6 @@ object EventCodec {
     * events (`protocols/pumpfun/parser.rs:120-154`), and untrusted wire
     * data must never be able to fail the job. */
   def decodeTrade(df: DataFrame, payload: String = "payload"): DataFrame =
-    df.filter(expr(s"substring($payload, 1, 8)") === lit(Discriminator) &&
-        expr(s"octet_length($payload)") >= 41)
-      .select(
-        le_long(col(payload), 8).as("event_id"),
-        le_long(col(payload), 16).as("user_id"),
-        le_long(col(payload), 24).as("ts_us"),
-        expr(s"cast(substring($payload, 33, 1) = X'01' as int)").as("is_buy"),
-        le_long(col(payload), 33).as("amount_cents"))
+    ProtocolRegistry.decode(df, TradeLayout, payload)
+      .withColumn("is_buy", buyFlag(col("is_buy")))
 }

@@ -31,8 +31,12 @@ object InstructionCodec {
   private val SwapDisc: Array[Byte] =
     Array[Byte](0x67, 0x72, 0x59, 0x01, 0x00, 0x00, 0x00, 0x00)
 
-  /** data blob: [8B disc][u64 event_id][u64 value_cents][u64 ts_us]. */
-  private val MinLen = 32
+  /** The swap instruction's 32-byte data blob: [[SwapDisc]], then LE
+    * event_id, value_cents and ts_us. */
+  private val SwapLayout: ProtocolRegistry.LayoutSpec =
+    ProtocolRegistry.LayoutSpec("swap", SwapDisc,
+      ProtocolRegistry.borsh(SwapDisc.length, "event_id" -> "u64",
+        "value_cents" -> "u64", "ts_us" -> "i64"))
 
   /** Pack the flat event table into nested transactions: 8 events per tx
     * (`event_id div 8`), the tx's account-key table = the distinct user
@@ -60,13 +64,11 @@ object InstructionCodec {
       (expr("array_position(acct.user_id, user_id)").cast("int") - 1)
         .as("user_idx"),
       col("value_cents"), col("ts_us"))
-    val instr = withIdx.select(
+    val instr = ProtocolRegistry.encode(withIdx, SwapLayout).select(
       col("tx_id"), col("acct"),
       struct(
         col("event_id"),
-        concat(lit(SwapDisc), le_bytes(col("event_id"), 8),
-          le_bytes(col("value_cents"), 8), le_bytes(col("ts_us"), 8))
-          .as("data"),
+        col("payload").as("data"),
         array(col("user_idx"), lit(0)).as("accounts")).as("ins"))
     instr.groupBy("tx_id").agg(
       first(col("acct")).as("acct"),
@@ -190,22 +192,24 @@ object InstructionCodec {
     * blob, named accounts resolved through the key table. Guards mirror
     * the reference: discriminator match, data length, account index in
     * range. */
-  def flattenDecode(txs: DataFrame): DataFrame =
+  def flattenDecode(txs: DataFrame): DataFrame = {
+    val Seq(eventId, valueCents, tsUs) =
+      ProtocolRegistry.decodeCols(SwapLayout, "ins.data")
     txs.select(col("tx_id"), col("account_keys"),
         posexplode(col("instructions")).as(Seq("instr_idx", "ins")))
       .filter(
-        expr(s"octet_length(ins.data) >= $MinLen") &&
-          expr("substring(ins.data, 1, 8)") === lit(SwapDisc) &&
+        ProtocolRegistry.discMatches("ins.data", SwapLayout) &&
           expr("ins.accounts[0]") >= 0 &&
           expr("ins.accounts[0]") < size(col("account_keys")))
       .select(
         col("tx_id"),
         col("instr_idx"),
-        le_long(expr("ins.data"), 8).as("event_id"),
+        eventId,
         lower(hex(element_at(col("account_keys"),
           expr("ins.accounts[0]").cast("int") + 1))).as("user_hex"),
         lower(hex(element_at(col("account_keys"),
           expr("ins.accounts[1]").cast("int") + 1))).as("authority_hex"),
-        le_long(expr("ins.data"), 16).as("value_cents"),
-        le_long(expr("ins.data"), 24).as("ts_us"))
+        valueCents,
+        tsUs)
+  }
 }

@@ -219,8 +219,12 @@ object ProtocolRegistry {
       FieldSpec("pool", 16),
       FieldSpec("name", 24, "str")))))
 
-  /** Default registry (the single-layout trade/create protocols live in
-    * [[EventCodec]]; this registry carries the multi-layout protocols). */
+  /** Default registry: the multi-layout protocols [[dispatch]] tags and
+    * decodes. Two single-layout frames are [[LayoutSpec]]s too but stay
+    * out of it — [[EventCodec.TradeLayout]] (tagged by
+    * [[EventCodec.dispatch]]) and [[InstructionCodec]]'s swap data blob —
+    * and create-token frames keep their own decoder (several
+    * variable-length strings). */
   val registry: Seq[ProtocolSpec] =
     Seq(Swap, Amm, Account, Launch, Clmm, Perp, Meta, Cpmm, Block)
 
@@ -312,7 +316,9 @@ object ProtocolRegistry {
       concat(lit(layout.discriminator) +:
         layout.fields.map(fieldBytes): _*))
 
-  private def discMatches(payload: String, l: LayoutSpec): Column = {
+  /** Discriminator + length guard of one layout: true for the payloads
+    * [[decode]] keeps. */
+  def discMatches(payload: String, l: LayoutSpec): Column = {
     val lenOk = expr(s"octet_length($payload)") >= l.minLen
     if (l.discriminator.isEmpty) lenOk
     else expr(s"substring($payload, 1, ${l.discriminator.length})") ===

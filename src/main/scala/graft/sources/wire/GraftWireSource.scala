@@ -14,7 +14,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 batch source for the graft wire format (SURVEY §2 A33).
+/** DataSource V2 table for the graft wire format (SURVEY §2 A33): batch
+  * and micro-batch reads, and the capture-side batch write
+  * ([[GraftWireBatchWrite]]; `GraftWireWriter.writeFrames` is its
+  * overwrite form), the only frame writer.
   *
   * The reference consumes framed event bytes off a wire (Yellowstone gRPC
   * / ShredStream connections, each connection an independent byte
@@ -327,20 +330,18 @@ class GraftWireFrameReader(part: GraftWirePartition, required: StructType)
   override def close(): Unit = in.close()
 }
 
-/** Distributed writer for the wire format (the capture-side analog): each
-  * partition of `payloads` becomes one frame file — the same
-  * files-as-parallelism layout the source reads back. */
-/** D13: the capture-side writer as a FIRST-CLASS DSv2 batch write with
-  * the full commit protocol — `df.write.format("graft-wire").save(dir)`
-  * (append) / `.mode("overwrite")` (truncate). Each task streams its
-  * partition's frames into a temp file the reader cannot see (temps
+/** D13: the capture-side writer (the only one) as a DSv2 batch write
+  * with the full commit protocol — `df.write.format("graft-wire")
+  * .save(dir)` (append) / `.mode("overwrite")` (truncate); each
+  * partition of the written frame becomes one frame file, the same
+  * files-as-parallelism layout the source reads back. Each task streams
+  * its partition's frames into a temp file the reader cannot see (temps
   * don't end in `.bin` — [[GraftWireTable.listFrameFiles]] filters on
   * the suffix), `commit()` hands the driver a rename intent, and
   * [[GraftWireBatchWrite.commit]] publishes every file with one rename
   * per task — so a failed or speculative task never leaves a partial
-  * frame file visible, which the foreachPartition writer this
-  * supersedes could not guarantee. `file`/`frame_idx` are
-  * storage-assigned on read and ignored on write (metadata columns). */
+  * frame file visible. `file`/`frame_idx` are storage-assigned on read
+  * and ignored on write (metadata columns). */
 class GraftWireWriteBuilder(path: String, schema: StructType,
     queryId: String)
     extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -441,30 +442,14 @@ class GraftWireDataWriter(dir: String, payloadIdx: Int, queryId: String,
 }
 
 object GraftWireWriter {
+  /** Capture the `payload` column as frame files in `dir`, replacing any
+    * previous capture there: the [[GraftWireBatchWrite]] overwrite, one
+    * frame file per partition, each published by a rename. */
   def writeFrames(payloads: org.apache.spark.sql.DataFrame,
       dir: String): Unit = {
-    // replace semantics: a previous capture with more partitions must not
-    // leave stale frame files behind
-    val dirPath = new Path(dir)
-    val dfs = dirPath.getFileSystem(new Configuration())
-    if (dfs.exists(dirPath)) dfs.delete(dirPath, true)
-    dfs.mkdirs(dirPath)
-    payloads.select("payload").foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val p = new Path(s"$dir/part-$pid.bin")
-        val fs = p.getFileSystem(new Configuration())
-        fs.setWriteChecksum(false)
-        val out = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(fs.create(p, true)))
-        try rows.foreach { r =>
-          val bytes = r.getAs[Array[Byte]]("payload")
-          out.write(bytes.length & 0xff)
-          out.write((bytes.length >> 8) & 0xff)
-          out.write((bytes.length >> 16) & 0xff)
-          out.write((bytes.length >> 24) & 0xff)
-          out.write(bytes)
-        } finally out.close()
-    }
+    import org.apache.spark.sql.functions.{col, lit}
+    payloads.select(lit("").as("file"), lit(0L).as("frame_idx"),
+        col("payload"))
+      .write.format("graft-wire").mode("overwrite").save(dir)
   }
 }

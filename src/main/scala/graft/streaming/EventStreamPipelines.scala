@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types.LongType
 
 /** Structured Streaming re-expression of the reference's subscription
   * model (SURVEY §2 A15-A18): protocols × event-type filter × sink instead
@@ -16,14 +15,38 @@ import org.apache.spark.sql.types.LongType
   * dropped-event accounting.
   */
 object EventStreamPipelines {
-  private val memCounter = new AtomicInteger(0)
+
+  /** Run `df` to completion under the AvailableNow trigger and return
+    * what it produced. The executors write each micro-batch as parquet
+    * into a fresh temp directory — overwriting for Complete mode (the
+    * last batch is the whole result), appending for Append and Update —
+    * so no result is collected into the driver heap (a memory sink
+    * OOM'd 85 GB on the ~95M-row sf100 session table) and nothing is
+    * registered in the session. A drain that produced no batch reads
+    * back as an empty frame of `df`'s schema. */
+  private def drain(df: DataFrame, mode: OutputMode): DataFrame = {
+    val dir = Files.createTempDirectory("graft_drain_").toString
+    val writeMode =
+      if (mode == OutputMode.Complete()) "overwrite" else "append"
+    df.writeStream
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(writeMode).parquet(dir)
+      }
+      .start()
+      .awaitTermination()
+    df.sparkSession.read.schema(df.schema).parquet(dir)
+  }
 
   /** Run `body` with the RocksDB state store provider (required by
     * transformWithState), restoring the session's previous provider
-    * afterwards. A streaming query reads the provider when it starts. */
+    * afterwards. A streaming query reads the provider when it starts.
+    * The previous value is the explicitly set one: `getOption` would
+    * return the default and restoring it would leave the key set. */
   private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body
@@ -38,40 +61,24 @@ object EventStreamPipelines {
 
   /** Read the events table as a stream (file source; availableNow runs it
     * to completion, proving batch/stream semantic parity). */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    scala.util.Try(
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
-    val raw = spark.readStream
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.eventsFrom(spark)(spark.readStream
       .schema(spark.read.parquet(s"$dir/events.parquet").schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val nanosFixed =
-      if (raw.schema("ts").dataType == LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    graft.Tables.tzNormalize(nanosFixed)
-  }
+      .parquet(dir))
 
-  /** A15: include-list filter → tumbling window counts, run with the
-    * availableNow trigger into a memory sink; returns the final table.
+  /** A15: include-list filter → tumbling window counts, drained with
+    * the availableNow trigger; returns the final table.
     * Identical semantics to the batch EventOps.tumbling1h on the filtered
     * stream — the driver oracle-checks it against plain SQL.
     */
   def windowedCountsAvailableNow(
       spark: SparkSession, dir: String, include: Seq[String]): DataFrame = {
-    val name = s"graft_stream_wc_${memCounter.incrementAndGet()}"
     val agg = eventsStream(spark, dir)
       .filter(col("event_type").isin(include: _*))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .select(expr("unix_timestamp(window.start)").as("ws"),
         col("event_type"), col("count").as("n"))
   }
@@ -84,60 +91,45 @@ object EventStreamPipelines {
     * source that yields a `payload` binary column (rate-synthesized,
     * memory, file, or a real tx feed).
     */
-  def decodedTradeMetrics(payloads: DataFrame): DataFrame = {
-    import graft.sources.EventCodec
-    payloads
-      // discriminator AND length guard: truncated frames on untrusted
-      // wire data must be skipped, never fail the stream (reference
-      // length-checks every read, pumpfun/parser.rs:120-154)
-      .filter(expr("substring(payload, 1, 8)") === lit(EventCodec.Discriminator) &&
-        expr("octet_length(payload)") >= 41)
-      .select(
-        graft.functions.exprs.le_long(col("payload"), 8).as("event_id"),
-        graft.functions.exprs.le_long(col("payload"), 16).as("user_id"),
-        timestamp_micros(
-          graft.functions.exprs.le_long(col("payload"), 24)).as("ts"),
-        expr("cast(substring(payload, 33, 1) = X'01' as int)").as("is_buy"),
-        graft.functions.exprs.le_long(col("payload"), 33).as("amount_cents"))
+  def decodedTradeMetrics(payloads: DataFrame): DataFrame =
+    // decodeTrade guards discriminator AND length: truncated frames on
+    // untrusted wire data are skipped, never fail the stream (reference
+    // length-checks every read, pumpfun/parser.rs:120-154)
+    graft.sources.EventCodec.decodeTrade(payloads)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 minute"), col("is_buy"))
       .agg(count(lit(1)).as("n"), sum("amount_cents").as("cents"))
       .select(expr("unix_timestamp(window.start)").as("ws"), col("is_buy"),
         col("n"), col("cents"))
-  }
 
   /** Synthetic trade-payload stream from the rate source: each tick is
     * encoded to the borsh wire format, exercising encode→decode under
     * Structured Streaming backpressure (`rowsPerSecond`). */
   def syntheticTradeStream(spark: SparkSession, rowsPerSecond: Int): DataFrame = {
-    import graft.functions.exprs._
-    import graft.sources.EventCodec
-    spark.readStream.format("rate")
+    import graft.sources.{EventCodec, ProtocolRegistry}
+    val ticks = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond).load()
-      .select(concat(
-        lit(EventCodec.Discriminator),
-        le_bytes(col("value"), 8),
-        le_bytes(expr("value % 97"), 8),
-        le_bytes(expr("unix_micros(timestamp)"), 8),
-        when(expr("value % 2 = 0"), lit(Array(1.toByte)))
-          .otherwise(lit(Array(0.toByte))),
-        le_bytes(expr("value * 7 + 1"), 8)).as("payload"),
-        expr("unix_micros(timestamp)").as("graft_ts_us"))
+      .select(col("value").as("event_id"), expr("value % 97").as("user_id"),
+        expr("unix_micros(timestamp)").as("ts_us"),
+        when(expr("value % 2 = 0"), 1L).otherwise(0L).as("is_buy"),
+        expr("value * 7 + 1").as("amount_cents"))
+    ProtocolRegistry.encode(ticks, EventCodec.TradeLayout)
+      .select(col("payload"), col("ts_us").as("graft_ts_us"))
   }
 
   /** A33c: streaming wire EGRESS — the publish side of the reference's
     * pipeline (decoded events re-encoded and shipped downstream). The
     * event stream encodes to the borsh wire format and lands as framed
-    * files via `foreachBatch` + the distributed frame writer, one
-    * directory per micro-batch id: re-running a batch overwrites its own
-    * directory and nothing else, which is the idempotent-sink contract
+    * files via `foreachBatch` + the DSv2 frame write
+    * (`GraftWireWriter.writeFrames`), one directory per micro-batch id:
+    * re-running a batch overwrites its own directory and nothing else, which is the idempotent-sink contract
     * exactly-once delivery needs. Returns the decoded read-back of
     * everything written (≡ the events table; driver oracle-checks it).
     */
   def wireEgressAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{EventCodec, wire}
-    val outDir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_egress_" +
-      Integer.toHexString(dir.hashCode) + "_" + memCounter.incrementAndGet()
+    val outDir = Files.createTempDirectory("graft_wire_egress_").toString
     val q = EventCodec.encodeTrade(eventsStream(spark, dir))
       .select("payload")
       .writeStream
@@ -161,11 +153,9 @@ object EventStreamPipelines {
     * parquet sink (never the driver); the read-back must equal the
     * batch decode of every frame. */
   def wireIncrementalIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.{EventCodec, wire}
-    import java.nio.file.{Files, Paths}
-    val stage = Files.createTempDirectory("graft_wire_stage").toString
-    wire.GraftWireWriter.writeFrames(
-      EventCodec.encodeTrade(graft.Tables.events(spark, sfDir)), stage)
+    import graft.sources.EventCodec
+    import java.nio.file.Paths
+    val stage = tradeCapture(spark, sfDir)
     val live = Files.createTempDirectory("graft_wire_live").toString
     val files = Files.list(Paths.get(stage)).iterator()
     val all = Iterator.continually(files)
@@ -206,21 +196,13 @@ object EventStreamPipelines {
     * DISTINCT, proving the streaming dedup semantics match the reference's
     * signature-cache dedup (`common/event_processor.rs`). */
   def dedupCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_dd_${memCounter.incrementAndGet()}"
     val deduped = eventsStream(spark, dir)
       .withColumn("minute_bucket", expr("unix_micros(ts) div 60000000"))
       .withWatermark("ts", "1 hour")
       .dropDuplicates("user_id", "event_type", "minute_bucket")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(deduped, OutputMode.Complete())
   }
 
   /** A16d: `dropDuplicatesWithinWatermark` — the OTHER streaming dedup
@@ -234,7 +216,6 @@ object EventStreamPipelines {
     * hash-oracle the semantics. */
   def dedupWithinWatermarkAvailableNow(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ddw_${memCounter.incrementAndGet()}"
     val deduped = eventsStream(spark, dir)
       .withColumn("minute_bucket", expr("unix_micros(ts) div 60000000"))
       .withWatermark("ts", "1 hour")
@@ -242,14 +223,7 @@ object EventStreamPipelines {
         "minute_bucket")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(deduped, OutputMode.Complete())
   }
 
   /** A35 (north-star composite): the reference's whole pipeline as one
@@ -262,25 +236,24 @@ object EventStreamPipelines {
     */
   def wireDecodedCountsAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.{EventCodec, wire}
-    val name = s"graft_wire_wc_${memCounter.incrementAndGet()}"
-    val wireDir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_s_" +
-      Integer.toHexString(sfDir.hashCode)
-    wire.GraftWireWriter.writeFrames(
-      EventCodec.encodeTrade(graft.Tables.events(spark, sfDir)), wireDir)
-    val decoded = EventCodec.decodeTrade(
-      spark.readStream.format("graft-wire").load(wireDir))
+    val decoded = graft.sources.EventCodec.decodeTrade(
+      spark.readStream.format("graft-wire").load(tradeCapture(spark, sfDir)))
     val agg = decoded
       .withColumn("ws", expr("(ts_us div 3600000000) * 3600"))
       .groupBy(col("ws"), col("is_buy"))
       .agg(count(lit(1)).as("n"), sum("amount_cents").as("cents"))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
+  }
+
+  /** Capture the events table's trade frames into a fresh temp
+    * directory (its own per call: concurrent builders never share one)
+    * and return the directory. */
+  private def tradeCapture(spark: SparkSession, sfDir: String): String = {
+    val dir = Files.createTempDirectory("graft_wire_s_").toString
+    graft.sources.wire.GraftWireWriter.writeFrames(
+      graft.sources.EventCodec.encodeTrade(
+        graft.Tables.events(spark, sfDir)), dir)
+    dir
   }
 
   /** A22 driven end to end: [[decodedTradeMetrics]] — the minute-
@@ -288,25 +261,12 @@ object EventStreamPipelines {
     * fed by a real wire capture through the DSv2 source under
     * availableNow, and oracle-checked against plain SQL over the
     * events table. Output is (minutes-in-span × 2) rows — bounded by
-    * the data's TIME SPAN, never its size, so the Complete-mode memory
-    * sink stays driver-safe at any scale factor. */
+    * the data's TIME SPAN, never its size. */
   def tradeMetricsAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.{EventCodec, wire}
-    val name = s"graft_wire_tm_${memCounter.incrementAndGet()}"
-    val wireDir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_s_" +
-      Integer.toHexString(sfDir.hashCode)
-    wire.GraftWireWriter.writeFrames(
-      EventCodec.encodeTrade(graft.Tables.events(spark, sfDir)), wireDir)
     val agg = decodedTradeMetrics(
-      spark.readStream.format("graft-wire").load(wireDir))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+      spark.readStream.format("graft-wire").load(tradeCapture(spark, sfDir)))
+    drain(agg, OutputMode.Complete())
   }
 
   /** A61/A63 streaming composite: the REAL-layout registry on a live
@@ -323,11 +283,8 @@ object EventStreamPipelines {
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{ProtocolRegistry, RealLayouts, wire}
     import ProtocolRegistry.pubkey
-    val name = s"graft_wire_real_${memCounter.incrementAndGet()}"
-    val tmp = System.getProperty("java.io.tmpdir")
-    val hex = Integer.toHexString(sfDir.hashCode)
     val ev = graft.Tables.events(spark, sfDir)
-    val pfDir = s"$tmp/graft_wire_pf_$hex"
+    val pfDir = Files.createTempDirectory("graft_wire_pf_").toString
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "purchase").select(
         expr("cast(round(value * 100, 0) as bigint)").as("sol_amount"),
@@ -345,7 +302,7 @@ object EventStreamPipelines {
         pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
         pubkey("1").as("fee_recipient"), pubkey("2").as("creator")),
       RealLayouts.PumpFun.layouts(0)), pfDir)
-    val bkDir = s"$tmp/graft_wire_bk_$hex"
+    val bkDir = Files.createTempDirectory("graft_wire_bk_").toString
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "view").select(
         pubkey("user_id % 100").as("pool_state"),
@@ -377,13 +334,7 @@ object EventStreamPipelines {
         sum(coalesce(col("pf_trade.sol_amount"),
           col("bonk_trade.amount_in"))).as("sum_amt"),
         sum(col("bonk_trade.trade_direction")).as("sum_dir"))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A43: stream-static broadcast enrichment — the live event feed joined
@@ -397,7 +348,6 @@ object EventStreamPipelines {
     * parity with the equivalent batch join (driver oracle-checks vs SQL).
     */
   def streamStaticEnrichment(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_se_${memCounter.incrementAndGet()}"
     val dim = graft.Tables.events(spark, dir)
       .groupBy("user_id")
       .agg(date_format(min(col("ts")), "yyyy-MM-dd").as("cohort_date"))
@@ -407,14 +357,7 @@ object EventStreamPipelines {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double")
           .as("total_value"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A105b: STREAMING seasonal anomaly alerts — live hours scored
@@ -428,21 +371,13 @@ object EventStreamPipelines {
     */
   def seasonalAvailableNow(spark: SparkSession, dir: String,
       mult: Int = 2): DataFrame = {
-    val name = s"graft_stream_seasonal_${memCounter.incrementAndGet()}"
     import graft.operators.EventOps
     val baseline = EventOps.seasonalBaseline(
       EventOps.hourlyCounts(graft.Tables.events(spark, dir)))
     val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .withColumn("hb", expr("unix_timestamp(window.start) div 3600"))
       .withColumn("hod", expr("hb % 24"))
       .join(broadcast(baseline), Seq("event_type", "hod"))
@@ -458,7 +393,6 @@ object EventStreamPipelines {
     * run proves exact parity with the batch OHLC oracle.
     */
   def ohlcAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ohlc_${memCounter.incrementAndGet()}"
     val agg = eventsStream(spark, dir)
       .select(col("event_type"), col("ts"), col("event_id"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -468,14 +402,7 @@ object EventStreamPipelines {
         max_by(col("v"), struct(col("ts"), col("event_id"))).as("close_d"),
         max("v").as("high_d"), min("v").as("low_d"),
         count(lit(1)).as("n"), sum("v").as("volume_d"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .select(expr("unix_timestamp(window.start)").as("hb"),
         col("event_type"),
         col("open_d").cast("double").as("open"),
@@ -502,23 +429,7 @@ object EventStreamPipelines {
       .groupBy(col("user_id"),
         session_window(col("ts"), s"$gapMinutes minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"), sum("v").as("tv"))
-    // Complete-mode foreachBatch hands the FULL updated result table to
-    // the callback as a distributed DataFrame — each trigger overwrites
-    // the parquet sink executor-side, and the last trigger's overwrite
-    // IS the complete result. Nothing is collected to the driver: the
-    // memory sink this replaces serialized whole partitions into the
-    // driver heap and OOM'd 85 GB on the ~95M-row sf100 session table.
-    val sinkDir = java.nio.file.Files
-      .createTempDirectory("graft_sess_sink").toString
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(sinkDir)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sinkDir)
+    drain(agg, OutputMode.Complete())
       .select(col("user_id"), expr("unix_micros(sw.start)").as("start_us"),
         expr("unix_micros(sw.end)").as("end_us"), col("n_events"),
         col("tv").cast("double").as("total_value"))
@@ -528,13 +439,12 @@ object EventStreamPipelines {
     * signup they followed within one hour, both sides streams (the join
     * state is bounded by the watermark + time-range condition, which is
     * what makes it run at 100 TB: per-key state evicts as event time
-    * advances). availableNow runs it to completion; the memory table is
+    * advances). availableNow runs it to completion; the drained rows are
     * then aggregated in batch so the result is deterministic and
     * oracle-checkable.
     */
   def streamStreamAttribution(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_ss_join_${memCounter.incrementAndGet()}"
     val purchases = eventsStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("pts"), col("event_id"))
@@ -545,13 +455,7 @@ object EventStreamPipelines {
       .withWatermark("sts", "1 hour")
     val joined = purchases.join(signups,
       expr("user_id = s_user AND pts >= sts AND pts <= sts + interval 1 hour"))
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(joined, OutputMode.Append())
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_attributed"))
   }
@@ -602,15 +506,8 @@ object EventStreamPipelines {
     * a DuckDB hash check instead of only a spec. */
   def sessionClosuresAvailableNow(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_sc_${memCounter.incrementAndGet()}"
-    val q = sessionClosuresStream(eventsStream(spark, dir)).toDF()
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(sessionClosuresStream(eventsStream(spark, dir)).toDF(),
+        OutputMode.Append())
       .select(col("user_id"), col("start_us"), col("end_us"),
         col("n_events").cast("long").as("n_events"))
   }
@@ -625,13 +522,12 @@ object EventStreamPipelines {
     * reference signature-cache contract (`event_processor.rs` dedup)
     * as an oracle-checkable equation. */
   def dedupReplayAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ddr_${memCounter.incrementAndGet()}"
     // createTempDirectory, NOT tmpdir + a per-JVM counter: two
     // concurrent harness JVMs restart the counter at the same value,
     // so counter paths collide — one JVM then appends a SECOND pair of
     // parquet files into the other's replay source (4 deliveries, a
     // failed oracle) or deletes the dir out from under a running query
-    val inc = java.nio.file.Files.createTempDirectory("graft_ddr_")
+    val inc = Files.createTempDirectory("graft_ddr_")
       .toString
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -645,14 +541,14 @@ object EventStreamPipelines {
       // handle per call otherwise); the missing-part case gets a named
       // error instead of a bare NoSuchElementException
       val part = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(inc))) { s =>
+        Files.list(java.nio.file.Paths.get(inc))) { s =>
         s.iterator().asScala
           .find(_.getFileName.toString.startsWith("part-"))
           .getOrElse(throw new IllegalStateException(
             s"dedupReplayAvailableNow: no part- file staged under $inc " +
             "(did the parquet writer's file naming change?)"))
       }
-      java.nio.file.Files.copy(part,
+      Files.copy(part,
         part.resolveSibling("part-replay.parquet"))
     }
     val src = graft.Tables.tzNormalize(spark.readStream
@@ -662,13 +558,8 @@ object EventStreamPipelines {
     val counts = dedupStream(src)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table(name).localCheckpoint(eager = true)
+    val out = drain(counts, OutputMode.Complete())
+      .localCheckpoint(eager = true)
     scala.util.Try(org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(inc)))
     out
@@ -683,7 +574,7 @@ object EventStreamPipelines {
     * verbatim. */
   def histIngestAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     // collision-proof scratch (see dedupReplayAvailableNow)
-    val base = java.nio.file.Files.createTempDirectory("graft_hi_")
+    val base = Files.createTempDirectory("graft_hi_")
       .toString
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -712,7 +603,7 @@ object EventStreamPipelines {
     * rest of the sketch family. */
   def sketchIngestAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     // collision-proof scratch (see dedupReplayAvailableNow)
-    val base = java.nio.file.Files.createTempDirectory("graft_si_")
+    val base = Files.createTempDirectory("graft_si_")
       .toString
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -854,17 +745,9 @@ object EventStreamPipelines {
 
   /** A94b availableNow harness (oracle ≡ EventOps.cusumFixed's SQL). */
   def cusumAlarmsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_cusum_${memCounter.incrementAndGet()}"
     withRocksDb(spark) {
-      val q = cusumAlarmStream(eventsStream(spark, dir)).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(cusumAlarmStream(eventsStream(spark, dir)), OutputMode.Append())
     }
-    spark.table(name)
   }
 
   /** A17f driver: decoded trades → per-sell integer PnL rows. */
@@ -942,7 +825,6 @@ object EventStreamPipelines {
     * whole MapState read-modify-write path against that SQL. */
   def typeCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_tc_${memCounter.incrementAndGet()}"
     withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"), col("event_type"))
@@ -952,16 +834,8 @@ object EventStreamPipelines {
           OutputMode.Update(),
           org.apache.spark.sql.Encoders.product[(Long, String, Long)])
         .toDF("user_id", "event_type", "n")
-      val q = out.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
-      .groupBy("user_id", "event_type").agg(max("n").as("n"))
+      drain(out, OutputMode.Update())
+    }.groupBy("user_id", "event_type").agg(max("n").as("n"))
   }
 
   /** A17d, event-time-ordered: the bounded recent-trades ring with the
@@ -1012,8 +886,7 @@ object EventStreamPipelines {
   def recentTradesAvailableNow(spark: SparkSession, dir: String,
       keep: Int = 5): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_rt_${memCounter.incrementAndGet()}"
-    withRocksDb(spark) {
+    val drained = withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"),
           expr("unix_micros(ts)").as("ts_us"),
@@ -1025,19 +898,13 @@ object EventStreamPipelines {
           TimeMode.None(), OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[(Long, Int, Long, Long)])
         .toDF("user_id", "n_recent", "recent_cents", "seq")
-      val q = out.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(out, OutputMode.Append())
     }
     // keep each wallet's FINAL snapshot: Append mode leaves one row per
     // (key, micro-batch) in the sink, so a multi-batch availableNow run
     // (several source files / low maxFilesPerTrigger) would otherwise
     // surface stale earlier snapshots alongside the final one
-    spark.table(name)
+    drained
       .groupBy("user_id")
       .agg(max(struct(col("seq"), col("n_recent"), col("recent_cents")))
         .as("fin"))
@@ -1132,29 +999,11 @@ object EventStreamPipelines {
   def sessionTimeoutAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    // Append-mode output goes to the native parquet file sink (append
-    // is exactly what the file sink supports): emitted sessions land as
-    // executor-written parquet instead of accumulating in a driver-heap
-    // memory sink, which OOM'd at sf100 (~95M emitted rows). The
-    // read-back uses the sink's _spark_metadata commit log, so only
-    // committed files are seen.
-    val sinkDir = java.nio.file.Files
-      .createTempDirectory("graft_timer_sink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_timer_ckpt").toString
     withRocksDb(spark) {
-      val q = sessionTimeoutStream(
-        eventsStream(spark, dir), gapMinutes, watermarkDelay).writeStream
-        .format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sinkDir)
-      .select(col("user_id"), col("start_us"), col("end_us"),
+      drain(sessionTimeoutStream(
+        eventsStream(spark, dir), gapMinutes, watermarkDelay),
+        OutputMode.Append())
+    }.select(col("user_id"), col("start_us"), col("end_us"),
         col("n_events").cast("long").as("n_events"),
         col("by_timeout").cast("long").as("by_timeout"))
   }
@@ -1181,18 +1030,9 @@ object EventStreamPipelines {
     * and keep each wallet's final state, which must equal the batch
     * count/sum — the driver oracle-checks it against plain SQL. */
   def walletVolumeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_tws_${memCounter.incrementAndGet()}"
     withRocksDb(spark) {
-      val q = walletVolumeStream(eventsStream(spark, dir)).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
-      .groupBy("user_id")
+      drain(walletVolumeStream(eventsStream(spark, dir)), OutputMode.Update())
+    }.groupBy("user_id")
       .agg(max(struct(col("n_events"), col("cents"))).as("fin"))
       .select(col("user_id"), col("fin.n_events").as("n_events"),
         col("fin.cents").as("cents"))
@@ -1208,20 +1048,11 @@ object EventStreamPipelines {
     * pins equality through multi-batch in-order replay). Same wallet
     * decimation as the batch query so both feed one oracle. */
   def realizedPnlAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_pnl_${memCounter.incrementAndGet()}"
     withRocksDb(spark) {
-      val marks = realizedPnlStream(
-        eventsStream(spark, dir).filter(col("user_id") % 10 === 0))
-      val q = marks.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
-      .select(col("user_id"), col("event_id"), col("sell_cents"),
+      drain(realizedPnlStream(
+        eventsStream(spark, dir).filter(col("user_id") % 10 === 0)),
+        OutputMode.Append())
+    }.select(col("user_id"), col("event_id"), col("sell_cents"),
         col("cum_buy_cents"), col("cum_buy_n"),
         when(col("cum_buy_n") > 0,
           col("sell_cents").cast("double") -
@@ -1243,8 +1074,7 @@ object EventStreamPipelines {
     * spec-only existence proof. */
   def sessionLegacyAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30): DataFrame = {
-    val name = s"graft_stream_ssl_${memCounter.incrementAndGet()}"
-    val inc = java.nio.file.Files.createTempDirectory("graft_ssl_")
+    val inc = Files.createTempDirectory("graft_ssl_")
       .toString
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -1271,13 +1101,7 @@ object EventStreamPipelines {
       .schema(spark.read.parquet(inc).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(inc))
-    val q = sessionStream(src, gapMinutes).toDF().writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table(name)
+    val out = drain(sessionStream(src, gapMinutes).toDF(), OutputMode.Update())
       .groupBy("user_id")
       .agg(max(struct(col("end_us"), col("start_us"), col("n_events")))
         .as("s"))

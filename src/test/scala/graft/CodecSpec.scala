@@ -8,6 +8,12 @@ import graft.sources.EventCodec
 
 class CodecSpec extends TestSparkSession {
 
+  /** A 41-byte trade frame built by hand from the documented layout. */
+  private def tradePayload(id: Long, isBuy: Byte = 1): Array[Byte] =
+    EventCodec.Discriminator ++ CodecOps.leBytes(id, 8) ++
+      CodecOps.leBytes(id % 7, 8) ++ CodecOps.leBytes(id * 1000L, 8) ++
+      Array[Byte](isBuy) ++ CodecOps.leBytes(id * 3, 8)
+
   test("graft-wire DSv2 source: frame round trip, pruning, truncation") {
     import graft.sources.wire.{GraftWireWriter, GraftWireTable}
     val dir = java.nio.file.Files.createTempDirectory("graft_wire").toString
@@ -80,9 +86,7 @@ class CodecSpec extends TestSparkSession {
     import graft.functions.CodecOps
     val dir = java.nio.file.Files.createTempDirectory("graft_wire_s")
     def frame(id: Long): Array[Byte] = {
-      val p = EventCodec.Discriminator ++ CodecOps.leBytes(id, 8) ++
-        CodecOps.leBytes(id % 7, 8) ++ CodecOps.leBytes(id * 1000L, 8) ++
-        Array[Byte](1) ++ CodecOps.leBytes(id * 3, 8)
+      val p = tradePayload(id)
       CodecOps.leBytes(p.length.toLong, 4) ++ p
     }
     def writeFile(name: String, ids: Seq[Long]): Unit =
@@ -282,6 +286,48 @@ class CodecSpec extends TestSparkSession {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(tagged("trade") == 50)
     assert(tagged("unknown") == 1)
+  }
+
+  test("encodeTrade bytes equal the hand-built trade frame") {
+    import spark.implicits._
+    val ids = Seq(1L, 2L, 3L, 10L, 11L)
+    val ev = ids.map(id => (id, id % 7, id * 1000L,
+        if (id % 2 == 1) "purchase" else "view", id * 3 / 100.0))
+      .toDF("event_id", "user_id", "ts_us", "event_type", "value")
+      .select(col("event_id"), col("user_id"),
+        expr("timestamp_micros(ts_us)").as("ts"), col("event_type"),
+        col("value"))
+    val got = EventCodec.encodeTrade(ev).select("event_id", "payload")
+      .as[(Long, Array[Byte])].collect().map { case (id, p) => id -> p.toSeq }
+      .toMap
+    assert(got == ids.map(id =>
+      id -> tradePayload(id, if (id % 2 == 1) 1 else 0).toSeq).toMap)
+  }
+
+  test("trade is_buy decodes to 1 only for byte 0x01") {
+    import spark.implicits._
+    val flags = Seq[Byte](0, 1, 2, -1)
+    val frames = flags.zipWithIndex
+      .map { case (b, i) => tradePayload(i.toLong, b) }.toDF("payload")
+    val want = Map(0L -> 0, 1L -> 1, 2L -> 0, 3L -> 0)
+    assert(EventCodec.decodeTrade(frames).select("event_id", "is_buy")
+      .as[(Long, Int)].collect().toMap == want)
+    assert(EventCodec.dispatch(frames)
+      .select("trade.event_id", "trade.is_buy")
+      .as[(Long, Int)].collect().toMap == want)
+  }
+
+  test("dispatch keeps a truncated trade frame tagged trade, null body") {
+    import spark.implicits._
+    val full = tradePayload(5L)
+    val frames = Seq(full.take(8), full.take(20), full.take(40), full)
+      .toDF("payload")
+    val rows = EventCodec.dispatch(frames)
+      .select(octet_length(col("payload")), col("event_kind"),
+        col("trade").isNull)
+      .as[(Int, String, Boolean)].collect().sortBy(_._1).toSeq
+    assert(rows == Seq((8, "trade", true), (20, "trade", true),
+      (40, "trade", true), (41, "trade", false)))
   }
 
   test("protocol registry round-trips every layout and guards truncation") {

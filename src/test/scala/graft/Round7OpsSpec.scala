@@ -321,7 +321,7 @@ class Round7OpsSpec extends TestSparkSession {
     // vacuity shape this operator exists to fix
     assert(GraphOps.coactivityPagerank(ev, maxGroupSize = 16,
       policy = GraphOps.DropAll(acknowledgeVacuous = true)).count() == 0)
-    val got = GraphOps.coactivityPagerankCapped(ev, maxGroupSize = 16)
+    val got = GraphOps.coactivityPagerank(ev, maxGroupSize = 16)
       .collect().map(r => (r.getAs[Long]("node"),
         r.getAs[Long]("deg"), r.getAs[Long]("pr")))
     assert(got.map(_._1).toSet == (1L to 16L).toSet,
@@ -345,7 +345,7 @@ class Round7OpsSpec extends TestSparkSession {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("node"),
         r.getAs[Long]("deg"), r.getAs[Long]("pr"))).toSet
-    val capped = key(GraphOps.coactivityPagerankCapped(ev,
+    val capped = key(GraphOps.coactivityPagerank(ev,
       maxGroupSize = 16))
     val dropped = key(GraphOps.coactivityPagerank(ev,
       maxGroupSize = 64, policy = GraphOps.DropAll(acknowledgeVacuous = true)))

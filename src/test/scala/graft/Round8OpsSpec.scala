@@ -36,7 +36,7 @@ class Round8OpsSpec extends TestSparkSession {
     assert(GraphOps.coactivityEdges(ev, 8, GraphOps.DropAll(acknowledgeVacuous = true))
       .count() === 0L,
       "drop filter must be vacuous over the cap (the witnessed mode)")
-    val capped = GraphOps.cappedCoactivityEdges(ev, 8)
+    val capped = GraphOps.coactivityEdges(ev, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // top 8 by (count desc, id): wallets 13..20
     val want = (for {
@@ -55,18 +55,18 @@ class Round8OpsSpec extends TestSparkSession {
       1.0))
     def sorted(df: DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    assert(sorted(GraphOps.triangleStatsCapped(ev, 8)) ===
+    assert(sorted(GraphOps.triangleStats(ev, 8)) ===
       sorted(GraphOps.triangleStats(ev, 8, GraphOps.DropAll(acknowledgeVacuous = true))))
-    assert(sorted(GraphOps.kCoreCapped(ev, k = 2, maxGroupSize = 8)) ===
+    assert(sorted(GraphOps.kCore(ev, k = 2, maxGroupSize = 8)) ===
       sorted(GraphOps.kCore(ev, k = 2, maxGroupSize = 8,
         policy = GraphOps.DropAll(acknowledgeVacuous = true))))
-    assert(sorted(GraphOps.walletClustersCapped(ev, 8)) ===
+    assert(sorted(GraphOps.walletClusters(ev, 8)) ===
       sorted(GraphOps.walletClusters(ev, 8,
         policy = GraphOps.DropAll(acknowledgeVacuous = true))))
-    assert(sorted(GraphOps.neighborSimilarityCapped(ev, 8)) ===
+    assert(sorted(GraphOps.neighborSimilarity(ev, 8)) ===
       sorted(GraphOps.neighborSimilarity(ev, 8,
         policy = GraphOps.DropAll(acknowledgeVacuous = true))))
-    assert(sorted(GraphOps.edgeGrowthCapped(ev, 8)) ===
+    assert(sorted(GraphOps.edgeGrowth(ev, 8)) ===
       sorted(GraphOps.edgeGrowth(ev, 8, GraphOps.DropAll(acknowledgeVacuous = true))))
   }
 
@@ -88,7 +88,7 @@ class Round8OpsSpec extends TestSparkSession {
     assert(GraphOps.kCore(ev, k = 7, maxGroupSize = 64,
       policy = GraphOps.DropAll(acknowledgeVacuous = true)).count() === 0L,
       "drop policy must lose the ring at this density")
-    val core = GraphOps.kCoreCapped(ev, k = 7, maxGroupSize = 16)
+    val core = GraphOps.kCore(ev, k = 7, maxGroupSize = 16)
       .collect().map(_.getLong(0)).toSet
     assert((1L to 8L).toSet.subsetOf(core),
       s"ring must survive the capped peel, got $core")
@@ -108,7 +108,7 @@ class Round8OpsSpec extends TestSparkSession {
           col("rk") <= cap)
         .drop("mb", "rk")
     }
-    val got = EventOps.sandwichTradesCapped(full, cap)
+    val got = EventOps.sandwichTrades(full, cap)
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     val want = EventOps.sandwichTrades(prefix, Int.MaxValue,
       policy = GraphOps.DropAll(acknowledgeVacuous = true))
