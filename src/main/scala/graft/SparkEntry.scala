@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.exprs.{base58, le_bytes, le_u128, unbase58}
 import graft.operators._
-import graft.sources.ProtocolRegistry.pubkey
+import graft.sources.{EventCodec, ProtocolRegistry, RealLayouts}
+import graft.sources.ProtocolRegistry.{LayoutSpec, ProtocolSpec, pubkey}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory each
   * query key maps to. Every oracle is ANSI-ish SQL in DuckDB dialect over
@@ -28,8 +30,8 @@ object SparkEntry {
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.events(spark, dir)
     // wire round trip: encode -> raw payloads -> columnar decode
-    val decoded = graft.sources.EventCodec
-      .decodeTrade(graft.sources.EventCodec.encodeTrade(ev)
+    val decoded = EventCodec
+      .decodeTrade(EventCodec.encodeTrade(ev)
         .select("payload"))
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
       .withColumn("event_type",
@@ -56,6 +58,134 @@ object SparkEntry {
   private val pqCodebookCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
+  /** Per-day, per-type counts and cents read back from the partitioned
+    * events layout that `write` leaves in a fresh scratch dir (the
+    * `q_sink_*` round trips). The readback is materialized BEFORE the
+    * scratch dir is deleted: it held a full partitioned clone of the
+    * events table and used to leak on every bench/verify run.
+    * LOCAL-MODE-ONLY assumption: localCheckpoint blocks are
+    * non-replayable, so on a real cluster an executor loss after the
+    * delete would make the result unrecoverable — cluster reuse must
+    * collect first or use a reliable checkpoint dir instead. */
+  private def sinkReadback(s: SparkSession, name: String)(
+      write: String => Unit): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    write(dir)
+    val out = sources.EventSink.readPartitioned(s, dir)
+      .groupBy(expr("unix_micros(ts) div 86400000000").as("db"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(expr("cast(round(value * 100, 0) as bigint)"))
+          .as("sum_cents"))
+      .localCheckpoint(eager = true)
+    scala.util.Try(org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir)))
+    out
+  }
+
+  /** Each purchase with its wallet's latest prior view, found by `join`
+    * (an as-of join of purchases to views on user_id and ts_us), in the
+    * columns of the as-of oracle. */
+  private def purchaseViewAsOf(events: DataFrame)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = events
+      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
+        col("event_id"), col("event_type"))
+    join(ev.filter(col("event_type") === "purchase").drop("event_type"),
+      ev.filter(col("event_type") === "view").drop("event_type"))
+      .select(
+        col("event_id").as("purchase_id"), col("user_id"),
+        col("ts_us").as("purchase_ts_us"),
+        col("asof.event_id").as("view_id"),
+        col("asof.ts_us").as("view_ts_us"))
+  }
+
+  /** Purchases counted per 10-minute signup window, with the earliest
+    * window start, over the point-in-interval join `join` of purchase
+    * times to signup windows (the range-join oracle's rows). */
+  private def purchaseWindows(events: DataFrame)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val points = events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), expr("unix_micros(ts)").as("ts_us"))
+    val intervals = events.filter(col("event_type") === "signup")
+      .select(expr("unix_micros(ts)").as("start_us"),
+        expr("unix_micros(ts) + 600000000").as("end_us"))
+    join(points, intervals)
+      .groupBy(col("event_id").as("purchase_id"))
+      .agg(count(lit(1)).as("n_windows"),
+        min("start_us").as("first_start_us"))
+  }
+
+  /** Every event as a swap-shaped wire row: id, pool (wallet mod 100),
+    * wallet, its value in cents as `amt`, a second amount `amt2`, the
+    * event time in micros and the event type. */
+  private def swapRows(events: DataFrame, amt: String,
+      amt2: String): DataFrame =
+    events.select(
+      col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
+      expr("cast(round(value * 100, 0) as bigint)").as(amt),
+      (col("event_id") * 2 + 1).as(amt2),
+      expr("unix_micros(ts)").as("ts_us"), col("event_type"))
+
+  /** The top-5 recall gate of the approximate ANN search `approx(emb,
+    * queries)` against brute force, over the first ten vectors as
+    * queries. */
+  private def annRecallGate(emb: DataFrame, gate: String, bound: Double)(
+      approx: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val q = emb.filter(col("vec_id") < 10)
+    QaGates.topKRecallGate(Similarity.bruteForceTopK(emb, q, 5),
+      approx(emb, q), gate, bound)
+  }
+
+  /** Wire frames of event-type slices of `ev`: each
+    * `(eventType, layout, cols)` slice is selected, encoded into its
+    * layout and cut to its `payload`; the frames are unioned in order
+    * and, given a program id, tagged with it as `program_id`. */
+  private def payloads(ev: DataFrame, programId: Option[String],
+      slices: (String, LayoutSpec, Seq[Column])*): DataFrame = {
+    val frames = slices.map { case (t, l, cols) =>
+      ProtocolRegistry.encode(
+        ev.filter(col("event_type") === t).select(cols: _*), l)
+        .select("payload")
+    }.reduce(_ union _)
+    programId.fold(frames)(p => frames.withColumn("program_id", lit(p)))
+  }
+
+  private def layoutOf(p: ProtocolSpec, kind: String): LayoutSpec =
+    p.layouts.find(_.kind == kind).get
+
+  /** `src` encoded into layout `l` and decoded back from its payload. */
+  private def wireRoundTrip(src: DataFrame, l: LayoutSpec): DataFrame =
+    ProtocolRegistry.decode(
+      ProtocolRegistry.encode(src, l).select("payload"), l)
+
+  /** AMM deposits (clicks) and withdrawals (views) encoded into the
+    * `Amm` layouts and dispatched back off the wire. */
+  private def ammFlows(events: DataFrame): DataFrame = {
+    val ev = events
+      .filter(col("event_type").isin("click", "view")).select(
+        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
+        expr("cast(round(value * 100, 0) as bigint)").as("lp_amount"),
+        (col("event_id") * 3).as("base_in"),
+        (col("event_id") * 5).as("quote_in"),
+        (col("event_id") * 3).as("base_out"),
+        (col("event_id") * 5).as("quote_out"),
+        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
+    dispatchPair(ProtocolRegistry.Amm,
+      ev.filter(col("event_type") === "click"),
+      ev.filter(col("event_type") === "view"))
+  }
+
+  /** `first` and `second` encoded into protocol `p`'s first and second
+    * layouts and dispatched back off the wire as one frame stream. */
+  private def dispatchPair(p: ProtocolSpec, first: DataFrame,
+      second: DataFrame): DataFrame =
+    ProtocolRegistry.dispatch(
+      ProtocolRegistry.encode(first, p.layouts(0)).select("payload")
+        .union(ProtocolRegistry.encode(second, p.layouts(1))
+          .select("payload")),
+      Seq(p))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- A. event-stream surface ----
     "q_events_filter_types" -> ((s, d) =>
@@ -80,36 +210,14 @@ object SparkEntry {
       EventOps.trendingUsers(Tables.events(s, d))),
     "q_events_wallet_lifetimes" -> ((s, d) =>
       EventOps.walletLifetimes(Tables.events(s, d))),
-    "q_events_asof_attribution" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-          col("event_id"), col("event_type"))
-      val joined = AsOfJoin.asOf(
-        ev.filter(col("event_type") === "purchase").drop("event_type"),
-        ev.filter(col("event_type") === "view").drop("event_type"),
-        "user_id", "ts_us", "event_id", Seq())
-      joined.select(
-        col("event_id").as("purchase_id"), col("user_id"),
-        col("ts_us").as("purchase_ts_us"),
-        col("asof.event_id").as("view_id"),
-        col("asof.ts_us").as("view_ts_us"))
-    }),
+    "q_events_asof_attribution" -> ((s, d) =>
+      purchaseViewAsOf(Tables.events(s, d))(
+        AsOfJoin.asOf(_, _, "user_id", "ts_us", "event_id", Seq()))),
     // same semantics through the custom whole-operator physical plan
     // (AsOfMergeExec: streaming merge, O(1) state per key)
-    "q_events_asof_merge" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-          col("event_id"), col("event_type"))
-      val joined = AsOfJoin.asOfMerge(
-        ev.filter(col("event_type") === "purchase").drop("event_type"),
-        ev.filter(col("event_type") === "view").drop("event_type"),
-        "user_id", "ts_us", "event_id", Seq())
-      joined.select(
-        col("event_id").as("purchase_id"), col("user_id"),
-        col("ts_us").as("purchase_ts_us"),
-        col("asof.event_id").as("view_id"),
-        col("asof.ts_us").as("view_ts_us"))
-    }),
+    "q_events_asof_merge" -> ((s, d) =>
+      purchaseViewAsOf(Tables.events(s, d))(
+        AsOfJoin.asOfMerge(_, _, "user_id", "ts_us", "event_id", Seq()))),
     "q_events_session_native" -> ((s, d) =>
       EventOps.sessionizeNative(Tables.events(s, d))),
     "q_stream_session_legacy" -> ((s, d) =>
@@ -139,32 +247,15 @@ object SparkEntry {
     // partitioned layout, not just that a write happened.
     "q_sink_upsert" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sink_upsert").toString
-      sources.EventSink.writePartitionedByDay(ev, dir)
-      val corrections = ev.filter(pmod(col("event_id"), lit(10)) === 0)
-        .withColumn("value", col("value") + lit(1.0))
-      val appends = ev.filter(pmod(col("event_id"), lit(10)) === 5)
-        .withColumn("event_id", col("event_id") + lit(10000000000L))
-      sources.EventSink.upsertEvents(
-        corrections.unionByName(appends), dir)
-      // materialize the readback BEFORE deleting the scratch copy —
-      // the temp dir held a full partitioned clone of the events table
-      // and used to leak on every bench/verify run. LOCAL-MODE-ONLY
-      // assumption: localCheckpoint blocks are non-replayable, so on a
-      // real cluster an executor loss after the delete would make the
-      // result unrecoverable — cluster reuse must collect first or use
-      // a reliable checkpoint dir instead
-      val out = sources.EventSink.readPartitioned(s, dir)
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("db"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("cast(round(value * 100, 0) as bigint)"))
-            .as("sum_cents"))
-        .localCheckpoint(eager = true)
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir)))
-      out
+      sinkReadback(s, "graft_sink_upsert") { dir =>
+        sources.EventSink.writePartitionedByDay(ev, dir)
+        val corrections = ev.filter(pmod(col("event_id"), lit(10)) === 0)
+          .withColumn("value", col("value") + lit(1.0))
+        val appends = ev.filter(pmod(col("event_id"), lit(10)) === 5)
+          .withColumn("event_id", col("event_id") + lit(10000000000L))
+        sources.EventSink.upsertEvents(
+          corrections.unionByName(appends), dir)
+      }
     }),
     // A29d driven END TO END: full table written, then every date with
     // epoch-day % 7 = 3 re-delivered with corrected values; dynamic
@@ -173,30 +264,13 @@ object SparkEntry {
     // outside the backfill set must come back byte-identical.
     "q_sink_backfill" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sink_backfill").toString
-      sources.EventSink.writePartitionedByDay(ev, dir)
-      val corrected = ev
-        .filter(expr("(unix_micros(ts) div 86400000000) % 7") === 3)
-        .withColumn("value", col("value") + lit(2.0))
-      sources.EventSink.backfillDates(corrected, dir)
-      // materialize the readback BEFORE deleting the scratch copy —
-      // the temp dir held a full partitioned clone of the events table
-      // and used to leak on every bench/verify run. LOCAL-MODE-ONLY
-      // assumption: localCheckpoint blocks are non-replayable, so on a
-      // real cluster an executor loss after the delete would make the
-      // result unrecoverable — cluster reuse must collect first or use
-      // a reliable checkpoint dir instead
-      val out = sources.EventSink.readPartitioned(s, dir)
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("db"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("cast(round(value * 100, 0) as bigint)"))
-            .as("sum_cents"))
-        .localCheckpoint(eager = true)
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir)))
-      out
+      sinkReadback(s, "graft_sink_backfill") { dir =>
+        sources.EventSink.writePartitionedByDay(ev, dir)
+        val corrected = ev
+          .filter(expr("(unix_micros(ts) div 86400000000) % 7") === 3)
+          .withColumn("value", col("value") + lit(2.0))
+        sources.EventSink.backfillDates(corrected, dir)
+      }
     }),
     // A29b driven END TO END: the layout written deliberately fragmented
     // (8 bucket files per date), compacted in place to one file per
@@ -206,44 +280,16 @@ object SparkEntry {
     // StreamingExtensionsSpec).
     "q_sink_compact" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sink_compact").toString
-      sources.EventSink.writePartitionedByDay(ev, dir, buckets = 8)
-      sources.EventSink.compactPartitions(s, dir,
-        targetBytes = 1L << 40, maxFiles = 1)
-      // materialize the readback BEFORE deleting the scratch copy —
-      // the temp dir held a full partitioned clone of the events table
-      // and used to leak on every bench/verify run. LOCAL-MODE-ONLY
-      // assumption: localCheckpoint blocks are non-replayable, so on a
-      // real cluster an executor loss after the delete would make the
-      // result unrecoverable — cluster reuse must collect first or use
-      // a reliable checkpoint dir instead
-      val out = sources.EventSink.readPartitioned(s, dir)
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("db"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("cast(round(value * 100, 0) as bigint)"))
-            .as("sum_cents"))
-        .localCheckpoint(eager = true)
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir)))
-      out
+      sinkReadback(s, "graft_sink_compact") { dir =>
+        sources.EventSink.writePartitionedByDay(ev, dir, buckets = 8)
+        sources.EventSink.compactPartitions(s, dir,
+          targetBytes = 1L << 40, maxFiles = 1)
+      }
     }),
-    "q_events_asof_tolerance" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-          col("event_id"), col("event_type"))
-      val joined = AsOfJoin.asOf(
-        ev.filter(col("event_type") === "purchase").drop("event_type"),
-        ev.filter(col("event_type") === "view").drop("event_type"),
-        "user_id", "ts_us", "event_id", Seq(),
-        toleranceUs = Some(600000000L))
-      joined.select(
-        col("event_id").as("purchase_id"), col("user_id"),
-        col("ts_us").as("purchase_ts_us"),
-        col("asof.event_id").as("view_id"),
-        col("asof.ts_us").as("view_ts_us"))
-    }),
+    "q_events_asof_tolerance" -> ((s, d) =>
+      purchaseViewAsOf(Tables.events(s, d))(
+        AsOfJoin.asOf(_, _, "user_id", "ts_us", "event_id", Seq(),
+          toleranceUs = Some(600000000L)))),
     "q_events_cumulative_user" -> ((s, d) =>
       EventOps.cumulativeByUser(Tables.events(s, d))),
     "q_events_latency_calibration" -> ((s, d) =>
@@ -261,15 +307,13 @@ object SparkEntry {
     // class routes via filterClasses (filter.rs include_block_event) and
     // trades join their actual slot metadata (400 ms Solana slots)
     "q_events_block_real" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val ev = Tables.events(s, d)
-      val trades = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "purchase").select(
+      val trades = payloads(ev, None,
+        ("purchase", ProtocolRegistry.Swap.layouts(0), Seq(
           col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
           expr("cast(round(value * 100, 0) as bigint)").as("base_amount"),
           (col("event_id") * 2 + 1).as("quote_amount"),
-          expr("unix_micros(ts)").as("ts_us")),
-        ProtocolRegistry.Swap.layouts(0)).select("payload")
+          expr("unix_micros(ts)").as("ts_us"))))
       val metas = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase")
           .select(expr("unix_micros(ts) div 400000").as("slot")).distinct()
@@ -338,20 +382,20 @@ object SparkEntry {
       Relational.ordersByDayOfWeek(Tables.orders(s, d))),
     // ---- A13/A15: codec + streaming parity ----
     "q_events_decode_roundtrip" -> ((s, d) =>
-      graft.sources.EventCodec.decodeTrade(
-        graft.sources.EventCodec.encodeTrade(Tables.events(s, d)))),
+      EventCodec.decodeTrade(
+        EventCodec.encodeTrade(Tables.events(s, d)))),
     "q_events_log_extract" -> ((s, d) => {
       val ev = Tables.events(s, d)
       // payloads ride base64-encoded in "Program data:" log lines among
       // noise lines, exactly as Solana tx logs deliver them
-      val logs = graft.sources.EventCodec.encodeTrade(ev)
+      val logs = EventCodec.encodeTrade(ev)
         .select(concat(lit("Program data: "), base64(col("payload")))
           .as("log"))
         .unionAll(ev.select(
           concat(lit("Program log: instruction "), col("event_type"))
             .as("log")))
-      graft.sources.EventCodec.decodeTrade(
-        graft.sources.EventCodec.extractProgramData(logs))
+      EventCodec.decodeTrade(
+        EventCodec.extractProgramData(logs))
     }),
     "q_events_sink_roundtrip" -> ((s, d) => {
       // production layout round trip: date-partitioned time-sorted write,
@@ -374,15 +418,14 @@ object SparkEntry {
       val dir = java.nio.file.Files.createTempDirectory("graft_wire_q_")
         .toString
       graft.sources.wire.GraftWireWriter.writeFrames(
-        graft.sources.EventCodec.encodeTrade(Tables.events(s, d)), dir)
-      graft.sources.EventCodec.decodeTrade(
+        EventCodec.encodeTrade(Tables.events(s, d)), dir)
+      EventCodec.decodeTrade(
         s.read.format("graft-wire").load(dir))
     }),
     // wire-frame integrity: byte-sum checksum trailer (fast_checksum
     // analog) — every 37th frame deterministically corrupted, the
     // validator must report exactly those as 'corrupt'
     "q_events_wire_checksum" -> ((s, d) => {
-      import graft.sources.EventCodec
       val framed = EventCodec.frameWithChecksum(
         EventCodec.encodeTrade(Tables.events(s, d)))
         .select(col("event_id"), col("frame"))
@@ -400,7 +443,6 @@ object SparkEntry {
     // resync scan: find_pattern locates the discriminator behind a
     // variable-length junk prefix and decode recovers every event
     "q_events_wire_resync" -> ((s, d) => {
-      import graft.sources.{EventCodec, ProtocolRegistry}
       val wire = EventCodec.encodeTrade(Tables.events(s, d)).select(
         col("event_id"),
         concat(expr("unhex(repeat('aa', cast(event_id % 7 + 3 as int)))"),
@@ -420,8 +462,7 @@ object SparkEntry {
     // special case); any broken roundtrip flips a row to false and the
     // hash compare goes red. Known vectors stay pinned in CodecSpec.
     "q_events_base58_roundtrip" -> ((s, d) => {
-      import graft.functions.exprs._
-      val p = graft.sources.EventCodec.encodeTrade(Tables.events(s, d))
+      val p = EventCodec.encodeTrade(Tables.events(s, d))
       p.select(col("event_id"),
         (unbase58(base58(col("payload"))) === col("payload")).as("ok"),
         (unbase58(base58(concat(expr("unhex('0000')"), col("payload"))))
@@ -440,10 +481,10 @@ object SparkEntry {
     "q_events_wire_dsv2_write" -> ((s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft_wire_w_")
         .toString
-      graft.sources.EventCodec.encodeTrade(Tables.events(s, d))
+      EventCodec.encodeTrade(Tables.events(s, d))
         .select(lit("").as("file"), lit(0L).as("frame_idx"), col("payload"))
         .write.format("graft-wire").mode("overwrite").save(dir)
-      graft.sources.EventCodec.decodeTrade(
+      EventCodec.decodeTrade(
         s.read.format("graft-wire").load(dir))
     }),
     // A55 oracled: both presets drain the same fixed-4-file capture;
@@ -466,8 +507,8 @@ object SparkEntry {
         expr("event_id * 3 + 1").as("vtr"), expr("event_id * 5 + 2").as("vsr"),
         expr("event_id * 7 + 3").as("rtr"),
         expr("cast(round(value * 100, 0) as bigint)").as("tts"))
-      graft.sources.EventCodec
-        .decodeCreateToken(graft.sources.EventCodec.encodeCreateToken(src))
+      EventCodec
+        .decodeCreateToken(EventCodec.encodeCreateToken(src))
         .select(col("ev.name").as("name"), col("ev.symbol").as("symbol"),
           col("ev.uri").as("uri"),
           lower(hex(col("ev.mint"))).as("mint_hex"),
@@ -480,10 +521,10 @@ object SparkEntry {
     }),
     "q_events_decode_dispatch" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val trades = graft.sources.EventCodec
+      val trades = EventCodec
         .encodeTrade(ev.filter(!col("event_type").isin("signup", "error")))
         .select("payload")
-      val creates = graft.sources.EventCodec.encodeCreateToken(
+      val creates = EventCodec.encodeCreateToken(
         ev.filter(col("event_type") === "signup").select(
           expr("concat('tok_', cast(event_id as string))").as("name"),
           lit("SYM").as("symbol"), lit("ipfs://x").as("uri"),
@@ -499,7 +540,7 @@ object SparkEntry {
       val junk = ev.filter(col("event_type") === "error")
         .select(expr("cast(concat('junkjunk', cast(event_id as string)) as binary)")
           .as("payload"))
-      graft.sources.EventCodec
+      EventCodec
         .dispatch(trades.union(creates).union(junk))
         .groupBy("event_kind")
         .agg(count(lit(1)).as("n"),
@@ -508,22 +549,11 @@ object SparkEntry {
     }),
     // ---- A13d: multi-protocol registry ----
     "q_events_decode_swap" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d).select(
-        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("base_amount"),
-        (col("event_id") * 2 + 1).as("quote_amount"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val buy = ProtocolRegistry.encode(
+      val ev = swapRows(Tables.events(s, d), "base_amount", "quote_amount")
+      dispatchPair(ProtocolRegistry.Swap,
         ev.filter(col("event_type") === "purchase"),
-        ProtocolRegistry.Swap.layouts(0))
-      val sell = ProtocolRegistry.encode(
-        ev.filter(col("event_type") =!= "purchase"),
-        ProtocolRegistry.Swap.layouts(1))
-      val out = ProtocolRegistry.dispatch(
-        buy.select("payload").union(sell.select("payload")),
-        Seq(ProtocolRegistry.Swap))
-      out.select(col("event_kind"),
+        ev.filter(col("event_type") =!= "purchase")
+      ).select(col("event_kind"),
         coalesce(col("buy.event_id"), col("sell.event_id")).as("event_id"),
         coalesce(col("buy.pool"), col("sell.pool")).as("pool"),
         coalesce(col("buy.user_id"), col("sell.user_id")).as("user_id"),
@@ -533,27 +563,8 @@ object SparkEntry {
           .as("quote_amount"),
         coalesce(col("buy.ts_us"), col("sell.ts_us")).as("ts_us"))
     }),
-    "q_events_decode_liquidity" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "view")).select(
-          col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-          expr("cast(round(value * 100, 0) as bigint)").as("lp_amount"),
-          (col("event_id") * 3).as("base_in"),
-          (col("event_id") * 5).as("quote_in"),
-          (col("event_id") * 3).as("base_out"),
-          (col("event_id") * 5).as("quote_out"),
-          expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val dep = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "click"),
-        ProtocolRegistry.Amm.layouts(0))
-      val wdr = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "view"),
-        ProtocolRegistry.Amm.layouts(1))
-      val out = ProtocolRegistry.dispatch(
-        dep.select("payload").union(wdr.select("payload")),
-        Seq(ProtocolRegistry.Amm))
-      out.select(col("event_kind"),
+    "q_events_decode_liquidity" -> ((s, d) =>
+      ammFlows(Tables.events(s, d)).select(col("event_kind"),
         coalesce(col("deposit.event_id"), col("withdraw.event_id"))
           .as("event_id"),
         coalesce(col("deposit.pool"), col("withdraw.pool")).as("pool"),
@@ -565,38 +576,27 @@ object SparkEntry {
           .as("base_amt"),
         coalesce(col("deposit.quote_in"), col("withdraw.quote_out"))
           .as("quote_amt"),
-        coalesce(col("deposit.ts_us"), col("withdraw.ts_us")).as("ts_us"))
-    }),
+        coalesce(col("deposit.ts_us"), col("withdraw.ts_us")).as("ts_us"))),
     "q_events_registry_dispatch" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d).select(
-        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("amt"),
-        (col("event_id") * 2 + 1).as("amt2"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      def enc(t: String, l: ProtocolRegistry.LayoutSpec,
-          amtNames: Seq[String]) =
-        ProtocolRegistry.encode(
-          ev.filter(col("event_type") === t).select(
-            Seq(col("event_id"), col("pool"), col("user_id")) ++
-              Seq(col("amt").as(amtNames.head)) ++
-              amtNames.tail.map(col("amt2").as(_)) :+
-              col("ts_us"): _*),
-          l).select("payload")
-      val buy = enc("purchase", ProtocolRegistry.Swap.layouts(0),
-        Seq("base_amount", "quote_amount"))
-      val sell = enc("view", ProtocolRegistry.Swap.layouts(1),
-        Seq("base_amount", "quote_amount"))
-      val dep = enc("click", ProtocolRegistry.Amm.layouts(0),
-        Seq("lp_amount", "base_in", "quote_in"))
-      val wdr = enc("signup", ProtocolRegistry.Amm.layouts(1),
-        Seq("lp_amount", "base_out", "quote_out"))
+      val ev = swapRows(Tables.events(s, d), "amt", "amt2")
+      def cols(amt: String*) = Seq(col("event_id"), col("pool"),
+        col("user_id"), col("amt").as(amt.head)) ++
+        amt.tail.map(col("amt2").as(_)) :+ col("ts_us")
+      val frames = payloads(ev, None,
+        ("purchase", ProtocolRegistry.Swap.layouts(0),
+          cols("base_amount", "quote_amount")),
+        ("view", ProtocolRegistry.Swap.layouts(1),
+          cols("base_amount", "quote_amount")),
+        ("click", ProtocolRegistry.Amm.layouts(0),
+          cols("lp_amount", "base_in", "quote_in")),
+        ("signup", ProtocolRegistry.Amm.layouts(1),
+          cols("lp_amount", "base_out", "quote_out")))
       val junk = Tables.events(s, d).filter(col("event_type") === "error")
         .select(expr(
           "cast(concat('junkjunk', cast(event_id as string)) as binary)")
           .as("payload"))
       ProtocolRegistry
-        .dispatch(buy.union(sell).union(dep).union(wdr).union(junk))
+        .dispatch(frames.union(junk))
         .groupBy("protocol", "event_kind")
         .agg(count(lit(1)).as("n"),
           sum(coalesce(col("buy.base_amount"), col("sell.base_amount"),
@@ -605,46 +605,30 @@ object SparkEntry {
     // class-level include filter: mixed transaction + account frames,
     // only the transaction class survives (filter.rs category checks)
     "q_events_class_filter" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d).select(
-        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("amt"),
-        (col("event_id") * 2 + 1).as("amt2"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val buy = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "purchase").select(
+      val ev = swapRows(Tables.events(s, d), "amt", "amt2")
+      val frames = payloads(ev, None,
+        ("purchase", ProtocolRegistry.Swap.layouts(0), Seq(
           col("event_id"), col("pool"), col("user_id"),
           col("amt").as("base_amount"), col("amt2").as("quote_amount"),
-          col("ts_us")),
-        ProtocolRegistry.Swap.layouts(0)).select("payload")
-      val snap = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "signup").select(
+          col("ts_us"))),
+        ("signup", ProtocolRegistry.Account.layouts(0), Seq(
           col("event_id"), col("pool"),
           col("amt").as("base_reserve"), col("amt2").as("quote_reserve"),
-          col("ts_us")),
-        ProtocolRegistry.Account.layouts(0)).select("payload")
+          col("ts_us"))))
       ProtocolRegistry.filterClasses(
-        ProtocolRegistry.dispatch(buy.union(snap)), Seq("transaction"))
+        ProtocolRegistry.dispatch(frames), Seq("transaction"))
         .groupBy("protocol", "event_kind")
         .agg(count(lit(1)).as("n"))
     }),
     "q_events_pool_stats" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       // wire-encoded buy/sell fills → registry decode → per-pool market
       // stats straight off the decoded structs (volume, sides, traders)
-      val ev = Tables.events(s, d).select(
-        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("base_amount"),
-        (col("event_id") * 2 + 1).as("quote_amount"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      def enc(t: String, l: ProtocolRegistry.LayoutSpec) =
-        ProtocolRegistry.encode(
-          ev.filter(col("event_type") === t).select(
-            col("event_id"), col("pool"), col("user_id"),
-            col("base_amount"), col("quote_amount"), col("ts_us")),
-          l).select("payload")
-      val fills = enc("purchase", ProtocolRegistry.Swap.layouts(0))
-        .union(enc("view", ProtocolRegistry.Swap.layouts(1)))
+      val ev = swapRows(Tables.events(s, d), "base_amount", "quote_amount")
+      val cols = Seq(col("event_id"), col("pool"), col("user_id"),
+        col("base_amount"), col("quote_amount"), col("ts_us"))
+      val fills = payloads(ev, None,
+        ("purchase", ProtocolRegistry.Swap.layouts(0), cols),
+        ("view", ProtocolRegistry.Swap.layouts(1), cols))
       ProtocolRegistry.dispatch(fills)
         .filter(col("event_kind").isin("buy", "sell"))
         .groupBy(expr("coalesce(buy.pool, sell.pool)").as("pool"))
@@ -663,7 +647,6 @@ object SparkEntry {
         graft.sources.InstructionCodec.packTransactions(
           Tables.events(s, d)))),
     "q_events_decode_mixed" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val src = Tables.events(s, d).select(
         col("event_id"),
         (col("user_id") % 100).as("pool"),
@@ -672,39 +655,27 @@ object SparkEntry {
           "md5(cast(cast(user_id + 1 as string) as binary))))").as("trader"),
         expr("cast(round(value * 100, 0) as bigint)").as("base_amount"),
         expr("unix_micros(ts)").as("ts_us"))
-      val l = ProtocolRegistry.Perp.layouts(0)
-      ProtocolRegistry.decode(
-        ProtocolRegistry.encode(src, l).select("payload"), l)
+      wireRoundTrip(src, ProtocolRegistry.Perp.layouts(0))
         .select(col("event_id"), col("pool"), col("flags"),
           expr("lower(hex(trader))").as("trader_hex"),
           col("base_amount"), col("ts_us"))
     }),
     "q_events_launch_decode" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d).select(
-        col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-        expr("cast(round(value * 100, 0) as bigint)").as("amt"),
-        (col("event_id") * 2 + 1).as("amt2"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val create = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "signup").select(
+      val ev = swapRows(Tables.events(s, d), "amt", "amt2")
+      ProtocolRegistry.dispatch(payloads(ev, None,
+        ("signup", ProtocolRegistry.Launch.layouts(0), Seq(
           col("event_id"), col("pool"), col("user_id"),
           col("amt").as("base_supply"), col("amt2").as("quote_raised"),
-          col("ts_us")),
-        ProtocolRegistry.Launch.layouts(0)).select("payload")
-      val migrate = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "click").select(
+          col("ts_us"))),
+        ("click", ProtocolRegistry.Launch.layouts(1), Seq(
           col("event_id"), col("pool"), col("user_id"),
-          col("amt2").as("lp_minted"), col("ts_us")),
-        ProtocolRegistry.Launch.layouts(1)).select("payload")
-      ProtocolRegistry.dispatch(create.union(migrate))
+          col("amt2").as("lp_minted"), col("ts_us")))))
         .groupBy("protocol", "event_kind")
         .agg(count(lit(1)).as("n"),
           sum(coalesce(col("pool_create.base_supply"),
             col("migrate.lp_minted"))).as("sum_amt"))
     }),
     "q_events_clmm_decode" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val src = Tables.events(s, d)
         .filter(col("event_type") === "purchase").select(
           col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
@@ -713,15 +684,11 @@ object SparkEntry {
           (col("event_id") * 7 + 1).as("sqrt_price"),
           (col("user_id") % 1000).as("tick"),
           expr("unix_micros(ts)").as("ts_us"))
-      ProtocolRegistry.decode(
-        ProtocolRegistry.encode(src, ProtocolRegistry.Clmm.layouts(0))
-          .select("payload"),
-        ProtocolRegistry.Clmm.layouts(0))
+      wireRoundTrip(src, ProtocolRegistry.Clmm.layouts(0))
     }),
     // u128 fields at the REAL reference width, registry-wide: encode two
     // long halves, decode one Decimal(38,0) per field
     "q_events_clmm_u128" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val src = Tables.events(s, d)
         .filter(col("event_type") === "purchase").select(
           col("event_id"), (col("user_id") % 100).as("pool"),
@@ -730,10 +697,7 @@ object SparkEntry {
           (col("event_id") * 3).as("liquidity_lo"),
           lit(0L).as("liquidity_hi"),
           expr("unix_micros(ts)").as("ts_us"))
-      ProtocolRegistry.decode(
-        ProtocolRegistry.encode(src, ProtocolRegistry.Clmm.layouts(1))
-          .select("payload"),
-        ProtocolRegistry.Clmm.layouts(1))
+      wireRoundTrip(src, ProtocolRegistry.Clmm.layouts(1))
         // u128 decimals travel as strings for the compare: pandas maps
         // DuckDB DECIMAL(38,0) to float64 (lossy >2^53) but Spark's to
         // Decimal objects — strings are exact on both sides
@@ -746,7 +710,6 @@ object SparkEntry {
     // discriminators, real borsh widths), decode through the registry,
     // aggregate — DuckDB recomputes the same aggregate from the raw rows.
     "q_events_pumpfun_real" -> ((s, d) => {
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val trades = ProtocolRegistry.encode(
         ev.filter(col("event_type").isin("purchase", "view")).select(
@@ -807,7 +770,6 @@ object SparkEntry {
     "q_events_bonk_real" -> ((s, d) => {
       // the shared-discriminator disambiguation: PumpFun and Bonk trade
       // logs carry the SAME anchor TradeEvent hash — program id routes
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val pf = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
@@ -870,7 +832,6 @@ object SparkEntry {
           countDistinct(col("bonk_pool_create.name")).as("n_names"))
     }),
     "q_events_pumpswap_real" -> ((s, d) => {
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val common = Seq(
         expr("unix_micros(ts) div 1000000").as("timestamp"),
@@ -881,8 +842,9 @@ object SparkEntry {
         pubkey("user_id % 100").as("pool"), pubkey("user_id").as("user"),
         pubkey("11").as("user_base_token_account"),
         pubkey("12").as("user_quote_token_account"))
-      val buys = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "purchase").select(common ++ Seq(
+      val l = RealLayouts.PumpSwap.layouts
+      val frames = payloads(ev, Some(RealLayouts.PumpSwapProgram),
+        ("purchase", l(0), common ++ Seq(
           expr("cast(round(value * 100, 0) as bigint)").as("base_amount_out"),
           (col("event_id") + 1).as("max_quote_amount_in"),
           (col("event_id") * 4).as("quote_amount_in"),
@@ -902,10 +864,8 @@ object SparkEntry {
           (col("event_id") * 23).as("total_claimed_tokens"),
           (col("event_id") * 29).as("current_sol_volume"),
           expr("unix_micros(ts) div 1000000")
-            .as("last_update_timestamp")): _*),
-        RealLayouts.PumpSwap.layouts(0))
-      val sells = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "view").select(common ++ Seq(
+            .as("last_update_timestamp"))),
+        ("view", l(1), common ++ Seq(
           expr("cast(round(value * 100, 0) as bigint)").as("base_amount_in"),
           (col("event_id") + 1).as("min_quote_amount_out"),
           (col("event_id") * 4).as("quote_amount_out"),
@@ -919,10 +879,8 @@ object SparkEntry {
           pubkey("14").as("protocol_fee_recipient_token_account"),
           pubkey("user_id % 50").as("coin_creator"),
           lit(30L).as("coin_creator_fee_basis_points"),
-          (col("event_id") % 300).as("coin_creator_fee")): _*),
-        RealLayouts.PumpSwap.layouts(1))
-      val deps = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "click").select(common ++ Seq(
+          (col("event_id") % 300).as("coin_creator_fee"))),
+        ("click", l(3), common ++ Seq(
           expr("cast(round(value * 100, 0) as bigint)")
             .as("lp_token_amount_out"),
           (col("event_id") + 2).as("max_base_amount_in"),
@@ -930,10 +888,8 @@ object SparkEntry {
           (col("event_id") * 6).as("base_amount_in"),
           (col("event_id") * 8).as("quote_amount_in"),
           (col("event_id") * 9).as("lp_mint_supply"),
-          pubkey("15").as("user_pool_token_account")): _*),
-        RealLayouts.PumpSwap.layouts(3))
-      val wdrs = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "signup").select(common ++ Seq(
+          pubkey("15").as("user_pool_token_account"))),
+        ("signup", l(4), common ++ Seq(
           expr("cast(round(value * 100, 0) as bigint)")
             .as("lp_token_amount_in"),
           (col("event_id") + 2).as("min_base_amount_out"),
@@ -941,11 +897,7 @@ object SparkEntry {
           (col("event_id") * 6).as("base_amount_out"),
           (col("event_id") * 8).as("quote_amount_out"),
           (col("event_id") * 9).as("lp_mint_supply"),
-          pubkey("15").as("user_pool_token_account")): _*),
-        RealLayouts.PumpSwap.layouts(4))
-      val frames = Seq(buys, sells, deps, wdrs).map(_.select("payload"))
-        .reduce(_ union _)
-        .withColumn("program_id", lit(RealLayouts.PumpSwapProgram))
+          pubkey("15").as("user_pool_token_account"))))
       ProtocolRegistry
         .dispatch(frames, Seq(RealLayouts.PumpSwap),
           programCol = Some("program_id"))
@@ -968,29 +920,23 @@ object SparkEntry {
             col("ps_deposit.user"), col("ps_withdraw.user"))).as("n_users"))
     }),
     "q_events_cpmm_real" -> ((s, d) => {
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      def enc(t: String, i: Int, cols: Seq[org.apache.spark.sql.Column]) =
-        ProtocolRegistry.encode(
-          ev.filter(col("event_type") === t).select(cols: _*),
-          RealLayouts.RaydiumCpmm.layouts(i)).select("payload")
-      val frames = Seq(
-        enc("purchase", 0, Seq(cents.as("amount_in"),
+      val l = RealLayouts.RaydiumCpmm.layouts
+      val frames = payloads(ev, Some(RealLayouts.RaydiumCpmmProgram),
+        ("purchase", l(0), Seq(cents.as("amount_in"),
           (col("event_id") + 1).as("minimum_amount_out"))),
-        enc("view", 1, Seq((col("event_id") * 2).as("max_amount_in"),
+        ("view", l(1), Seq((col("event_id") * 2).as("max_amount_in"),
           cents.as("amount_out"))),
-        enc("click", 2, Seq(cents.as("lp_token_amount"),
+        ("click", l(2), Seq(cents.as("lp_token_amount"),
           (col("event_id") * 3).as("maximum_token0_amount"),
           (col("event_id") * 5).as("maximum_token1_amount"))),
-        enc("signup", 3, Seq(cents.as("lp_token_amount"),
+        ("signup", l(3), Seq(cents.as("lp_token_amount"),
           (col("event_id") * 3).as("minimum_token0_amount"),
           (col("event_id") * 5).as("minimum_token1_amount"))),
-        enc("error", 4, Seq((col("event_id") * 2).as("init_amount0"),
+        ("error", l(4), Seq((col("event_id") * 2).as("init_amount0"),
           (col("event_id") * 4).as("init_amount1"),
           expr("unix_micros(ts) div 1000000").as("open_time"))))
-        .reduce(_ union _)
-        .withColumn("program_id", lit(RealLayouts.RaydiumCpmmProgram))
       ProtocolRegistry
         .dispatch(frames, Seq(RealLayouts.RaydiumCpmm),
           programCol = Some("program_id"))
@@ -1009,18 +955,15 @@ object SparkEntry {
           max(col("cpmm_initialize.open_time")).as("max_open"))
     }),
     "q_events_clmm_real" -> ((s, d) => {
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      val swaps = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "purchase").select(
+      val frames = payloads(ev, Some(RealLayouts.RaydiumClmmProgram),
+        ("purchase", RealLayouts.RaydiumClmm.layouts(0), Seq(
           cents.as("amount"), (col("event_id") + 1).as("other_amount_threshold"),
           (col("event_id") * 7 + 1).as("sqrt_price_limit_x64_lo"),
           (col("user_id") % 1000).as("sqrt_price_limit_x64_hi"),
-          (col("event_id") % 2).as("is_base_input")),
-        RealLayouts.RaydiumClmm.layouts(0)).select("payload")
-      val opens = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "view").select(
+          (col("event_id") % 2).as("is_base_input"))),
+        ("view", RealLayouts.RaydiumClmm.layouts(5), Seq(
           (-(col("user_id") % 880 + 1) * 64).as("tick_lower_index"),
           ((col("user_id") % 880 + 1) * 64).as("tick_upper_index"),
           (-(col("user_id") % 880 + 1) * 640)
@@ -1036,10 +979,7 @@ object SparkEntry {
           // the rest Some(user_id % 2) — exercises both wire widths
           when(col("user_id") % 3 === 0, lit(null).cast("int"))
             .otherwise((col("user_id") % 2).cast("int"))
-            .as("base_flag")),
-        RealLayouts.RaydiumClmm.layouts(5)).select("payload")
-      val frames = swaps.union(opens)
-        .withColumn("program_id", lit(RealLayouts.RaydiumClmmProgram))
+            .as("base_flag"))))
       ProtocolRegistry
         .dispatch(frames, Seq(RealLayouts.RaydiumClmm),
           programCol = Some("program_id"))
@@ -1059,28 +999,22 @@ object SparkEntry {
     }),
     "q_events_ammv4_real" -> ((s, d) => {
       // pre-anchor native program: SINGLE-BYTE instruction discriminators
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      def enc(t: String, i: Int, cols: Seq[org.apache.spark.sql.Column]) =
-        ProtocolRegistry.encode(
-          ev.filter(col("event_type") === t).select(cols: _*),
-          RealLayouts.RaydiumAmmV4.layouts(i)).select("payload")
-      val frames = Seq(
-        enc("purchase", 0, Seq(cents.as("amount_in"),
+      val l = RealLayouts.RaydiumAmmV4.layouts
+      val frames = payloads(ev, Some(RealLayouts.RaydiumAmmV4Program),
+        ("purchase", l(0), Seq(cents.as("amount_in"),
           (col("event_id") + 1).as("minimum_amount_out"))),
-        enc("view", 1, Seq((col("event_id") * 2).as("max_amount_in"),
+        ("view", l(1), Seq((col("event_id") * 2).as("max_amount_in"),
           cents.as("amount_out"))),
-        enc("click", 2, Seq(cents.as("max_coin_amount"),
+        ("click", l(2), Seq(cents.as("max_coin_amount"),
           (col("event_id") * 3).as("max_pc_amount"),
           (col("event_id") % 2).as("base_side"))),
-        enc("signup", 3, Seq(cents.as("amount"))),
-        enc("error", 4, Seq((col("user_id") % 256).as("nonce"),
+        ("signup", l(3), Seq(cents.as("amount"))),
+        ("error", l(4), Seq((col("user_id") % 256).as("nonce"),
           expr("unix_micros(ts) div 1000000").as("open_time"),
           (col("event_id") * 2).as("init_pc_amount"),
           (col("event_id") * 4).as("init_coin_amount"))))
-        .reduce(_ union _)
-        .withColumn("program_id", lit(RealLayouts.RaydiumAmmV4Program))
       ProtocolRegistry
         .dispatch(frames, Seq(RealLayouts.RaydiumAmmV4),
           programCol = Some("program_id"))
@@ -1095,7 +1029,6 @@ object SparkEntry {
           sum(col("ammv4_deposit.base_side")).as("n_base_side"))
     }),
     "q_events_damm_real" -> ((s, d) => {
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val swaps = ProtocolRegistry.encode(
         ev.filter(col("event_type").isin("purchase", "view")).select(
@@ -1142,10 +1075,8 @@ object SparkEntry {
       // the REAL CreateTokenEvent: 16-byte discriminator, then three
       // len-prefixed strings + 4 pubkeys + 5 u64 (dynamic offsets — the
       // sequential whole-payload expression decodes it)
-      import graft.functions.exprs.le_bytes
-      import graft.sources.RealLayouts
       val ev = Tables.events(s, d).filter(col("event_type") === "signup")
-      def lp(c: org.apache.spark.sql.Column) = concat(
+      def lp(c: Column) = concat(
         le_bytes(length(c.cast("binary")).cast("bigint"), 4),
         c.cast("binary"))
       val framed = ev.select(concat(
@@ -1182,7 +1113,6 @@ object SparkEntry {
       // real account-state layouts dispatched by OWNER program: PumpFun
       // bonding curve, PumpSwap pool, Bonk pool state (incl. the nested
       // VestingSchedule flattened to its five u64 fields)
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
       val curves = ProtocolRegistry.encode(
@@ -1259,7 +1189,6 @@ object SparkEntry {
       // compute-budget fee pressure: every tx carries SetComputeUnitLimit
       // + SetComputeUnitPrice (1-byte discriminators); decode both, pair
       // per tx, aggregate per wallet bucket
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d).filter(col("event_type") === "click")
         .select(col("event_id").as("tx_id"), col("user_id"),
           (col("user_id") % 14 * 100000 + 150000).as("units"),
@@ -1291,42 +1220,35 @@ object SparkEntry {
       // native tags, and the cross-program shared anchor hashes (the
       // SAME payload bytes decode as clmm_swap under the CLMM program
       // and damm_swap_ix under Meteora; pf_buy_ix vs ps_buy_ix likewise)
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      def lay(p: ProtocolRegistry.ProtocolSpec, k: String) =
-        p.layouts.find(_.kind == k).get
-      val swapBytes = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "purchase").select(
+      val swapBytes = payloads(ev, None,
+        ("purchase", layoutOf(RealLayouts.RaydiumClmm, "clmm_swap"), Seq(
           cents.as("amount"),
           (col("event_id") + 1).as("other_amount_threshold"),
           (col("event_id") * 7 + 1).as("sqrt_price_limit_x64_lo"),
           lit(0L).as("sqrt_price_limit_x64_hi"),
-          (col("event_id") % 2).as("is_base_input")),
-        lay(RealLayouts.RaydiumClmm, "clmm_swap")).select("payload")
+          (col("event_id") % 2).as("is_base_input"))))
       val swaps = swapBytes
         .withColumn("program_id", lit(RealLayouts.RaydiumClmmProgram))
         .union(swapBytes.withColumn("program_id",
           lit(RealLayouts.MeteoraDammV2Program)))
-      val buyBytes = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "signup").select(
-          cents.as("amount"), (col("event_id") + 5).as("max_sol_cost")),
-        lay(RealLayouts.PumpFunIx, "pf_buy_ix")).select("payload")
+      val buyBytes = payloads(ev, None,
+        ("signup", layoutOf(RealLayouts.PumpFunIx, "pf_buy_ix"), Seq(
+          cents.as("amount"), (col("event_id") + 5).as("max_sol_cost"))))
       val buys = buyBytes
         .withColumn("program_id", lit(RealLayouts.PumpFunProgram))
         .union(buyBytes.withColumn("program_id",
           lit(RealLayouts.PumpSwapProgram)))
-      val migrates = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "view").select(
+      val migrates = payloads(ev, Some(RealLayouts.BonkProgram),
+        ("view", layoutOf(RealLayouts.BonkIx, "bonk_migrate_to_amm"), Seq(
           cents.as("base_lot_size"), (col("event_id") * 2).as("quote_lot_size"),
-          (col("user_id") % 256).as("market_vault_signer_nonce")),
-        lay(RealLayouts.BonkIx, "bonk_migrate_to_amm")).select("payload")
-        .withColumn("program_id", lit(RealLayouts.BonkProgram))
+          (col("user_id") % 256).as("market_vault_signer_nonce"))))
       val pnl = ev.filter(col("event_type") === "click")
         .select(lit(Array[Byte](7)).as("payload"),
           lit(RealLayouts.RaydiumAmmV4Program).as("program_id"))
       val closes = ev.filter(col("event_type") === "error")
-        .select(lit(lay(RealLayouts.RaydiumClmm, "clmm_close_position")
+        .select(lit(layoutOf(RealLayouts.RaydiumClmm, "clmm_close_position")
           .discriminator).as("payload"),
           lit(RealLayouts.RaydiumClmmProgram).as("program_id"))
       ProtocolRegistry
@@ -1349,26 +1271,21 @@ object SparkEntry {
       // encoded from the events table, routed through the ix registry
       // by program id + 8-byte anchor discriminator, re-aggregated per
       // decoded kind against a pure-SQL oracle over the same slices
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val cents = expr("cast(round(value * 100, 0) as bigint)")
-      def lay(k: String) = RealLayouts.BonkIx.layouts.find(_.kind == k).get
-      def enc(t: String, k: String, amt: String, thr: String) =
-        ProtocolRegistry.encode(
-          ev.filter(col("event_type") === t).select(
-            cents.as(amt), (col("event_id") + 3).as(thr),
-            (col("event_id") % 10000).as("share_fee_rate")),
-          lay(k)).select("payload")
-      val frames =
-        enc("purchase", "bonk_buy_exact_in", "amount_in",
-            "minimum_amount_out")
-          .union(enc("signup", "bonk_buy_exact_out", "amount_out",
-            "maximum_amount_in"))
-          .union(enc("view", "bonk_sell_exact_in", "amount_in",
-            "minimum_amount_out"))
-          .union(enc("click", "bonk_sell_exact_out", "amount_out",
-            "maximum_amount_in"))
-          .withColumn("program_id", lit(RealLayouts.BonkProgram))
+      def slice(t: String, kind: String, amt: String, thr: String) =
+        (t, layoutOf(RealLayouts.BonkIx, kind), Seq(cents.as(amt),
+          (col("event_id") + 3).as(thr),
+          (col("event_id") % 10000).as("share_fee_rate")))
+      val frames = payloads(ev, Some(RealLayouts.BonkProgram),
+        slice("purchase", "bonk_buy_exact_in", "amount_in",
+          "minimum_amount_out"),
+        slice("signup", "bonk_buy_exact_out", "amount_out",
+          "maximum_amount_in"),
+        slice("view", "bonk_sell_exact_in", "amount_in",
+          "minimum_amount_out"),
+        slice("click", "bonk_sell_exact_out", "amount_out",
+          "maximum_amount_in"))
       ProtocolRegistry
         .dispatch(frames, RealLayouts.ixRegistry,
           programCol = Some("program_id"))
@@ -1393,10 +1310,7 @@ object SparkEntry {
       // config/global account breadth incl. the shared GlobalConfig and
       // AmmConfig account hashes routed by owner, and the borsh Vec<u8>
       // platform name (trailing str)
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def lay(p: ProtocolRegistry.ProtocolSpec, k: String) =
-        p.layouts.find(_.kind == k).get
       val pfGlobal = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
           lit(1L).as("initialized"), pubkey("1").as("authority"),
@@ -1411,7 +1325,7 @@ object SparkEntry {
           (col("event_id") % 1000).as("pool_migration_fee"),
           lit(30L).as("creator_fee_basis_points"),
           pubkey("4").as("set_creator_authority")),
-        lay(RealLayouts.PumpFunGlobalAccount, "pf_global"))
+        layoutOf(RealLayouts.PumpFunGlobalAccount, "pf_global"))
         .select(col("payload"), lit(RealLayouts.PumpFunProgram).as("owner"))
       val psCfg = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "view").select(
@@ -1420,7 +1334,7 @@ object SparkEntry {
           (col("user_id") % 4).as("disable_flags"),
           lit(30L).as("coin_creator_fee_basis_points"),
           pubkey("6").as("admin_set_coin_creator_authority")),
-        lay(RealLayouts.PumpSwapGlobalConfig, "ps_global_config"))
+        layoutOf(RealLayouts.PumpSwapGlobalConfig, "ps_global_config"))
         .select(col("payload"), lit(RealLayouts.PumpSwapProgram).as("owner"))
       val bonkCfg = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "click").select(
@@ -1439,7 +1353,7 @@ object SparkEntry {
           pubkey("9").as("migrate_fee_owner"),
           pubkey("10").as("migrate_to_amm_wallet"),
           pubkey("11").as("migrate_to_cpswap_wallet")),
-        lay(RealLayouts.BonkConfigAccounts, "bonk_global_config"))
+        layoutOf(RealLayouts.BonkConfigAccounts, "bonk_global_config"))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("owner"))
       val bonkPlat = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
@@ -1449,7 +1363,7 @@ object SparkEntry {
           lit(2500L).as("platform_scale"), lit(2500L).as("creator_scale"),
           lit(0L).as("burn_scale"), (col("event_id") % 97).as("fee_rate"),
           concat(lit("plat_"), col("event_id")).as("name")),
-        lay(RealLayouts.BonkConfigAccounts, "bonk_platform_config"))
+        layoutOf(RealLayouts.BonkConfigAccounts, "bonk_platform_config"))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("owner"))
       val err = ev.filter(col("event_type") === "error").select(
         (col("user_id") % 256).as("bump"), (col("event_id") % 2).as("disable_create_pool"),
@@ -1461,11 +1375,11 @@ object SparkEntry {
         pubkey("14").as("protocol_owner"), pubkey("15").as("fund_owner"),
         (col("user_id") % 16).as("tick_spacing"), pubkey("16").as("owner"))
       val cpmmCfg = ProtocolRegistry.encode(err,
-        lay(RealLayouts.CpmmAccounts, "cpmm_amm_config"))
+        layoutOf(RealLayouts.CpmmAccounts, "cpmm_amm_config"))
         .select(col("payload"),
           lit(RealLayouts.RaydiumCpmmProgram).as("owner"))
       val clmmCfg = ProtocolRegistry.encode(err,
-        lay(RealLayouts.ClmmAccounts, "clmm_amm_config"))
+        layoutOf(RealLayouts.ClmmAccounts, "clmm_amm_config"))
         .select(col("payload"),
           lit(RealLayouts.RaydiumClmmProgram).as("owner"))
       ProtocolRegistry
@@ -1490,10 +1404,7 @@ object SparkEntry {
       // program does the routing) and the Bonk vesting record
       // (common/types.rs:128), round-tripped through the account
       // registry and reduced to a TVL-style rollup
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
-      def lay(p: ProtocolRegistry.ProtocolSpec, k: String) =
-        p.layouts.find(_.kind == k).get
       val pool = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "purchase").select(
           pubkey("event_id % 16").as("amm_config"),
@@ -1512,7 +1423,7 @@ object SparkEntry {
           (col("event_id") % 983).as("fund_fees_token1"),
           expr("unix_micros(ts) div 1000000").as("open_time"),
           (col("event_id") % 512).as("recent_epoch")),
-        lay(RealLayouts.CpmmAccounts, "cpmm_pool_state"))
+        layoutOf(RealLayouts.CpmmAccounts, "cpmm_pool_state"))
         .select(col("payload"),
           lit(RealLayouts.RaydiumCpmmProgram).as("owner"))
       val vest = ProtocolRegistry.encode(
@@ -1522,7 +1433,7 @@ object SparkEntry {
           lit(3600L).as("unlock_period"),
           expr("unix_micros(ts) div 1000000").as("start_time"),
           (col("event_id") % 500).as("allocated_share_amount")),
-        lay(RealLayouts.BonkAccounts, "bonk_vesting_record"))
+        layoutOf(RealLayouts.BonkAccounts, "bonk_vesting_record"))
         .select(col("payload"), lit(RealLayouts.BonkProgram).as("owner"))
       ProtocolRegistry
         .dispatch(pool.union(vest), RealLayouts.accountRegistry,
@@ -1542,7 +1453,6 @@ object SparkEntry {
     "q_events_token_accounts" -> ((s, d) => {
       // discriminator-LESS SPL token + system nonce accounts: owner
       // program + fixed length are the whole guard, as in the reference
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       def tokFrames(t: String, owner: String) = ProtocolRegistry.encode(
         ev.filter(col("event_type") === t).select(
@@ -1609,7 +1519,6 @@ object SparkEntry {
         graft.sources.JsonIngest.toJsonLines(Tables.events(s, d)))
         .drop("_corrupt")),
     "q_events_account_asof" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val ev = Tables.events(s, d)
       // account snapshots ride the wire like any event: encode → decode
       // through the account layout, then feed the as-of "state cache"
@@ -1618,10 +1527,7 @@ object SparkEntry {
         (col("event_id") * 3).as("base_reserve"),
         (col("event_id") * 5).as("quote_reserve"),
         expr("unix_micros(ts)").as("ts_us"))
-      val snaps = ProtocolRegistry.decode(
-        ProtocolRegistry.encode(snapSrc, ProtocolRegistry.Account.layouts(0))
-          .select("payload"),
-        ProtocolRegistry.Account.layouts(0))
+      val snaps = wireRoundTrip(snapSrc, ProtocolRegistry.Account.layouts(0))
       val trades = ev.filter(col("event_type") === "purchase").select(
         col("event_id"), (col("user_id") % 100).as("pool"),
         expr("unix_micros(ts)").as("ts_us"))
@@ -1634,19 +1540,9 @@ object SparkEntry {
           col("asof.base_reserve").as("base_reserve"),
           col("asof.quote_reserve").as("quote_reserve"))
     }),
-    "q_events_range_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val points = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), expr("unix_micros(ts)").as("ts_us"))
-      val intervals = ev.filter(col("event_type") === "signup")
-        .select(expr("unix_micros(ts)").as("start_us"),
-          expr("unix_micros(ts) + 600000000").as("end_us"))
-      RangeJoin.pointInInterval(points, intervals, "ts_us",
-        "start_us", "end_us")
-        .groupBy(col("event_id").as("purchase_id"))
-        .agg(count(lit(1)).as("n_windows"),
-          min("start_us").as("first_start_us"))
-    }),
+    "q_events_range_join" -> ((s, d) =>
+      purchaseWindows(Tables.events(s, d))(RangeJoin.pointInInterval(
+        _, _, "ts_us", "start_us", "end_us"))),
     "q_events_merge_partials" -> ((s, d) => {
       val ev = Tables.events(s, d)
       // two complementary partial decodes of every logical event
@@ -1692,17 +1588,9 @@ object SparkEntry {
       // RangeJoinRewrite rule that Graft.session's extensions inject
       // turns the nested-loop sandwich into the bucketed equi-join at
       // plan time
-      val ev = Tables.events(s, d)
-      val points = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), expr("unix_micros(ts)").as("ts_us"))
-      val ivals = ev.filter(col("event_type") === "signup")
-        .select(expr("unix_micros(ts)").as("start_us"),
-          expr("unix_micros(ts) + 600000000").as("end_us"))
-      points.join(ivals,
-          col("ts_us") >= col("start_us") && col("ts_us") < col("end_us"))
-        .groupBy(col("event_id").as("purchase_id"))
-        .agg(count(lit(1)).as("n_windows"),
-          min("start_us").as("first_start_us"))
+      purchaseWindows(Tables.events(s, d))((points, ivals) =>
+        points.join(ivals,
+          col("ts_us") >= col("start_us") && col("ts_us") < col("end_us")))
     }),
     // ---- C. LLM-pipeline surface ----
     "q_dedup_docs_exact" -> ((s, d) =>
@@ -1723,7 +1611,6 @@ object SparkEntry {
       EventOps.sequenceGaps(
         Tables.events(s, d).filter(col("event_id") % 97 =!= 0))),
     "q_events_cpmm_decode" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val ev = Tables.events(s, d)
         .filter(col("event_type").isin("purchase", "click")).select(
           col("event_id"), (col("user_id") % 50).as("pool"), col("user_id"),
@@ -1732,15 +1619,9 @@ object SparkEntry {
           (col("event_id") * 3).as("quote_in"),
           (col("event_id") * 2).as("base_out"),
           expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val bi = ProtocolRegistry.encode(
+      dispatchPair(ProtocolRegistry.Cpmm,
         ev.filter(col("event_type") === "purchase"),
-        ProtocolRegistry.Cpmm.layouts(0))
-      val bo = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "click"),
-        ProtocolRegistry.Cpmm.layouts(1))
-      ProtocolRegistry.dispatch(
-        bi.select("payload").union(bo.select("payload")),
-        Seq(ProtocolRegistry.Cpmm))
+        ev.filter(col("event_type") === "click"))
         .select(col("event_kind"),
           coalesce(col("base_in.event_id"), col("base_out.event_id"))
             .as("event_id"),
@@ -1754,7 +1635,6 @@ object SparkEntry {
           coalesce(col("base_in.ts_us"), col("base_out.ts_us")).as("ts_us"))
     }),
     "q_events_decode_strfield" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
       val ev = Tables.events(s, d).select(
         col("event_id"), (col("user_id") % 100).as("pool"),
         concat_ws("-", col("event_type"), col("user_id")).as("name"))
@@ -1869,35 +1749,16 @@ object SparkEntry {
       graft.streaming.EventStreamPipelines.wireEgressAvailableNow(s, d)),
     "q_events_twap_1h" -> ((s, d) =>
       EventOps.twap1h(Tables.events(s, d))),
-    "q_events_liquidity_depth" -> ((s, d) => {
-      import graft.sources.ProtocolRegistry
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "view")).select(
-          col("event_id"), (col("user_id") % 100).as("pool"), col("user_id"),
-          expr("cast(round(value * 100, 0) as bigint)").as("lp_amount"),
-          (col("event_id") * 3).as("base_in"),
-          (col("event_id") * 5).as("quote_in"),
-          (col("event_id") * 3).as("base_out"),
-          (col("event_id") * 5).as("quote_out"),
-          expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-      val dep = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "click"),
-        ProtocolRegistry.Amm.layouts(0))
-      val wdr = ProtocolRegistry.encode(
-        ev.filter(col("event_type") === "view"),
-        ProtocolRegistry.Amm.layouts(1))
-      val flows = ProtocolRegistry.dispatch(
-        dep.select("payload").union(wdr.select("payload")),
-        Seq(ProtocolRegistry.Amm))
+    "q_events_liquidity_depth" -> ((s, d) =>
+      EventOps.liquidityDepth(ammFlows(Tables.events(s, d))
         .select(col("event_kind"),
           coalesce(col("deposit.pool"), col("withdraw.pool")).as("pool"),
           coalesce(col("deposit.event_id"), col("withdraw.event_id"))
             .as("event_id"),
           coalesce(col("deposit.lp_amount"), col("withdraw.lp_amount"))
             .as("lp_amount"),
-          coalesce(col("deposit.ts_us"), col("withdraw.ts_us")).as("ts_us"))
-      EventOps.liquidityDepth(flows)
-    }),
+          coalesce(col("deposit.ts_us"), col("withdraw.ts_us"))
+            .as("ts_us")))),
     "q_events_retention" -> ((s, d) =>
       EventOps.retention(Tables.events(s, d))),
     "q_events_funnel" -> ((s, d) =>
@@ -2053,7 +1914,6 @@ object SparkEntry {
       // registry decode), as-of enrich trades with the latest prior
       // curve state, then bucket volume by bonding-curve progress —
       // the "how far along the curve do people buy" board
-      import graft.sources.{ProtocolRegistry, RealLayouts}
       val ev = Tables.events(s, d)
       val curves = ProtocolRegistry.encode(
         ev.filter(col("event_type") === "signup").select(
@@ -2091,7 +1951,6 @@ object SparkEntry {
     "q_docs_distinctive_terms" -> ((s, d) =>
       TextAnalysis.distinctiveTerms(Tables.documents(s, d))),
     "q_events_decode_health" -> ((s, d) => {
-      import graft.sources.EventCodec
       EventCodec.decodeHealth(
         EventCodec.corrupt(EventCodec.encodeTrade(Tables.events(s, d))))
     }),
@@ -2099,7 +1958,6 @@ object SparkEntry {
     // arrives behind a deterministic garbage prefix; the scan locates the
     // discriminator, decode recovers every event — identity counts
     "q_events_resync" -> ((s, d) => {
-      import graft.sources.EventCodec
       val framed = EventCodec.encodeTrade(Tables.events(s, d))
         .withColumn("stream", concat(
           expr("substring(X'EEEEEEEEEEEEEE', 1, cast(event_id % 7 as int))"),
@@ -2144,12 +2002,12 @@ object SparkEntry {
       Dedup.dupProvenance(Tables.documents(s, d))),
     "q_docs_split" -> ((s, d) =>
       Sampling.hashSplit(Tables.documents(s, d), "doc_id", "source")),
-    // SQL-text front-end: the same engine driven through spark.sql over a
-    // registered view — busiest 3 minutes per event type (agg + window +
-    // rank filter in one ANSI statement)
-    "q_sql_busiest_minutes" -> ((s, d) => {
-      Tables.events(s, d).createOrReplaceTempView("events_v")
-      s.sql("""SELECT event_type, minute, n FROM (
+    // SQL-text front-end: the same engine driven through the SQL parser
+    // over the events frame bound as `events_v` — busiest 3 minutes per
+    // event type (agg + window + rank filter in one ANSI statement)
+    "q_sql_busiest_minutes" -> ((s, d) =>
+      org.apache.spark.sql.GraftBridge.sqlOver(s,
+        """SELECT event_type, minute, n FROM (
                  SELECT event_type, minute, count(*) AS n,
                         row_number() OVER (PARTITION BY event_type
                           ORDER BY count(*) DESC, minute) AS rn
@@ -2157,8 +2015,7 @@ object SparkEntry {
                               unix_micros(ts) div 60000000 AS minute
                        FROM events_v)
                  GROUP BY 1, 2)
-               WHERE rn <= 3""")
-    }),
+               WHERE rn <= 3""", "events_v" -> Tables.events(s, d))),
     "q_events_gap_dist" -> ((s, d) =>
       EventOps.interEventGaps(Tables.events(s, d))),
     "q_events_value_histogram" -> ((s, d) =>
@@ -2466,7 +2323,6 @@ object SparkEntry {
     // values (low = event_id, high = event_id·7) must decode to
     // id + id·7·2^64 computed independently in 128-bit integer SQL
     "q_events_u128_decode" -> ((s, d) => {
-      import graft.functions.exprs._
       // v rendered as digits: Decimal(38,0) loses precision through the
       // oracle harness's float64 frame (2^53), a string never does
       Tables.events(s, d).select(col("event_id"),
@@ -2479,27 +2335,15 @@ object SparkEntry {
     // to a constant (gate, bound, holds=TRUE) row; a regression flips
     // holds and the hash compare goes red. Bounds pinned from measured
     // values at sf0.01–sf10 (GateProbe) with ample margin.
-    "q_qa_ivf_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      operators.QaGates.topKRecallGate(
-        Similarity.bruteForceTopK(emb, q, 5),
-        Similarity.ivfTopK(emb, q, 5), "ivf_recall", 0.15)
-    }),
-    "q_qa_pq_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      operators.QaGates.topKRecallGate(
-        Similarity.bruteForceTopK(emb, q, 5),
-        Similarity.pqTopK(emb, q, 64, 5), "pq_recall", 0.1)
-    }),
-    "q_qa_ivfpq_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      operators.QaGates.topKRecallGate(
-        Similarity.bruteForceTopK(emb, q, 5),
-        Similarity.ivfpqTopK(emb, q, 64, 5), "ivfpq_recall", 0.08)
-    }),
+    "q_qa_ivf_recall" -> ((s, d) =>
+      annRecallGate(Tables.embeddings(s, d), "ivf_recall", 0.15)(
+        Similarity.ivfTopK(_, _, 5))),
+    "q_qa_pq_recall" -> ((s, d) =>
+      annRecallGate(Tables.embeddings(s, d), "pq_recall", 0.1)(
+        Similarity.pqTopK(_, _, 64, 5))),
+    "q_qa_ivfpq_recall" -> ((s, d) =>
+      annRecallGate(Tables.embeddings(s, d), "ivfpq_recall", 0.08)(
+        Similarity.ivfpqTopK(_, _, 64, 5))),
     "q_qa_pq_served_consistent" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
@@ -2757,19 +2601,8 @@ object SparkEntry {
        FROM d JOIN p10 p ON d.src = p.node"""
   }
 
-  private lazy val pagerankOracle: String = integerPagerankOracle(
-    """act AS (
-         SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
-                         user_id
-         FROM events),
-       b AS MATERIALIZED (
-         SELECT list(user_id) AS us FROM act
-         GROUP BY event_type, mb HAVING count(*) BETWEEN 2 AND 64),
-       e AS MATERIALIZED (
-         SELECT DISTINCT src, dst FROM (
-           SELECT src, unnest(us) AS dst FROM (
-             SELECT unnest(us) AS src, us FROM b))
-         WHERE src <> dst)""")
+  private lazy val pagerankOracle: String =
+    integerPagerankOracle(dropEdgeCtes64)
 
   /** Shared degrade-not-drop bucket CTEs (GraphOps.cappedBuckets): each
     * (market, hour) keeps its 16 most-active wallets (count desc, id
@@ -2792,12 +2625,6 @@ object SparkEntry {
          WHERE rk <= 16
          GROUP BY 1, 2 HAVING count(*) >= 2)"""
 
-  /** [[cappedBucketCtes]] plus the directed distinct edge set `e` —
-    * the capped family's shared edge source (GraphOps
-    * .coactivityEdges under its CapTop default). Kept separate from the bucket CTEs
-    * because DuckDB evaluates MATERIALIZED CTEs EAGERLY even when
-    * unreferenced — a consumer that never reads `e` must not pay for
-    * (or spill on) it. */
   /** C74/C78 shared oracle CTEs: the rep-collapsed winnowing
     * fingerprint pair report, closed as `wp`. */
   private val winnowPairCtes: String =
@@ -2833,6 +2660,12 @@ object SparkEntry {
          JOIN sizes s1 ON p.d1 = s1.doc_id
          JOIN sizes s2 ON p.d2 = s2.doc_id)"""
 
+  /** [[cappedBucketCtes]] plus the directed distinct edge set `e` —
+    * the capped family's shared edge source (GraphOps.coactivityEdges
+    * under its CapTop default). Kept separate from the bucket CTEs
+    * because DuckDB evaluates MATERIALIZED CTEs EAGERLY even when
+    * unreferenced — a consumer that never reads `e` must not pay for
+    * (or spill on) it. */
   private val cappedEdgeCtes: String =
     cappedBucketCtes + """,
        e AS MATERIALIZED (
@@ -2936,7 +2769,7 @@ object SparkEntry {
   }
 
   /** Drop-policy (cap 64) edge CTEs — the legacy opt-in edge source
-    * the `_dropall` taint twin verifies against. */
+    * the `_dropall` pagerank and taint twins verify against. */
   private val dropEdgeCtes64: String =
     """act AS (
          SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
@@ -2999,31 +2832,44 @@ object SparkEntry {
   /** A76b oracle: the same 12 unrolled peels over the capped edge set. */
   private lazy val kcoreCappedOracle: String = kcoreUnrolled(cappedEdgeCtes)
 
-  def oracleSql: Map[String, String] = {
-   val m = Map(
-    // co-activity family: since round 9 the UNSUFFIXED keys run the
-    // degrade-not-drop (CapTop) default — the `_dropall` twins verify
-    // the opt-in legacy drop policy at organic density
-    "q_events_pagerank" -> pagerankCappedOracle,
-    "q_events_pagerank_dropall" -> pagerankOracle,
-    "q_events_taint" -> taintOracle,
-    "q_events_taint_dropall" -> taintDropallOracle,
-    "q_events_kcore" -> kcoreCappedOracle,
-    "q_events_kcore_dropall" -> kcoreOracle,
-    "q_events_triangles" ->
-      s"""WITH $cappedEdgeCtes,
-         eu AS (SELECT src, dst FROM e WHERE src < dst),
+  /** Legacy drop-policy pair CTEs, the `_dropall` twins' source:
+    * `act`, the (market, hour) buckets `sized` of 2 to 16 wallets, and
+    * `rel` selecting `cols` from each ordered wallet pair of a bucket. */
+  private def dropPairCtes(rel: String, cols: String): String =
+    s"""act AS (
+           SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
+                           user_id
+           FROM events),
+         sized AS (
+           SELECT event_type, mb FROM act
+           GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 16),
+         $rel AS (
+           SELECT DISTINCT $cols
+           FROM (SELECT a.* FROM act a JOIN sized sa
+                   ON a.event_type = sa.event_type AND a.mb = sa.mb) x
+           JOIN (SELECT a.* FROM act a JOIN sized sb
+                   ON a.event_type = sb.event_type AND a.mb = sb.mb) y
+             ON y.event_type = x.event_type AND y.mb = x.mb
+           WHERE x.user_id < y.user_id)"""
+
+  private val dropEdgeCtes16: String =
+    dropPairCtes("e", "x.user_id AS src, y.user_id AS dst")
+
+  /** Triangle counts and local clustering over the undirected edge
+    * relation `u` that `edgeCtes` defines. */
+  private def trianglesOracle(edgeCtes: String, u: String): String =
+    s"""WITH $edgeCtes,
          deg AS (
            SELECT node, count(*) AS deg FROM (
-             SELECT src AS node FROM eu
-             UNION ALL SELECT dst AS node FROM eu) GROUP BY 1),
+             SELECT src AS node FROM $u
+             UNION ALL SELECT dst AS node FROM $u) GROUP BY 1),
          centers AS (SELECT node FROM deg WHERE deg <= 256),
          tri AS (
            SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
-           FROM eu ab
+           FROM $u ab
            JOIN centers cz ON ab.dst = cz.node
-           JOIN eu bc ON ab.dst = bc.src
-           JOIN eu ac ON ac.src = ab.src AND ac.dst = bc.dst),
+           JOIN $u bc ON ab.dst = bc.src
+           JOIN $u ac ON ac.src = ab.src AND ac.dst = bc.dst),
          pn AS (
            SELECT node, count(*) AS tri FROM (
              SELECT a AS node FROM tri
@@ -3035,22 +2881,391 @@ object SparkEntry {
                      THEN (2 * COALESCE(p.tri, 0) * 1000000)
                             // (d.deg * (d.deg - 1))
                      ELSE 0 END AS BIGINT) AS cc_1e6
-         FROM deg d LEFT JOIN pn p ON d.node = p.node""",
-    "q_events_wallet_clusters" ->
-      s"""WITH $cappedEdgeCtes,
+         FROM deg d LEFT JOIN pn p ON d.node = p.node"""
+
+  /** Connected wallet clusters (min-id label by recursive reach) over
+    * the directed relation `edges(a, b)` that `edgeCtes` defines. */
+  private def walletClustersOracle(edgeCtes: String, edges: String,
+      a: String, b: String): String =
+    s"""WITH $edgeCtes,
          cl AS (
            SELECT a AS wallet, least(a, min(b)) AS cluster_id FROM (
              WITH RECURSIVE reach(a, b) AS (
-               SELECT src, dst FROM e
+               SELECT $a, $b FROM $edges
                UNION
-               SELECT r.a, e2.dst FROM reach r JOIN e e2 ON r.b = e2.src)
+               SELECT r.a, e2.$b FROM reach r JOIN $edges e2 ON r.b = e2.$a)
              SELECT a, b FROM reach)
            GROUP BY a),
          sz AS (SELECT cluster_id, count(*) AS cluster_size
                 FROM cl GROUP BY 1)
          SELECT cl.wallet, cl.cluster_id,
                 CAST(sz.cluster_size AS BIGINT) AS cluster_size
-         FROM cl JOIN sz USING (cluster_id)""",
+         FROM cl JOIN sz USING (cluster_id)"""
+
+  /** Common-neighbour and resource-allocation scores over the
+    * directed edges `e` and undirected edges `und` that `edgeCtes`
+    * defines. */
+  private def neighborSimOracle(edgeCtes: String): String =
+    s"""WITH $edgeCtes,
+         deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
+         centers AS (SELECT node AS z,
+                 CAST(round(1.0 / deg, 9) AS DECIMAL(12,9)) AS ra_w
+               FROM deg WHERE deg <= 256),
+         wedges AS (
+           SELECT e1.src AS a, e2.dst AS b, c.ra_w
+           FROM e e1
+           JOIN e e2 ON e1.dst = e2.src
+           JOIN centers c ON e1.dst = c.z
+           WHERE e1.src < e2.dst),
+         pairs AS (
+           SELECT a, b, count(*) AS common, sum(ra_w) AS ra
+           FROM wedges GROUP BY 1, 2 HAVING count(*) >= 2)
+         SELECT p.a, p.b, p.common, da.deg AS deg_a, db.deg AS deg_b,
+                CAST(p.common AS DOUBLE) /
+                  CAST(da.deg + db.deg - p.common AS DOUBLE) AS jaccard,
+                CAST(p.ra AS DOUBLE) AS ra_score,
+                COALESCE(u.is_edge, false) AS is_edge
+         FROM pairs p
+         JOIN deg da ON p.a = da.node
+         JOIN deg db ON p.b = db.node
+         LEFT JOIN (SELECT src AS a, dst AS b, true AS is_edge FROM und) u
+           ON p.a = u.a AND p.b = u.b"""
+
+  /** Daily new-pair ratio over the pair relation `dp(db, a, b)` that
+    * `pairCtes` defines. */
+  private def edgeGrowthOracle(pairCtes: String): String =
+    s"""WITH $pairCtes,
+         fs AS (SELECT a, b, min(db) AS first_db FROM dp GROUP BY 1, 2)
+         SELECT dp.db * 86400 AS day, count(*) AS n_pairs,
+                count(*) FILTER (WHERE dp.db = fs.first_db) AS n_new,
+                CAST(count(*) FILTER (WHERE dp.db = fs.first_db)
+                     AS DOUBLE) / CAST(count(*) AS DOUBLE) AS new_ratio
+         FROM dp JOIN fs ON dp.a = fs.a AND dp.b = fs.b
+         GROUP BY dp.db"""
+
+  /** Sandwich attackers per hour over the trade slice `tt` that
+    * `ttCtes` selects from the hourly trades `t`. */
+  private def sandwichOracle(ttCtes: String): String =
+    s"""WITH t AS (
+           SELECT epoch_us(ts) // 3600000000 AS mb, event_id, user_id,
+                  event_type,
+                  CAST(round(value * 100) AS BIGINT) AS cents
+           FROM events WHERE event_type IN ('purchase', 'view')),
+         $ttCtes,
+         br AS (
+           SELECT mb, user_id AS attacker,
+                  min(CASE WHEN event_type = 'purchase'
+                      THEN event_id END) AS b,
+                  max(CASE WHEN event_type = 'view'
+                      THEN event_id END) AS s
+           FROM tt GROUP BY 1, 2
+           HAVING b IS NOT NULL AND s IS NOT NULL AND s > b)
+         SELECT br.attacker,
+                CAST(count(DISTINCT br.mb) AS BIGINT) AS n_hours,
+                CAST(count(*) AS BIGINT) AS n_victim_trades,
+                CAST(count(DISTINCT tt.user_id) AS BIGINT) AS n_victims,
+                CAST(sum(tt.cents) AS BIGINT) AS victim_cents
+         FROM br JOIN tt ON tt.mb = br.mb
+         WHERE tt.user_id <> br.attacker
+           AND tt.event_id > br.b AND tt.event_id < br.s
+         GROUP BY 1"""
+
+  /** Latest prior view per purchase (`viewCols` picks it, or drops it
+    * past a tolerance): the as-of join, shared by the sort-merge
+    * (`q_events_asof_attribution`), custom-exec (`q_events_asof_merge`)
+    * and tolerance (`q_events_asof_tolerance`) plans. */
+  private def asOfOracleWith(viewCols: String): String =
+    s"""WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+                           0 AS kind, event_id AS view_id,
+                           epoch_us(ts) AS view_ts_us
+                    FROM events WHERE event_type = 'view'),
+         p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, 1 AS kind,
+                      CAST(NULL AS BIGINT) AS view_id,
+                      CAST(NULL AS BIGINT) AS view_ts_us
+               FROM events WHERE event_type = 'purchase'),
+         u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
+         w AS (SELECT *, last_value(view_id IGNORE NULLS) OVER win AS lv,
+                      last_value(view_ts_us IGNORE NULLS) OVER win AS lvts
+               FROM u WINDOW win AS (PARTITION BY user_id
+                 ORDER BY ts_us, kind, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+         SELECT event_id AS purchase_id, user_id, ts_us AS purchase_ts_us,
+                $viewCols
+         FROM w WHERE kind = 1"""
+
+  private val asOfOracle: String =
+    asOfOracleWith("lv AS view_id, lvts AS view_ts_us")
+
+  /** 30-minute gap sessions: the batch `session_window` plan and its
+    * availableNow stream twin must both hash-match it. */
+  private val sessionNativeOracle: String =
+    """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
+                           CAST(value AS DECIMAL(18,2)) AS v FROM events),
+         s AS (SELECT user_id, ts_us, v,
+                      CASE WHEN lag(ts_us) OVER w IS NULL
+                           OR ts_us - lag(ts_us) OVER w >= 1800000000
+                           THEN 1 ELSE 0 END AS ns
+               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
+         c AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts_us
+                 ROWS UNBOUNDED PRECEDING) AS sid
+               FROM s)
+         SELECT user_id, min(ts_us) AS start_us,
+                max(ts_us) + 1800000000 AS end_us,
+                count(*) AS n_events, CAST(sum(v) AS DOUBLE) AS total_value
+         FROM c GROUP BY user_id, sid"""
+
+  /** Day-bucket histogram quantiles: the batch store and the streamed
+    * partials must agree exactly (histogram addition is exact). */
+  private val quantileStoreOracle: String =
+    """WITH h AS (
+           SELECT epoch_us(ts) // 86400000000 AS db,
+                  CAST(round(value * 100) AS BIGINT) // 100 AS bucket,
+                  count(*) AS n
+           FROM events GROUP BY 1, 2),
+         m AS (SELECT bucket, sum(n) AS n FROM h GROUP BY 1),
+         c AS (SELECT a.bucket, CAST(sum(b.n) AS BIGINT) AS cum
+               FROM m a JOIN m b ON b.bucket <= a.bucket GROUP BY 1),
+         t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM m),
+         p AS (SELECT unnest([50, 90, 99]) AS pct)
+         SELECT p.pct, t.tot AS n_rows,
+                (min(c.bucket) + 1) * 100 - 1 AS upper_cents
+         FROM p CROSS JOIN t
+         JOIN c ON c.cum * 100 >= p.pct * t.tot
+         GROUP BY 1, 2"""
+
+  /** Per-type counts: the plain and the salted two-phase aggregate give
+    * the same rows. */
+  private val countsByTypeOracle: String =
+    """SELECT event_type, count(*) AS n_events,
+                count(DISTINCT user_id) AS n_users,
+                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+         FROM events GROUP BY event_type"""
+
+  /** Every event as a decoded trade row: each wire path (codec round
+    * trip, log extraction, DSv2 read and write, incremental ingest,
+    * egress) must give the events back unchanged. */
+  private val wireRoundTripOracle: String =
+    """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
+                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
+         FROM events"""
+
+  /** Hourly bars `b`: each trade's hour `hb`, type, decimal value and
+    * (ts, id) order keys. */
+  private val hourlyBarsCte: String =
+    """b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
+                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
+                           epoch_us(ts) AS tu, event_id
+                    FROM events)"""
+
+  /** Hourly bars `b` with first (`rna`) and last (`rnd`) trade ranks
+    * `w` per (hour, type): the candle source of the OHLC, gap-fill and
+    * volatility oracles. */
+  private val hourlyOhlcCtes: String =
+    s"""$hourlyBarsCte,
+         w AS (SELECT *,
+                 row_number() OVER (PARTITION BY hb, event_type
+                                    ORDER BY tu, event_id) AS rna,
+                 row_number() OVER (PARTITION BY hb, event_type
+                                    ORDER BY tu DESC, event_id DESC) AS rnd
+               FROM b)"""
+
+  /** Hourly OHLC candles per event type, batch and stream. */
+  private val ohlc1hOracle: String =
+    s"""WITH $hourlyOhlcCtes
+         SELECT hb, event_type,
+                CAST(max(CASE WHEN rna = 1 THEN v END) AS DOUBLE) AS open,
+                CAST(max(CASE WHEN rnd = 1 THEN v END) AS DOUBLE) AS close,
+                CAST(max(v) AS DOUBLE) AS high, CAST(min(v) AS DOUBLE) AS low,
+                count(*) AS n, CAST(sum(v) AS DOUBLE) AS volume
+         FROM w GROUP BY hb, event_type"""
+
+  /** Average-cost realized PnL marks: the streamed marks must equal the
+    * batch marks. */
+  private val realizedPnlOracle: String =
+    """WITH t AS (
+           SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
+                  CAST(round(value * 100, 0) AS BIGINT) AS cents
+           FROM events
+           WHERE user_id % 10 = 0
+             AND event_type IN ('purchase', 'view')),
+         c AS (
+           SELECT user_id, event_id, event_type, cents,
+                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
+                         THEN cents ELSE 0 END) OVER (
+                    PARTITION BY user_id ORDER BY ts_us, event_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                    AS BIGINT) AS cum_buy_cents,
+                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
+                         THEN 1 ELSE 0 END) OVER (
+                    PARTITION BY user_id ORDER BY ts_us, event_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                    AS BIGINT) AS cum_buy_n
+           FROM t)
+         SELECT user_id, event_id, cents AS sell_cents,
+                cum_buy_cents, cum_buy_n,
+                CASE WHEN cum_buy_n > 0
+                     THEN CAST(cents AS DOUBLE) -
+                          CAST(cum_buy_cents AS DOUBLE) /
+                          CAST(cum_buy_n AS DOUBLE) END AS pnl_cents
+         FROM c WHERE event_type = 'view'"""
+
+  /** Distinct (wallet, minute) pairs per type: both streaming dedup
+    * harnesses must reduce to it. */
+  private val dedupCountsOracle: String =
+    """SELECT event_type, count(*) AS n_distinct FROM (
+           SELECT DISTINCT user_id, event_type,
+                  epoch_us(ts) // 60000000 AS minute_bucket
+           FROM events)
+         GROUP BY event_type"""
+
+  /** Purchases per 10-minute signup window: the explicit bucketed join
+    * and the planner-rewritten one. */
+  private val rangeJoinOracle: String =
+    """SELECT p.event_id AS purchase_id, count(*) AS n_windows,
+                min(i.start_us) AS first_start_us
+         FROM (SELECT event_id, epoch_us(ts) AS ts_us FROM events
+               WHERE event_type = 'purchase') p
+         JOIN (SELECT epoch_us(ts) AS start_us,
+                      epoch_us(ts) + 600000000 AS end_us FROM events
+               WHERE event_type = 'signup') i
+           ON p.ts_us >= i.start_us AND p.ts_us < i.end_us
+         GROUP BY 1"""
+
+  /** Per-source corpus stats: the one-pass stats and the merged partial
+    * stats. */
+  private val corpusStatsOracle: String =
+    """SELECT source, count(*) AS n_docs,
+                count(DISTINCT md5(text)) AS n_unique_texts,
+                CAST(sum(length(text)) AS BIGINT) AS total_chars,
+                CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+                  AS total_ws_tokens,
+                CAST(min(length(text)) AS BIGINT) AS min_chars,
+                CAST(max(length(text)) AS BIGINT) AS max_chars,
+                CAST(count(*) - count(DISTINCT md5(text))
+                  AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_ratio
+         FROM documents GROUP BY 1"""
+
+  /** Exact cosine top-5: brute force, and IVF probing every list, must
+    * both return it. */
+  private val bruteforceTopkOracle: String =
+    """WITH x AS (SELECT vec_id, unnest(generate_series(1, 64)) AS i,
+                           CAST(unnest(embedding) AS DOUBLE) AS v
+                    FROM embeddings),
+         n AS (SELECT vec_id, sum(v * v) AS n2 FROM x GROUP BY 1),
+         q AS (SELECT * FROM x WHERE vec_id < 10),
+         d AS (SELECT q.vec_id AS q_id, x.vec_id AS neighbor_id,
+                      sum(q.v * x.v) AS dot
+               FROM q JOIN x ON q.i = x.i AND q.vec_id <> x.vec_id
+               GROUP BY 1, 2),
+         c AS (SELECT q_id, neighbor_id,
+                      round(dot / (sqrt(nq.n2) * sqrt(nn.n2)), 6) AS cos6
+               FROM d JOIN n nq ON q_id = nq.vec_id
+                      JOIN n nn ON neighbor_id = nn.vec_id),
+         r AS (SELECT q_id, neighbor_id, cos6,
+                      row_number() OVER (PARTITION BY q_id
+                        ORDER BY cos6 DESC, neighbor_id) AS rk
+               FROM c)
+         SELECT q_id, neighbor_id, cos6, rk FROM r WHERE rk <= 5"""
+
+  /** Near-dup keepers over the collapsed pair graph: the expanded and
+    * the rep-level pair contracts must keep the same set. */
+  private lazy val dedupKeepersOracle: String =
+    s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
+         ex AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
+         SELECT doc_id FROM ex
+         WHERE doc_id NOT IN (SELECT doc_id FROM lbl WHERE keep_id < doc_id)"""
+
+  /** Near-dup cluster-size histogram, expanded and rep-level. */
+  private lazy val clusterSizesOracle: String =
+    s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
+         cl AS (SELECT keep_id, count(*) AS cluster_size FROM lbl
+                GROUP BY 1)
+         SELECT cluster_size, count(*) AS n_clusters
+         FROM cl GROUP BY 1"""
+
+  /** Gap-filled hourly close `f(event_type, hb, c)`: the last trade per
+    * (type, hour), forward-filled over every hour between the first and
+    * the last (the Hurst and variance-ratio oracles). */
+  private val gapFilledCloseCtes: String =
+    """cl AS (
+           SELECT event_type, (epoch_us(ts) // 3600000000) * 3600 AS hb,
+                  CAST(round(value * 100, 0) AS BIGINT) AS cents,
+                  epoch_us(ts) AS tu, event_id
+           FROM events),
+         r AS (SELECT *,
+                 row_number() OVER (PARTITION BY event_type, hb
+                   ORDER BY tu DESC, event_id DESC) AS rnd
+               FROM cl),
+         c AS (SELECT event_type, hb,
+                 max(CASE WHEN rnd = 1 THEN cents END) AS c
+               FROM r GROUP BY 1, 2),
+         spine AS (
+           SELECT event_type,
+                  unnest(generate_series(min(hb), max(hb), 3600)) AS hb
+           FROM c GROUP BY event_type),
+         f AS (SELECT s.event_type, s.hb,
+                 last_value(c.c IGNORE NULLS) OVER (
+                   PARTITION BY s.event_type ORDER BY s.hb
+                   ROWS UNBOUNDED PRECEDING) AS c
+               FROM spine s LEFT JOIN c
+                 ON s.event_type = c.event_type AND s.hb = c.hb)"""
+
+  /** Last trade per (type, hour): `closes(event_type, hb,
+    * close_cents)`, the candle close of the information-coefficient and
+    * Roll-spread oracles. */
+  private val hourlyClosesCtes: String =
+    """b AS (
+           SELECT event_type, epoch_us(ts) // 3600000000 AS hb,
+                  CAST(round(value * 100) AS BIGINT) AS cents,
+                  epoch_us(ts) AS tu, event_id
+           FROM events),
+         w0 AS (
+           SELECT *, row_number() OVER (PARTITION BY event_type, hb
+                      ORDER BY tu DESC, event_id DESC) AS rn
+           FROM b),
+         closes AS (
+           SELECT event_type, hb, cents AS close_cents
+           FROM w0 WHERE rn = 1)"""
+
+  /** Trades `t` with their global cumulative volume `gcum` in (ts, id)
+    * order as `c`: the equal-volume bucket clock of the VPIN and
+    * Kyle-lambda oracles. */
+  private val volumeClockCtes: String =
+    """t AS (
+           SELECT epoch_us(ts) AS ts_us, event_id, event_type,
+                  CAST(round(value * 100, 0) AS BIGINT) AS cents
+           FROM events WHERE event_type IN ('purchase', 'view')
+             AND CAST(round(value * 100, 0) AS BIGINT) > 0),
+         c AS (
+           SELECT *, sum(cents) OVER (ORDER BY ts_us, event_id
+             ROWS UNBOUNDED PRECEDING) AS gcum FROM t)"""
+
+  /** Distinct word trigrams `g(doc_id, g)` of each document's
+    * lower-cased space-split text `t` (the contamination oracles). */
+  private val wordTrigramCtes: String =
+    """t AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
+                    FROM documents),
+         ti AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
+                FROM t WHERE len(ws) >= 3),
+         g AS (SELECT DISTINCT doc_id,
+                      ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g FROM ti)"""
+
+  def oracleSql: Map[String, String] = {
+   val m = Map(
+    // co-activity family: since round 9 the UNSUFFIXED keys run the
+    // degrade-not-drop (CapTop) default — the `_dropall` twins verify
+    // the opt-in legacy drop policy at organic density
+    "q_events_pagerank" -> pagerankCappedOracle,
+    "q_events_pagerank_dropall" -> pagerankOracle,
+    "q_events_taint" -> taintOracle,
+    "q_events_taint_dropall" -> taintDropallOracle,
+    "q_events_kcore" -> kcoreCappedOracle,
+    "q_events_kcore_dropall" -> kcoreOracle,
+    "q_events_triangles" -> trianglesOracle(s"""$cappedEdgeCtes,
+         eu AS (SELECT src, dst FROM e WHERE src < dst)""", "eu"),
+    "q_events_wallet_clusters" ->
+      walletClustersOracle(cappedEdgeCtes, "e", "src", "dst"),
     // A120 oracle: 4 unrolled synchronous LPA steps over the same
     // capped edge set — majority neighbor label, count-desc /
     // label-asc tie-break, initial label = own id
@@ -3107,76 +3322,22 @@ object SparkEntry {
                       CAST(s.sy AS DOUBLE) * CAST(s.sy AS DOUBLE)))
                   AS assortativity
          FROM s CROSS JOIN nn""",
-    "q_events_neighbor_sim" ->
-      s"""WITH $cappedEdgeCtes,
-         und AS (SELECT src, dst FROM e WHERE src < dst),
-         deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-         centers AS (SELECT node AS z,
-                 CAST(round(1.0 / deg, 9) AS DECIMAL(12,9)) AS ra_w
-               FROM deg WHERE deg <= 256),
-         wedges AS (
-           SELECT e1.src AS a, e2.dst AS b, c.ra_w
-           FROM e e1
-           JOIN e e2 ON e1.dst = e2.src
-           JOIN centers c ON e1.dst = c.z
-           WHERE e1.src < e2.dst),
-         pairs AS (
-           SELECT a, b, count(*) AS common, sum(ra_w) AS ra
-           FROM wedges GROUP BY 1, 2 HAVING count(*) >= 2)
-         SELECT p.a, p.b, p.common, da.deg AS deg_a, db.deg AS deg_b,
-                CAST(p.common AS DOUBLE) /
-                  CAST(da.deg + db.deg - p.common AS DOUBLE) AS jaccard,
-                CAST(p.ra AS DOUBLE) AS ra_score,
-                COALESCE(u.is_edge, false) AS is_edge
-         FROM pairs p
-         JOIN deg da ON p.a = da.node
-         JOIN deg db ON p.b = db.node
-         LEFT JOIN (SELECT src AS a, dst AS b, true AS is_edge FROM und) u
-           ON p.a = u.a AND p.b = u.b""",
-    "q_events_edge_growth" ->
-      s"""WITH $cappedBucketCtes,
+    "q_events_neighbor_sim" -> neighborSimOracle(s"""$cappedEdgeCtes,
+         und AS (SELECT src, dst FROM e WHERE src < dst)"""),
+    "q_events_edge_growth" -> edgeGrowthOracle(s"""$cappedBucketCtes,
          dp AS (
            SELECT DISTINCT db, a, b FROM (
              SELECT mb // 24 AS db, a, unnest(us) AS b FROM (
                SELECT mb, unnest(us) AS a, us FROM cb))
-           WHERE a < b),
-         fs AS (SELECT a, b, min(db) AS first_db FROM dp GROUP BY 1, 2)
-         SELECT dp.db * 86400 AS day, count(*) AS n_pairs,
-                count(*) FILTER (WHERE dp.db = fs.first_db) AS n_new,
-                CAST(count(*) FILTER (WHERE dp.db = fs.first_db)
-                     AS DOUBLE) / CAST(count(*) AS DOUBLE) AS new_ratio
-         FROM dp JOIN fs ON dp.a = fs.a AND dp.b = fs.b
-         GROUP BY dp.db""",
-    "q_events_sandwich" ->
-      """WITH t AS (
-           SELECT epoch_us(ts) // 3600000000 AS mb, event_id, user_id,
-                  event_type,
-                  CAST(round(value * 100) AS BIGINT) AS cents
-           FROM events WHERE event_type IN ('purchase', 'view')),
-         rkt AS (
+           WHERE a < b)"""),
+    "q_events_sandwich" -> sandwichOracle(
+      """rkt AS (
            SELECT t.*, row_number() OVER (PARTITION BY mb
              ORDER BY event_id) AS rk
            FROM t),
          tt AS MATERIALIZED (
            SELECT mb, event_id, user_id, event_type, cents
-           FROM rkt WHERE rk <= 1024),
-         br AS (
-           SELECT mb, user_id AS attacker,
-                  min(CASE WHEN event_type = 'purchase'
-                      THEN event_id END) AS b,
-                  max(CASE WHEN event_type = 'view'
-                      THEN event_id END) AS s
-           FROM tt GROUP BY 1, 2
-           HAVING b IS NOT NULL AND s IS NOT NULL AND s > b)
-         SELECT br.attacker,
-                CAST(count(DISTINCT br.mb) AS BIGINT) AS n_hours,
-                CAST(count(*) AS BIGINT) AS n_victim_trades,
-                CAST(count(DISTINCT tt.user_id) AS BIGINT) AS n_victims,
-                CAST(sum(tt.cents) AS BIGINT) AS victim_cents
-         FROM br JOIN tt ON tt.mb = br.mb
-         WHERE tt.user_id <> br.attacker
-           AND tt.event_id > br.b AND tt.event_id < br.s
-         GROUP BY 1""",
+           FROM rkt WHERE rk <= 1024)"""),
     "q_events_cap_accounting" -> {
       def row(family: String, cap: Int, src: String) =
         s"""SELECT '$family' AS family, CAST($cap AS BIGINT) AS cap,
@@ -3210,74 +3371,10 @@ object SparkEntry {
          UNION ALL ${row("wash_hour_sellers", 1024, "se")}
          UNION ALL ${row("sandwich_hour_trades", 1024, "sa")}"""
     },
-    "q_events_triangles_dropall" ->
-      """WITH act AS (
-           SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
-                           user_id
-           FROM events),
-         sized AS (
-           SELECT event_type, mb FROM act
-           GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 16),
-         e AS (
-           SELECT DISTINCT x.user_id AS src, y.user_id AS dst
-           FROM (SELECT a.* FROM act a JOIN sized sa
-                   ON a.event_type = sa.event_type AND a.mb = sa.mb) x
-           JOIN (SELECT a.* FROM act a JOIN sized sb
-                   ON a.event_type = sb.event_type AND a.mb = sb.mb) y
-             ON y.event_type = x.event_type AND y.mb = x.mb
-           WHERE x.user_id < y.user_id),
-         deg AS (
-           SELECT node, count(*) AS deg FROM (
-             SELECT src AS node FROM e
-             UNION ALL SELECT dst AS node FROM e) GROUP BY 1),
-         centers AS (SELECT node FROM deg WHERE deg <= 256),
-         tri AS (
-           SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
-           FROM e ab
-           JOIN centers cz ON ab.dst = cz.node
-           JOIN e bc ON ab.dst = bc.src
-           JOIN e ac ON ac.src = ab.src AND ac.dst = bc.dst),
-         pn AS (
-           SELECT node, count(*) AS tri FROM (
-             SELECT a AS node FROM tri
-             UNION ALL SELECT b AS node FROM tri
-             UNION ALL SELECT c AS node FROM tri) GROUP BY 1)
-         SELECT d.node, CAST(d.deg AS BIGINT) AS deg,
-                CAST(COALESCE(p.tri, 0) AS BIGINT) AS tri,
-                CAST(CASE WHEN d.deg >= 2
-                     THEN (2 * COALESCE(p.tri, 0) * 1000000)
-                            // (d.deg * (d.deg - 1))
-                     ELSE 0 END AS BIGINT) AS cc_1e6
-         FROM deg d LEFT JOIN pn p ON d.node = p.node""",
-    "q_events_quantile_store" ->
-      """WITH h AS (
-           SELECT epoch_us(ts) // 86400000000 AS db,
-                  CAST(round(value * 100) AS BIGINT) // 100 AS bucket,
-                  count(*) AS n
-           FROM events GROUP BY 1, 2),
-         m AS (SELECT bucket, sum(n) AS n FROM h GROUP BY 1),
-         c AS (SELECT a.bucket, CAST(sum(b.n) AS BIGINT) AS cum
-               FROM m a JOIN m b ON b.bucket <= a.bucket GROUP BY 1),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM m),
-         p AS (SELECT unnest([50, 90, 99]) AS pct)
-         SELECT p.pct, t.tot AS n_rows,
-                (min(c.bucket) + 1) * 100 - 1 AS upper_cents
-         FROM p CROSS JOIN t
-         JOIN c ON c.cum * 100 >= p.pct * t.tot
-         GROUP BY 1, 2""",
+    "q_events_triangles_dropall" -> trianglesOracle(dropEdgeCtes16, "e"),
+    "q_events_quantile_store" -> quantileStoreOracle,
     "q_events_leadlag_ic" ->
-      """WITH b AS (
-           SELECT event_type, epoch_us(ts) // 3600000000 AS hb,
-                  CAST(round(value * 100) AS BIGINT) AS cents,
-                  epoch_us(ts) AS tu, event_id
-           FROM events),
-         w0 AS (
-           SELECT *, row_number() OVER (PARTITION BY event_type, hb
-                      ORDER BY tu DESC, event_id DESC) AS rn
-           FROM b),
-         closes AS (
-           SELECT event_type, hb, cents AS close_cents
-           FROM w0 WHERE rn = 1),
+      s"""WITH $hourlyClosesCtes,
          l AS (
            SELECT event_type, hb, close_cents,
                   lag(close_cents) OVER win AS prevc,
@@ -3305,18 +3402,7 @@ object SparkEntry {
                   AS ic
          FROM p""",
     "q_events_momentum_ic" ->
-      """WITH b AS (
-           SELECT event_type, epoch_us(ts) // 3600000000 AS hb,
-                  CAST(round(value * 100) AS BIGINT) AS cents,
-                  epoch_us(ts) AS tu, event_id
-           FROM events),
-         w0 AS (
-           SELECT *, row_number() OVER (PARTITION BY event_type, hb
-                      ORDER BY tu DESC, event_id DESC) AS rn
-           FROM b),
-         closes AS (
-           SELECT event_type, hb, cents AS close_cents
-           FROM w0 WHERE rn = 1),
+      s"""WITH $hourlyClosesCtes,
          l AS (
            SELECT event_type, close_cents,
                   lag(close_cents, 24) OVER win AS lagc,
@@ -3338,62 +3424,13 @@ object SparkEntry {
                   (sqrt(CAST(n * sss - ss * ss AS DOUBLE)) *
                    sqrt(CAST(n * sff - sf * sf AS DOUBLE))) AS ic
          FROM p""",
-    "q_events_wallet_clusters_dropall" ->
-      """WITH act AS (
-           SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
-                           user_id
-           FROM events),
-         sized AS (
-           SELECT event_type, mb FROM act
-           GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 16),
-         e AS (
-           SELECT DISTINCT x.user_id AS src, y.user_id AS dst
-           FROM (SELECT a.* FROM act a JOIN sized sa
-                   ON a.event_type = sa.event_type AND a.mb = sa.mb) x
-           JOIN (SELECT a.* FROM act a JOIN sized sb
-                   ON a.event_type = sb.event_type AND a.mb = sb.mb) y
-             ON y.event_type = x.event_type AND y.mb = x.mb
-           WHERE x.user_id < y.user_id),
+    "q_events_wallet_clusters_dropall" -> walletClustersOracle(
+      s"""$dropEdgeCtes16,
          edges AS (SELECT src AS a, dst AS b FROM e
-                   UNION SELECT dst, src FROM e),
-         cl AS (
-           SELECT a AS wallet, least(a, min(b)) AS cluster_id FROM (
-             WITH RECURSIVE reach(a, b) AS (
-               SELECT a, b FROM edges
-               UNION
-               SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a)
-             SELECT a, b FROM reach)
-           GROUP BY a),
-         sz AS (SELECT cluster_id, count(*) AS cluster_size
-                FROM cl GROUP BY 1)
-         SELECT cl.wallet, cl.cluster_id,
-                CAST(sz.cluster_size AS BIGINT) AS cluster_size
-         FROM cl JOIN sz USING (cluster_id)""",
-    "q_events_sandwich_dropall" ->
-      """WITH t AS (
-           SELECT epoch_us(ts) // 3600000000 AS mb, event_id, user_id,
-                  event_type,
-                  CAST(round(value * 100) AS BIGINT) AS cents
-           FROM events WHERE event_type IN ('purchase', 'view')),
-         sized AS (SELECT mb FROM t GROUP BY 1 HAVING count(*) <= 1024),
-         tt AS (SELECT t.* FROM t JOIN sized USING (mb)),
-         br AS (
-           SELECT mb, user_id AS attacker,
-                  min(CASE WHEN event_type = 'purchase'
-                      THEN event_id END) AS b,
-                  max(CASE WHEN event_type = 'view'
-                      THEN event_id END) AS s
-           FROM tt GROUP BY 1, 2
-           HAVING b IS NOT NULL AND s IS NOT NULL AND s > b)
-         SELECT br.attacker,
-                CAST(count(DISTINCT br.mb) AS BIGINT) AS n_hours,
-                CAST(count(*) AS BIGINT) AS n_victim_trades,
-                CAST(count(DISTINCT tt.user_id) AS BIGINT) AS n_victims,
-                CAST(sum(tt.cents) AS BIGINT) AS victim_cents
-         FROM br JOIN tt ON tt.mb = br.mb
-         WHERE tt.user_id <> br.attacker
-           AND tt.event_id > br.b AND tt.event_id < br.s
-         GROUP BY 1""",
+                   UNION SELECT dst, src FROM e)""", "edges", "a", "b"),
+    "q_events_sandwich_dropall" -> sandwichOracle(
+      """sized AS (SELECT mb FROM t GROUP BY 1 HAVING count(*) <= 1024),
+         tt AS (SELECT t.* FROM t JOIN sized USING (mb))"""),
     "q_events_wash_pairs" ->
       """WITH t AS (
            SELECT epoch_us(ts) // 3600000000 AS mb, user_id, event_type
@@ -3429,14 +3466,7 @@ object SparkEntry {
     // = the trade's LAST unit div 1e8 cents; HUGEINT widenings cast back
     // to BIGINT so dtypes match Spark's longs
     "q_events_vpin" ->
-      """WITH t AS (
-           SELECT epoch_us(ts) AS ts_us, event_id, event_type,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents
-           FROM events WHERE event_type IN ('purchase', 'view')
-             AND CAST(round(value * 100, 0) AS BIGINT) > 0),
-         c AS (
-           SELECT *, sum(cents) OVER (ORDER BY ts_us, event_id
-             ROWS UNBOUNDED PRECEDING) AS gcum FROM t),
+      s"""WITH $volumeClockCtes,
          b AS (
            SELECT CAST((gcum - 1) // 100000 AS BIGINT) AS bucket,
                   CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
@@ -3454,18 +3484,7 @@ object SparkEntry {
     // Roll 1984 effective spread: serial covariance of consecutive
     // hour-candle moves; spread defined only for NEGATIVE covariance
     "q_events_roll_spread" ->
-      """WITH b AS (
-           SELECT event_type, epoch_us(ts) // 3600000000 AS hb,
-                  CAST(round(value * 100) AS BIGINT) AS cents,
-                  epoch_us(ts) AS tu, event_id
-           FROM events),
-         w0 AS (
-           SELECT *, row_number() OVER (PARTITION BY event_type, hb
-                      ORDER BY tu DESC, event_id DESC) AS rn
-           FROM b),
-         closes AS (
-           SELECT event_type, hb, cents AS close_cents
-           FROM w0 WHERE rn = 1),
+      s"""WITH $hourlyClosesCtes,
          mv AS (
            SELECT event_type, hb,
                   close_cents - lag(close_cents, 1) OVER win AS mv,
@@ -3493,14 +3512,7 @@ object SparkEntry {
     // Kyle 1985 price-impact slope over the VPIN volume buckets:
     // lambda = cov(dp, q) / var(q), exact HUGEINT moments, one division
     "q_events_kyle_lambda" ->
-      """WITH t AS (
-           SELECT epoch_us(ts) AS ts_us, event_id, event_type,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents
-           FROM events WHERE event_type IN ('purchase', 'view')
-             AND CAST(round(value * 100, 0) AS BIGINT) > 0),
-         c AS (
-           SELECT *, sum(cents) OVER (ORDER BY ts_us, event_id
-             ROWS UNBOUNDED PRECEDING) AS gcum FROM t),
+      s"""WITH $volumeClockCtes,
          b AS (
            SELECT CAST((gcum - 1) // 100000 AS BIGINT) AS bucket,
                   CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
@@ -3555,11 +3567,7 @@ object SparkEntry {
     "q_events_filter_types" ->
       """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
          FROM events WHERE event_type IN ('purchase', 'signup')""",
-    "q_events_counts_by_type" ->
-      """SELECT event_type, count(*) AS n_events,
-                count(DISTINCT user_id) AS n_users,
-                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM events GROUP BY event_type""",
+    "q_events_counts_by_type" -> countsByTypeOracle,
     "q_events_windowed_1h" ->
       """SELECT (epoch_us(ts) // 3600000000) * 3600 AS ws, event_type,
                 count(*) AS n,
@@ -3628,57 +3636,9 @@ object SparkEntry {
          SELECT rk, user_id, CAST(td AS DOUBLE) AS total_value,
                 np AS n_purchases
          FROM r WHERE rk <= 10""",
-    "q_events_asof_attribution" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-                           0 AS kind, event_id AS view_id,
-                           epoch_us(ts) AS view_ts_us
-                    FROM events WHERE event_type = 'view'),
-         p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, 1 AS kind,
-                      CAST(NULL AS BIGINT) AS view_id,
-                      CAST(NULL AS BIGINT) AS view_ts_us
-               FROM events WHERE event_type = 'purchase'),
-         u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
-         w AS (SELECT *, last_value(view_id IGNORE NULLS) OVER win AS lv,
-                      last_value(view_ts_us IGNORE NULLS) OVER win AS lvts
-               FROM u WINDOW win AS (PARTITION BY user_id
-                 ORDER BY ts_us, kind, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT event_id AS purchase_id, user_id, ts_us AS purchase_ts_us,
-                lv AS view_id, lvts AS view_ts_us
-         FROM w WHERE kind = 1""",
-    "q_events_asof_merge" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-                           0 AS kind, event_id AS view_id,
-                           epoch_us(ts) AS view_ts_us
-                    FROM events WHERE event_type = 'view'),
-         p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, 1 AS kind,
-                      CAST(NULL AS BIGINT) AS view_id,
-                      CAST(NULL AS BIGINT) AS view_ts_us
-               FROM events WHERE event_type = 'purchase'),
-         u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
-         w AS (SELECT *, last_value(view_id IGNORE NULLS) OVER win AS lv,
-                      last_value(view_ts_us IGNORE NULLS) OVER win AS lvts
-               FROM u WINDOW win AS (PARTITION BY user_id
-                 ORDER BY ts_us, kind, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT event_id AS purchase_id, user_id, ts_us AS purchase_ts_us,
-                lv AS view_id, lvts AS view_ts_us
-         FROM w WHERE kind = 1""",
-    "q_events_session_native" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
-                           CAST(value AS DECIMAL(18,2)) AS v FROM events),
-         s AS (SELECT user_id, ts_us, v,
-                      CASE WHEN lag(ts_us) OVER w IS NULL
-                           OR ts_us - lag(ts_us) OVER w >= 1800000000
-                           THEN 1 ELSE 0 END AS ns
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-         c AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts_us
-                 ROWS UNBOUNDED PRECEDING) AS sid
-               FROM s)
-         SELECT user_id, min(ts_us) AS start_us,
-                max(ts_us) + 1800000000 AS end_us,
-                count(*) AS n_events, CAST(sum(v) AS DOUBLE) AS total_value
-         FROM c GROUP BY user_id, sid""",
+    "q_events_asof_attribution" -> asOfOracle,
+    "q_events_asof_merge" -> asOfOracle,
+    "q_events_session_native" -> sessionNativeOracle,
     "q_stream_session_legacy" ->
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id
                     FROM events),
@@ -3701,21 +3661,7 @@ object SparkEntry {
          SELECT s.user_id, s.start_us, s.end_us, s.n_events
          FROM s JOIN lasts ON s.user_id = lasts.user_id
            AND s.sid = lasts.sid""",
-    "q_stream_session_native" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
-                           CAST(value AS DECIMAL(18,2)) AS v FROM events),
-         s AS (SELECT user_id, ts_us, v,
-                      CASE WHEN lag(ts_us) OVER w IS NULL
-                           OR ts_us - lag(ts_us) OVER w >= 1800000000
-                           THEN 1 ELSE 0 END AS ns
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-         c AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts_us
-                 ROWS UNBOUNDED PRECEDING) AS sid
-               FROM s)
-         SELECT user_id, min(ts_us) AS start_us,
-                max(ts_us) + 1800000000 AS end_us,
-                count(*) AS n_events, CAST(sum(v) AS DOUBLE) AS total_value
-         FROM c GROUP BY user_id, sid""",
+    "q_stream_session_native" -> sessionNativeOracle,
     // closed sessions = the batch session islands minus each wallet's
     // final (still-open) session; same gap boundary as the batch oracle
     // (merge at diff <= gap, close strictly beyond)
@@ -3743,22 +3689,7 @@ object SparkEntry {
     // streamed histogram partials answer EXACTLY the batch quantile
     // store (histogram addition is exact) — same oracle as
     // q_events_quantile_store
-    "q_stream_hist_ingest" ->
-      """WITH h AS (
-           SELECT epoch_us(ts) // 86400000000 AS db,
-                  CAST(round(value * 100) AS BIGINT) // 100 AS bucket,
-                  count(*) AS n
-           FROM events GROUP BY 1, 2),
-         m AS (SELECT bucket, sum(n) AS n FROM h GROUP BY 1),
-         c AS (SELECT a.bucket, CAST(sum(b.n) AS BIGINT) AS cum
-               FROM m a JOIN m b ON b.bucket <= a.bucket GROUP BY 1),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM m),
-         p AS (SELECT unnest([50, 90, 99]) AS pct)
-         SELECT p.pct, t.tot AS n_rows,
-                (min(c.bucket) + 1) * 100 - 1 AS upper_cents
-         FROM p CROSS JOIN t
-         JOIN c ON c.cum * 100 >= p.pct * t.tot
-         GROUP BY 1, 2""",
+    "q_stream_hist_ingest" -> quantileStoreOracle,
     // the sketch store's EXACT columns (per-day event counts summed
     // across batch partials, read back after compaction); the HLL
     // estimate stays spec-pinned like the rest of the sketch family
@@ -3959,28 +3890,7 @@ object SparkEntry {
     // aggregated-variance Hurst: moments per scale in HUGEINT, lnR6 on
     // the agreed integers, exact decimal subtraction, fixed slope dag
     "q_events_hurst" ->
-      """WITH cl AS (
-           SELECT event_type, (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents,
-                  epoch_us(ts) AS tu, event_id
-           FROM events),
-         r AS (SELECT *,
-                 row_number() OVER (PARTITION BY event_type, hb
-                   ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM cl),
-         c AS (SELECT event_type, hb,
-                 max(CASE WHEN rnd = 1 THEN cents END) AS c
-               FROM r GROUP BY 1, 2),
-         spine AS (
-           SELECT event_type,
-                  unnest(generate_series(min(hb), max(hb), 3600)) AS hb
-           FROM c GROUP BY event_type),
-         f AS (SELECT s.event_type, s.hb,
-                 last_value(c.c IGNORE NULLS) OVER (
-                   PARTITION BY s.event_type ORDER BY s.hb
-                   ROWS UNBOUNDED PRECEDING) AS c
-               FROM spine s LEFT JOIN c
-                 ON s.event_type = c.event_type AND s.hb = c.hb),
+      s"""WITH $gapFilledCloseCtes,
          d AS (SELECT event_type,
                  CAST(c - lag(c, 1) OVER w AS HUGEINT) AS d1,
                  CAST(c - lag(c, 2) OVER w AS HUGEINT) AS d2,
@@ -4430,26 +4340,10 @@ object SparkEntry {
                   AS by_timeout
          FROM m, wm
          WHERE sid < max_sid OR (end_us // 1000) + 1800000 < wm_ms""",
-    "q_events_asof_tolerance" ->
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-                           0 AS kind, event_id AS view_id,
-                           epoch_us(ts) AS view_ts_us
-                    FROM events WHERE event_type = 'view'),
-         p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, 1 AS kind,
-                      CAST(NULL AS BIGINT) AS view_id,
-                      CAST(NULL AS BIGINT) AS view_ts_us
-               FROM events WHERE event_type = 'purchase'),
-         u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
-         w AS (SELECT *, last_value(view_id IGNORE NULLS) OVER win AS lv,
-                      last_value(view_ts_us IGNORE NULLS) OVER win AS lvts
-               FROM u WINDOW win AS (PARTITION BY user_id
-                 ORDER BY ts_us, kind, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT event_id AS purchase_id, user_id, ts_us AS purchase_ts_us,
-                CASE WHEN ts_us - lvts <= 600000000 THEN lv END AS view_id,
+    "q_events_asof_tolerance" -> asOfOracleWith(
+      """CASE WHEN ts_us - lvts <= 600000000 THEN lv END AS view_id,
                 CASE WHEN ts_us - lvts <= 600000000 THEN lvts END
-                  AS view_ts_us
-         FROM w WHERE kind = 1""",
+                  AS view_ts_us"""),
     "q_events_cumulative_user" ->
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
                 CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
@@ -4567,10 +4461,7 @@ object SparkEntry {
          WHERE next_cents IS NOT NULL
          GROUP BY 1, 2""",
     "q_events_max_drawdown" ->
-      """WITH b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
-                           epoch_us(ts) AS tu, event_id
-                    FROM events),
+      s"""WITH $hourlyBarsCte,
          w AS (SELECT *,
                  row_number() OVER (PARTITION BY hb, event_type
                                     ORDER BY tu DESC, event_id DESC) AS rnd
@@ -4591,16 +4482,7 @@ object SparkEntry {
                 CAST(n_hours AS BIGINT) AS n_hours
          FROM r WHERE rk = 1""",
     "q_events_ohlc_gapfill" ->
-      """WITH b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
-                           epoch_us(ts) AS tu, event_id
-                    FROM events),
-         w AS (SELECT *,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu, event_id) AS rna,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM b),
+      s"""WITH $hourlyOhlcCtes,
          c AS (SELECT hb, event_type,
                  CAST(max(CASE WHEN rna = 1 THEN v END) AS DOUBLE) AS open,
                  CAST(max(CASE WHEN rnd = 1 THEN v END) AS DOUBLE) AS close,
@@ -4628,23 +4510,7 @@ object SparkEntry {
                 coalesce(volume, 0.0) AS volume,
                 n IS NULL AS is_gap
          FROM j""",
-    "q_events_ohlc_1h" ->
-      """WITH b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
-                           epoch_us(ts) AS tu, event_id
-                    FROM events),
-         w AS (SELECT *,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu, event_id) AS rna,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM b)
-         SELECT hb, event_type,
-                CAST(max(CASE WHEN rna = 1 THEN v END) AS DOUBLE) AS open,
-                CAST(max(CASE WHEN rnd = 1 THEN v END) AS DOUBLE) AS close,
-                CAST(max(v) AS DOUBLE) AS high, CAST(min(v) AS DOUBLE) AS low,
-                count(*) AS n, CAST(sum(v) AS DOUBLE) AS volume
-         FROM w GROUP BY hb, event_type""",
+    "q_events_ohlc_1h" -> ohlc1hOracle,
     "q_tpch_q1_pricing" ->
       """SELECT l_returnflag, l_linestatus,
                 CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -4731,36 +4597,16 @@ object SparkEntry {
                 CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
                   AS total_qty
          FROM lineitem GROUP BY 1, 2""",
-    "q_events_decode_roundtrip" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
-    "q_events_log_extract" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
+    "q_events_decode_roundtrip" -> wireRoundTripOracle,
+    "q_events_log_extract" -> wireRoundTripOracle,
     "q_events_sink_roundtrip" ->
       """SELECT strftime(ts, '%Y-%m-%d') AS event_date, count(*) AS n,
                 CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
                   AS sum_value
          FROM events GROUP BY 1""",
-    "q_events_wire_source" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
-    "q_stream_wire_incremental" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
-    "q_events_wire_dsv2_write" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
+    "q_events_wire_source" -> wireRoundTripOracle,
+    "q_stream_wire_incremental" -> wireRoundTripOracle,
+    "q_events_wire_dsv2_write" -> wireRoundTripOracle,
     "q_events_base58_roundtrip" ->
       """SELECT event_id, TRUE AS ok, TRUE AS ok_zeros FROM events""",
     "q_stream_config_presets" ->
@@ -4863,11 +4709,7 @@ object SparkEntry {
                     FROM events GROUP BY 1, 2 HAVING count(*) >= 2)
          SELECT user_id, count(*) AS n_bursts, max(n) AS max_burst
          FROM m GROUP BY user_id""",
-    "q_events_counts_salted" ->
-      """SELECT event_type, count(*) AS n_events,
-                count(DISTINCT user_id) AS n_users,
-                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM events GROUP BY event_type""",
+    "q_events_counts_salted" -> countsByTypeOracle,
     "q_events_decode_create" ->
       """SELECT 'tok_' || CAST(event_id AS VARCHAR) AS name,
                 upper(substring(md5('s' || CAST(event_id AS VARCHAR)), 1, 6)) AS symbol,
@@ -5342,12 +5184,7 @@ object SparkEntry {
          FROM events t WHERE t.event_type = 'purchase'
          GROUP BY 1""",
     "q_docs_decontaminated" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                    FROM documents),
-         ti AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-                FROM t WHERE len(ws) >= 3),
-         g AS (SELECT DISTINCT doc_id,
-                      ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g FROM ti),
+      s"""WITH $wordTrigramCtes,
          -- MATERIALIZED: sz/bg/hits each pull the corpus-wide gram
          -- stream g; DuckDB inlines plain CTEs per reference, so three
          -- concurrent gram explodes exhausted spill at sf100 --
@@ -5381,12 +5218,7 @@ object SparkEntry {
                   AS chunk_md5
          FROM c""",
     "q_docs_contamination" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                    FROM documents),
-         ti AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-                FROM t WHERE len(ws) >= 3),
-         g AS (SELECT DISTINCT doc_id,
-                      ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g FROM ti),
+      s"""WITH $wordTrigramCtes,
          sz AS MATERIALIZED (
            SELECT doc_id, count(*) AS n_grams FROM g GROUP BY 1),
          bg AS MATERIALIZED (
@@ -5400,37 +5232,11 @@ object SparkEntry {
                 (CAST(h.n_hits AS DOUBLE) / CAST(sz.n_grams AS DOUBLE)) >= 0.5
                   AS contaminated
          FROM hits h JOIN sz ON h.doc_id = sz.doc_id""",
-    "q_dedup_docs_corpus" ->
-      s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
-         ex AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
-         SELECT doc_id FROM ex
-         WHERE doc_id NOT IN (SELECT doc_id FROM lbl WHERE keep_id < doc_id)""",
+    "q_dedup_docs_corpus" -> dedupKeepersOracle,
     // rep-level pair contract: SAME oracle as the expanded twin — the
     // whole point of C13d is keeper-set equality without the expansion
-    "q_dedup_docs_corpus_rep" ->
-      s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
-         ex AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
-         SELECT doc_id FROM ex
-         WHERE doc_id NOT IN (SELECT doc_id FROM lbl WHERE keep_id < doc_id)""",
-    "q_ann_ivf_full_probe" ->
-      """WITH x AS (SELECT vec_id, unnest(generate_series(1, 64)) AS i,
-                           CAST(unnest(embedding) AS DOUBLE) AS v
-                    FROM embeddings),
-         n AS (SELECT vec_id, sum(v * v) AS n2 FROM x GROUP BY 1),
-         q AS (SELECT * FROM x WHERE vec_id < 10),
-         d AS (SELECT q.vec_id AS q_id, x.vec_id AS neighbor_id,
-                      sum(q.v * x.v) AS dot
-               FROM q JOIN x ON q.i = x.i AND q.vec_id <> x.vec_id
-               GROUP BY 1, 2),
-         c AS (SELECT q_id, neighbor_id,
-                      round(dot / (sqrt(nq.n2) * sqrt(nn.n2)), 6) AS cos6
-               FROM d JOIN n nq ON q_id = nq.vec_id
-                      JOIN n nn ON neighbor_id = nn.vec_id),
-         r AS (SELECT q_id, neighbor_id, cos6,
-                      row_number() OVER (PARTITION BY q_id
-                        ORDER BY cos6 DESC, neighbor_id) AS rk
-               FROM c)
-         SELECT q_id, neighbor_id, cos6, rk FROM r WHERE rk <= 5""",
+    "q_dedup_docs_corpus_rep" -> dedupKeepersOracle,
+    "q_ann_ivf_full_probe" -> bruteforceTopkOracle,
     "q_ann_ivf_centroids" ->
       """WITH x AS (SELECT label, unnest(generate_series(0, 63)) AS i,
                            CAST(unnest(embedding) AS DOUBLE) AS v
@@ -5780,33 +5586,7 @@ object SparkEntry {
                   ORDER BY age_weeks ROWS UNBOUNDED PRECEDING)
                   AS BIGINT) AS cum_cents
          FROM cells""",
-    "q_events_realized_pnl" ->
-      """WITH t AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents
-           FROM events
-           WHERE user_id % 10 = 0
-             AND event_type IN ('purchase', 'view')),
-         c AS (
-           SELECT user_id, event_id, event_type, cents,
-                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-                         THEN cents ELSE 0 END) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS cum_buy_cents,
-                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-                         THEN 1 ELSE 0 END) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS cum_buy_n
-           FROM t)
-         SELECT user_id, event_id, cents AS sell_cents,
-                cum_buy_cents, cum_buy_n,
-                CASE WHEN cum_buy_n > 0
-                     THEN CAST(cents AS DOUBLE) -
-                          CAST(cum_buy_cents AS DOUBLE) /
-                          CAST(cum_buy_n AS DOUBLE) END AS pnl_cents
-         FROM c WHERE event_type = 'view'""",
+    "q_events_realized_pnl" -> realizedPnlOracle,
     "q_events_series_corr" ->
       """WITH hourly AS (
            SELECT event_type,
@@ -6230,18 +6010,8 @@ object SparkEntry {
                 CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
                   AS cents
          FROM events GROUP BY 1, 2""",
-    "q_stream_dedup_within_wm" ->
-      """SELECT event_type, count(*) AS n_distinct FROM (
-           SELECT DISTINCT user_id, event_type,
-                  epoch_us(ts) // 60000000 AS minute_bucket
-           FROM events)
-         GROUP BY event_type""",
-    "q_stream_dedup_counts" ->
-      """SELECT event_type, count(*) AS n_distinct FROM (
-           SELECT DISTINCT user_id, event_type,
-                  epoch_us(ts) // 60000000 AS minute_bucket
-           FROM events)
-         GROUP BY event_type""",
+    "q_stream_dedup_within_wm" -> dedupCountsOracle,
+    "q_stream_dedup_counts" -> dedupCountsOracle,
     "q_events_twap_1h" ->
       """WITH e AS (SELECT event_type, epoch_us(ts) AS ts_us, event_id,
                            CAST(floor(value * 100) AS BIGINT) AS price_cents
@@ -6361,26 +6131,8 @@ object SparkEntry {
                         / CAST(nullif(l_br, 0) AS DOUBLE), 6)
                         AS DECIMAL(18,6)), 6) AS DOUBLE) AS notional6
          FROM w WHERE kind = 1""",
-    "q_events_range_join" ->
-      """SELECT p.event_id AS purchase_id, count(*) AS n_windows,
-                min(i.start_us) AS first_start_us
-         FROM (SELECT event_id, epoch_us(ts) AS ts_us FROM events
-               WHERE event_type = 'purchase') p
-         JOIN (SELECT epoch_us(ts) AS start_us,
-                      epoch_us(ts) + 600000000 AS end_us FROM events
-               WHERE event_type = 'signup') i
-           ON p.ts_us >= i.start_us AND p.ts_us < i.end_us
-         GROUP BY 1""",
-    "q_events_range_join_auto" ->
-      """SELECT p.event_id AS purchase_id, count(*) AS n_windows,
-                min(i.start_us) AS first_start_us
-         FROM (SELECT event_id, epoch_us(ts) AS ts_us FROM events
-               WHERE event_type = 'purchase') p
-         JOIN (SELECT epoch_us(ts) AS start_us,
-                      epoch_us(ts) + 600000000 AS end_us FROM events
-               WHERE event_type = 'signup') i
-           ON p.ts_us >= i.start_us AND p.ts_us < i.end_us
-         GROUP BY 1""",
+    "q_events_range_join" -> rangeJoinOracle,
+    "q_events_range_join_auto" -> rangeJoinOracle,
     "q_docs_sample_stratified" ->
       """SELECT doc_id, source FROM documents
          WHERE substring(md5('smp' || CAST(doc_id AS VARCHAR)), 1, 2) <
@@ -6476,11 +6228,7 @@ object SparkEntry {
       """SELECT source, lang, count(*) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS total_chars
          FROM documents GROUP BY CUBE (source, lang)""",
-    "q_stream_wire_egress" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_buy,
-                CAST(round(value * 100, 0) AS BIGINT) AS amount_cents
-         FROM events""",
+    "q_stream_wire_egress" -> wireRoundTripOracle,
     "q_stream_wallet_volume" ->
       """SELECT user_id, count(*) AS n_events,
                 CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
@@ -6488,50 +6236,8 @@ object SparkEntry {
          FROM events GROUP BY 1""",
     // identical formulation to q_events_realized_pnl: the streamed marks
     // must EQUAL the batch marks, so both keys share one oracle shape
-    "q_stream_realized_pnl" ->
-      """WITH t AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents
-           FROM events
-           WHERE user_id % 10 = 0
-             AND event_type IN ('purchase', 'view')),
-         c AS (
-           SELECT user_id, event_id, event_type, cents,
-                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-                         THEN cents ELSE 0 END) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS cum_buy_cents,
-                  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-                         THEN 1 ELSE 0 END) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS cum_buy_n
-           FROM t)
-         SELECT user_id, event_id, cents AS sell_cents,
-                cum_buy_cents, cum_buy_n,
-                CASE WHEN cum_buy_n > 0
-                     THEN CAST(cents AS DOUBLE) -
-                          CAST(cum_buy_cents AS DOUBLE) /
-                          CAST(cum_buy_n AS DOUBLE) END AS pnl_cents
-         FROM c WHERE event_type = 'view'""",
-    "q_stream_ohlc_1h" ->
-      """WITH b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
-                           epoch_us(ts) AS tu, event_id
-                    FROM events),
-         w AS (SELECT *,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu, event_id) AS rna,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM b)
-         SELECT hb, event_type,
-                CAST(max(CASE WHEN rna = 1 THEN v END) AS DOUBLE) AS open,
-                CAST(max(CASE WHEN rnd = 1 THEN v END) AS DOUBLE) AS close,
-                CAST(max(v) AS DOUBLE) AS high, CAST(min(v) AS DOUBLE) AS low,
-                count(*) AS n, CAST(sum(v) AS DOUBLE) AS volume
-         FROM w GROUP BY hb, event_type""",
+    "q_stream_realized_pnl" -> realizedPnlOracle,
+    "q_stream_ohlc_1h" -> ohlc1hOracle,
     "q_events_cpmm_decode" ->
       """SELECT CASE WHEN event_type = 'purchase' THEN 'base_in'
                      ELSE 'base_out' END AS event_kind,
@@ -6693,18 +6399,8 @@ object SparkEntry {
          SELECT lq.doc_id, lq.keep_id AS cluster_id, lq.q6, b.keeper_id,
                 lq.doc_id = b.keeper_id AS is_keeper
          FROM lq JOIN best b ON lq.keep_id = b.keep_id""",
-    "q_dedup_cluster_sizes" ->
-      s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
-         cl AS (SELECT keep_id, count(*) AS cluster_size FROM lbl
-                GROUP BY 1)
-         SELECT cluster_size, count(*) AS n_clusters
-         FROM cl GROUP BY 1""",
-    "q_dedup_cluster_sizes_rep" ->
-      s"""WITH ${collapsedDocPairsCtes(jaccardPred)},
-         cl AS (SELECT keep_id, count(*) AS cluster_size FROM lbl
-                GROUP BY 1)
-         SELECT cluster_size, count(*) AS n_clusters
-         FROM cl GROUP BY 1""",
+    "q_dedup_cluster_sizes" -> clusterSizesOracle,
+    "q_dedup_cluster_sizes_rep" -> clusterSizesOracle,
     "q_dedup_docs_embedding" ->
       """WITH e AS (SELECT vec_id, embedding FROM embeddings
                     WHERE label = 3 AND vec_id % 5 = 0),
@@ -6838,25 +6534,7 @@ object SparkEntry {
            WHERE round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) >= 0.35)
          SELECT vec_id, label AS cluster FROM e
          WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""",
-    "q_ann_bruteforce_topk" ->
-      """WITH x AS (SELECT vec_id, unnest(generate_series(1, 64)) AS i,
-                           CAST(unnest(embedding) AS DOUBLE) AS v
-                    FROM embeddings),
-         n AS (SELECT vec_id, sum(v * v) AS n2 FROM x GROUP BY 1),
-         q AS (SELECT * FROM x WHERE vec_id < 10),
-         d AS (SELECT q.vec_id AS q_id, x.vec_id AS neighbor_id,
-                      sum(q.v * x.v) AS dot
-               FROM q JOIN x ON q.i = x.i AND q.vec_id <> x.vec_id
-               GROUP BY 1, 2),
-         c AS (SELECT q_id, neighbor_id,
-                      round(dot / (sqrt(nq.n2) * sqrt(nn.n2)), 6) AS cos6
-               FROM d JOIN n nq ON q_id = nq.vec_id
-                      JOIN n nn ON neighbor_id = nn.vec_id),
-         r AS (SELECT q_id, neighbor_id, cos6,
-                      row_number() OVER (PARTITION BY q_id
-                        ORDER BY cos6 DESC, neighbor_id) AS rk
-               FROM c)
-         SELECT q_id, neighbor_id, cos6, rk FROM r WHERE rk <= 5""",
+    "q_ann_bruteforce_topk" -> bruteforceTopkOracle,
     "q_text_langid" ->
       """SELECT doc_id,
                 len(regexp_extract_all(text, '\b(the|is|and)\b')) AS n_en,
@@ -6883,28 +6561,8 @@ object SparkEntry {
                      ELSE 'unk' END AS pred_lang,
                 lang
          FROM documents""",
-    "q_docs_stats_merged" ->
-      """SELECT source, count(*) AS n_docs,
-                count(DISTINCT md5(text)) AS n_unique_texts,
-                CAST(sum(length(text)) AS BIGINT) AS total_chars,
-                CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                  AS total_ws_tokens,
-                CAST(min(length(text)) AS BIGINT) AS min_chars,
-                CAST(max(length(text)) AS BIGINT) AS max_chars,
-                CAST(count(*) - count(DISTINCT md5(text))
-                  AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_ratio
-         FROM documents GROUP BY 1""",
-    "q_docs_corpus_stats" ->
-      """SELECT source, count(*) AS n_docs,
-                count(DISTINCT md5(text)) AS n_unique_texts,
-                CAST(sum(length(text)) AS BIGINT) AS total_chars,
-                CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                  AS total_ws_tokens,
-                CAST(min(length(text)) AS BIGINT) AS min_chars,
-                CAST(max(length(text)) AS BIGINT) AS max_chars,
-                CAST(count(*) - count(DISTINCT md5(text))
-                  AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_ratio
-         FROM documents GROUP BY 1""",
+    "q_docs_stats_merged" -> corpusStatsOracle,
+    "q_docs_corpus_stats" -> corpusStatsOracle,
     "q_docs_filter_chain" ->
       """WITH b AS (SELECT doc_id, length(text) AS n_chars_t,
                            len(string_split(text, ' ')) AS n_tok,
@@ -7191,16 +6849,7 @@ object SparkEntry {
     // aggregation; sums run in exact decimals; the closing arithmetic is
     // IEEE doubles with identical literals and associativity.
     "q_events_volatility" ->
-      """WITH b AS (SELECT (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                           event_type, CAST(value AS DECIMAL(18,2)) AS v,
-                           epoch_us(ts) AS tu, event_id
-                    FROM events),
-         w AS (SELECT *,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu, event_id) AS rna,
-                 row_number() OVER (PARTITION BY hb, event_type
-                                    ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM b),
+      s"""WITH $hourlyOhlcCtes,
          c AS (SELECT hb, event_type,
                  CAST(max(CASE WHEN rna = 1 THEN v END) AS DOUBLE) AS open,
                  CAST(max(CASE WHEN rnd = 1 THEN v END) AS DOUBLE) AS close,
@@ -7352,47 +7001,10 @@ object SparkEntry {
                           ELSE sdn END AS VARCHAR) AS cusum_scaled
          FROM l
          WHERE (hitup AND NOT prevup) OR (hitdn AND NOT prevdn)""",
-    "q_events_neighbor_sim_dropall" ->
-      """WITH act AS (
-           SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
-                           user_id
-           FROM events),
-         sized AS (
-           SELECT event_type, mb FROM act
-           GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 16),
-         und AS (
-           SELECT DISTINCT x.user_id AS src, y.user_id AS dst
-           FROM (SELECT a.* FROM act a JOIN sized sa
-                   ON a.event_type = sa.event_type AND a.mb = sa.mb) x
-           JOIN (SELECT a.* FROM act a JOIN sized sb
-                   ON a.event_type = sb.event_type AND a.mb = sb.mb) y
-             ON y.event_type = x.event_type AND y.mb = x.mb
-           WHERE x.user_id < y.user_id),
+    "q_events_neighbor_sim_dropall" -> neighborSimOracle(
+      s"""${dropPairCtes("und", "x.user_id AS src, y.user_id AS dst")},
          e AS (SELECT src, dst FROM und
-               UNION ALL SELECT dst AS src, src AS dst FROM und),
-         deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-         centers AS (SELECT node AS z,
-                 CAST(round(1.0 / deg, 9) AS DECIMAL(12,9)) AS ra_w
-               FROM deg WHERE deg <= 256),
-         wedges AS (
-           SELECT e1.src AS a, e2.dst AS b, c.ra_w
-           FROM e e1
-           JOIN e e2 ON e1.dst = e2.src
-           JOIN centers c ON e1.dst = c.z
-           WHERE e1.src < e2.dst),
-         pairs AS (
-           SELECT a, b, count(*) AS common, sum(ra_w) AS ra
-           FROM wedges GROUP BY 1, 2 HAVING count(*) >= 2)
-         SELECT p.a, p.b, p.common, da.deg AS deg_a, db.deg AS deg_b,
-                CAST(p.common AS DOUBLE) /
-                  CAST(da.deg + db.deg - p.common AS DOUBLE) AS jaccard,
-                CAST(p.ra AS DOUBLE) AS ra_score,
-                COALESCE(u.is_edge, false) AS is_edge
-         FROM pairs p
-         JOIN deg da ON p.a = da.node
-         JOIN deg db ON p.b = db.node
-         LEFT JOIN (SELECT src AS a, dst AS b, true AS is_edge FROM und) u
-           ON p.a = u.a AND p.b = u.b""",
+               UNION ALL SELECT dst AS src, src AS dst FROM und)"""),
     "q_docs_bm25" ->
       """WITH tk AS (
            SELECT doc_id, token FROM (
@@ -7456,28 +7068,7 @@ object SparkEntry {
                   AS pseudo_ppl
          FROM a""",
     "q_events_variance_ratio" ->
-      """WITH cl AS (
-           SELECT event_type, (epoch_us(ts) // 3600000000) * 3600 AS hb,
-                  CAST(round(value * 100, 0) AS BIGINT) AS cents,
-                  epoch_us(ts) AS tu, event_id
-           FROM events),
-         r AS (SELECT *,
-                 row_number() OVER (PARTITION BY event_type, hb
-                   ORDER BY tu DESC, event_id DESC) AS rnd
-               FROM cl),
-         c AS (SELECT event_type, hb,
-                 max(CASE WHEN rnd = 1 THEN cents END) AS c
-               FROM r GROUP BY 1, 2),
-         spine AS (
-           SELECT event_type,
-                  unnest(generate_series(min(hb), max(hb), 3600)) AS hb
-           FROM c GROUP BY event_type),
-         f AS (SELECT s.event_type, s.hb,
-                 last_value(c.c IGNORE NULLS) OVER (
-                   PARTITION BY s.event_type ORDER BY s.hb
-                   ROWS UNBOUNDED PRECEDING) AS c
-               FROM spine s LEFT JOIN c
-                 ON s.event_type = c.event_type AND s.hb = c.hb),
+      s"""WITH $gapFilledCloseCtes,
          d AS (SELECT event_type,
                  CAST(c - lag(c, 1) OVER w AS HUGEINT) AS d1,
                  CAST(c - lag(c, 4) OVER w AS HUGEINT) AS dk
@@ -7783,30 +7374,9 @@ object SparkEntry {
          SELECT NULL, 0, 0, NULL, NULL,
                 1000000 - (SELECT CAST(sum(alloc_tokens) AS BIGINT)
                            FROM a)""",
-    "q_events_edge_growth_dropall" ->
-      """WITH act AS (
-           SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS mb,
-                           user_id
-           FROM events),
-         sized AS (
-           SELECT event_type, mb FROM act
-           GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 16),
-         dp AS (
-           SELECT DISTINCT x.mb // 24 AS db, x.user_id AS a,
-                           y.user_id AS b
-           FROM (SELECT a.* FROM act a JOIN sized sa
-                   ON a.event_type = sa.event_type AND a.mb = sa.mb) x
-           JOIN (SELECT a.* FROM act a JOIN sized sb
-                   ON a.event_type = sb.event_type AND a.mb = sb.mb) y
-             ON y.event_type = x.event_type AND y.mb = x.mb
-           WHERE x.user_id < y.user_id),
-         fs AS (SELECT a, b, min(db) AS first_db FROM dp GROUP BY 1, 2)
-         SELECT dp.db * 86400 AS day, count(*) AS n_pairs,
-                count(*) FILTER (WHERE dp.db = fs.first_db) AS n_new,
-                CAST(count(*) FILTER (WHERE dp.db = fs.first_db)
-                     AS DOUBLE) / CAST(count(*) AS DOUBLE) AS new_ratio
-         FROM dp JOIN fs ON dp.a = fs.a AND dp.b = fs.b
-         GROUP BY dp.db""",
+    "q_events_edge_growth_dropall" -> edgeGrowthOracle(dropPairCtes("dp",
+      """x.mb // 24 AS db, x.user_id AS a,
+                           y.user_id AS b""")),
     "q_ann_rrf" ->
       """WITH x AS (SELECT vec_id, unnest(generate_series(1, 64)) AS i,
                            CAST(unnest(embedding) AS DOUBLE) AS v
@@ -8135,10 +7705,6 @@ object SparkEntry {
           FROM dc GROUP BY 1, 2""")
   }
 
-  /** A94b: one SQL, two queries — the batch plan and the availableNow
-    * transformWithState stream must both hash-match it (batch ≡ stream
-    * pinning, same convention as A8c/A17g). num=4, den=1, h·σ0·2·den=20.
-    */
   /** A105/A105b: one SQL, two queries — the batch seasonal detector and
     * the stream-static availableNow pair must both hash-match it (the
     * A94b batch ≡ stream convention). mult = 2. */
@@ -8198,6 +7764,10 @@ object SparkEntry {
        FROM p10"""
   }
 
+  /** A94b: one SQL, two queries — the batch plan and the availableNow
+    * transformWithState stream must both hash-match it (batch ≡ stream
+    * pinning, same convention as A8c/A17g). num=4, den=1, h·σ0·2·den=20.
+    */
   private val cusumFixedOracle: String =
     """WITH pm AS (SELECT event_type,
              (epoch_us(ts) // 60000000) * 60 AS minute, count(*) AS x

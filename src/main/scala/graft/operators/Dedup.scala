@@ -576,12 +576,15 @@ object Dedup {
     * of documents sharing ≥ `minShared` fingerprints, scored by
     * shared / min(|fp₁|, |fp₂|) in exact parts-per-million.
     *
-    * The rightmost-tie selection is encoded branch-free: the windowed
-    * min runs over `struct(hash, −pos)` — struct ordering compares
-    * field by field, so the order is (hash asc, pos desc), the same
-    * selection as a `hash ‖ lpad(10⁹ − pos)` string min but without
-    * building a 41-char string per window row — one window pass, both
-    * engines agree exactly.
+    * The sampling runs in the `winnow_fps` kernel
+    * ([[graft.functions.TextOps.winnowFps]]), one compiled pass per
+    * document: it hashes every k-gram once, then scans each window of
+    * `w` digests right to left, replacing the pick only on a strictly
+    * smaller digest, so ties keep the rightmost position. That is the
+    * selection the oracle's `hash ‖ lpad(10⁹ − pos)` string min makes,
+    * and the kernel emits each document's distinct picks directly.
+    * Round11OpsSpec pins the kernel against the posexplode + window
+    * struct-min DataFrame pipeline it replaced.
     *
     * Scale shape: identical texts collapse to a representative FIRST
     * (one md5 group-by), so fingerprinting and the pair join cost ∝

@@ -2,7 +2,9 @@
  * pattern for building Columns from custom Catalyst expressions. */
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 
 object GraftBridge {
   type ADT = org.apache.spark.sql.types.AbstractDataType
@@ -16,6 +18,18 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Run SQL text whose relation `view._1` binds to the frame `view._2`
+    * in the parsed plan rather than to a temp view in the session
+    * catalog, so building the query leaves a shared session's catalog
+    * alone. */
+  def sqlOver(spark: SparkSession, sqlText: String,
+      view: (String, DataFrame)): DataFrame =
+    ofRows(spark, spark.sessionState.sqlParser.parsePlan(sqlText)
+      .transformUp {
+        case r: UnresolvedRelation if r.tableName == view._1 =>
+          SubqueryAlias(view._1, view._2.queryExecution.analyzed)
+      })
 
   /** Post-hoc strategy registration for sessions created without
     * `spark.sql.extensions` (the public experimental-methods hook). */

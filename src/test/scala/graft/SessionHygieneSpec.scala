@@ -24,7 +24,8 @@ class SessionHygieneSpec extends TestSparkSession {
   test("query builders leave confs, catalog, strategies and rules alone") {
     val before = snapshot
     Seq("q_events_asof_merge", "q_events_range_join_auto",
-      "q_dedup_incremental", "q_sink_backfill", "q_sink_upsert")
+      "q_dedup_incremental", "q_sink_backfill", "q_sink_upsert",
+      "q_sql_busiest_minutes")
       .foreach { q =>
         val changed = changedBy(q, before)
         assert(changed.isEmpty, s"building $q changed the session")
