@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
@@ -476,6 +478,52 @@ case class FindPattern(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Registry dispatch kernel (see [[RegistryDecoder]]): per frame, one
+  * read of the discriminator (and of the program id when `program` is
+  * given), the first matching layout in registry order, and a decode of
+  * only that layout's fields. Returns `struct<protocol, event_kind, one
+  * struct per layout>` with the unmatched layouts null; never null
+  * itself. The decode runs in Scala behind one call, so the generated
+  * stage stays small enough for the JIT whatever the registry's size. */
+case class RegistryDispatch(payload: Expression, program: Option[Expression],
+    layouts: Seq[DispatchLayout])
+    extends Expression with ExpectsInputTypes {
+  override def children: Seq[Expression] = payload +: program.toSeq
+  override def inputTypes: Seq[GraftBridge.ADT] =
+    BinaryType +: program.map(_ => StringType).toSeq
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    RegistryDecoder.schema(layouts, payload.nullable)
+  override def prettyName: String = "graft_dispatch"
+  override def toString: String =
+    s"$prettyName(${children.mkString(", ")}, ${layouts.size} layouts)"
+  @transient private lazy val interpreted =
+    ThreadLocal.withInitial(() => new RegistryDecoder(layouts.toArray))
+  override def eval(input: InternalRow): Any =
+    interpreted.get.dispatch(
+      payload.eval(input).asInstanceOf[Array[Byte]],
+      program.map(_.eval(input).asInstanceOf[UTF8String]).orNull)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[RegistryDecoder].getName
+    val ls = ctx.addReferenceObj("dispatchLayouts", layouts.toArray,
+      s"${classOf[DispatchLayout].getName}[]")
+    val decoder = ctx.addMutableState(cls, "dispatchDecoder",
+      v => s"$v = new $cls($ls);")
+    val p = payload.genCode(ctx)
+    val g = program.map(_.genCode(ctx))
+    val prog = g.map(e => s"${e.isNull} ? null : ${e.value}").getOrElse("null")
+    ev.copy(code = code"""
+      ${p.code}
+      ${g.map(_.code.toString).getOrElse("")}
+      InternalRow ${ev.value} =
+        $decoder.dispatch(${p.isNull} ? null : ${p.value}, $prog);""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): RegistryDispatch =
+    copy(payload = newChildren.head, program = program.map(_ => newChildren(1)))
+}
+
 /** Identity marker used to demonstrate the injected optimizer rule (D1):
   * `GraftNopElimination` strips it from plans. */
 case class GraftNop(child: Expression) extends UnaryExpression {
@@ -535,6 +583,9 @@ object exprs {
 
   def winnow_fps(text: Column, k: Int, w: Int): Column =
     col(WinnowFps(ex(text), k, w))
+  def registry_dispatch(payload: Column, program: Option[Column],
+      layouts: Seq[DispatchLayout]): Column =
+    col(RegistryDispatch(ex(payload), program.map(ex), layouts))
   def vec_norm2(a: Column): Column = col(VecNorm2(ex(a)))
   def mat_vec_centered(v: Column, mean: Array[Double],
       flat: Array[Double]): Column =

@@ -129,11 +129,7 @@ object EventCodec {
     * unknown payloads as `unknown` with null bodies.
     */
   def dispatch(df: DataFrame, payload: String = "payload"): DataFrame =
-    df.withColumn("event_kind",
-      when(expr(s"substring($payload, 1, 8)") === lit(Discriminator), "trade")
-        .when(expr(s"substring($payload, 1, 8)") === lit(CreateDiscriminator),
-          "create_token")
-        .otherwise("unknown"))
+    df.withColumn("event_kind", kindOf(payload))
       .withColumn("trade",
         // length-guarded like decodeTrade: a truncated trade payload keeps
         // its kind tag but decodes to a null body (same contract as the
@@ -146,21 +142,36 @@ object EventCodec {
         when(col("event_kind") === "create_token",
           decode_create_token(col(payload))))
 
+  /** The event kind [[dispatch]] tags a payload with. */
+  private def kindOf(payload: String): Column =
+    when(expr(s"substring($payload, 1, 8)") === lit(Discriminator), "trade")
+      .when(expr(s"substring($payload, 1, 8)") === lit(CreateDiscriminator),
+        "create_token")
+      .otherwise("unknown")
+
   /** A54: decode-health accounting — the parse-failure counters the
     * reference's metrics layer keeps next to its per-type event counts
     * (malformed events are skipped, not fatal; `metrics.rs` +
     * `parser.rs` length guards). Counts per dispatched kind: rows seen
     * and rows whose body failed to decode (foreign discriminator or
     * truncated layout). One projection + one tiny-key aggregate; the
-    * wire payloads never shuffle.
+    * wire payloads never shuffle. A row counts as decoded exactly when
+    * [[dispatch]] gives it a trade or create-token body, but only the
+    * guards run: the trade length guard, and the create-token decode
+    * on create-token rows alone.
     */
   def decodeHealth(framed: DataFrame, payload: String = "payload")
-      : DataFrame =
-    dispatch(framed, payload)
+      : DataFrame = {
+    val kind = kindOf(payload)
+    val decoded = ProtocolRegistry.discMatches(payload, TradeLayout) ||
+      (kind === "create_token" &&
+        decode_create_token(col(payload)).isNotNull)
+    framed.select(kind.as("event_kind"),
+        coalesce(decoded, lit(false)).as("decoded"))
       .groupBy("event_kind")
       .agg(count(lit(1)).as("n"),
-        count(when(col("trade").isNull && col("create_token").isNull, 1))
-          .as("n_undecodable"))
+        count(when(!col("decoded"), 1)).as("n_undecodable"))
+  }
 
   /** Deterministic corruption for the decode-health path (tests/oracles):
     * every 101st event's discriminator is zeroed (→ unknown), every 97th

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DispatchLayout
 import graft.functions.exprs._
 
 /** Multi-protocol event-parser registry (SURVEY §2 A13d).
@@ -14,13 +15,16 @@ import graft.functions.exprs._
   * bonk, raydium_amm_v4, raydium_cpmm, raydium_clmm, meteora_damm_v2).
   *
   * Here the registry is DATA: a [[ProtocolSpec]] lists each layout's
-  * discriminator and little-endian field offsets, and [[dispatch]] compiles
-  * the whole registry into one codegen'd column projection — a when-chain
-  * tags (protocol, event_kind) and one struct column per layout decodes
-  * the matching payloads. Adding a protocol is a new spec entry, not new
-  * execution code; every branch is length-guarded so truncated/foreign
-  * payloads degrade to `unknown`/null rather than failing the job
-  * (the reference length-checks every read, `pumpfun/parser.rs:120-154`).
+  * discriminator and little-endian field offsets. [[dispatch]] hands the
+  * whole registry to one codegen'd kernel (`graft_dispatch`,
+  * [[graft.functions.RegistryDispatch]]) that, like the reference, reads
+  * each frame's discriminator once, picks the first matching layout and
+  * decodes only that layout's fields. Adding a protocol is a new spec
+  * entry, not new execution code. Every layout is length-guarded, so
+  * truncated or foreign payloads degrade to `unknown`/null rather than
+  * failing the job (the reference length-checks every read,
+  * `pumpfun/parser.rs:120-154`). [[decode]] and [[decodeCols]] read one
+  * known layout with plain column expressions.
   */
 object ProtocolRegistry {
 
@@ -273,10 +277,12 @@ object ProtocolRegistry {
         s"${f.offset + 2}, 1)), 16, 10) as int) <> 0 as int) end")
     // trailing len-prefixed string: null (not truncated garbage) when the
     // declared length overruns the actual payload
+    // (bounded in 64 bits: an INT sum overflows, and fails the job under
+    // ANSI, for a hostile length near 2^31)
     case "str" =>
       val len = le_int(col(payload), f.offset)
-      when(len >= 0 &&
-        expr(s"octet_length($payload)") >= lit(f.offset + 4) + len,
+      when(len >= 0 && expr(s"octet_length($payload)").cast("bigint") >=
+          lit(f.offset + 4L) + len.cast("bigint"),
         col(payload).substr(lit(f.offset + 5), len).cast("string"))
   }
 
@@ -325,21 +331,6 @@ object ProtocolRegistry {
       lit(l.discriminator) && lenOk
   }
 
-  /** Layout predicate under a protocol: discriminator + length guard,
-    * plus the program-id gate when the spec declares one (the reference
-    * routes program-first — `dispatcher.rs` looks up the parser by
-    * `ProtocolInfo.program_ids` before any discriminator test). */
-  private def matches(payload: String, p: ProtocolSpec, l: LayoutSpec,
-      programCol: Option[String]): Column =
-    (Option(p.program), programCol) match {
-      case (Some(prog), Some(pc)) => col(pc) === lit(prog) &&
-        discMatches(payload, l)
-      case (Some(prog), None) => throw new IllegalArgumentException(
-        s"protocol ${p.protocol} is program-scoped ($prog): dispatch " +
-          "needs a programCol to disambiguate shared discriminators")
-      case _ => discMatches(payload, l)
-    }
-
   /** Decode payloads of one layout; foreign/truncated rows drop out. */
   def decode(df: DataFrame, layout: LayoutSpec,
       payload: String = "payload"): DataFrame =
@@ -351,33 +342,57 @@ object ProtocolRegistry {
   def decodeCols(layout: LayoutSpec, payload: String): Seq[Column] =
     layout.dataFields.map(f => fieldCol(payload, f).as(f.name))
 
-  /** Registry-wide dispatch: tag (protocol, event_kind) and decode every
-    * layout into its own struct column in ONE projection pass. Pass
-    * `programCol` when any protocol in the registry is program-scoped
-    * (several real protocols share anchor discriminators). A layout's
-    * struct column is named `<protocol>_<kind>` when two protocols carry
-    * the same kind name, plain `<kind>` otherwise. */
+  /** Registry-wide dispatch: tag each frame with (protocol, event_kind)
+    * and decode it into its layout's struct column, in one call per row
+    * to the `graft_dispatch` kernel. The kernel reads the discriminator
+    * (and the program id) once, takes the first matching layout in
+    * registry order and decodes only its fields; the other layouts'
+    * columns are null, and a frame no layout matches is `unknown`.
+    *
+    * The decode runs behind that one call because the column form it
+    * replaced (a CASE chain per tag and per layout) grew the stage's
+    * generated method past HotSpot's 8,000-byte limit, so the stage was
+    * never JIT-compiled. The kernel runs as a one-row `inline` generator,
+    * so a filter on its columns stays above it instead of being pushed
+    * below with a second copy of the decode, while filters on the input
+    * columns still push down.
+    *
+    * Pass `programCol` when any protocol in the registry is
+    * program-scoped (several real protocols share anchor
+    * discriminators). A layout's struct column is named
+    * `<protocol>_<kind>` when two protocols carry the same kind name,
+    * plain `<kind>` otherwise. Columns of `df` with those names are
+    * replaced in place. */
   def dispatch(df: DataFrame, protocols: Seq[ProtocolSpec] = registry,
       payload: String = "payload",
       programCol: Option[String] = None): DataFrame = {
+    if (programCol.isEmpty)
+      protocols.find(_.program != null).foreach(p =>
+        throw new IllegalArgumentException(
+          s"protocol ${p.protocol} is program-scoped (${p.program}): " +
+            "dispatch needs a programCol to disambiguate shared " +
+            "discriminators"))
     val all = protocols.flatMap(p => p.layouts.map(l => (p, l)))
     val dupKinds = all.groupBy(_._2.kind).filter(_._2.size > 1).keySet
-    def colName(p: ProtocolSpec, l: LayoutSpec): String =
-      if (dupKinds(l.kind)) s"${p.protocol}_${l.kind}" else l.kind
-    val protoCol = all.foldRight(lit("unknown")) { case ((p, l), rest) =>
-      when(matches(payload, p, l, programCol), lit(p.protocol))
-        .otherwise(rest)
+    val layouts = all.map { case (p, l) =>
+      DispatchLayout(p.protocol, l.kind,
+        if (dupKinds(l.kind)) s"${p.protocol}_${l.kind}" else l.kind,
+        p.program, l.discriminator.toSeq, l.minLen,
+        l.dataFields.map(f => (f.name, f.kind, f.offset)))
     }
-    val kindCol = all.foldRight(lit("unknown")) { case ((p, l), rest) =>
-      when(matches(payload, p, l, programCol), lit(l.kind)).otherwise(rest)
-    }
-    all.foldLeft(
-      df.withColumn("protocol", protoCol).withColumn("event_kind", kindCol)) {
-      case (acc, (p, l)) =>
-        acc.withColumn(colName(p, l),
-          when(matches(payload, p, l, programCol),
-            struct(l.dataFields.map(f =>
-              fieldCol(payload, f).as(f.name)): _*)))
+    val names = "protocol" +: "event_kind" +: layouts.map(_.column)
+    val decoded = inline(array(
+      registry_dispatch(col(payload), programCol.map(col), layouts)))
+    val clash = df.columns.filter(c => names.exists(_.equalsIgnoreCase(c)))
+    if (clash.isEmpty) df.select(col("*"), decoded)
+    else {
+      // keep withColumn's contract: a replaced column keeps its position
+      val moved = clash.foldLeft(df)((d, c) =>
+        d.withColumnRenamed(c, s"__graft_replaced_$c"))
+      moved.select(col("*"), decoded).select(
+        (df.columns.map(c => names.find(_.equalsIgnoreCase(c)).getOrElse(c)) ++
+          names.filterNot(n => clash.exists(_.equalsIgnoreCase(n))))
+          .map(c => col(s"`$c`")): _*)
     }
   }
 }

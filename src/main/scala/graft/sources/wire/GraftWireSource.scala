@@ -4,6 +4,7 @@ import java.io.{DataInputStream, EOFException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -13,6 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 table for the graft wire format (SURVEY §2 A33): batch
   * and micro-batch reads, and the capture-side batch write
@@ -43,7 +45,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * rotated-capture layout pays zero planning overhead; the walk is the
   * escape hatch, not the primary path (capture should rotate files).
   * Column pruning is pushed into the reader: a `count(*)` or
-  * metadata-only query skips payload materialization per frame.
+  * metadata-only query skips payload materialization per frame. Each
+  * scan and each write reads through the session's Hadoop conf, taken
+  * once on the driver and shipped to the tasks with their reader or
+  * writer factory, never built per file.
   */
 class GraftWireSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-wire"
@@ -77,9 +82,10 @@ object GraftWireTable {
     * (file, frame_idx, payload) rows to the unsplit reader. A truncated
     * tail header/payload ends the walk early exactly as the reader
     * stops early — split planning never makes corrupt data fatal. */
-  def planFile(file: String, splitBytes: Long): Seq[GraftWirePartition] = {
+  def planFile(file: String, splitBytes: Long,
+      conf: Configuration = new Configuration()): Seq[GraftWirePartition] = {
     val p = new Path(file)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val total = fs.getFileStatus(p).getLen
     if (total <= splitBytes)
       return Seq(GraftWirePartition(file, 0L, 0L, Long.MaxValue))
@@ -118,9 +124,10 @@ object GraftWireTable {
 
   /** Frame files under `path` — a directory, a single file, or a glob
     * (e.g. `out/batch_*`, the per-micro-batch egress layout). */
-  def listFrameFiles(path: String): Seq[String] = {
+  def listFrameFiles(path: String,
+      conf: Configuration = new Configuration()): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val roots: Seq[Path] =
       if (path.exists(c => "*?[{".contains(c)))
         Option(fs.globStatus(p)).map(_.toSeq.map(_.getPath))
@@ -133,6 +140,10 @@ object GraftWireTable {
       else Seq(r.toString)
     }.sorted
   }
+
+  /** The active session's Hadoop conf, for one scan or write. */
+  private[wire] def sessionConf(): SerializableConfiguration =
+    new SerializableConfiguration(GraftBridge.hadoopConf(SparkSession.active))
 }
 
 class GraftWireTable(path: String) extends Table
@@ -147,25 +158,29 @@ class GraftWireTable(path: String) extends Table
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftWireScanBuilder(path,
-      options.getLong("split.bytes", GraftWireTable.DefaultSplitBytes))
+      options.getLong("split.bytes", GraftWireTable.DefaultSplitBytes),
+      GraftWireTable.sessionConf())
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GraftWireWriteBuilder(path, info.schema(), info.queryId())
+    new GraftWireWriteBuilder(path, info.schema(), info.queryId(),
+      GraftWireTable.sessionConf())
 }
 
-class GraftWireScanBuilder(path: String, splitBytes: Long)
+class GraftWireScanBuilder(path: String, splitBytes: Long,
+    conf: SerializableConfiguration)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = GraftWireTable.Schema
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new GraftWireScan(path, required, splitBytes)
+  override def build(): Scan =
+    new GraftWireScan(path, required, splitBytes, conf)
 }
 
-class GraftWireScan(path: String, required: StructType,
-    splitBytes: Long = GraftWireTable.DefaultSplitBytes)
+class GraftWireScan(path: String, required: StructType, splitBytes: Long,
+    conf: SerializableConfiguration)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -175,9 +190,8 @@ class GraftWireScan(path: String, required: StructType,
     * small capture against a large history table. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes: Long = {
-      val files = GraftWireTable.listFrameFiles(path)
-      val p = new Path(path)
-      val fs = p.getFileSystem(new Configuration())
+      val files = GraftWireTable.listFrameFiles(path, conf.value)
+      val fs = new Path(path).getFileSystem(conf.value)
       files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
     }
     override def sizeInBytes(): java.util.OptionalLong =
@@ -189,16 +203,16 @@ class GraftWireScan(path: String, required: StructType,
     s"GraftWireScan(path=$path, columns=${required.fieldNames.mkString(",")})"
 
   override def planInputPartitions(): Array[InputPartition] =
-    GraftWireTable.listFrameFiles(path)
-      .flatMap(f => GraftWireTable.planFile(f, splitBytes))
+    GraftWireTable.listFrameFiles(path, conf.value)
+      .flatMap(f => GraftWireTable.planFile(f, splitBytes, conf.value))
       .map(p => p: InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftWireReaderFactory(required)
+    new GraftWireReaderFactory(required, conf)
 
   override def toMicroBatchStream(
       checkpointLocation: String): streaming.MicroBatchStream =
-    new GraftWireMicroBatchStream(path, required)
+    new GraftWireMicroBatchStream(path, required, conf)
 }
 
 /** Streaming offset: the sorted set of frame files fully ingested so far.
@@ -226,10 +240,11 @@ object GraftWireOffset {
   * offset, one [[InputPartition]] per new file (same partition/reader as
   * the batch path — identical decode semantics, proven by the
   * availableNow parity spec). */
-class GraftWireMicroBatchStream(path: String, required: StructType)
+class GraftWireMicroBatchStream(path: String, required: StructType,
+    conf: SerializableConfiguration)
     extends streaming.MicroBatchStream {
   override def latestOffset(): streaming.Offset =
-    GraftWireOffset(GraftWireTable.listFrameFiles(path))
+    GraftWireOffset(GraftWireTable.listFrameFiles(path, conf.value))
 
   override def initialOffset(): streaming.Offset = GraftWireOffset(Seq())
 
@@ -252,7 +267,7 @@ class GraftWireMicroBatchStream(path: String, required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftWireReaderFactory(required)
+    new GraftWireReaderFactory(required, conf)
 }
 
 /** One frame-aligned byte range of one file: frames whose HEADER starts
@@ -260,12 +275,13 @@ class GraftWireMicroBatchStream(path: String, required: StructType)
 case class GraftWirePartition(file: String, startOffset: Long,
     startFrameIdx: Long, endOffset: Long) extends InputPartition
 
-class GraftWireReaderFactory(required: StructType)
+class GraftWireReaderFactory(required: StructType,
+    conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftWirePartition]
-    new GraftWireFrameReader(p, required)
+    new GraftWireFrameReader(p, required, conf.value)
   }
 }
 
@@ -273,14 +289,18 @@ class GraftWireReaderFactory(required: StructType)
   * truncated frame ends the file early instead of failing the task
   * (untrusted capture data must never fail the job — the reference
   * length-checks every wire read the same way). */
-class GraftWireFrameReader(part: GraftWirePartition, required: StructType)
+class GraftWireFrameReader(part: GraftWirePartition, required: StructType,
+    conf: Configuration = new Configuration())
     extends PartitionReader[InternalRow] {
   private val file = part.file
-  private val needPayload = required.fieldNames.contains("payload")
+  // the table column (0 file, 1 frame_idx, 2 payload) behind each
+  // required ordinal, resolved once per partition
+  private val columns: Array[Int] =
+    required.fieldNames.map(GraftWireTable.Schema.fieldIndex)
   private val fileUtf8 = UTF8String.fromString(file)
   private val path = new Path(file)
   private val in: DataInputStream = {
-    val fs = path.getFileSystem(new Configuration())
+    val fs = path.getFileSystem(conf)
     // frames carry their own length guards; hadoop checksum sidecars would
     // make out-of-band capture appends unreadable
     fs.setVerifyChecksum(false)
@@ -319,12 +339,17 @@ class GraftWireFrameReader(part: GraftWirePartition, required: StructType)
   }
 
   override def get(): InternalRow = {
-    val values = required.fieldNames.map {
-      case "file" => fileUtf8
-      case "frame_idx" => java.lang.Long.valueOf(idx)
-      case "payload" => if (needPayload) current else null
+    val row = new GenericInternalRow(columns.length)
+    var i = 0
+    while (i < columns.length) {
+      columns(i) match {
+        case 0 => row.update(i, fileUtf8)
+        case 1 => row.setLong(i, idx)
+        case _ => row.update(i, current)
+      }
+      i += 1
     }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
+    row
   }
 
   override def close(): Unit = in.close()
@@ -343,7 +368,7 @@ class GraftWireFrameReader(part: GraftWirePartition, required: StructType)
   * frame file visible. `file`/`frame_idx` are storage-assigned on read
   * and ignored on write (metadata columns). */
 class GraftWireWriteBuilder(path: String, schema: StructType,
-    queryId: String)
+    queryId: String, conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
   import org.apache.spark.sql.connector.write._
@@ -352,7 +377,7 @@ class GraftWireWriteBuilder(path: String, schema: StructType,
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
       new GraftWireBatchWrite(path, doTruncate,
-        schema.fieldIndex("payload"), queryId)
+        schema.fieldIndex("payload"), queryId, conf)
   }
 }
 
@@ -360,17 +385,17 @@ case class GraftWireCommit(tmpPath: String, finalName: String)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
-    queryId: String)
+    queryId: String, conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWireWriterFactory(path, payloadIdx, queryId)
+    new GraftWireWriterFactory(path, payloadIdx, queryId, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dirPath = new Path(path)
-    val fs = dirPath.getFileSystem(new Configuration())
+    val fs = dirPath.getFileSystem(conf.value)
     fs.mkdirs(dirPath)
     if (truncate)
       fs.listStatus(dirPath).filter(_.isFile)
@@ -384,7 +409,7 @@ class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new Configuration())
+    val fs = new Path(path).getFileSystem(conf.value)
     messages.filter(_ != null).foreach {
       case GraftWireCommit(tmp, _) =>
         fs.delete(new Path(tmp), false)
@@ -393,11 +418,13 @@ class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
   }
 }
 
-class GraftWireWriterFactory(path: String, payloadIdx: Int, queryId: String)
+class GraftWireWriterFactory(path: String, payloadIdx: Int, queryId: String,
+    conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftWireDataWriter(path, payloadIdx, queryId, partitionId, taskId)
+    new GraftWireDataWriter(path, payloadIdx, queryId, partitionId, taskId,
+      conf.value)
 }
 
 /** Streams `[u32 LE length][payload]` frames to a `.tmp`-suffixed temp
@@ -406,11 +433,11 @@ class GraftWireWriterFactory(path: String, payloadIdx: Int, queryId: String)
   * a prior capture's `part-w<pid>.bin` (caught by Round11OpsSpec's
   * overwrite/append pin). */
 class GraftWireDataWriter(dir: String, payloadIdx: Int, queryId: String,
-    pid: Int, taskId: Long)
+    pid: Int, taskId: Long, conf: Configuration)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   private val tmp = new Path(dir, s"part-$queryId-w$pid.bin.$taskId.tmp")
   private lazy val out = {
-    val fs = tmp.getFileSystem(new Configuration())
+    val fs = tmp.getFileSystem(conf)
     fs.setWriteChecksum(false)
     fs.mkdirs(new Path(dir))
     new java.io.DataOutputStream(
@@ -435,7 +462,7 @@ class GraftWireDataWriter(dir: String, payloadIdx: Int, queryId: String,
   override def abort(): Unit = {
     scala.util.Try(out.close())
     scala.util.Try(
-      tmp.getFileSystem(new Configuration()).delete(tmp, false))
+      tmp.getFileSystem(conf).delete(tmp, false))
   }
 
   override def close(): Unit = scala.util.Try(out.close())

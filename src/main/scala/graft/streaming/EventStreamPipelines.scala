@@ -273,8 +273,8 @@ object EventStreamPipelines {
     * wire. PumpFun and Bonk trade frames — which share one anchor
     * TradeEvent discriminator — stream in from two wire captures, get
     * program-tagged at the source (the reference knows the program from
-    * the subscription connection), and ONE registry dispatch projection
-    * routes and decodes both protocols in the same micro-batch. The
+    * the subscription connection), and ONE registry dispatch kernel call
+    * per frame routes and decodes both protocols in the same micro-batch. The
     * aggregate is per (protocol, kind), availableNow ≡ the batch
     * round-trip oracle. The dispatch is stateless map-side work; only
     * the tiny (protocol, kind) aggregate keeps state.

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, debug}
 
 import graft.{Bench, Graft, SparkEntry, Verify}
 
@@ -14,6 +14,7 @@ import graft.{Bench, Graft, SparkEntry, Verify}
   * runMain graft.tools.Cli run     <sfDir> <qs> [--show]
   * runMain graft.tools.Cli explain <sfDir> <qs> [<outDir> <suffix>]
   * runMain graft.tools.Cli time    <sfDir>
+  * runMain graft.tools.Cli codegen <sfDir> <qs>
   * runMain graft.tools.Cli oracles <outFile> [<qs>]
   * }}}
   *
@@ -23,6 +24,11 @@ import graft.{Bench, Graft, SparkEntry, Verify}
   *    it to `<outDir>/<q>_<suffix>.txt` for committed before/after diffs.
   *  - `time` runs `Bench.headline` through the noop sink on Bench's session confs and prints `TIMED <q> <s>`; a
   *    watchdog dumps every thread's stack once a query passes 5 s.
+  *  - `codegen` runs each query, compiles its whole-stage code and prints
+  *    `CODEGEN <q> max_method=<bytes> over_8000=<n> stages=<n>`: its
+  *    largest generated method, and how many stages have one over
+  *    HotSpot's 8,000-byte huge-method limit. The JIT never compiles
+  *    such a method, so that stage runs interpreted.
   *  - `oracles` writes the oracle SQL as oracle_sql.json without running
   *    a query, so a scale sweep that runs Verify in several passes can
   *    assemble one oracle file.
@@ -65,14 +71,34 @@ object Cli {
       withSession(Bench.sessionConf) { spark =>
         time(spark, sfDir, Bench.headline)
       }
+    case "codegen" :: sfDir :: qs :: Nil =>
+      withSession(Nil) { spark =>
+        names(qs).foreach { name =>
+          try {
+            // run the plan first: an adaptive plan builds its codegen
+            // stages only as it executes
+            val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+            qe.toRdd.count()
+            val stats = debug.codegenStringSeq(qe.executedPlan)
+              .map(_._3.maxMethodCodeSize)
+            println(s"CODEGEN $name max_method=${(0 +: stats).max} " +
+              s"over_8000=${stats.count(_ > HugeMethodLimit)} stages=${stats.size}")
+          } catch { case e: Throwable =>
+            System.err.println(s"[codegen] $name FAILED: ${e.getMessage}")
+          }
+        }
+      }
     case "oracles" :: outFile :: rest =>
       Verify.writeOracles(outFile, rest.headOption.map(names(_).toSet))
       println(s"wrote $outFile")
     case _ =>
-      System.err.println("usage: Cli run|explain|time <sfDir> ... | " +
+      System.err.println("usage: Cli run|explain|time|codegen <sfDir> ... | " +
         "Cli oracles <outFile> [<qs>] (see the scaladoc)")
       sys.exit(2)
   }
+
+  /** HotSpot's `-XX:HugeMethodLimit`: bytecode past it is never JIT-compiled. */
+  private val HugeMethodLimit = 8000
 
   private def names(qs: String): Seq[String] =
     if (qs == "ALL") SparkEntry.queries.keys.toSeq.sorted

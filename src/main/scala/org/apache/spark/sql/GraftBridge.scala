@@ -31,6 +31,12 @@ object GraftBridge {
           SubqueryAlias(view._1, view._2.queryExecution.analyzed)
       })
 
+  /** The session's Hadoop configuration: the SparkContext's, with the
+    * session's `spark.hadoop.*` and SQL overrides applied, as Spark's own
+    * file sources read it. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
+
   /** Post-hoc strategy registration for sessions created without
     * `spark.sql.extensions` (the public experimental-methods hook). */
   def addStrategy(spark: SparkSession,
