@@ -447,11 +447,9 @@ object SparkEntry {
         col("event_id"),
         concat(expr("unhex(repeat('aa', cast(event_id % 7 + 3 as int)))"),
           col("payload")).as("stream"))
-      // event_id is the trade layout's first field
-      val recovered =
-        ProtocolRegistry.decodeCols(EventCodec.TradeLayout, "payload").head
-      EventCodec.resyncTrade(wire)
-        .select(col("sync_offset"), recovered.as("recovered_id"),
+      ProtocolRegistry.dispatch(EventCodec.resyncTrade(wire),
+          Seq(ProtocolSpec("trade", Seq(EventCodec.TradeLayout))))
+        .select(col("sync_offset"), col("trade.event_id").as("recovered_id"),
           col("event_id"))
         .groupBy("sync_offset").agg(count(lit(1)).as("n"),
           sum(when(col("recovered_id") === col("event_id"), 1L)
@@ -1927,12 +1925,14 @@ object SparkEntry {
           (col("event_id") % 2).as("complete"),
           pubkey("user_id").as("creator"), lit(0L).as("is_mayhem_mode")),
         RealLayouts.PumpFunAccounts.layouts(0))
-      val decodedSnaps = curves.select(
-        Seq(col("user_id"), col("ts_us"), col("event_id")) ++
-          ProtocolRegistry.decodeCols(
-            RealLayouts.PumpFunAccounts.layouts(0), "payload"): _*)
+      val decodedSnaps = ProtocolRegistry.dispatch(
+          curves.select("user_id", "ts_us", "event_id", "payload"),
+          Seq(RealLayouts.PumpFunAccounts.copy(program = null)))
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          col("real_token_reserves"), col("token_total_supply"))
+          col("pf_bonding_curve.real_token_reserves")
+            .as("real_token_reserves"),
+          col("pf_bonding_curve.token_total_supply")
+            .as("token_total_supply"))
       val trades = ev.filter(col("event_type") === "purchase").select(
         col("user_id"), expr("unix_micros(ts)").as("ts_us"),
         col("event_id"),

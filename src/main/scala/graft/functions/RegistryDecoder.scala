@@ -41,10 +41,12 @@ object RegistryDecoder {
   }
 
   /** A decoded field's type, and whether it can be null. Fixed-width
-    * reads are null only with a null payload, which no layout matches;
-    * the rest follow the Column decoders they replace (the u8/u16 hex
-    * reads, a u128 past Decimal(38,0), a str overrun, an absent
-    * optbool). */
+    * reads are null only with a null payload, which no layout matches.
+    * A u128 past Decimal(38,0), a str overrun and an absent optbool
+    * decode to null. u8/u16 never do, but are declared nullable as the
+    * hex-string reads they replaced were, which kept every decoded
+    * schema as it was (`RegistryDispatchSpec` keeps those reads as its
+    * reference). */
   private def fieldType(kind: String, payloadNullable: Boolean)
       : (DataType, Boolean) = kind match {
     case "u64" | "i64" | "u32" => (LongType, payloadNullable)

@@ -10,11 +10,12 @@ import graft.functions.exprs._
   * The reference parses DEX trade events by matching an 8-byte
   * discriminator and then reading little-endian fields at fixed offsets
   * (reference `src/streaming/event_parser/protocols/pumpfun/parser.rs:20-35`
-  * dispatches on `discriminators::BUY_IX` etc.). Here the same wire format
-  * is decoded by codegen'd column expressions over a `binary` column —
-  * vectorized across the whole partition instead of row callbacks. The
-  * trade frame is declared once, as [[TradeLayout]], and encoded and
-  * decoded through [[ProtocolRegistry]].
+  * dispatches on `discriminators::BUY_IX` etc.). The trade frame is
+  * declared once, as [[TradeLayout]], encoded by codegen'd column
+  * expressions and decoded by [[ProtocolRegistry]]'s `graft_dispatch`
+  * kernel: one call per row over a `binary` column. Create-token frames,
+  * whose strings make the offsets dynamic, have their own sequential
+  * decoder.
   */
 object EventCodec {
   val Discriminator: Array[Byte] =
@@ -69,8 +70,20 @@ object EventCodec {
 
   /** Decode create-token payloads via the sequential struct expression. */
   def decodeCreateToken(df: DataFrame, payload: String = "payload"): DataFrame =
-    df.filter(expr(s"substring($payload, 1, 8)") === lit(CreateDiscriminator))
-      .withColumn("ev", decode_create_token(col(payload)))
+    decodeCreate(df, CreateDiscriminator, 0, payload)
+
+  /** Create-token payloads that start with `disc`, decoded into the
+    * struct column `ev` from byte `skip + 1` on (the sequential decoder
+    * skips 8 discriminator bytes itself); rows it cannot decode drop out.
+    * The guard and the decode run once per row, as a one-row generator,
+    * so the filter on `ev` stays above them instead of being pushed below
+    * with a copy of the decode and of whatever computes the payload. */
+  private[sources] def decodeCreate(df: DataFrame, disc: Array[Byte],
+      skip: Int, payload: String): DataFrame =
+    df.select(col("*"), inline(array(struct(
+        when(expr(s"substring($payload, 1, ${disc.length})") === lit(disc),
+          decode_create_token(expr(s"substring($payload, ${skip + 1})")))
+          .as("ev")))))
       .filter(col("ev").isNotNull)
 
   /** Append an 8-byte LE byte-sum checksum to each payload — the wire
@@ -128,19 +141,20 @@ object EventCodec {
     * with its event kind, decode the matching branch, pass through
     * unknown payloads as `unknown` with null bodies.
     */
-  def dispatch(df: DataFrame, payload: String = "payload"): DataFrame =
-    df.withColumn("event_kind", kindOf(payload))
+  def dispatch(df: DataFrame, payload: String = "payload"): DataFrame = {
+    // length-guarded like decodeTrade: a truncated trade payload keeps its
+    // kind tag but decodes to a null body (same contract as the
+    // create-token decoder's null-on-malformed)
+    val body = "__graft_trade"
+    ProtocolRegistry.withBody(df, TradeLayout, payload, body)
+      .withColumn("event_kind", kindOf(payload))
       .withColumn("trade",
-        // length-guarded like decodeTrade: a truncated trade payload keeps
-        // its kind tag but decodes to a null body (same contract as the
-        // create-token decoder's null-on-malformed)
-        when(ProtocolRegistry.discMatches(payload, TradeLayout),
-          struct(ProtocolRegistry.decodeCols(TradeLayout, payload): _*)))
-      .withColumn("trade",
-        col("trade").withField("is_buy", buyFlag(col("trade.is_buy"))))
+        col(body).withField("is_buy", buyFlag(col(s"$body.is_buy"))))
       .withColumn("create_token",
         when(col("event_kind") === "create_token",
           decode_create_token(col(payload))))
+      .drop(body)
+  }
 
   /** The event kind [[dispatch]] tags a payload with. */
   private def kindOf(payload: String): Column =

@@ -193,14 +193,19 @@ object InstructionCodec {
     * the reference: discriminator match, data length, account index in
     * range. */
   def flattenDecode(txs: DataFrame): DataFrame = {
+    val body = "__graft_ix"
+    val decoded = ProtocolRegistry.withBody(
+      txs.select(col("tx_id"), col("account_keys"),
+          posexplode(col("instructions")).as(Seq("instr_idx", "ins")))
+        // get(), not [0]: this guard runs before the layout match, so an
+        // instruction with no accounts drops out instead of failing the
+        // job under ANSI
+        .filter(expr("get(ins.accounts, 0)") >= 0 &&
+          expr("get(ins.accounts, 0)") < size(col("account_keys"))),
+      SwapLayout, "ins.data", body)
     val Seq(eventId, valueCents, tsUs) =
-      ProtocolRegistry.decodeCols(SwapLayout, "ins.data")
-    txs.select(col("tx_id"), col("account_keys"),
-        posexplode(col("instructions")).as(Seq("instr_idx", "ins")))
-      .filter(
-        ProtocolRegistry.discMatches("ins.data", SwapLayout) &&
-          expr("ins.accounts[0]") >= 0 &&
-          expr("ins.accounts[0]") < size(col("account_keys")))
+      ProtocolRegistry.bodyFields(decoded, body)
+    decoded.filter(col(body).isNotNull)
       .select(
         col("tx_id"),
         col("instr_idx"),

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.DispatchLayout
 import graft.functions.exprs._
@@ -23,8 +24,9 @@ import graft.functions.exprs._
   * entry, not new execution code. Every layout is length-guarded, so
   * truncated or foreign payloads degrade to `unknown`/null rather than
   * failing the job (the reference length-checks every read,
-  * `pumpfun/parser.rs:120-154`). [[decode]] and [[decodeCols]] read one
-  * known layout with plain column expressions.
+  * `pumpfun/parser.rs:120-154`). [[decode]] runs the same kernel over a
+  * registry of one known layout, so every fixed-layout decode has one
+  * implementation of each field kind's wire semantics.
   */
 object ProtocolRegistry {
 
@@ -239,53 +241,6 @@ object ProtocolRegistry {
     expr(s"unhex(concat(md5(cast(cast($e as string) " +
       s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
 
-  /** Per-field decode expression (all codegen'd builtins / graft exprs). */
-  private def fieldCol(payload: String, f: FieldSpec): Column = f.kind match {
-    case "u64" | "i64" => le_long(col(payload), f.offset)
-    // full borsh u128 as Decimal(38,0) (CLMM sqrt_price/liquidity widths)
-    case "u128" => le_u128(col(payload), f.offset)
-    // widen through a mask: a signed 32-bit read of a u32 ≥ 2^31 would
-    // otherwise come back negative
-    case "u32" =>
-      (le_int(col(payload), f.offset).cast("bigint") bitwiseAND
-        lit(0xFFFFFFFFL)).cast("bigint")
-    case "i32" => le_int(col(payload), f.offset)
-    // two one-byte reads, not reverse(): reverse on BinaryType detours
-    // through a UTF-8 string cast and mangles bytes >= 0x80
-    case "u16" => expr(
-      s"cast(conv(hex(substring($payload, ${f.offset + 1}, 1)), 16, 10) + " +
-        s"256 * conv(hex(substring($payload, ${f.offset + 2}, 1)), 16, 10) " +
-        "as int)")
-    case "u8" | "bool" => expr(
-      s"cast(conv(hex(substring($payload, ${f.offset + 1}, 1)), 16, 10) as int)")
-    case "b32" => expr(s"substring($payload, ${f.offset + 1}, 32)")
-    // optional un-tagged 32-byte tail (pumpswap create_pool
-    // coin_creator, parser.rs:220): present when the frame is long
-    // enough, otherwise the reference substitutes Pubkey::default() —
-    // decode to 32 zero bytes, not null, to mirror that
-    case "optb32" =>
-      when(expr(s"octet_length($payload)") >= f.offset + 32,
-        expr(s"substring($payload, ${f.offset + 1}, 32)"))
-        .otherwise(lit(new Array[Byte](32)))
-    // borsh Option<bool>: tag 0 → null (None); tag 1 + in-bounds value
-    // byte → 0/1; anything else (invalid tag, truncated value) → null,
-    // mirroring read_option_bool's parse-fail None
-    case "optbool" => expr(
-      s"case when conv(hex(substring($payload, ${f.offset + 1}, 1)), " +
-        s"16, 10) = 1 and octet_length($payload) >= ${f.offset + 2} " +
-        s"then cast(cast(conv(hex(substring($payload, " +
-        s"${f.offset + 2}, 1)), 16, 10) as int) <> 0 as int) end")
-    // trailing len-prefixed string: null (not truncated garbage) when the
-    // declared length overruns the actual payload
-    // (bounded in 64 bits: an INT sum overflows, and fails the job under
-    // ANSI, for a hostile length near 2^31)
-    case "str" =>
-      val len = le_int(col(payload), f.offset)
-      when(len >= 0 && expr(s"octet_length($payload)").cast("bigint") >=
-          lit(f.offset + 4L) + len.cast("bigint"),
-        col(payload).substr(lit(f.offset + 5), len).cast("string"))
-  }
-
   /** Per-field encode expression from a source column of the field name:
     * long for u64/u32/u8, binary(32) for b32. */
   private def fieldBytes(f: FieldSpec): Column = f.kind match {
@@ -331,16 +286,56 @@ object ProtocolRegistry {
       lit(l.discriminator) && lenOk
   }
 
-  /** Decode payloads of one layout; foreign/truncated rows drop out. */
+  /** Decode payloads of one layout: [[dispatch]] over a registry of
+    * that layout alone, keeping the rows it matches and selecting the
+    * layout's fields. Foreign/truncated rows drop out. */
   def decode(df: DataFrame, layout: LayoutSpec,
-      payload: String = "payload"): DataFrame =
-    df.filter(discMatches(payload, layout))
-      .select(decodeCols(layout, payload): _*)
+      payload: String = "payload"): DataFrame = {
+    val body = withBody(df, layout, payload, DecodedBody)
+    body.filter(col(DecodedBody).isNotNull)
+      .select(bodyFields(body, DecodedBody): _*)
+  }
 
-  /** Decode columns for a layout's data fields (aliased), for callers
-    * projecting them alongside other columns. */
-  def decodeCols(layout: LayoutSpec, payload: String): Seq[Column] =
-    layout.dataFields.map(f => fieldCol(payload, f).as(f.name))
+  private val DecodedBody = "__graft_body"
+
+  /** `df` with `layout`'s decoded fields as the struct column `body`,
+    * null where the layout does not match the payload: the kernel
+    * [[dispatch]] runs, over a registry of `layout` alone and under the
+    * same one-row generator. */
+  private[sources] def withBody(df: DataFrame, layout: LayoutSpec,
+      payload: String, body: String): DataFrame =
+    df.select(col("*"),
+      kernel(payload, None, layoutsOf(Seq(ProtocolSpec(layout.kind,
+        Seq(layout))))).as(Seq(s"${body}_protocol", s"${body}_kind", body)))
+      .drop(s"${body}_protocol", s"${body}_kind")
+
+  /** The fields of [[withBody]]'s struct column `body` as top-level
+    * columns, for rows that have one. A field keeps the kernel's
+    * nullability: the struct is nullable only because an unmatched row
+    * has none. */
+  private[sources] def bodyFields(df: DataFrame, body: String): Seq[Column] =
+    df.schema(body).dataType.asInstanceOf[StructType].fields.toSeq.map { f =>
+      val c = col(s"$body.${f.name}")
+      (if (f.nullable) c else GraftBridge.knownNotNull(c)).as(f.name)
+    }
+
+  private def layoutsOf(protocols: Seq[ProtocolSpec]): Seq[DispatchLayout] = {
+    val all = protocols.flatMap(p => p.layouts.map(l => (p, l)))
+    val dupKinds = all.groupBy(_._2.kind).filter(_._2.size > 1).keySet
+    all.map { case (p, l) =>
+      DispatchLayout(p.protocol, l.kind,
+        if (dupKinds(l.kind)) s"${p.protocol}_${l.kind}" else l.kind,
+        p.program, l.discriminator.toSeq, l.minLen,
+        l.dataFields.map(f => (f.name, f.kind, f.offset)))
+    }
+  }
+
+  /** The `graft_dispatch` kernel as a one-row generator: `protocol`,
+    * `event_kind` and one struct column per layout. */
+  private def kernel(payload: String, programCol: Option[String],
+      layouts: Seq[DispatchLayout]): Column =
+    inline(array(
+      registry_dispatch(col(payload), programCol.map(col), layouts)))
 
   /** Registry-wide dispatch: tag each frame with (protocol, event_kind)
     * and decode it into its layout's struct column, in one call per row
@@ -372,17 +367,9 @@ object ProtocolRegistry {
           s"protocol ${p.protocol} is program-scoped (${p.program}): " +
             "dispatch needs a programCol to disambiguate shared " +
             "discriminators"))
-    val all = protocols.flatMap(p => p.layouts.map(l => (p, l)))
-    val dupKinds = all.groupBy(_._2.kind).filter(_._2.size > 1).keySet
-    val layouts = all.map { case (p, l) =>
-      DispatchLayout(p.protocol, l.kind,
-        if (dupKinds(l.kind)) s"${p.protocol}_${l.kind}" else l.kind,
-        p.program, l.discriminator.toSeq, l.minLen,
-        l.dataFields.map(f => (f.name, f.kind, f.offset)))
-    }
+    val layouts = layoutsOf(protocols)
     val names = "protocol" +: "event_kind" +: layouts.map(_.column)
-    val decoded = inline(array(
-      registry_dispatch(col(payload), programCol.map(col), layouts)))
+    val decoded = kernel(payload, programCol, layouts)
     val clash = df.columns.filter(c => names.exists(_.equalsIgnoreCase(c)))
     if (clash.isEmpty) df.select(col("*"), decoded)
     else {

@@ -95,15 +95,10 @@ object RealLayouts {
     * schedule the synthetic path decodes (`pumpfun/events.rs:59-180`,
     * the V1 body the reference's log decoder reads). */
   def decodeCreateReal(df: DataFrame,
-      payload: String = "payload"): DataFrame = {
-    import graft.functions.exprs.decode_create_token
-    df.filter(expr(s"substring($payload, 1, 16)") ===
-        lit(PumpFunCreateEventDisc))
-      // the sequential decoder skips 8 discriminator bytes itself; hand
-      // it the payload from byte 9 so the full 16 are consumed
-      .withColumn("ev", decode_create_token(expr(s"substring($payload, 9)")))
-      .filter(col("ev").isNotNull)
-  }
+      payload: String = "payload"): DataFrame =
+    // the sequential decoder skips 8 discriminator bytes itself; hand it
+    // the payload from byte 9 so the full 16 are consumed
+    EventCodec.decodeCreate(df, PumpFunCreateEventDisc, 8, payload)
 
   /** PumpFun instruction layouts (pumpfun/parser.rs:113-300): buy/sell
     * carry two u64 args; create/create_v2/migrate are tag-only here —
@@ -705,20 +700,18 @@ object RealLayouts {
       keys: String = "account_keys"): DataFrame = {
     val named = ixAccounts.getOrElse(layout.kind, Seq.empty)
     val maxSlot = named.map(_._2).foldLeft(-1)(math.max)
-    val guarded = df.filter(
-      expr(s"substring($data, 1, ${layout.discriminator.length})") ===
-        lit(layout.discriminator) &&
-        expr(s"octet_length($data)") >= layout.minLen &&
-        (if (maxSlot < 0) lit(true)
-         else expr(s"size($accountIdx)") > maxSlot &&
-           expr(s"array_max($accountIdx)") < expr(s"size($keys)") &&
-           expr(s"array_min($accountIdx)") >= 0))
-    val dataCols = ProtocolRegistry
-      .decodeCols(layout, data)
+    val guarded = if (maxSlot < 0) df else df.filter(
+      expr(s"size($accountIdx)") > maxSlot &&
+        expr(s"array_max($accountIdx)") < expr(s"size($keys)") &&
+        expr(s"array_min($accountIdx)") >= 0)
+    val body = "__graft_ix"
+    val decoded = ProtocolRegistry.withBody(guarded, layout, data, body)
     val acctCols = named.map { case (n, i) =>
       element_at(col(keys),
         element_at(col(accountIdx), i + 1).cast("int") + 1).as(n)
     }
-    guarded.select(col("*") +: (dataCols ++ acctCols): _*)
+    decoded.filter(col(body).isNotNull).select(
+      df.columns.map(c => col(s"`$c`")) ++
+        ProtocolRegistry.bodyFields(decoded, body) ++ acctCols: _*)
   }
 }

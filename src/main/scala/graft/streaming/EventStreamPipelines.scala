@@ -103,21 +103,6 @@ object EventStreamPipelines {
       .select(expr("unix_timestamp(window.start)").as("ws"), col("is_buy"),
         col("n"), col("cents"))
 
-  /** Synthetic trade-payload stream from the rate source: each tick is
-    * encoded to the borsh wire format, exercising encode→decode under
-    * Structured Streaming backpressure (`rowsPerSecond`). */
-  def syntheticTradeStream(spark: SparkSession, rowsPerSecond: Int): DataFrame = {
-    import graft.sources.{EventCodec, ProtocolRegistry}
-    val ticks = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("value").as("event_id"), expr("value % 97").as("user_id"),
-        expr("unix_micros(timestamp)").as("ts_us"),
-        when(expr("value % 2 = 0"), 1L).otherwise(0L).as("is_buy"),
-        expr("value * 7 + 1").as("amount_cents"))
-    ProtocolRegistry.encode(ticks, EventCodec.TradeLayout)
-      .select(col("payload"), col("ts_us").as("graft_ts_us"))
-  }
-
   /** A33c: streaming wire EGRESS — the publish side of the reference's
     * pipeline (decoded events re-encoded and shipped downstream). The
     * event stream encodes to the borsh wire format and lands as framed

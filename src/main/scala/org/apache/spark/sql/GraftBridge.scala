@@ -3,7 +3,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNotNull}
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 
 object GraftBridge {
@@ -11,6 +11,9 @@ object GraftBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `c` declared non-null, for a value the caller knows is set. */
+  def knownNotNull(c: Column): Column = column(KnownNotNull(expression(c)))
 
   /** Build a DataFrame from a custom LogicalPlan (Dataset.ofRows is
     * private[sql]). */

@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CodecOps
@@ -12,9 +12,10 @@ import graft.functions.exprs._
 import graft.sources.{ProtocolRegistry, RealLayouts}
 import graft.sources.ProtocolRegistry.{FieldSpec, LayoutSpec, ProtocolSpec}
 
-/** The `graft_dispatch` kernel behind [[ProtocolRegistry.dispatch]]
-  * against the column formula it replaced, kept here as the reference:
-  * one CASE chain per tag and one guarded struct per layout. */
+/** The `graft_dispatch` kernel behind [[ProtocolRegistry.dispatch]] and
+  * [[ProtocolRegistry.decode]] against the column formula it replaced,
+  * kept here as the reference: one CASE chain per tag and one guarded
+  * struct per layout. */
 class RegistryDispatchSpec extends TestSparkSession {
 
   /** The replaced column formula, verbatim but for the str guard, which
@@ -60,6 +61,11 @@ class RegistryDispatchSpec extends TestSparkSession {
           s"protocol ${p.protocol} is program-scoped ($prog)")
         case _ => ProtocolRegistry.discMatches(payload, l)
       }
+
+    def decode(df: DataFrame, l: LayoutSpec,
+        payload: String = "payload"): DataFrame =
+      df.filter(ProtocolRegistry.discMatches(payload, l))
+        .select(l.dataFields.map(f => fieldCol(payload, f).as(f.name)): _*)
 
     def dispatch(df: DataFrame, protocols: Seq[ProtocolSpec],
         payload: String = "payload",
@@ -145,9 +151,12 @@ class RegistryDispatchSpec extends TestSparkSession {
   }
 
   private def assertSame(df: DataFrame, protocols: Seq[ProtocolSpec],
-      programCol: Option[String]): Unit = {
-    val got = ProtocolRegistry.dispatch(df, protocols, programCol = programCol)
-    val want = Reference.dispatch(df, protocols, programCol = programCol)
+      programCol: Option[String]): Unit =
+    assertSameFrames(
+      ProtocolRegistry.dispatch(df, protocols, programCol = programCol),
+      Reference.dispatch(df, protocols, programCol = programCol))
+
+  private def assertSameFrames(got: DataFrame, want: DataFrame): Unit = {
     assert(got.schema == want.schema, "schemas differ, nullability included")
     val extra = got.exceptAll(want)
     val missing = want.exceptAll(got)
@@ -156,16 +165,20 @@ class RegistryDispatchSpec extends TestSparkSession {
         s"reference-only rows: ${missing.limit(3).collect().mkString("; ")}")
   }
 
-  /** Both payload nullabilities: the decoded fields' nullability follows
-    * the payload's, and a wire scan's payload is non-null. */
+  /** `dispatch`, and `decode` of every layout, against the reference,
+    * with both payload nullabilities: the decoded fields' nullability
+    * follows the payload's, and a wire scan's payload is non-null. */
   private def assertSameBothWays(protocols: Seq[ProtocolSpec],
       programCol: Option[String], seed: Long): Unit = {
     import spark.implicits._
     val df = frames(protocols, seed).toDF("payload", "program_id")
-    assertSame(df, protocols, programCol)
-    assertSame(df.filter(col("payload").isNotNull)
-      .withColumn("payload", coalesce(col("payload"), lit(Array.emptyByteArray))),
-      protocols, programCol)
+    for (in <- Seq(df, df.filter(col("payload").isNotNull).withColumn(
+        "payload", coalesce(col("payload"), lit(Array.emptyByteArray))))) {
+      assertSame(in, protocols, programCol)
+      for (p <- protocols; l <- p.layouts) withClue(s"decode ${l.kind}: ") {
+        assertSameFrames(ProtocolRegistry.decode(in, l), Reference.decode(in, l))
+      }
+    }
   }
 
   test("kernel equals the column formula on the default registry") {
@@ -287,5 +300,54 @@ class RegistryDispatchSpec extends TestSparkSession {
       case f: FilterExec => f.references.exists(_.name == "file")
       case _ => false
     }), s"expected the file filter under the kernel:\n$plan")
+  }
+
+  /** Runs `df` (an adaptive plan builds its codegen stages only as it
+    * executes) and returns its executed plan and every whole-stage
+    * subtree's largest generated method. */
+  private def compiled(df: DataFrame): (SparkPlan, Seq[Int]) = {
+    val qe = df.queryExecution
+    qe.toRdd.count()
+    val stages = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(qe.executedPlan)
+    (qe.executedPlan, stages.map(_._3.maxMethodCodeSize))
+  }
+
+  /** How often `fn` is called in `plan`, adaptive query stages included. */
+  private def calls(plan: SparkPlan, fn: String): Int =
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case p => p.expressions.flatMap(_.collect {
+        case e if e.prettyName == fn => e
+      })
+    }.flatten.size
+
+  test("every fixed-layout decode runs the kernel once and no hex read") {
+    import graft.sources.{EventCodec, InstructionCodec}
+    val ev = Tables.events(spark, sfDir)
+    val trades = EventCodec.encodeTrade(ev)
+    for ((name, df) <- Seq(
+        "decodeTrade" -> EventCodec.decodeTrade(trades),
+        "decode" -> ProtocolRegistry.decode(trades, EventCodec.TradeLayout),
+        "flattenDecode" -> InstructionCodec.flattenDecode(
+          InstructionCodec.packTransactions(ev)))) {
+      val (plan, _) = compiled(df)
+      assert(calls(plan, "graft_dispatch") == 1,
+        s"$name: the kernel should run once:\n$plan")
+      assert(!plan.toString.contains("conv("),
+        s"$name: a hex-string byte read is left:\n$plan")
+    }
+  }
+
+  test("the trade and create-token round trips stay under the JIT's " +
+      "huge-method limit and decode each frame once") {
+    for ((name, fn) <- Seq("q_events_decode_roundtrip" -> "graft_dispatch",
+        "q_events_decode_create" -> "graft_decode_create_token")) {
+      val (plan, sizes) = compiled(SparkEntry.queries(name)(spark, sfDir))
+      assert(sizes.nonEmpty, s"$name: expected whole-stage codegen")
+      assert(sizes.forall(_ <= 8000),
+        s"$name: generated method sizes ${sizes.mkString(",")} exceed " +
+          "8,000 bytes")
+      assert(calls(plan, fn) == 1, s"$name: $fn should run once:\n$plan")
+    }
   }
 }
