@@ -60,27 +60,17 @@ object SparkEntry {
 
   /** Per-day, per-type counts and cents read back from the partitioned
     * events layout that `write` leaves in a fresh scratch dir (the
-    * `q_sink_*` round trips). The readback is materialized BEFORE the
-    * scratch dir is deleted: it held a full partitioned clone of the
-    * events table and used to leak on every bench/verify run.
-    * LOCAL-MODE-ONLY assumption: localCheckpoint blocks are
-    * non-replayable, so on a real cluster an executor loss after the
-    * delete would make the result unrecoverable — cluster reuse must
-    * collect first or use a reliable checkpoint dir instead. */
+    * `q_sink_*` round trips). */
   private def sinkReadback(s: SparkSession, name: String)(
       write: String => Unit): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    val dir = Scratch.dir(name)
     write(dir)
-    val out = sources.EventSink.readPartitioned(s, dir)
+    sources.EventSink.readPartitioned(s, dir)
       .groupBy(expr("unix_micros(ts) div 86400000000").as("db"),
         col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cast(round(value * 100, 0) as bigint)"))
           .as("sum_cents"))
-      .localCheckpoint(eager = true)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(dir)))
-    out
   }
 
   /** Each purchase with its wallet's latest prior view, found by `join`
@@ -247,7 +237,7 @@ object SparkEntry {
     // partitioned layout, not just that a write happened.
     "q_sink_upsert" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      sinkReadback(s, "graft_sink_upsert") { dir =>
+      sinkReadback(s, "sink_upsert") { dir =>
         sources.EventSink.writePartitionedByDay(ev, dir)
         val corrections = ev.filter(pmod(col("event_id"), lit(10)) === 0)
           .withColumn("value", col("value") + lit(1.0))
@@ -264,7 +254,7 @@ object SparkEntry {
     // outside the backfill set must come back byte-identical.
     "q_sink_backfill" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      sinkReadback(s, "graft_sink_backfill") { dir =>
+      sinkReadback(s, "sink_backfill") { dir =>
         sources.EventSink.writePartitionedByDay(ev, dir)
         val corrected = ev
           .filter(expr("(unix_micros(ts) div 86400000000) % 7") === 3)
@@ -280,7 +270,7 @@ object SparkEntry {
     // StreamingExtensionsSpec).
     "q_sink_compact" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      sinkReadback(s, "graft_sink_compact") { dir =>
+      sinkReadback(s, "sink_compact") { dir =>
         sources.EventSink.writePartitionedByDay(ev, dir, buckets = 8)
         sources.EventSink.compactPartitions(s, dir,
           targetBytes = 1L << 40, maxFiles = 1)
@@ -400,8 +390,7 @@ object SparkEntry {
     "q_events_sink_roundtrip" -> ((s, d) => {
       // production layout round trip: date-partitioned time-sorted write,
       // partition-discovering read, per-date rollup ≡ direct aggregation
-      val dir = java.nio.file.Files.createTempDirectory("graft_sink_q_")
-        .toString
+      val dir = Scratch.dir("sink_q_")
       graft.sources.EventSink.writePartitionedByDay(
         Tables.events(s, d), dir, buckets = 4)
       graft.sources.EventSink.readPartitioned(s, dir)
@@ -415,12 +404,8 @@ object SparkEntry {
       // capture-side write (one frame file per partition) → DSv2 read →
       // columnar decode: the full wire path the reference implements with
       // gRPC connections + per-event parser callbacks
-      val dir = java.nio.file.Files.createTempDirectory("graft_wire_q_")
-        .toString
-      graft.sources.wire.GraftWireWriter.writeFrames(
-        EventCodec.encodeTrade(Tables.events(s, d)), dir)
-      EventCodec.decodeTrade(
-        s.read.format("graft-wire").load(dir))
+      EventCodec.decodeTrade(s.read.format("graft-wire")
+        .load(graft.streaming.EventStreamPipelines.tradeCapture(s, d)))
     }),
     // wire-frame integrity: byte-sum checksum trailer (fast_checksum
     // analog) — every 37th frame deterministically corrupted, the
@@ -477,8 +462,7 @@ object SparkEntry {
     // publish), read back and decoded ≡ the events table.
     // file/frame_idx are storage-assigned; the write ignores them.
     "q_events_wire_dsv2_write" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_wire_w_")
-        .toString
+      val dir = Scratch.dir("wire_w_")
       EventCodec.encodeTrade(Tables.events(s, d))
         .select(lit("").as("file"), lit(0L).as("frame_idx"), col("payload"))
         .write.format("graft-wire").mode("overwrite").save(dir)

@@ -39,9 +39,11 @@ object Verify {
       pool.submit(new Runnable {
         override def run(): Unit =
           try {
-            val df = fn(spark, sfDir)
-            (if (coalesce1) df.coalesce(1) else df)
-              .write.mode("overwrite").parquet(s"$outDir/$name")
+            Scratch.scoped {
+              val df = fn(spark, sfDir)
+              (if (coalesce1) df.coalesce(1) else df)
+                .write.mode("overwrite").parquet(s"$outDir/$name")
+            }
             // outDir reuse is the documented workflow (parquet mode is
             // overwrite) — a stale failure manifest from a previous run
             // would otherwise shadow this now-green dump forever, since

@@ -197,11 +197,11 @@ object InstructionCodec {
     val decoded = ProtocolRegistry.withBody(
       txs.select(col("tx_id"), col("account_keys"),
           posexplode(col("instructions")).as(Seq("instr_idx", "ins")))
-        // get(), not [0]: this guard runs before the layout match, so an
-        // instruction with no accounts drops out instead of failing the
-        // job under ANSI
-        .filter(expr("get(ins.accounts, 0)") >= 0 &&
-          expr("get(ins.accounts, 0)") < size(col("account_keys"))),
+        // get(), not [i]: this guard runs before the layout match, so an
+        // instruction missing either account the projection reads drops
+        // out instead of failing the job under ANSI
+        .filter(Seq(0, 1).map(i => expr(s"get(ins.accounts, $i)"))
+          .map(i => i >= 0 && i < size(col("account_keys"))).reduce(_ && _)),
       SwapLayout, "ins.data", body)
     val Seq(eventId, valueCents, tsUs) =
       ProtocolRegistry.bodyFields(decoded, body)

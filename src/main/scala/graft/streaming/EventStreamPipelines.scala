@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.StructType
+
+import graft.Scratch
 
 /** Structured Streaming re-expression of the reference's subscription
   * model (SURVEY §2 A15-A18): protocols × event-type filter × sink instead
@@ -18,14 +21,14 @@ object EventStreamPipelines {
 
   /** Run `df` to completion under the AvailableNow trigger and return
     * what it produced. The executors write each micro-batch as parquet
-    * into a fresh temp directory — overwriting for Complete mode (the
+    * into a fresh scratch directory — overwriting for Complete mode (the
     * last batch is the whole result), appending for Append and Update —
     * so no result is collected into the driver heap (a memory sink
     * OOM'd 85 GB on the ~95M-row sf100 session table) and nothing is
     * registered in the session. A drain that produced no batch reads
     * back as an empty frame of `df`'s schema. */
   private def drain(df: DataFrame, mode: OutputMode): DataFrame = {
-    val dir = Files.createTempDirectory("graft_drain_").toString
+    val dir = Scratch.dir("drain_")
     val writeMode =
       if (mode == OutputMode.Complete()) "overwrite" else "append"
     df.writeStream
@@ -39,21 +42,14 @@ object EventStreamPipelines {
     df.sparkSession.read.schema(df.schema).parquet(dir)
   }
 
-  /** Run `body` with the RocksDB state store provider (required by
-    * transformWithState), restoring the session's previous provider
-    * afterwards. A streaming query reads the provider when it starts.
-    * The previous value is the explicitly set one: `getOption` would
-    * return the default and restoring it would leave the key set. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key,
+  /** A clone of `spark` with the RocksDB state store provider that
+    * transformWithState requires, so the session other builders share
+    * never changes. */
+  private def rocksDb(spark: SparkSession): SparkSession = {
+    val s = GraftBridge.cloneSession(spark)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    s
   }
 
   final case class SessionUpdate(
@@ -114,7 +110,7 @@ object EventStreamPipelines {
     */
   def wireEgressAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{EventCodec, wire}
-    val outDir = Files.createTempDirectory("graft_wire_egress_").toString
+    val outDir = Scratch.dir("wire_egress_")
     val q = EventCodec.encodeTrade(eventsStream(spark, dir))
       .select("payload")
       .writeStream
@@ -141,16 +137,15 @@ object EventStreamPipelines {
     import graft.sources.EventCodec
     import java.nio.file.Paths
     val stage = tradeCapture(spark, sfDir)
-    val live = Files.createTempDirectory("graft_wire_live").toString
-    val files = Files.list(Paths.get(stage)).iterator()
-    val all = Iterator.continually(files)
-      .takeWhile(_.hasNext).map(_.next()).toSeq.sortBy(_.toString)
+    val live = Scratch.dir("wire_live")
+    val all = new java.io.File(stage).listFiles().map(_.toPath)
+      .sortBy(_.toString).toSeq
     def arrive(ps: Seq[java.nio.file.Path]): Unit = ps.foreach(p =>
       Files.move(p, Paths.get(live).resolve(p.getFileName)))
     val (first, rest) = all.splitAt(math.max(1, all.size / 2))
     arrive(first)
-    val sinkDir = Files.createTempDirectory("graft_wire_inc_sink").toString
-    val ckpt = Files.createTempDirectory("graft_wire_inc_ckpt").toString
+    val sinkDir = Scratch.dir("wire_inc_sink")
+    val ckpt = Scratch.dir("wire_inc_ckpt")
     val q = EventCodec.decodeTrade(
         spark.readStream.format("graft-wire").load(live))
       .writeStream
@@ -230,11 +225,11 @@ object EventStreamPipelines {
     drain(agg, OutputMode.Complete())
   }
 
-  /** Capture the events table's trade frames into a fresh temp
+  /** Capture the events table's trade frames into a fresh scratch
     * directory (its own per call: concurrent builders never share one)
     * and return the directory. */
-  private def tradeCapture(spark: SparkSession, sfDir: String): String = {
-    val dir = Files.createTempDirectory("graft_wire_s_").toString
+  private[graft] def tradeCapture(spark: SparkSession, sfDir: String): String = {
+    val dir = Scratch.dir("wire_s_")
     graft.sources.wire.GraftWireWriter.writeFrames(
       graft.sources.EventCodec.encodeTrade(
         graft.Tables.events(spark, sfDir)), dir)
@@ -269,7 +264,7 @@ object EventStreamPipelines {
     import graft.sources.{ProtocolRegistry, RealLayouts, wire}
     import ProtocolRegistry.pubkey
     val ev = graft.Tables.events(spark, sfDir)
-    val pfDir = Files.createTempDirectory("graft_wire_pf_").toString
+    val pfDir = Scratch.dir("wire_pf_")
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "purchase").select(
         expr("cast(round(value * 100, 0) as bigint)").as("sol_amount"),
@@ -287,7 +282,7 @@ object EventStreamPipelines {
         pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
         pubkey("1").as("fee_recipient"), pubkey("2").as("creator")),
       RealLayouts.PumpFun.layouts(0)), pfDir)
-    val bkDir = Files.createTempDirectory("graft_wire_bk_").toString
+    val bkDir = Scratch.dir("wire_bk_")
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "view").select(
         pubkey("user_id % 100").as("pool_state"),
@@ -507,35 +502,19 @@ object EventStreamPipelines {
     * reference signature-cache contract (`event_processor.rs` dedup)
     * as an oracle-checkable equation. */
   def dedupReplayAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    // createTempDirectory, NOT tmpdir + a per-JVM counter: two
-    // concurrent harness JVMs restart the counter at the same value,
-    // so counter paths collide — one JVM then appends a SECOND pair of
-    // parquet files into the other's replay source (4 deliveries, a
-    // failed oracle) or deletes the dir out from under a running query
-    val inc = Files.createTempDirectory("graft_ddr_")
-      .toString
+    val inc = Scratch.dir("ddr_")
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     ev.coalesce(1).write.mode("append").parquet(inc)
     // second delivery = byte-identical file: an OS-level copy of the
     // staged part file, not a second scan+encode of the events table
     // (the replay contract only needs the same rows delivered twice)
-    locally {
-      import scala.jdk.CollectionConverters._
-      // Using closes the directory stream (Files.list leaks a directory
-      // handle per call otherwise); the missing-part case gets a named
-      // error instead of a bare NoSuchElementException
-      val part = scala.util.Using.resource(
-        Files.list(java.nio.file.Paths.get(inc))) { s =>
-        s.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(
-            s"dedupReplayAvailableNow: no part- file staged under $inc " +
-            "(did the parquet writer's file naming change?)"))
-      }
-      Files.copy(part,
-        part.resolveSibling("part-replay.parquet"))
-    }
+    val part = new java.io.File(inc).listFiles()
+      .find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(
+        s"dedupReplayAvailableNow: no part- file staged under $inc " +
+        "(did the parquet writer's file naming change?)")).toPath
+    Files.copy(part, part.resolveSibling("part-replay.parquet"))
     val src = graft.Tables.tzNormalize(spark.readStream
       .schema(spark.read.parquet(inc).schema)
       .option("maxFilesPerTrigger", 1)
@@ -543,11 +522,25 @@ object EventStreamPipelines {
     val counts = dedupStream(src)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val out = drain(counts, OutputMode.Complete())
-      .localCheckpoint(eager = true)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(inc)))
-    out
+    drain(counts, OutputMode.Complete())
+  }
+
+  /** Stage the events table as two incoming parquet files (even event
+    * ids, then odd), run `start(incoming, store, checkpoint, schema)`
+    * over them to completion and return the store directory. */
+  private def twoFileIngest(spark: SparkSession, dir: String, name: String)(
+      start: (String, String, String, StructType) => StreamingQuery): String = {
+    val base = Scratch.dir(name)
+    val ev = graft.Tables.events(spark, dir)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    ev.filter(col("event_id") % 2 === 0)
+      .coalesce(1).write.mode("append").parquet(s"$base/in")
+    ev.filter(col("event_id") % 2 === 1)
+      .coalesce(1).write.mode("append").parquet(s"$base/in")
+    val q = start(s"$base/in", s"$base/store", s"$base/ckpt",
+      spark.read.parquet(s"$base/in").schema)
+    q.processAllAvailable(); q.stop()
+    s"$base/store"
   }
 
   /** A5d driver surface: [[HistogramIngest]] end to end — the events
@@ -558,25 +551,11 @@ object EventStreamPipelines {
     * so the streamed store shares `q_events_quantile_store`'s oracle
     * verbatim. */
   def histIngestAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    // collision-proof scratch (see dedupReplayAvailableNow)
-    val base = Files.createTempDirectory("graft_hi_")
-      .toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    ev.filter(col("event_id") % 2 === 0)
-      .coalesce(1).write.mode("append").parquet(s"$base/in")
-    ev.filter(col("event_id") % 2 === 1)
-      .coalesce(1).write.mode("append").parquet(s"$base/in")
-    val q = HistogramIngest.start(spark, s"$base/in", s"$base/hists",
-      s"$base/ckpt", spark.read.parquet(s"$base/in").schema)
-    q.processAllAvailable(); q.stop()
-    val out = graft.operators.EventOps.quantilesFromHistograms(
-        HistogramIngest.dailyHistograms(spark, s"$base/hists"),
-        Long.MinValue, Long.MaxValue)
-      .localCheckpoint(eager = true)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(base)))
-    out
+    val hists = twoFileIngest(spark, dir, "hi_")(
+      HistogramIngest.start(spark, _, _, _, _))
+    graft.operators.EventOps.quantilesFromHistograms(
+      HistogramIngest.dailyHistograms(spark, hists),
+      Long.MinValue, Long.MaxValue)
   }
 
   /** A26d driver surface: [[SketchIngest]] end to end — two-file
@@ -587,25 +566,11 @@ object EventStreamPipelines {
     * estimate itself stays spec-pinned with its error bound, like the
     * rest of the sketch family. */
   def sketchIngestAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    // collision-proof scratch (see dedupReplayAvailableNow)
-    val base = Files.createTempDirectory("graft_si_")
-      .toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    ev.filter(col("event_id") % 2 === 0)
-      .coalesce(1).write.mode("append").parquet(s"$base/in")
-    ev.filter(col("event_id") % 2 === 1)
-      .coalesce(1).write.mode("append").parquet(s"$base/in")
-    val q = SketchIngest.start(spark, s"$base/in", s"$base/sketches",
-      s"$base/ckpt", spark.read.parquet(s"$base/in").schema)
-    q.processAllAvailable(); q.stop()
-    SketchIngest.compact(spark, s"$base/sketches")
-    val out = SketchIngest.dailySketches(spark, s"$base/sketches")
+    val sketches = twoFileIngest(spark, dir, "si_")(
+      SketchIngest.start(spark, _, _, _, _))
+    SketchIngest.compact(spark, sketches)
+    SketchIngest.dailySketches(spark, sketches)
       .select(col("db"), col("n_events"))
-      .localCheckpoint(eager = true)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(base)))
-    out
   }
 
   /** A17c: the reference's `track_volume` per-wallet accumulator on the
@@ -730,9 +695,8 @@ object EventStreamPipelines {
 
   /** A94b availableNow harness (oracle ≡ EventOps.cusumFixed's SQL). */
   def cusumAlarmsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    withRocksDb(spark) {
-      drain(cusumAlarmStream(eventsStream(spark, dir)), OutputMode.Append())
-    }
+    drain(cusumAlarmStream(eventsStream(rocksDb(spark), dir)),
+      OutputMode.Append())
   }
 
   /** A17f driver: decoded trades → per-sell integer PnL rows. */
@@ -810,17 +774,16 @@ object EventStreamPipelines {
     * whole MapState read-modify-write path against that SQL. */
   def typeCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    withRocksDb(spark) {
-      val out = eventsStream(spark, dir)
-        .select(col("user_id").cast("long"), col("event_type"))
-        .as[(Long, String)]
-        .groupByKey(_._1)
-        .transformWithState(new TypeCountsProcessor, TimeMode.None(),
-          OutputMode.Update(),
-          org.apache.spark.sql.Encoders.product[(Long, String, Long)])
-        .toDF("user_id", "event_type", "n")
-      drain(out, OutputMode.Update())
-    }.groupBy("user_id", "event_type").agg(max("n").as("n"))
+    val out = eventsStream(rocksDb(spark), dir)
+      .select(col("user_id").cast("long"), col("event_type"))
+      .as[(Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new TypeCountsProcessor, TimeMode.None(),
+        OutputMode.Update(),
+        org.apache.spark.sql.Encoders.product[(Long, String, Long)])
+      .toDF("user_id", "event_type", "n")
+    drain(out, OutputMode.Update())
+      .groupBy("user_id", "event_type").agg(max("n").as("n"))
   }
 
   /** A17d, event-time-ordered: the bounded recent-trades ring with the
@@ -871,25 +834,22 @@ object EventStreamPipelines {
   def recentTradesAvailableNow(spark: SparkSession, dir: String,
       keep: Int = 5): DataFrame = {
     import spark.implicits._
-    val drained = withRocksDb(spark) {
-      val out = eventsStream(spark, dir)
-        .select(col("user_id").cast("long"),
-          expr("unix_micros(ts)").as("ts_us"),
-          col("event_id").cast("long"),
-          expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-        .as[(Long, Long, Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new RecentTradesOrderedProcessor(keep),
-          TimeMode.None(), OutputMode.Append(),
-          org.apache.spark.sql.Encoders.product[(Long, Int, Long, Long)])
-        .toDF("user_id", "n_recent", "recent_cents", "seq")
-      drain(out, OutputMode.Append())
-    }
+    val out = eventsStream(rocksDb(spark), dir)
+      .select(col("user_id").cast("long"),
+        expr("unix_micros(ts)").as("ts_us"),
+        col("event_id").cast("long"),
+        expr("cast(round(value * 100, 0) as bigint)").as("cents"))
+      .as[(Long, Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new RecentTradesOrderedProcessor(keep),
+        TimeMode.None(), OutputMode.Append(),
+        org.apache.spark.sql.Encoders.product[(Long, Int, Long, Long)])
+      .toDF("user_id", "n_recent", "recent_cents", "seq")
     // keep each wallet's FINAL snapshot: Append mode leaves one row per
     // (key, micro-batch) in the sink, so a multi-batch availableNow run
     // (several source files / low maxFilesPerTrigger) would otherwise
     // surface stale earlier snapshots alongside the final one
-    drained
+    drain(out, OutputMode.Append())
       .groupBy("user_id")
       .agg(max(struct(col("seq"), col("n_recent"), col("recent_cents")))
         .as("fin"))
@@ -984,11 +944,10 @@ object EventStreamPipelines {
   def sessionTimeoutAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    withRocksDb(spark) {
-      drain(sessionTimeoutStream(
-        eventsStream(spark, dir), gapMinutes, watermarkDelay),
-        OutputMode.Append())
-    }.select(col("user_id"), col("start_us"), col("end_us"),
+    drain(sessionTimeoutStream(
+      eventsStream(rocksDb(spark), dir), gapMinutes, watermarkDelay),
+      OutputMode.Append())
+      .select(col("user_id"), col("start_us"), col("end_us"),
         col("n_events").cast("long").as("n_events"),
         col("by_timeout").cast("long").as("by_timeout"))
   }
@@ -1015,9 +974,9 @@ object EventStreamPipelines {
     * and keep each wallet's final state, which must equal the batch
     * count/sum — the driver oracle-checks it against plain SQL. */
   def walletVolumeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    withRocksDb(spark) {
-      drain(walletVolumeStream(eventsStream(spark, dir)), OutputMode.Update())
-    }.groupBy("user_id")
+    drain(walletVolumeStream(eventsStream(rocksDb(spark), dir)),
+      OutputMode.Update())
+      .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("cents"))).as("fin"))
       .select(col("user_id"), col("fin.n_events").as("n_events"),
         col("fin.cents").as("cents"))
@@ -1033,11 +992,10 @@ object EventStreamPipelines {
     * pins equality through multi-batch in-order replay). Same wallet
     * decimation as the batch query so both feed one oracle. */
   def realizedPnlAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    withRocksDb(spark) {
-      drain(realizedPnlStream(
-        eventsStream(spark, dir).filter(col("user_id") % 10 === 0)),
-        OutputMode.Append())
-    }.select(col("user_id"), col("event_id"), col("sell_cents"),
+    drain(realizedPnlStream(
+      eventsStream(rocksDb(spark), dir).filter(col("user_id") % 10 === 0)),
+      OutputMode.Append())
+      .select(col("user_id"), col("event_id"), col("sell_cents"),
         col("cum_buy_cents"), col("cum_buy_n"),
         when(col("cum_buy_n") > 0,
           col("sell_cents").cast("double") -
@@ -1059,8 +1017,7 @@ object EventStreamPipelines {
     * spec-only existence proof. */
   def sessionLegacyAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30): DataFrame = {
-    val inc = Files.createTempDirectory("graft_ssl_")
-      .toString
+    val inc = Scratch.dir("ssl_")
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     // deterministic time split at the midpoint of the observed span
@@ -1086,17 +1043,13 @@ object EventStreamPipelines {
       .schema(spark.read.parquet(inc).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(inc))
-    val out = drain(sessionStream(src, gapMinutes).toDF(), OutputMode.Update())
+    drain(sessionStream(src, gapMinutes).toDF(), OutputMode.Update())
       .groupBy("user_id")
       .agg(max(struct(col("end_us"), col("start_us"), col("n_events")))
         .as("s"))
       .select(col("user_id"), col("s.start_us").as("start_us"),
         col("s.end_us").as("end_us"),
         col("s.n_events").cast("bigint").as("n_events"))
-      .localCheckpoint(eager = true)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(inc)))
-    out
   }
 
   /** A17: stateful sessionization with mapGroupsWithState (processing-time

@@ -161,8 +161,7 @@ object EventSubscription {
       sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val events = graft.Tables.events(spark, sfDir)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_preset_stage").toString
+    val stage = graft.Scratch.dir("preset_stage")
     // the drain only watermarks on ts and counts rows (both presets run
     // with empty include-lists), so the capture stages ONE column —
     // same 4 files, same row count, ~6x fewer bytes through the

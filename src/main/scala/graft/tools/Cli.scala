@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, debug}
 
-import graft.{Bench, Graft, SparkEntry, Verify}
+import graft.{Bench, Graft, Scratch, SparkEntry, Verify}
 
 /** One CLI over the registered queries (`SparkEntry.queries`). `<qs>` is
   * a comma-separated list of query names, or `ALL`.
@@ -43,18 +43,18 @@ object Cli {
   def main(args: Array[String]): Unit = args.toList match {
     case "run" :: sfDir :: qs :: flags =>
       withSession(Nil) { spark =>
-        names(qs).foreach { name =>
+        names(qs).foreach(name => Scratch.scoped {
           val df = SparkEntry.queries(name)(spark, sfDir)
           println(s"[run] $name rows=${df.count()}")
           if (flags.contains("--show")) df.show(10, truncate = false)
-        }
+        })
       }
     case "explain" :: sfDir :: qs :: out if out.length != 1 =>
       withSession(Nil) { spark =>
         names(qs).foreach { name =>
           try {
-            val plan = SparkEntry.queries(name)(spark, sfDir)
-              .queryExecution.explainString(FormattedMode)
+            val plan = Scratch.scoped(SparkEntry.queries(name)(spark, sfDir)
+              .queryExecution.explainString(FormattedMode))
             out match {
               case dir :: suffix :: _ =>
                 Files.createDirectories(Paths.get(dir))
@@ -77,10 +77,12 @@ object Cli {
           try {
             // run the plan first: an adaptive plan builds its codegen
             // stages only as it executes
-            val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-            qe.toRdd.count()
-            val stats = debug.codegenStringSeq(qe.executedPlan)
-              .map(_._3.maxMethodCodeSize)
+            val stats = Scratch.scoped {
+              val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+              qe.toRdd.count()
+              debug.codegenStringSeq(qe.executedPlan)
+                .map(_._3.maxMethodCodeSize)
+            }
             println(s"CODEGEN $name max_method=${(0 +: stats).max} " +
               s"over_8000=${stats.count(_ > HugeMethodLimit)} stages=${stats.size}")
           } catch { case e: Throwable =>
@@ -145,8 +147,8 @@ object Cli {
     queries.foreach { name =>
       started = System.nanoTime()
       current = name
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Scratch.scoped(SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
       val el = (System.nanoTime() - started) / 1e9
       current = ""
       println(f"TIMED $name $el%.2fs")

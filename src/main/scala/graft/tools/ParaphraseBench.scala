@@ -71,52 +71,48 @@ object ParaphraseBench {
       Seq("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
 
-    // per-run scratch root: fixed /tmp paths let concurrent or stale
-    // runs clobber each other's corpora and silently skew the
-    // recall/wall numbers this tool exists to report
-    val scratch = java.nio.file.Files.createTempDirectory("graft_para_")
-      .toString
-    val corpusPath = s"$scratch/corpus"
-    paraphraseCorpus(graft.Tables.documents(spark, srcDir), variants)
-      .repartition(cpus.toInt)
-      .write.mode("overwrite").parquet(corpusPath)
-    val docs = spark.read.parquet(corpusPath)
-    val nDocs = docs.count()
-    val nDistinct = docs.select("text").distinct().count()
+    graft.Scratch.scoped {
+      val scratch = graft.Scratch.dir("para_")
+      val corpusPath = s"$scratch/corpus"
+      paraphraseCorpus(graft.Tables.documents(spark, srcDir), variants)
+        .repartition(cpus.toInt)
+        .write.mode("overwrite").parquet(corpusPath)
+      val docs = spark.read.parquet(corpusPath)
+      val nDocs = docs.count()
+      val nDistinct = docs.select("text").distinct().count()
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val tau = 0.5
-    // warm codegen/JIT on a slice so neither contender pays startup
-    Dedup.minhashLsh(docs.limit(200), tau).write
-      .format("noop").mode("overwrite").save()
+      def timed[T](f: => T): (T, Double) = {
+        val t0 = System.nanoTime(); val r = f
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      val tau = 0.5
+      // warm codegen/JIT on a slice so neither contender pays startup
+      Dedup.minhashLsh(docs.limit(200), tau).write
+        .format("noop").mode("overwrite").save()
 
-    val (lsh, lshSec) = timed {
-      Dedup.lshPairs(docs, tau).write.mode("overwrite")
-        .parquet(s"$scratch/lsh")
-      spark.read.parquet(s"$scratch/lsh").count()
+      val (lsh, lshSec) = timed {
+        Dedup.lshPairs(docs, tau).write.mode("overwrite")
+          .parquet(s"$scratch/lsh")
+        spark.read.parquet(s"$scratch/lsh").count()
+      }
+      val (exact, exactSec) = timed {
+        Dedup.ngramJaccard(docs, tau).select("d1", "d2").write
+          .mode("overwrite").parquet(s"$scratch/exact")
+        spark.read.parquet(s"$scratch/exact").count()
+      }
+      val inter = spark.read.parquet(s"$scratch/lsh")
+        .join(spark.read.parquet(s"$scratch/exact"), Seq("d1", "d2"))
+        .count()
+      val recall = if (exact == 0) 1.0 else inter.toDouble / exact
+      val json =
+        f"""{"corpus":"$srcDir x$variants","n_docs":$nDocs,""" +
+          f""""n_distinct_texts":$nDistinct,"tau":$tau,""" +
+          f""""exact_pairs":$exact,"lsh_pairs":$lsh,""" +
+          f""""exact_sec":$exactSec%.1f,"lsh_sec":$lshSec%.1f,""" +
+          f""""recall":$recall%.4f}"""
+      println(json)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     }
-    val (exact, exactSec) = timed {
-      Dedup.ngramJaccard(docs, tau).select("d1", "d2").write
-        .mode("overwrite").parquet(s"$scratch/exact")
-      spark.read.parquet(s"$scratch/exact").count()
-    }
-    val inter = spark.read.parquet(s"$scratch/lsh")
-      .join(spark.read.parquet(s"$scratch/exact"), Seq("d1", "d2"))
-      .count()
-    val recall = if (exact == 0) 1.0 else inter.toDouble / exact
-    val json =
-      f"""{"corpus":"$srcDir x$variants","n_docs":$nDocs,""" +
-        f""""n_distinct_texts":$nDistinct,"tau":$tau,""" +
-        f""""exact_pairs":$exact,"lsh_pairs":$lsh,""" +
-        f""""exact_sec":$exactSec%.1f,"lsh_sec":$lshSec%.1f,""" +
-        f""""recall":$recall%.4f}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(scratch)))
     spark.stop()
   }
 }

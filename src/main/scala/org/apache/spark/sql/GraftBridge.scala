@@ -34,6 +34,12 @@ object GraftBridge {
           SubqueryAlias(view._1, view._2.queryExecution.analyzed)
       })
 
+  /** A new session on `spark`'s context and shared state that starts
+    * from a copy of its session state (confs, functions, planner rules);
+    * a conf set on the clone does not reach `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** The session's Hadoop configuration: the SparkContext's, with the
     * session's `spark.hadoop.*` and SQL overrides applied, as Spark's own
     * file sources read it. */

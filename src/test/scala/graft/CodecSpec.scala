@@ -16,7 +16,7 @@ class CodecSpec extends TestSparkSession {
 
   test("graft-wire DSv2 source: frame round trip, pruning, truncation") {
     import graft.sources.wire.{GraftWireWriter, GraftWireTable}
-    val dir = java.nio.file.Files.createTempDirectory("graft_wire").toString
+    val dir = Scratch.dir("wire")
     val ev = Tables.events(spark, sfDir)
     GraftWireWriter.writeFrames(EventCodec.encodeTrade(ev), dir)
     val back = spark.read.format("graft-wire").load(dir)
@@ -84,7 +84,7 @@ class CodecSpec extends TestSparkSession {
 
   test("graft-wire micro-batch stream ingests files incrementally") {
     import graft.functions.CodecOps
-    val dir = java.nio.file.Files.createTempDirectory("graft_wire_s")
+    val dir = java.nio.file.Paths.get(Scratch.dir("wire_s"))
     def frame(id: Long): Array[Byte] = {
       val p = tradePayload(id)
       CodecOps.leBytes(p.length.toLong, 4) ++ p
@@ -448,6 +448,29 @@ class CodecSpec extends TestSparkSession {
                             else x.accounts end))""").as("instructions"))
     assert(InstructionCodec.flattenDecode(bad).isEmpty,
       "truncated/foreign/out-of-range instructions must be dropped")
+  }
+
+  test("instruction decode drops a row whose second account is missing " +
+      "or out of range") {
+    import graft.sources.InstructionCodec
+    val txs = InstructionCodec.packTransactions(Tables.events(spark, sfDir))
+    val mangled = txs.select(col("tx_id"), col("account_keys"),
+      expr("""transform(instructions, x -> named_struct(
+                'event_id', x.event_id,
+                'data', x.data,
+                'accounts', case when x.event_id % 3 = 0
+                                 then slice(x.accounts, 1, 1)
+                            when x.event_id % 3 = 1
+                                 then array(x.accounts[0], 999)
+                            else x.accounts end))""").as("instructions"))
+    // collect(), not count(): count prunes the authority column, and
+    // with it the second index read
+    val got = InstructionCodec.flattenDecode(mangled).collect()
+      .map(_.getAs[Long]("event_id")).toSet
+    val want = Tables.events(spark, sfDir)
+      .filter(col("event_id") % 3 === 2).collect()
+      .map(_.getAs[Long]("event_id")).toSet
+    assert(want.nonEmpty && got == want)
   }
 
   test("json ingest captures corrupt lines without failing the job") {

@@ -55,7 +55,7 @@ class Round11OpsSpec extends AnyFunSuite with TestSparkSession {
   }
 
   test("DSv2 wire write: overwrite truncates, append adds, temps invisible") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_w11").toString
+    val dir = Scratch.dir("w11")
     def frames(n: Int, tag: Int) = (1 to n)
       .map(i => (s"", 0L, graft.functions.CodecOps.leBytes(tag * 100L + i, 8)))
       .toDF("file", "frame_idx", "payload")

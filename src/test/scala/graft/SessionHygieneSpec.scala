@@ -32,6 +32,36 @@ class SessionHygieneSpec extends TestSparkSession {
       }
   }
 
+  test("transformWithState harnesses never set the state-store provider " +
+      "on the shared session, even while they run") {
+    import java.util.concurrent.atomic.AtomicReference
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getAll.get(key)
+    val seen = new AtomicReference[Option[String]](before)
+    @volatile var building = true
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val poll = Future {
+        while (building) {
+          val now = spark.conf.getAll.get(key)
+          if (now != before) seen.set(now)
+          Thread.sleep(1)
+        }
+      }
+      val builds = Seq("q_stream_cusum", "q_stream_wallet_volume")
+        .map(q => Future(Scratch.scoped(
+          SparkEntry.queries(q)(spark, sfDir).collect())))
+      try Await.result(Future.sequence(builds), 5.minutes)
+      finally building = false
+      Await.result(poll, 1.minute)
+    } finally pool.shutdown()
+    assert(seen.get == before,
+      s"the shared session's $key read ${seen.get} while a harness ran")
+  }
+
   // every streaming harness runs a query to completion while it builds,
   // so each is checked on its own: a result sink that registers a view
   // (as a memory sink does) fails here

@@ -733,7 +733,7 @@ class StreamingExtensionsSpec extends TestSparkSession {
 
   test("sink compaction: one file per partition after, data unchanged") {
     import graft.sources.EventSink
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = Scratch.dir("compact")
     val ev = Tables.events(spark, sfDir)
     EventSink.writePartitionedByDay(ev, dir, buckets = 8)
     def partDirs = new java.io.File(dir).listFiles()
