@@ -46,54 +46,49 @@ object TextOps {
     * unsigned (hex is order-preserving), so the rolling min can compare
     * raw digests and hex-encode only the ~2/(w+1) winners; substring
     * positions count CODE POINTS exactly like Spark's `substring`
-    * (UTF8String.substringSQL), which the all-ASCII fast path preserves
-    * byte-for-byte and the general path delegates to UTF8String.
+    * (UTF8String.substringSQL): one byte cursor steps over the UTF-8
+    * text by the same lead-byte lengths Spark counts characters with,
+    * so each k-gram is hashed straight from the byte array. Only the
+    * last `w` digests are kept, in a ring indexed by position mod w.
     * Returns null when numChars < k + w - 1 (the caller's length filter
     * — no window fits). Output order is irrelevant downstream (the set
     * feeds joins/aggregates); sorting pins the plan output anyway. */
   def winnowFps(text: UTF8String, k: Int, w: Int): ArrayData = {
-    val nChars = text.numChars()
-    val n = nChars - k + 1 // number of k-gram positions
+    val n = text.numChars() - k + 1 // number of k-gram positions
     if (n < w) return null
     val md = Md5.get()
-    // digests for the whole doc, indexed by 0-based position
-    val digests = new Array[Array[Byte]](n)
-    if (text.numBytes() == nChars) {
-      // all-ASCII: chars == bytes, hash a sliding window over the raw
-      // byte array with zero per-position allocation beyond the digest
-      val bytes = text.getBytes
-      var p = 0
-      while (p < n) {
-        md.reset()
-        md.update(bytes, p, k)
-        digests(p) = md.digest()
-        p += 1
-      }
-    } else {
-      var p = 0
-      while (p < n) {
-        md.reset()
-        md.update(text.substring(p, p + k).getBytes)
-        digests(p) = md.digest()
-        p += 1
-      }
-    }
+    md.reset()
+    val bytes = text.getBytes
+    def nextChar(b: Int): Int =
+      math.min(b + UTF8String.numBytesForFirstByte(bytes(b)), bytes.length)
+    val ring = Array.fill(w)(new Array[Byte](16))
+    var start = 0 // byte offset of character p
+    var end = 0 // byte offset of character p + k
+    var c = 0
+    while (c < k) { end = nextChar(end); c += 1 }
     val seen = new java.util.LinkedHashSet[UTF8String]()
     var lastSel = -1
-    var pos = w - 1 // 0-based window end; windows end at w-1 .. n-1
-    while (pos < n) {
-      // rightmost minimum: scan right-to-left, replace on strictly-less
-      var sel = pos
-      var q = pos - 1
-      while (q > pos - w) {
-        if (compareDigests(digests(q), digests(sel)) < 0) sel = q
-        q -= 1
+    var p = 0
+    while (p < n) {
+      md.update(bytes, start, end - start)
+      md.digest(ring(p % w), 0, 16)
+      if (p >= w - 1) {
+        // rightmost minimum of the window ending at p: scan
+        // right-to-left, replace on strictly-less
+        var sel = p
+        var q = p - 1
+        while (q > p - w) {
+          if (compareDigests(ring(q % w), ring(sel % w)) < 0) sel = q
+          q -= 1
+        }
+        if (sel != lastSel) {
+          seen.add(hexDigest(ring(sel % w)))
+          lastSel = sel
+        }
       }
-      if (sel != lastSel) {
-        seen.add(hexDigest(digests(sel)))
-        lastSel = sel
-      }
-      pos += 1
+      start = nextChar(start)
+      if (end < bytes.length) end = nextChar(end)
+      p += 1
     }
     val out = new Array[AnyRef](seen.size)
     seen.toArray(out)

@@ -346,16 +346,52 @@ object EventOps {
     * window; the pair aggregation is map-side partial over a tiny key
     * space (|types|²).
     */
-  def typeTransitions(events: DataFrame): DataFrame = {
+  def typeTransitions(events: DataFrame): DataFrame =
+    typeSteps(events)
+      .filter(col("next_type").isNotNull)
+      .groupBy("event_type", "next_type")
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("user_id")).as("n_users"))
+
+  /** Each event with the type of its user's next event (`next_type`,
+    * null on the user's last event): the steps of the type chain. */
+  private def typeSteps(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     events
       .select(col("user_id"), tsUs.as("ts_us"), col("event_id"),
         col("event_type"))
       .withColumn("next_type", lead("event_type", 1).over(byUser))
-      .filter(col("next_type").isNotNull)
-      .groupBy("event_type", "next_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"))
+  }
+
+  /** Largest event-type taxonomy the type-chain operators take: their
+    * transition matrix (types² rows) is collected to the driver. */
+  private[graft] val MaxChainTypes = 1000
+
+  /** The [[typeTransitions]] chain, collected once: `types` is every
+    * event type, `sources` the types with an outgoing transition, and
+    * `p6` the transition matrix on the 1e-6 grid as (a, b, p₆) rows,
+    * p₆ = (c·10⁶) div (a's row total). */
+  private final case class TypeChain(types: Seq[String],
+      sources: Seq[String], p6: Seq[(String, String, Long)])
+
+  private def typeChain(events: DataFrame): TypeChain = {
+    // k types give at most k·(k + 1) (type, next type or null) rows
+    val cap = MaxChainTypes * (MaxChainTypes + 1)
+    val rows = typeSteps(events)
+      .groupBy(col("event_type").as("a"), col("next_type").as("b"))
+      .agg(count(lit(1)).as("c"))
+      .limit(cap + 1).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    val types = rows.map(_._1).distinct
+    require(rows.length <= cap && types.length <= MaxChainTypes,
+      s"type chain: more than $MaxChainTypes distinct event types; its " +
+      "transition matrix is collected to the driver")
+    val steps = rows.filter(_._2 != null)
+    val tot = steps.groupMapReduce(_._1)(_._3)(_ + _)
+    TypeChain(types, tot.keys.toSeq, steps.collect {
+      case (a, b, c) if a != null =>
+        (a, b, Math.multiplyExact(c, 1000000L) / tot(a))
+    })
   }
 
   /** A46: latest-state-per-key materialization — the batch equivalent of
@@ -841,37 +877,22 @@ object EventOps {
 
   /** A41: conversion-time distribution — first signup → first purchase
     * latency per wallet, summarized with exact integer-rank percentiles.
-    * The global rank runs terasort-shaped (range exchange + per-range
-    * row_number + metadata-sized offsets, same as
-    * [[graft.operators.Sampling.shuffleOrder]]) — an empty-partition
-    * window would drag every converted wallet through ONE task, and with
-    * microsecond deltas the distinct-value trick doesn't reduce
-    * anything. Ranks are positions in the (delta, wallet) total order,
-    * so results are independent of sampled range boundaries.
+    * The rank is a [[GlobalOrder]] rank on the (delta, wallet) order —
+    * with microsecond deltas the distinct-value trick doesn't reduce
+    * anything — and the converted count reads its frozen checkpoint.
     */
   def conversionTime(events: DataFrame): DataFrame = {
     val firsts = events.groupBy("user_id").agg(
       min(when(col("event_type") === "signup", tsUs)).as("t_signup"),
       min(when(col("event_type") === "purchase", tsUs)).as("t_purchase"))
-    val parted = firsts
-      .filter(col("t_signup").isNotNull &&
-        col("t_purchase") >= col("t_signup"))
-      .select(col("user_id"),
-        (col("t_purchase") - col("t_signup")).as("delta_us"))
-      .repartitionByRange(col("delta_us"), col("user_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    // exclusive prefix of per-partition counts via triangular self-join
-    // (#partitions rows) — no unpartitioned window
-    val counts = parted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-    val tot = parted.agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("pid").orderBy("delta_us", "user_id")
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("rn", row_number().over(w) + col("off"))
+    val order = GlobalOrder(firsts
+        .filter(col("t_signup").isNotNull &&
+          col("t_purchase") >= col("t_signup"))
+        .select(col("user_id"),
+          (col("t_purchase") - col("t_signup")).as("delta_us")),
+      Seq(col("delta_us"), col("user_id")))
+    val tot = order.parted.agg(count(lit(1)).as("cnt"))
+    order.withPosition("rn")
       .join(broadcast(tot))
       .agg(
         count(lit(1)).as("n_converted"),
@@ -1330,11 +1351,9 @@ object EventOps {
       .agg(count(lit(1)).as("n"))
 
   /** Percentile estimates for a day range, answered purely from the
-    * stored histograms: merged counts cumulate with the terasort prefix
-    * shape (the C44 selectByBudget pattern — range-exchange on the
-    * bucket key, per-partition window sums, a #partitions-row
-    * triangular offset join) — never an unpartitioned window and never
-    * a bucket×bucket pair fan-out — and each requested percentile
+    * stored histograms: merged counts cumulate as a [[GlobalOrder]]
+    * running sum over the bucket order — never an unpartitioned window
+    * and never a bucket×bucket pair fan-out — and each requested percentile
     * reports the inclusive upper edge of the first bucket whose
     * cumulative count reaches the rank.
     *
@@ -1353,21 +1372,9 @@ object EventOps {
     val merged = hists
       .filter(col("db").between(fromDb, toDb))
       .groupBy("bucket").agg(sum("n").as("n"))
-    val parted = merged
-      .repartitionByRange(col("bucket"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val psums = parted.groupBy("pid").agg(sum("n").as("c"))
-    val offsets = psums.as("a")
-      .join(psums.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-    val wp = Window.partitionBy("pid").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = parted.join(broadcast(offsets), "pid")
-      .withColumn("cum", sum("n").over(wp) + col("off"))
-      .select(col("bucket"), col("cum"))
-    val tot = parted.agg(sum("n").as("tot")) // reuse the checkpoint
+    val order = GlobalOrder(merged, Seq(col("bucket")), weight = Some("n"))
+    val cum = order.withPosition("cum").select(col("bucket"), col("cum"))
+    val tot = order.parted.agg(sum("n").as("tot"))
     val ps = hists.sparkSession
       .createDataFrame(percents.map(Tuple1(_)))
       .toDF("pct")
@@ -1734,15 +1741,13 @@ object EventOps {
     * aggregate collapses fully. All integers.
     *
     * Wallets are dictionary-encoded before the fan-out: a
-    * STRING-ORDER-PRESERVING dense rank (terasort shape — range
-    * exchange + per-partition row_number + broadcast triangular
-    * offsets, the walletRfm/curriculumBins contract, never a one-task
-    * window) so the ~755M-row pair exchange carries two longs instead
-    * of two wallet strings — and those two longs plus the direction
-    * flag are packed into ONE signed 64-bit key before the exchange
-    * (min<<32|max, direction in the sign), halving the dominant
-    * shuffle's bytes again. least/greatest/=!= commute with the
-    * encoding because rank order ≡ string order; strings rejoin only
+    * STRING-ORDER-PRESERVING dense rank (a [[GlobalOrder]] rank, never
+    * a one-task window) so the ~755M-row pair exchange carries two
+    * longs instead of two wallet strings — and those two longs plus
+    * the direction flag are packed into ONE signed 64-bit key before
+    * the exchange (min<<32|max, direction in the sign), halving the
+    * dominant shuffle's bytes again. least/greatest/=!= commute with
+    * the encoding because rank order ≡ string order; strings rejoin only
     * AFTER the two-direction filter, on the tiny surviving pair set.
     * Measured honestly: on the synthetic corpus's 12-char wallet ids
     * this is a 6% wall win at sf10 (90.1 → 84.4 s solo, same box) —
@@ -1787,31 +1792,21 @@ object EventOps {
       val n = sidesRows.get("n").asInstanceOf[Number].longValue
       math.max(sp, math.min(256L, (n + 1023) / 1024).toInt)
     }
-    // string-order-preserving wallet ids: rank over the (user_id) total
-    // order. localCheckpoint freezes the range boundaries so pid and the
-    // in-partition order agree between the two passes.
-    val dict0 = sides.select("user_id").distinct()
-      .repartitionByRange(nPart, col("user_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val dcounts = dict0.groupBy("pid").agg(count(lit(1)).as("c"))
-    val doffs = dcounts.as("a")
-      .join(dcounts.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
+    // string-order-preserving wallet ids: a [[GlobalOrder]] rank over
+    // the (user_id) total order
+    val dict0 = GlobalOrder(sides.select("user_id").distinct(),
+      Seq(col("user_id")), numPartitions = Some(nPart))
     // packed-key headroom guard: dense ranks must stay below 2^31 or
     // min*2^32+max overflows the signed pair key (see comment below).
-    // dict0 is checkpointed and the per-partition counts are
-    // metadata-sized, so this one action is ~free next to the fan-out.
-    val dictCount = dcounts.agg(coalesce(sum(col("c")), lit(0L)))
+    // The per-range totals are metadata-sized, so this one action is
+    // ~free next to the fan-out.
+    val dictCount = dict0.totals.agg(coalesce(sum(col("c")), lit(0L)))
       .head.getLong(0)
     require(dictCount < (1L << 31),
       s"washPairs: $dictCount distinct wallets exceeds the 2^31-1 " +
       "packed-pair-key capacity (min_uid*2^32+max_uid must stay " +
       "positive in a signed long); shard the corpus or widen the key")
-    val dict = dict0.join(broadcast(doffs), "pid")
-      .withColumn("uid", row_number().over(
-        Window.partitionBy("pid").orderBy("user_id")) + col("off"))
+    val dict = dict0.withPosition("uid")
       .select(col("user_id"), col("uid"))
       .localCheckpoint()
     val sidesP = sides.join(dict, "user_id")
@@ -2691,10 +2686,8 @@ object EventOps {
     * the (metric, user_id) total order — no ntile tie ambiguity, no
     * percentile interpolation, bit-identical across engines.
     *
-    * Shape: one user-keyed aggregate, then three global ranks — each
-    * the terasort shape ([[graft.operators.Sampling.shuffleOrder]]):
-    * range exchange on the metric, per-partition row_number, triangular
-    * partition offsets. NO unpartitioned window anywhere — at 10⁹
+    * Shape: one user-keyed aggregate, then three [[GlobalOrder]] ranks
+    * on (metric, user_id). NO unpartitioned window anywhere — at 10⁹
     * wallets each rank is a range sort, not a one-task funnel. */
   def walletRfm(events: DataFrame): DataFrame = {
     val per = events.groupBy("user_id")
@@ -2703,24 +2696,13 @@ object EventOps {
           .as("monetary_cents"))
       .localCheckpoint() // three rank passes + the final join read it
     val n = per.count()
-    def score(metric: String): DataFrame = {
-      val parted = per.select(col("user_id"), col(metric))
-        .repartitionByRange(col(metric), col("user_id"))
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint() // freeze range boundaries for both passes
-      val counts = parted.groupBy("pid").agg(count(lit(1)).as("c"))
-      val offsets = counts.as("a")
-        .join(counts.as("b"), col("b.pid") < col("a.pid"), "left")
-        .groupBy(col("a.pid").as("pid"))
-        .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-      val w = Window.partitionBy("pid")
-        .orderBy(col(metric), col("user_id"))
-      parted.join(broadcast(offsets), "pid")
-        .withColumn("rk", row_number().over(w) + col("off"))
+    def score(metric: String): DataFrame =
+      GlobalOrder(per.select(col("user_id"), col(metric)),
+          Seq(col(metric), col("user_id")))
+        .withPosition("rk")
         .select(col("user_id"),
           expr(s"cast(((rk - 1) * 5) div $n + 1 as int)")
             .as(s"${metric.take(1)}_score"))
-    }
     per
       .join(score("last_us"), "user_id")
       .join(score("n_events"), "user_id")
@@ -2740,80 +2722,35 @@ object EventOps {
     * two is the drift a funnel analysis chases). Ten power-iteration
     * steps in pure integer arithmetic under the PageRank contract:
     * transition probabilities fix to the 1e-6 grid
-    * (p₆ = (c·10⁶) div rowTotal — c·10⁶ wraps a long once one ordered
-    * pair exceeds ~9·10¹² transitions, documented like the A56 moment
-    * domain), mass flows as (π·p₆) div 10⁶ with π on a 10¹² scale, so
+    * (p₆ = (c·10⁶) div rowTotal — c·10⁶ overflows a long, an error,
+    * once one ordered pair exceeds ~9·10¹² transitions, documented like
+    * the A56 moment domain), mass flows as (π·p₆) div 10⁶ with π on a 10¹² scale, so
     * every step is truncating-exact and the fixed point is
     * bit-identical to the oracle's unrolled CTEs. Types with no
     * outgoing transition (only ever a user's final event) leave the
     * chain, documented; truncation leaks ≤ 10⁻⁶ relative mass/step.
     *
     * Shape: one lead window (user-partitioned) + one keyed count build
-    * the type × type matrix — TINY (k² rows) at any corpus size — so
-    * every iteration is a broadcast join over metadata-sized state;
-    * the corpus is read exactly once. */
+    * the type × type matrix — TINY (k² rows) at any corpus size, and
+    * past [[MaxChainTypes]] types an error — collected once; every
+    * iteration runs on the driver. The corpus is read exactly once. */
   def stationaryTypeMix(events: DataFrame, iterations: Int = 10)
       : DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val steps = events
-      .select(col("user_id"), tsUs.as("ts_us"), col("event_id"),
-        col("event_type"))
-      .withColumn("next_type", lead("event_type", 1).over(byUser))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("a"), col("next_type").as("b"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // row totals + the matrix read it
-    val tot = steps.groupBy("a").agg(sum("c").as("tot"))
-    val tm = steps.join(broadcast(tot), "a")
-      .select(col("a"), col("b"), expr("(c * 1000000) div tot").as("p6"))
-      .localCheckpoint()
-    val types = tot.select(col("a").as("t")).localCheckpoint()
-    val k = types.count() // metadata-sized action on the tiny type set
-    if (k == 0)
-      return types.select(col("t").as("event_type"),
-        lit(0L).as("pr"), lit(0.0).as("share"))
+    val chain = typeChain(events)
+    val ts = chain.sources
     val scale = 1000000000000L
-    if (k <= 1000) {
-      // driver-side matrix power: the transition matrix is taxonomy²
-      // rows — KBs, collected once like the codebook sites — and the
-      // iteration repeats the exact integer arithmetic of the
-      // distributed loop verbatim (per-row (pr·p6) div 1e6 BEFORE the
-      // sum; long sums are order-independent), so the fixed point is
-      // bit-identical while 10 rounds of broadcast joins + lineage
-      // checkpoints collapse to zero jobs. The distributed loop below
-      // remains the fallback for an unbounded type domain.
-      val tmRows = tm.select(col("a"), col("b"), col("p6")).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val ts = types.collect().map(_.getString(0))
-      var pi = ts.map(t => t -> (scale / k)).toMap
-      for (_ <- 1 to iterations) {
-        val inc = scala.collection.mutable.HashMap.empty[String, Long]
-        tmRows.foreach { case (a, b, p6) =>
-          // getOrElse: an `a` outside the collected type set (impossible
-          // by construction — types IS tm's distinct a-set) contributes
-          // 0, exactly like the distributed loop's inner join dropping
-          // the row, instead of a NoSuchElementException
-          inc(b) = inc.getOrElse(b, 0L) + (pi.getOrElse(a, 0L) * p6) / 1000000L
-        }
-        pi = ts.map(t => t -> inc.getOrElse(t, 0L)).toMap
+    var pi = ts.map(t => t -> (scale / ts.length)).toMap
+    for (_ <- 1 to iterations) {
+      val inc = scala.collection.mutable.HashMap.empty[String, Long]
+      chain.p6.foreach { case (a, b, p6) =>
+        inc(b) = inc.getOrElse(b, 0L) + (pi(a) * p6) / 1000000L
       }
-      val spark = events.sparkSession
-      import spark.implicits._
-      return ts.toSeq.map(t =>
-          (t, pi(t), pi(t).toDouble / scale.toDouble))
-        .toDF("event_type", "pr", "share")
+      pi = ts.map(t => t -> inc.getOrElse(t, 0L)).toMap
     }
-    var pi = types.select(col("t"), lit(scale / k).as("pr"))
-    for (i <- 1 to iterations) {
-      val inc = tm.join(broadcast(pi), col("a") === col("t"))
-        .select(col("b"), expr("(pr * p6) div 1000000").as("m"))
-        .groupBy("b").agg(sum("m").as("inc"))
-      pi = types.join(broadcast(inc), col("t") === col("b"), "left_outer")
-        .select(col("t"), coalesce(col("inc"), lit(0L)).as("pr"))
-      if (i % 3 == 0 || i == iterations) pi = pi.localCheckpoint()
-    }
-    pi.select(col("t").as("event_type"), col("pr"),
-      (col("pr").cast("double") / lit(scale.toDouble)).as("share"))
+    val spark = events.sparkSession
+    import spark.implicits._
+    ts.map(t => (t, pi(t), pi(t).toDouble / scale.toDouble))
+      .toDF("event_type", "pr", "share")
   }
 
   /** A109: last-digit uniformity audit — the χ² statistic of the cent
@@ -2863,77 +2800,31 @@ object EventOps {
     * CTEs. Dangling non-absorbing types (no outflow) stay at 0,
     * documented; truncation under-counts by ≤ 10⁻⁶ relative per step.
     *
-    * Shape: identical to A108 — the k²-row matrix iterates under
-    * broadcast joins; the corpus is read once. */
+    * Shape: identical to A108 — the same collected k²-row matrix
+    * iterates on the driver; the corpus is read once. */
   def absorptionProbabilities(events: DataFrame,
       target: String = "purchase", trap: String = "error",
       iterations: Int = 10): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val steps = events
-      .select(col("user_id"), tsUs.as("ts_us"), col("event_id"),
-        col("event_type"))
-      .withColumn("next_type", lead("event_type", 1).over(byUser))
-      .filter(col("next_type").isNotNull)
-      .filter(!col("event_type").isin(target, trap))
-      .groupBy(col("event_type").as("a"), col("next_type").as("b"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // row totals + the matrix read it
-    val tot = steps.groupBy("a").agg(sum("c").as("tot"))
-    val tm = steps.join(broadcast(tot), "a")
-      .select(col("a"), col("b"), expr("(c * 1000000) div tot").as("p6"))
-      .localCheckpoint()
-    val types = events.select(col("event_type").as("t")).distinct()
-      .localCheckpoint()
+    val chain = typeChain(events)
+    val ts = chain.types
+    val tm = chain.p6.filter { case (a, _, _) => a != target && a != trap }
     val scale = 1000000000000L
-    val k = types.count() // metadata-sized action on the tiny type set
-    if (k > 0 && k <= 1000) {
-      // driver-side matrix power over the taxonomy²-bounded transition
-      // matrix — same collect-the-codebook pattern and bit-identical
-      // integer arithmetic as stationaryTypeMix's fast path (per-row
-      // (p6·p) div 1e6 before the long sum); the distributed loop
-      // below stays as the unbounded-domain fallback.
-      val tmRows = tm.select(col("a"), col("b"), col("p6")).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val ts = types.collect().map(_.getString(0))
-      var p = ts.map(t =>
-        t -> (if (t == target) scale else 0L)).toMap
-      for (_ <- 1 to iterations) {
-        val inc = scala.collection.mutable.HashMap.empty[String, Long]
-        tmRows.foreach { case (a, b, p6) =>
-          // getOrElse: a `b` outside the collected type set degrades to
-          // a 0 contribution like the distributed loop's inner join on
-          // b, instead of crashing the fast path (impossible today —
-          // types spans every event_type — but the two regimes must
-          // fail the same way if that invariant ever breaks)
-          inc(a) = inc.getOrElse(a, 0L) + (p6 * p.getOrElse(b, 0L)) / 1000000L
-        }
-        p = ts.map { t =>
-          t -> (if (t == target) scale
-                else if (t == trap) 0L
-                else inc.getOrElse(t, 0L))
-        }.toMap
+    var p = ts.map(t => t -> (if (t == target) scale else 0L)).toMap
+    for (_ <- 1 to iterations) {
+      val inc = scala.collection.mutable.HashMap.empty[String, Long]
+      tm.foreach { case (a, b, p6) =>
+        inc(a) = inc.getOrElse(a, 0L) + (p6 * p(b)) / 1000000L
       }
-      val spark = events.sparkSession
-      import spark.implicits._
-      return ts.toSeq.map(t =>
-          (t, p(t), p(t).toDouble / 1e12))
-        .toDF("event_type", "p", "prob")
+      p = ts.map { t =>
+        t -> (if (t == target) scale
+              else if (t == trap) 0L
+              else inc.getOrElse(t, 0L))
+      }.toMap
     }
-    var p = types.select(col("t"),
-      when(col("t") === target, lit(scale)).otherwise(lit(0L)).as("p"))
-    for (i <- 1 to iterations) {
-      val inc = tm.join(broadcast(p), col("b") === col("t"))
-        .select(col("a"), expr("(p6 * p) div 1000000").as("m"))
-        .groupBy("a").agg(sum("m").as("np"))
-      p = types.join(broadcast(inc), col("t") === col("a"), "left_outer")
-        .select(col("t"),
-          when(col("t") === target, lit(scale))
-            .when(col("t") === trap, lit(0L))
-            .otherwise(coalesce(col("np"), lit(0L))).as("p"))
-      if (i % 3 == 0 || i == iterations) p = p.localCheckpoint()
-    }
-    p.select(col("t").as("event_type"), col("p"),
-      (col("p").cast("double") / lit(1e12)).as("prob"))
+    val spark = events.sparkSession
+    import spark.implicits._
+    ts.map(t => (t, p(t), p(t).toDouble / 1e12))
+      .toDF("event_type", "p", "prob")
   }
 
   /** A110: FIFO trade matching — each sell consumes the OLDEST

@@ -114,40 +114,17 @@ object Sampling {
     * content-stable hash (md5, portable across engines) rather than an
     * RNG. Same seed → same permutation on any cluster layout or retry;
     * different seed → an independent permutation per epoch. One global
-    * sort expressed as a rank so downstream writers can range-partition
-    * on `shuffle_rank` (at 100 TB the sort is the usual terasort shape —
-    * range exchange + local sort, no single-point bottleneck).
+    * rank on the (shuffle_key, id) order ([[GlobalOrder]]), so
+    * downstream writers can range-partition on `shuffle_rank`.
     */
-  def shuffleOrder(df: DataFrame, idCol: String, seed: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // terasort shape, not a global window (an empty-partition window
-    // would drag every row through ONE task): range-exchange on the
-    // shuffle key, rank within each range, then add per-range offsets.
-    // The range partitioning is frozen (localCheckpoint) so the offset
-    // and rank passes see identical boundaries; the offsets table is one
-    // row per partition — metadata-sized. Ranks are positions in the
-    // (shuffle_key, id) total order, so the output is independent of
-    // where the sampled range boundaries land.
-    val parted = df
-      .select(col(idCol),
-        md5(concat(lit(seed), col(idCol).cast("string")).cast("binary"))
-          .as("shuffle_key"))
-      .repartitionByRange(col("shuffle_key"), col(idCol))
-      .withColumn("pid", org.apache.spark.sql.functions.spark_partition_id())
-      .localCheckpoint()
-    // exclusive prefix of per-partition counts via triangular self-join
-    // (#partitions rows) — no unpartitioned window
-    val counts = parted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-    val w = Window.partitionBy("pid").orderBy(col("shuffle_key"), col(idCol))
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("shuffle_rank",
-        (row_number().over(w) + col("off")).cast("bigint"))
+  def shuffleOrder(df: DataFrame, idCol: String, seed: String): DataFrame =
+    GlobalOrder(df
+        .select(col(idCol),
+          md5(concat(lit(seed), col(idCol).cast("string")).cast("binary"))
+            .as("shuffle_key")),
+        Seq(col("shuffle_key"), col(idCol)))
+      .withPosition("shuffle_rank")
       .select(col(idCol), col("shuffle_key"), col("shuffle_rank"))
-  }
 
   /** C36: deterministic train/val/test split — hash-bucket assignment
     * (md5 first two hex digits → 256 buckets) so membership is a pure
@@ -194,36 +171,17 @@ object Sampling {
     * the cumulative token count BEFORE it is still under the budget, so
     * the cut is a deterministic function of the (score desc, doc_id)
     * total order; the boundary document is kept (packers truncate
-    * downstream), matching greedy selection.
-    *
-    * Scale: the global running sum is the terasort shape, not a global
-    * window — range-exchange on the order key (frozen with
-    * localCheckpoint so every pass sees identical boundaries),
-    * per-partition window sums, and a triangular #partitions-row offset
-    * join. Nothing funnels through one task. */
+    * downstream), matching greedy selection. The global running sum is
+    * a [[GlobalOrder]] position weighted by tokens. */
   def selectByBudget(df: DataFrame, scoreCol: Column, tokensCol: Column,
-      budget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parted = df
-      .select(col("doc_id"), scoreCol.as("score"), tokensCol.as("tokens"))
-      .repartitionByRange(col("score").desc, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val sums = parted.groupBy("pid").agg(sum("tokens").as("c"))
-    val offsets = sums.as("a")
-      .join(sums.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-    val w = Window.partitionBy("pid")
-      .orderBy(col("score").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("cum_tokens",
-        (sum("tokens").over(w) + col("off")).cast("bigint"))
+      budget: Long): DataFrame =
+    GlobalOrder(
+        df.select(col("doc_id"), scoreCol.as("score"), tokensCol.as("tokens")),
+        Seq(col("score").desc, col("doc_id")), weight = Some("tokens"))
+      .withPosition("cum_tokens")
       .filter(col("cum_tokens") - col("tokens") < budget)
       .select(col("doc_id"), col("score"), col("tokens").cast("bigint")
         .as("tokens"), col("cum_tokens"))
-  }
 
   /** C64: curriculum stage assignment — every document binned into
     * `nBins` equal-population stages by token count (short-to-long is
@@ -234,29 +192,17 @@ object Sampling {
     * as the RFM scores, so ties split deterministically and both
     * engines agree without any percentile interpolation.
     *
-    * Shape: the rank is the terasort shape — range exchange on
-    * (n_tokens, doc_id), per-partition row_number, triangular offsets
-    * from the broadcast partition counts — NO unpartitioned window at
-    * 10⁹ documents; token counts come from one codegen'd projection
-    * (text never shuffles — the range exchange moves (id, count)
-    * pairs). */
+    * Shape: the rank is a [[GlobalOrder]] rank on (n_tokens, doc_id)
+    * — NO unpartitioned window at 10⁹ documents; token counts come from
+    * one codegen'd projection (text never shuffles — the range exchange
+    * moves (id, count) pairs). */
   def curriculumBins(docs: DataFrame, nBins: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("bigint").as("n_tokens"))
       .localCheckpoint() // count + the frozen range exchange read it
     val n = toks.count()
-    val parted = toks.repartitionByRange(col("n_tokens"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // freeze range boundaries for both passes
-    val counts = parted.groupBy("pid").agg(count(lit(1)).as("c"))
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b.pid") < col("a.pid"), "left")
-      .groupBy(col("a.pid").as("pid"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
-    val w = Window.partitionBy("pid").orderBy(col("n_tokens"), col("doc_id"))
-    parted.join(broadcast(offsets), "pid")
-      .withColumn("rk", row_number().over(w) + col("off"))
+    GlobalOrder(toks, Seq(col("n_tokens"), col("doc_id")))
+      .withPosition("rk")
       .select(col("doc_id"), col("n_tokens"),
         expr(s"cast(((rk - 1) * $nBins) div $n + 1 as int)").as("stage"))
   }

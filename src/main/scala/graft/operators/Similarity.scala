@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -237,47 +237,7 @@ object Similarity {
       emb.filter(col("vec_id") % seedEvery === 0)
         .withColumn("cell", col("vec_id")), "cell")
     (1 to iters).foreach { _ =>
-      // reassemble centroid vectors distributed: a narrow groupBy over
-      // |k|·dims rows, then broadcast the |k| vectors for a codegen'd
-      // argmin pass (the interpreted transform lambda touches only the
-      // k broadcast rows, never the data side)
-      val cvecs = cents.groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("i"), col("centroid"))))
-          .as("pairs"))
-        .select(col("cell"),
-          expr("transform(pairs, p -> cast(p.centroid as float))").as("cvec"))
-      // argmin: when the centroid table is small enough to ride as a
-      // codegen literal (the common regime — the C7e gate runs on an
-      // id-bounded slice, so cells ≤ maxId/seedEvery), ONE compiled
-      // [[graft.functions.PqArgmin]] pass per vector replaces the
-      // n·k crossJoin fan-out through the min_by aggregate; arithmetic
-      // and (d2, cell) tie-break are bit-identical (VecOps.pqArgmin
-      // doc). Past the literal bound — unbounded kmeansFit seeding is
-      // O(n/seedEvery) centroids, the documented C7e scale caveat —
-      // the broadcast-join + min_by formulation is kept verbatim.
-      val probe = cvecs.limit(4097).collect()
-      val assigned =
-        if (probe.nonEmpty && probe.length <= 4096) {
-          val entries = probe.map(r =>
-            (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-          // null embeddings get the smallest cell, matching the
-          // crossJoin fallback (null d2 → argKey MaxValue for every
-          // cell → min_by tie-break picks the min cell id) — without
-          // the coalesce the two regimes disagreed on null vectors
-          emb.select(col("vec_id"), col("embedding"),
-            coalesce(graft.functions.exprs.pq_argmin(col("embedding"),
-                entries.flatMap(_._2), entries.map(_._1)),
-              lit(entries.head._1)).as("cell"))
-        } else emb.crossJoin(broadcast(cvecs))
-          .select(col("vec_id"), col("embedding"), col("cell"),
-            (vec_dot(col("embedding"), col("embedding"))
-              - vec_dot(col("embedding"), col("cvec")) * 2
-              + vec_dot(col("cvec"), col("cvec"))).as("d2"))
-          .groupBy("vec_id")
-          .agg(min_by(struct(col("cell"), col("embedding")),
-            struct(argKey(col("d2")), col("cell"))).as("am"))
-          .select(col("vec_id"), col("am.embedding").as("embedding"),
-            col("am.cell").as("cell"))
+      val assigned = nearestCells(emb, centroidVectors(cents))
       cents = Checkpoints.truncate(centroids(assigned, "cell"))
     }
     cents
@@ -285,50 +245,79 @@ object Similarity {
 
   /** C7e gate support: total assignment cost of `emb` under the given
     * centroid table — each vector's squared distance to its nearest
-    * centroid, summed, plus the assigned-vector count. One broadcast of
-    * the |k| centroid vectors and one map-side partial aggregate (the
-    * same shape as the [[kmeansFit]] assignment pass), reduced to a
-    * single row; Lloyd's monotonicity makes this the driver-checkable
-    * invariant of the fit.
+    * centroid, summed, plus the assigned-vector count. The
+    * [[kmeansFit]] assignment pass, then d2 to the chosen cell
+    * recomputed with the same index-order vec_dot against the
+    * broadcast cell vectors (the identical double the argmin compared),
+    * reduced to a single row; Lloyd's monotonicity makes this the
+    * driver-checkable invariant of the fit.
     */
   def kmeansCost(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val cvecs = cents.groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("i"), col("centroid"))))
-        .as("pairs"))
-      .select(col("cell"),
-        expr("transform(pairs, p -> cast(p.centroid as float))").as("cvec"))
-    // same literal-kernel split as kmeansFit's assign: when the
-    // centroid table fits a codegen literal, ONE PqArgmin pass picks
-    // each vector's nearest cell (bit-identical d2 arithmetic and
-    // NaN-to-MaxValue guard), then d2 to THAT cell is recomputed with
-    // the same index-order vec_dot — the identical double the
-    // crossJoin's min(argKey(d2)) produced — against the broadcast
-    // cell vectors. Past the literal bound the crossJoin formulation
-    // is kept verbatim (unbounded kmeansFit seeding, the C7e caveat).
+    val cvecs = centroidVectors(cents)
+    nearestCells(emb, cvecs)
+      .join(broadcast(cvecs), "cell")
+      .select(col("vec_id"),
+        argKey(vec_dot(col("embedding"), col("embedding"))
+          - vec_dot(col("embedding"), col("cvec")) * 2
+          + vec_dot(col("cvec"), col("cvec"))).as("d2min"))
+      .agg(sum(col("d2min")).as("cost"), count(lit(1)).as("n"))
+  }
+
+  /** One array per `keys` group: the group's `v` values in `i` order,
+    * each cast to `elem`, as column `out` — component rows reassembled
+    * into vectors. A narrow groupBy; the interpreted transform lambda
+    * touches only the grouped rows. */
+  private def gather(rows: DataFrame, keys: Seq[String], i: String,
+      v: String, elem: String, out: String): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col(i), col(v)))).as("pairs"))
+      .select(keys.map(col) :+
+        expr(s"transform(pairs, p -> cast(p.$v as $elem))").as(out): _*)
+
+  /** (cell, cvec) float vectors of a [[centroids]] table. */
+  private def centroidVectors(cents: DataFrame): DataFrame =
+    gather(cents, Seq("cell"), "i", "centroid", "float", "cvec")
+
+  /** A `pq_argmin` over collected (id, vector) pairs, laid out in id
+    * order: the nearest id to `v`, null when `v` is null. */
+  private def argminLit(v: Column, vecs: Seq[(Long, Seq[Float])]): Column = {
+    val entries = vecs.sortBy(_._1)
+    graft.functions.exprs.pq_argmin(v, entries.flatMap(_._2).toArray,
+      entries.map(_._1).toArray)
+  }
+
+  /** (vec_id, embedding, cell): each vector's nearest centroid of
+    * `cvecs`, ties to the smaller cell, and a null embedding to the
+    * smallest cell.
+    *
+    * When the centroid table is small enough to ride as a codegen
+    * literal (the common regime — the C7e gate runs on an id-bounded
+    * slice, so cells ≤ maxId/seedEvery), ONE compiled
+    * [[graft.functions.PqArgmin]] pass per vector replaces the n·k
+    * crossJoin fan-out through the min_by aggregate; arithmetic and
+    * (d2, cell) tie-break are bit-identical (VecOps.pqArgmin doc). Past
+    * 4,096 cells — unbounded kmeansFit seeding is O(n/seedEvery)
+    * centroids, the documented C7e scale caveat — the broadcast-join +
+    * min_by formulation runs instead; there every d2 of a null vector
+    * is null, argKey maps it to MaxValue and the cell tie-break picks
+    * the smallest, which the literal regime's coalesce reproduces. */
+  private def nearestCells(emb: DataFrame, cvecs: DataFrame): DataFrame = {
     val probe = cvecs.limit(4097).collect()
-    val perVec =
-      if (probe.nonEmpty && probe.length <= 4096) {
-        val entries = probe.map(r =>
-          (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-        // null embeddings: smallest cell, like the crossJoin fallback
-        // (see kmeansFit) — d2min then evaluates to MaxValue in both
-        emb.select(col("vec_id"), col("embedding"),
-          coalesce(graft.functions.exprs.pq_argmin(col("embedding"),
-              entries.flatMap(_._2), entries.map(_._1)),
-            lit(entries.head._1)).as("cell"))
-          .join(broadcast(cvecs), "cell")
-          .select(col("vec_id"),
-            argKey(vec_dot(col("embedding"), col("embedding"))
-              - vec_dot(col("embedding"), col("cvec")) * 2
-              + vec_dot(col("cvec"), col("cvec"))).as("d2min"))
-      } else emb.crossJoin(broadcast(cvecs))
-        .select(col("vec_id"),
-          (vec_dot(col("embedding"), col("embedding"))
-            - vec_dot(col("embedding"), col("cvec")) * 2
-            + vec_dot(col("cvec"), col("cvec"))).as("d2"))
-        .groupBy("vec_id")
-        .agg(min(argKey(col("d2"))).as("d2min"))
-    perVec.agg(sum(col("d2min")).as("cost"), count(lit(1)).as("n"))
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    if (probe.nonEmpty && probe.length <= 4096)
+      emb.select(col("vec_id"), col("embedding"),
+        coalesce(argminLit(col("embedding"), probe),
+          lit(probe.map(_._1).min)).as("cell"))
+    else emb.crossJoin(broadcast(cvecs))
+      .select(col("vec_id"), col("embedding"), col("cell"),
+        (vec_dot(col("embedding"), col("embedding"))
+          - vec_dot(col("embedding"), col("cvec")) * 2
+          + vec_dot(col("cvec"), col("cvec"))).as("d2"))
+      .groupBy("vec_id")
+      .agg(min_by(struct(col("cell"), col("embedding")),
+        struct(argKey(col("d2")), col("cell"))).as("am"))
+      .select(col("vec_id"), col("am.embedding").as("embedding"),
+        col("am.cell").as("cell"))
   }
 
   /** C7f: per-subspace PQ codebook, Lloyd-refined. The embedding space
@@ -430,14 +419,10 @@ object Similarity {
     * accept as an injectable coarse quantizer. |k|·dims rows in, |k|
     * rows out: one narrow groupBy, metadata-sized. */
   def ivfCentroidTable(kmeansCents: DataFrame): DataFrame =
-    withNorm(kmeansCents
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("i"), col("centroid"))))
-          .as("pairs"))
-        .select(col("cell").as("cent_id"),
-          expr("transform(pairs, p -> cast(p.centroid as float))")
-            .as("embedding")))
-      .select(col("cent_id"), col("embedding").as("ce"), col("n2").as("cn"))
+    withNorm(gather(kmeansCents, Seq("cell"), "i", "centroid", "float",
+        "embedding"))
+      .select(col("cell").as("cent_id"), col("embedding").as("ce"),
+        col("n2").as("cn"))
 
   private def subspaces(emb: DataFrame, dims: Int, m: Int): DataFrame = {
     val w = dims / m
@@ -496,54 +481,34 @@ object Similarity {
       // a subspace absent from the codebook yields null and is
       // filtered, exactly like the former inner join, and a null
       // subvector takes its subspace's smallest code — what the join's
-      // min_by does when every d2 is null (argKey → MaxValue).
-      // The literal chain is SIZE-BOUNDED like the kmeans paths: past
-      // 4096 collected rows (callers passing a large maxCodes·m) the
-      // broadcast-join + min_by formulation runs instead — an m-way
-      // when() chain of oversized literal matrices would blow codegen
-      // method limits into the interpreted path or strain the driver.
-      val cbRows = cb.select(col("sub"), col("code"), col("cw"))
-        .limit(4097).collect()
-      val assigned = if (cbRows.nonEmpty && cbRows.length <= 4096) {
-        val codeExpr = cbRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-          .foldLeft(lit(null).cast("bigint")) { case (acc, (sub, rs)) =>
-            val entries = rs.map(r =>
-              (r.getLong(1), r.getSeq[Float](2).toArray)).sortBy(_._1)
-            when(col("sub") === sub,
-              coalesce(graft.functions.exprs.pq_argmin(col("sv"),
-                  entries.flatMap(_._2), entries.map(_._1)),
-                lit(entries.head._1)))
-              .otherwise(acc)
-          }
-        trainSubs
-          .select(col("vec_id"), col("sub"), codeExpr.as("code"), col("sv"))
-          .filter(col("code").isNotNull)
-      } else trainSubs.join(broadcast(cb), "sub")
-        .select(col("vec_id"), col("sub"), col("code"), col("sv"),
-          (vec_dot(col("sv"), col("sv"))
-            - vec_dot(col("sv"), col("cw")) * 2
-            + vec_dot(col("cw"), col("cw"))).as("d2"))
-        .groupBy(col("vec_id"), col("sub"))
-        .agg(min_by(struct(col("code"), col("sv")),
-          struct(argKey(col("d2")), col("code"))).as("am"))
-        .select(col("vec_id"), col("sub"),
-          col("am.code").as("code"), col("am.sv").as("sv"))
+      // min_by does when every d2 is null (argKey → MaxValue). Each
+      // subspace's matrix rides the generated class as one reference
+      // object, so the m-way when() chain grows with m, not with the
+      // codebook.
+      val codeExpr = cb.select(col("sub"), col("code"), col("cw")).collect()
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .foldLeft(lit(null).cast("bigint")) { case (acc, (sub, rs)) =>
+          val codes = rs.map(r => (r.getLong(1), r.getSeq[Float](2))).toSeq
+          when(col("sub") === sub,
+            coalesce(argminLit(col("sv"), codes), lit(codes.map(_._1).min)))
+            .otherwise(acc)
+        }
+      val assigned = trainSubs
+        .select(col("vec_id"), col("sub"), codeExpr.as("code"), col("sv"))
+        .filter(col("code").isNotNull)
       // update step: exact fixed-grid means per (sub, code, component),
       // reassembled to float codeword vectors (same trick as kmeansFit)
-      cb = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("i", "v")))
-        .groupBy("sub", "code", "i")
-        .agg(count(lit(1)).as("n"),
-          sum(expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
-            .as("sum6"))
-        .select(col("sub"), col("code"), col("i"),
-          (col("sum6").cast("double") / col("n").cast("double") / 1e6)
-            .as("c"))
-        .groupBy("sub", "code")
-        .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("pairs"))
-        .select(col("sub"), col("code"),
-          expr("transform(pairs, p -> cast(p.c as float))").as("cw"))
-        .localCheckpoint(eager = true)
+      cb = Checkpoints.truncate(gather(assigned
+          .select(col("sub"), col("code"),
+            posexplode(col("sv")).as(Seq("i", "v")))
+          .groupBy("sub", "code", "i")
+          .agg(count(lit(1)).as("n"),
+            sum(expr("cast(round(cast(v as double) * 1000000, 0) as bigint)"))
+              .as("sum6"))
+          .select(col("sub"), col("code"), col("i"),
+            (col("sum6").cast("double") / col("n").cast("double") / 1e6)
+              .as("c")),
+        Seq("sub", "code"), "i", "c", "float", "cw"))
     }
     cb
   }
@@ -562,11 +527,7 @@ object Similarity {
     pqAssign(emb, pqCodebook(emb, dims, m, seedEvery, maxCodes = maxCodes,
         trainEvery = trainEvery),
         dims, m)
-      .groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("sub"), col("code"))))
-        .as("pairs"))
-      .select(col("vec_id"),
-        expr("transform(pairs, p -> cast(p.code as int))").as("codes"))
+      .transform(gather(_, Seq("vec_id"), "sub", "code", "int", "codes"))
 
   /** Nearest-codeword assignment per (vector, subspace).
     *
@@ -586,8 +547,7 @@ object Similarity {
     * when the codebook is empty. Shared by the exploded-row assign
     * ([[pqAssign]]) and the array-form assign the ADC kernel scans. */
   private def pqCodeCols(codebook: DataFrame, dims: Int,
-      m: Int): Option[Seq[org.apache.spark.sql.Column]] = {
-    import graft.functions.exprs.pq_argmin
+      m: Int): Option[Seq[Column]] = {
     val w = dims / m
     val rows = codebook.select(col("sub"), col("code"), col("cw")).collect()
     if (rows.isEmpty) return None
@@ -595,10 +555,8 @@ object Similarity {
     Some((0 until m).map { sub =>
       bySub.get(sub) match {
         case Some(rs) =>
-          val entries = rs.map(r => (r.getLong(1),
-            r.getSeq[Float](2).toArray)).sortBy(_._1)
-          pq_argmin(slice(col("embedding"), sub * w + 1, w),
-            entries.flatMap(_._2), entries.map(_._1))
+          argminLit(slice(col("embedding"), sub * w + 1, w),
+            rs.map(r => (r.getLong(1), r.getSeq[Float](2))).toSeq)
         case None => lit(null).cast("bigint") // no codewords: the old
                                               // inner join dropped the
                                               // subspace — filtered below
@@ -668,10 +626,13 @@ object Similarity {
     // the n·m·q-row partial aggregate — the serve path's dominant
     // stage — leaving one compiled scan feeding the rank window (which
     // Spark bounds map-side via WindowGroupLimit). Past the literal
-    // bound (huge query batches) the join formulation runs verbatim.
+    // bound (huge query batches) the join formulation runs verbatim. So
+    // does a batch with a null lookup (a query with a null subvector):
+    // its decimal sum skips the null and is null when every lookup of
+    // a row is, which one long sum cannot express.
     val qtProbe = qTable.limit(65537).collect()
-    val codeColsOpt = if (qtProbe.nonEmpty && qtProbe.length <= 65536)
-      pqCodeCols(cb, dims, m) else None
+    val codeColsOpt = if (qtProbe.nonEmpty && qtProbe.length <= 65536 &&
+        !qtProbe.exists(_.isNullAt(3))) pqCodeCols(cb, dims, m) else None
     codeColsOpt match {
       case Some(codeCols) =>
         val subIds: Array[Array[Long]] = (0 until m).map { sub =>
@@ -683,8 +644,7 @@ object Similarity {
           val scaled: Array[Array[Long]] = {
             val mine = qtProbe.iterator.filter(r =>
               r.getLong(0) == qid).map(r =>
-              (r.getInt(1), r.getLong(2)) ->
-                (if (r.isNullAt(3)) 0L else adcScaled9(r.getDouble(3))))
+              (r.getInt(1), r.getLong(2)) -> adcScaled9(r.getDouble(3)))
               .toMap
             (0 until m).map(sub =>
               subIds(sub).map(c => mine((sub, c)))).toArray

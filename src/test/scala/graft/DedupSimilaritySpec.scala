@@ -308,6 +308,32 @@ class DedupSimilaritySpec extends TestSparkSession {
       s"kmeans assigned $assignedN of ${mixed.count()} (degenerates dropped?)")
   }
 
+  test("pqTopK gives a null-embedding query the join regime's rows in a " +
+      "kernel-sized batch too") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val cb = Similarity.pqCodebook(emb, 64).localCheckpoint(eager = true)
+    val nullQuery = Seq(100000L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast(
+        emb.schema("embedding").dataType))
+    // queries × codebook rows past 65,536 forces the join regime
+    val few = emb.filter(col("vec_id") < 10).unionByName(nullQuery)
+    val many = emb.unionByName(nullQuery)
+    assert(many.count() * cb.count() > 65536)
+    def topK(q: org.apache.spark.sql.DataFrame) =
+      Similarity.pqTopK(emb, q, 64, 5, codebook = Some(cb))
+        .filter(col("q_id") < 10 || col("q_id") === 100000L)
+        .collect().map(_.toSeq).toSet
+    val join = topK(many)
+    // a small batch with a null lookup runs the join regime; without the
+    // null query it runs the ADC kernel
+    assert(topK(few) == join)
+    assert(topK(emb.filter(col("vec_id") < 10)) ==
+      join.filterNot(_.head == 100000L))
+    val nulls = join.filter(_.head == 100000L)
+    assert(nulls.size == 5 && nulls.forall(_(2) == null), nulls)
+  }
+
   test("int8 quantization: codes in range, round-half-away bound holds") {
     val emb = Tables.embeddings(spark, sfDir)
     val q = Similarity.quantizeInt8(emb)

@@ -132,31 +132,6 @@ class GraphRegimeSpec extends TestSparkSession {
     assert(comm(1L) !== comm(11L), s"rings merged: $comm")
   }
 
-  /** Jobs started while `build` runs (AQE submits each shuffle stage as
-    * a job of its own). */
-  private def jobsDuring(build: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // LiveListenerBus is private[spark]: drain it through reflection so
-    // every job event has been delivered before the count is read
-    def drain(): Unit = {
-      val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-      busM.setAccessible(true)
-      val bus = busM.invoke(spark.sparkContext)
-      val waitM = bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      waitM.setAccessible(true)
-      waitM.invoke(bus, java.lang.Long.valueOf(30000L))
-    }
-    drain()
-    spark.sparkContext.addSparkListener(listener)
-    try { build; drain(); jobs.get() }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("coactivityPagerank in the driver regime starts at most 5 jobs " +
       "at sf0.001, however many rounds it runs") {
     // the edge build's three shuffle stages and its checkpoint, then one

@@ -173,6 +173,7 @@ class Round11OpsSpec extends AnyFunSuite with TestSparkSession {
       "abcabcabcabcabcabcabcabcabc", // period-3 repeats inside a window
       "exactly-15-ch!!", // minimum legal length = k + w - 1
       "päällekkäisyys ja tõlgendus üle tekstide müü", // multi-byte UTF-8
+      "𝔘𝔫𝔦 😀 code 𠜎𠜱 points 🎉 past the BMP 𝔘𝔫𝔦 😀", // 4-byte UTF-8
       "z" + ("the quick brown fox jumps over the lazy dog" * 3)
     )
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }

@@ -28,6 +28,12 @@ class Round9OpsSpec extends TestSparkSession {
         Checkpoints.truncate(spark.range(3).toDF())
       }
       assert(e.getMessage.contains("setCheckpointDir"))
+      // both Lloyd loops cut their rounds through Checkpoints.truncate
+      val emb = Tables.embeddings(spark, sfDir)
+      for (lloyd <- Seq(() => Similarity.kmeansFit(emb, iters = 1),
+          () => Similarity.pqCodebook(emb, 64, iters = 1)))
+        assert(intercept[IllegalArgumentException](lloyd()).getMessage
+          .contains("setCheckpointDir"))
     } finally spark.conf.unset(Checkpoints.ReliableConf)
   }
 
