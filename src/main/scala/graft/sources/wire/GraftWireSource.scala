@@ -4,6 +4,7 @@ import java.io.{DataInputStream, EOFException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -29,26 +30,30 @@ import org.apache.spark.util.SerializableConfiguration
   * `(file, frame_idx, payload)` ready for the columnar decoders
   * ([[graft.sources.EventCodec]] / [[graft.sources.ProtocolRegistry]]).
   *
-  * Scale design: one [[InputPartition]] per frame file — files are the
-  * unit of parallelism exactly as connections are in the reference; a
-  * 1000-executor cluster reading a day of capture spreads files across
-  * executors with no coordination, and `estimateStatistics` reports the
-  * real byte size so Catalyst/AQE can cost joins against wire tables.
-  * Variable-length frames make BLIND byte-range splits unsafe (a split
-  * could land mid-frame), so a pathological single large file is split
-  * at EXACT frame boundaries instead: files larger than the
-  * `split.bytes` read option (default 128 MB, the
-  * `files.maxPartitionBytes` analog) get a planning-time header walk —
-  * header-only IO, `seek` past every payload, only for oversized files
-  * — that emits one partition per ~`split.bytes` of frames, each with
-  * its exact (startOffset, startFrameIdx, endOffset). The normal
-  * rotated-capture layout pays zero planning overhead; the walk is the
-  * escape hatch, not the primary path (capture should rotate files).
+  * Scale design: files are the unit of parallelism, as connections are
+  * in the reference, but a scan task costs far more than a small capture
+  * file, so one planner ([[GraftWireTable.planPartitions]]) serves the
+  * batch scan and every micro-batch the way Spark's `FilePartition`
+  * serves its file sources. A file longer than the `split.bytes` read
+  * option (default 128 MB, the `files.maxPartitionBytes` analog) is cut
+  * at EXACT frame boundaries by a planning-time header walk
+  * ([[GraftWireTable.planFile]]: header-only IO, `seek` past every
+  * payload), one partition per ~`split.bytes` of frames; variable-length
+  * frames make blind byte-range splits unsafe. Every other file is packed
+  * whole, largest first, next-fit, under Spark's `maxSplitBytes` rule:
+  * each file costs its length plus `spark.sql.files.openCostInBytes`, and
+  * a partition holds up to the total cost over
+  * `spark.sql.files.minPartitionNum` (else the default parallelism),
+  * capped at `split.bytes` and at least the open cost. A 40-file trigger
+  * of small files is then one task per core, not 40. A partition is an
+  * ordered list of frame ranges that one reader walks in turn, so every
+  * row keeps its own `file` and `frame_idx`. `estimateStatistics` reports
+  * the real byte size so Catalyst/AQE can cost joins against wire tables.
   * Column pruning is pushed into the reader: a `count(*)` or
   * metadata-only query skips payload materialization per frame. Each
   * scan and each write reads through the session's Hadoop conf, taken
-  * once on the driver and shipped to the tasks with their reader or
-  * writer factory, never built per file.
+  * once on the driver and broadcast once per scan, stream or write, so an
+  * executor deserializes it once rather than once per task.
   */
 class GraftWireSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-wire"
@@ -72,23 +77,22 @@ object GraftWireTable {
     * `spark.sql.files.maxPartitionBytes` analog. */
   val DefaultSplitBytes: Long = 128L * 1024 * 1024
 
-  /** Partition plan for one frame file. Files at or under `splitBytes`
-    * are one partition with no IO at all (the rotated-capture fast
-    * path). An oversized file gets a header walk: read each 4-byte
-    * length, `seek` past the payload — so planning IO is headers only —
-    * and cut a partition at the first frame boundary past every
-    * `splitBytes` of accumulated frames. Cuts carry the exact byte
-    * offset AND frame index, so split readers produce bit-identical
-    * (file, frame_idx, payload) rows to the unsplit reader. A truncated
-    * tail header/payload ends the walk early exactly as the reader
-    * stops early — split planning never makes corrupt data fatal. */
+  /** Frame ranges of one file. A file at or under `splitBytes` is one
+    * range with no IO at all (the rotated-capture fast path). An
+    * oversized file gets a header walk: read each 4-byte length, `seek`
+    * past the payload — so planning IO is headers only — and cut a range
+    * at the first frame boundary past every `splitBytes` of accumulated
+    * frames. Cuts carry the exact byte offset AND frame index, so split
+    * readers produce bit-identical (file, frame_idx, payload) rows to the
+    * unsplit reader. A truncated tail header/payload ends the walk early
+    * exactly as the reader stops early — split planning never makes
+    * corrupt data fatal. */
   def planFile(file: String, splitBytes: Long,
-      conf: Configuration = new Configuration()): Seq[GraftWirePartition] = {
+      conf: Configuration = new Configuration()): Seq[GraftWireRange] = {
     val p = new Path(file)
     val fs = p.getFileSystem(conf)
     val total = fs.getFileStatus(p).getLen
-    if (total <= splitBytes)
-      return Seq(GraftWirePartition(file, 0L, 0L, Long.MaxValue))
+    if (total <= splitBytes) return Seq(GraftWireRange.whole(file))
     val in = fs.open(p)
     try {
       val hdr = new Array[Byte](4)
@@ -115,11 +119,46 @@ object GraftWireTable {
       }
       cuts.zipAll(cuts.drop(1).map(c => Some(c)), (0L, 0L), None).map {
         case ((off, fidx), Some((endOff, _))) =>
-          GraftWirePartition(file, off, fidx, endOff)
+          GraftWireRange(file, off, fidx, endOff)
         case ((off, fidx), None) =>
-          GraftWirePartition(file, off, fidx, Long.MaxValue)
+          GraftWireRange(file, off, fidx, Long.MaxValue)
       }.toSeq
     } finally in.close()
+  }
+
+  /** The scan partitions over `files`, for a batch scan or one
+    * micro-batch. Each file longer than `splitBytes` is split at frame
+    * boundaries by [[planFile]], one partition per range. The other
+    * files are packed whole, largest first, next-fit, under Spark's
+    * `FilePartition` rule: a file costs its length plus `openCostBytes`,
+    * and a partition is closed before a file whose length would take it
+    * past `min(splitBytes, max(openCostBytes, total cost /
+    * minPartitions))`. */
+  def planPartitions(files: Seq[String], splitBytes: Long,
+      openCostBytes: Long, minPartitions: Int,
+      conf: Configuration): Seq[GraftWirePartition] = {
+    val sized = files.map { f =>
+      val p = new Path(f)
+      (f, p.getFileSystem(conf).getFileStatus(p).getLen)
+    }
+    val (large, small) = sized.partition(_._2 > splitBytes)
+    val maxSplitBytes = math.min(splitBytes, math.max(openCostBytes,
+      sized.map(_._2 + openCostBytes).sum / math.max(minPartitions, 1)))
+    val packed = scala.collection.mutable.ArrayBuffer.empty[GraftWirePartition]
+    var ranges = Vector.empty[GraftWireRange]
+    var cost = 0L
+    small.sortBy(-_._2).foreach { case (f, len) =>
+      if (ranges.nonEmpty && cost + len > maxSplitBytes) {
+        packed += GraftWirePartition(ranges)
+        ranges = Vector.empty
+        cost = 0L
+      }
+      ranges :+= GraftWireRange.whole(f)
+      cost += len + openCostBytes
+    }
+    if (ranges.nonEmpty) packed += GraftWirePartition(ranges)
+    large.flatMap { case (f, _) => planFile(f, splitBytes, conf) }
+      .map(r => GraftWirePartition(Seq(r))) ++ packed
   }
 
   /** Frame files under `path` — a directory, a single file, or a glob
@@ -141,9 +180,11 @@ object GraftWireTable {
     }.sorted
   }
 
-  /** The active session's Hadoop conf, for one scan or write. */
-  private[wire] def sessionConf(): SerializableConfiguration =
-    new SerializableConfiguration(GraftBridge.hadoopConf(SparkSession.active))
+  /** `conf` broadcast for the tasks of one scan, stream or write: each
+    * executor deserializes it once, not once per task. */
+  private[wire] def broadcastConf(spark: SparkSession,
+      conf: Configuration): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(conf))
 }
 
 class GraftWireTable(path: String) extends Table
@@ -159,16 +200,16 @@ class GraftWireTable(path: String) extends Table
       options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftWireScanBuilder(path,
       options.getLong("split.bytes", GraftWireTable.DefaultSplitBytes),
-      GraftWireTable.sessionConf())
+      SparkSession.active)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new GraftWireWriteBuilder(path, info.schema(), info.queryId(),
-      GraftWireTable.sessionConf())
+      SparkSession.active)
 }
 
 class GraftWireScanBuilder(path: String, splitBytes: Long,
-    conf: SerializableConfiguration)
+    spark: SparkSession)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = GraftWireTable.Schema
 
@@ -176,12 +217,16 @@ class GraftWireScanBuilder(path: String, splitBytes: Long,
     required = requiredSchema
 
   override def build(): Scan =
-    new GraftWireScan(path, required, splitBytes, conf)
+    new GraftWireScan(path, required, splitBytes, spark)
 }
 
 class GraftWireScan(path: String, required: StructType, splitBytes: Long,
-    conf: SerializableConfiguration)
+    spark: SparkSession)
     extends Scan with Batch with SupportsReportStatistics {
+  // the session's Hadoop conf and packing rule, read once on the driver
+  private val conf: Configuration = GraftBridge.hadoopConf(spark)
+  private val (openCostBytes, minPartitions) = GraftBridge.filePacking(spark)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -190,9 +235,8 @@ class GraftWireScan(path: String, required: StructType, splitBytes: Long,
     * small capture against a large history table. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes: Long = {
-      val files = GraftWireTable.listFrameFiles(path, conf.value)
-      val fs = new Path(path).getFileSystem(conf.value)
-      files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+      val fs = new Path(path).getFileSystem(conf)
+      listFiles().map(f => fs.getFileStatus(new Path(f)).getLen).sum
     }
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(bytes)
@@ -202,17 +246,27 @@ class GraftWireScan(path: String, required: StructType, splitBytes: Long,
   override def description(): String =
     s"GraftWireScan(path=$path, columns=${required.fieldNames.mkString(",")})"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    GraftWireTable.listFrameFiles(path, conf.value)
-      .flatMap(f => GraftWireTable.planFile(f, splitBytes, conf.value))
-      .map(p => p: InputPartition).toArray
+  private[wire] def listFiles(): Seq[String] =
+    GraftWireTable.listFrameFiles(path, conf)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftWireReaderFactory(required, conf)
+  private[wire] def plan(files: Seq[String]): Array[InputPartition] =
+    GraftWireTable.planPartitions(files, splitBytes, openCostBytes,
+      minPartitions, conf).toArray
+
+  override def planInputPartitions(): Array[InputPartition] =
+    plan(listFiles())
+
+  /** One reader factory, and so one conf broadcast, per scan: a stream
+    * reuses it for every micro-batch. */
+  private lazy val readerFactory =
+    new GraftWireReaderFactory(required,
+      GraftWireTable.broadcastConf(spark, conf))
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def toMicroBatchStream(
       checkpointLocation: String): streaming.MicroBatchStream =
-    new GraftWireMicroBatchStream(path, required, conf)
+    new GraftWireMicroBatchStream(this)
 }
 
 /** Streaming offset: the sorted set of frame files fully ingested so far.
@@ -237,14 +291,13 @@ object GraftWireOffset {
 
 /** Micro-batch stream over a growing directory of frame files: each
   * trigger ingests the files that appeared since the last committed
-  * offset, one [[InputPartition]] per new file (same partition/reader as
-  * the batch path — identical decode semantics, proven by the
-  * availableNow parity spec). */
-class GraftWireMicroBatchStream(path: String, required: StructType,
-    conf: SerializableConfiguration)
+  * offset, planned and read exactly as the batch scan plans and reads
+  * them (identical decode semantics, proven by the availableNow parity
+  * spec). */
+class GraftWireMicroBatchStream(scan: GraftWireScan)
     extends streaming.MicroBatchStream {
   override def latestOffset(): streaming.Offset =
-    GraftWireOffset(GraftWireTable.listFrameFiles(path, conf.value))
+    GraftWireOffset(scan.listFiles())
 
   override def initialOffset(): streaming.Offset = GraftWireOffset(Seq())
 
@@ -258,84 +311,104 @@ class GraftWireMicroBatchStream(path: String, required: StructType,
   override def planInputPartitions(
       start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[GraftWireOffset].files.toSet
-    // streaming stays one-partition-per-file: capture files arrive whole
-    // and rotated, so no trigger ever sees an oversized backlog file
-    end.asInstanceOf[GraftWireOffset].files
-      .filterNot(seen)
-      .map(f => GraftWirePartition(f, 0L, 0L, Long.MaxValue): InputPartition)
-      .toArray
+    scan.plan(end.asInstanceOf[GraftWireOffset].files.filterNot(seen))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftWireReaderFactory(required, conf)
+    scan.createReaderFactory()
 }
 
-/** One frame-aligned byte range of one file: frames whose HEADER starts
-  * in [startOffset, endOffset). Unsplit files use (0, 0, MaxValue). */
-case class GraftWirePartition(file: String, startOffset: Long,
-    startFrameIdx: Long, endOffset: Long) extends InputPartition
+/** Frames of one file whose HEADER starts in [startOffset, endOffset),
+  * the first of them numbered `startFrameIdx`. */
+case class GraftWireRange(file: String, startOffset: Long,
+    startFrameIdx: Long, endOffset: Long)
+
+object GraftWireRange {
+  def whole(file: String): GraftWireRange =
+    GraftWireRange(file, 0L, 0L, Long.MaxValue)
+}
+
+/** One scan task's input: frame ranges read in order by one reader. */
+case class GraftWirePartition(ranges: Seq[GraftWireRange])
+    extends InputPartition
 
 class GraftWireReaderFactory(required: StructType,
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftWirePartition]
-    new GraftWireFrameReader(p, required, conf.value)
-  }
+      partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftWireFrameReader(partition.asInstanceOf[GraftWirePartition],
+      required, conf.value.value)
 }
 
-/** Sequential frame reader: `[u32 LE length][payload]`*; a trailing
-  * truncated frame ends the file early instead of failing the task
-  * (untrusted capture data must never fail the job — the reference
-  * length-checks every wire read the same way). */
+/** Sequential frame reader over a partition's ranges:
+  * `[u32 LE length][payload]`* in each. A truncated or corrupt frame — a
+  * header cut short, or a length past the end of the file — ends that
+  * file early instead of failing the task, and the reader goes on with
+  * the next range (untrusted capture data must never fail the job — the
+  * reference length-checks every wire read the same way). */
 class GraftWireFrameReader(part: GraftWirePartition, required: StructType,
     conf: Configuration = new Configuration())
     extends PartitionReader[InternalRow] {
-  private val file = part.file
   // the table column (0 file, 1 frame_idx, 2 payload) behind each
   // required ordinal, resolved once per partition
   private val columns: Array[Int] =
     required.fieldNames.map(GraftWireTable.Schema.fieldIndex)
-  private val fileUtf8 = UTF8String.fromString(file)
-  private val path = new Path(file)
-  private val in: DataInputStream = {
+  private val ranges = part.ranges.iterator
+  private var range: GraftWireRange = _
+  private var fileUtf8: UTF8String = _
+  private var in: DataInputStream = _
+  private var fileLen = 0L
+  // byte position of the NEXT frame header; a frame belongs to the
+  // range iff its header starts before endOffset
+  private var pos = 0L
+  private var idx = 0L
+  private var current: Array[Byte] = _
+
+  /** Close the current range and open the next; false when none is
+    * left. */
+  private def openNext(): Boolean = {
+    close()
+    if (!ranges.hasNext) return false
+    range = ranges.next()
+    val path = new Path(range.file)
     val fs = path.getFileSystem(conf)
     // frames carry their own length guards; hadoop checksum sidecars would
     // make out-of-band capture appends unreadable
     fs.setVerifyChecksum(false)
+    fileLen = fs.getFileStatus(path).getLen
     val raw = fs.open(path)
-    if (part.startOffset > 0) raw.seek(part.startOffset)
-    new DataInputStream(new java.io.BufferedInputStream(raw))
+    if (range.startOffset > 0) raw.seek(range.startOffset)
+    in = new DataInputStream(new java.io.BufferedInputStream(raw))
+    fileUtf8 = UTF8String.fromString(range.file)
+    pos = range.startOffset
+    idx = range.startFrameIdx - 1L
+    true
   }
-  // byte position of the NEXT frame header; a frame belongs to this
-  // partition iff its header starts before endOffset
-  private var pos = part.startOffset
-  private var idx = part.startFrameIdx - 1L
-  private var current: Array[Byte] = _
-  private var done = false
 
-  private def readLenLE(): Int = {
-    val b0 = in.read(); val b1 = in.read(); val b2 = in.read()
-    val b3 = in.read()
-    if (b0 < 0) throw new EOFException() // clean end between frames
-    if (b3 < 0) { done = true; -1 } // truncated header: stop early
-    else b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-  }
+  /** The current range's next frame; false at its end. The length is
+    * checked against the file before its buffer is allocated. */
+  private def nextFrame(): Boolean =
+    try {
+      if (pos >= range.endOffset || pos + 4 > fileLen) false
+      else {
+        val len = Integer.reverseBytes(in.readInt())
+        if (len < 0 || pos + 4 + len > fileLen) false
+        else {
+          val buf = new Array[Byte](len)
+          in.readFully(buf)
+          current = buf
+          pos += 4L + len
+          idx += 1
+          true
+        }
+      }
+    } catch { case _: EOFException => false } // the file shrank
 
   override def next(): Boolean = {
-    if (done || pos >= part.endOffset) return false
-    try {
-      val len = readLenLE()
-      if (len < 0) return false
-      val buf = new Array[Byte](len)
-      try in.readFully(buf)
-      catch { case _: EOFException => done = true; return false }
-      current = buf
-      pos += 4L + len
-      idx += 1
-      true
-    } catch { case _: EOFException => done = true; false }
+    var more = in != null && nextFrame()
+    while (!more && openNext()) more = nextFrame()
+    more
   }
 
   override def get(): InternalRow = {
@@ -352,7 +425,8 @@ class GraftWireFrameReader(part: GraftWirePartition, required: StructType,
     row
   }
 
-  override def close(): Unit = in.close()
+  override def close(): Unit =
+    if (in != null) { in.close(); in = null }
 }
 
 /** D13: the capture-side writer (the only one) as a DSv2 batch write
@@ -368,7 +442,7 @@ class GraftWireFrameReader(part: GraftWirePartition, required: StructType,
   * frame file visible. `file`/`frame_idx` are storage-assigned on read
   * and ignored on write (metadata columns). */
 class GraftWireWriteBuilder(path: String, schema: StructType,
-    queryId: String, conf: SerializableConfiguration)
+    queryId: String, spark: SparkSession)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
   import org.apache.spark.sql.connector.write._
@@ -377,7 +451,7 @@ class GraftWireWriteBuilder(path: String, schema: StructType,
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
       new GraftWireBatchWrite(path, doTruncate,
-        schema.fieldIndex("payload"), queryId, conf)
+        schema.fieldIndex("payload"), queryId, spark)
   }
 }
 
@@ -385,17 +459,19 @@ case class GraftWireCommit(tmpPath: String, finalName: String)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
-    queryId: String, conf: SerializableConfiguration)
+    queryId: String, spark: SparkSession)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
+  private val conf = GraftBridge.hadoopConf(spark)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWireWriterFactory(path, payloadIdx, queryId, conf)
+    new GraftWireWriterFactory(path, payloadIdx, queryId,
+      GraftWireTable.broadcastConf(spark, conf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dirPath = new Path(path)
-    val fs = dirPath.getFileSystem(conf.value)
+    val fs = dirPath.getFileSystem(conf)
     fs.mkdirs(dirPath)
     if (truncate)
       fs.listStatus(dirPath).filter(_.isFile)
@@ -409,7 +485,7 @@ class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf)
     messages.filter(_ != null).foreach {
       case GraftWireCommit(tmp, _) =>
         fs.delete(new Path(tmp), false)
@@ -419,12 +495,12 @@ class GraftWireBatchWrite(path: String, truncate: Boolean, payloadIdx: Int,
 }
 
 class GraftWireWriterFactory(path: String, payloadIdx: Int, queryId: String,
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new GraftWireDataWriter(path, payloadIdx, queryId, partitionId, taskId,
-      conf.value)
+      conf.value.value)
 }
 
 /** Streams `[u32 LE length][payload]` frames to a `.tmp`-suffixed temp

@@ -163,8 +163,10 @@ object EventStreamPipelines {
   }
 
   /** A16: watermarked streaming dedup on the event signature — the
-    * streaming analog of the reference's signature cache. State is bounded
-    * by the watermark horizon. */
+    * streaming analog of the reference's signature cache. State is
+    * unbounded: `dropDuplicates` evicts by the watermark only when its key
+    * holds the watermarked column, and `event_id` does not hold `ts`, so
+    * every signature ever seen stays in state (ROADMAP item 5). */
   def dedupStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events
       .withWatermark("ts", watermark)

@@ -46,6 +46,18 @@ object GraftBridge {
   def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConf()
 
+  /** The cost per opened file and the target partition count that
+    * Spark's file sources pack small files under, as
+    * `FilePartition.maxSplitBytes` reads them:
+    * `spark.sql.files.openCostInBytes`, and
+    * `spark.sql.files.minPartitionNum`, else the default parallelism. */
+  def filePacking(spark: SparkSession): (Long, Int) = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val c = s.sessionState.conf
+    (c.filesOpenCostInBytes,
+      c.filesMinPartitionNum.getOrElse(s.leafNodeDefaultParallelism))
+  }
+
   /** Post-hoc strategy registration for sessions created without
     * `spark.sql.extensions` (the public experimental-methods hook). */
   def addStrategy(spark: SparkSession,

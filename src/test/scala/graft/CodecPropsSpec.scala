@@ -56,32 +56,41 @@ class CodecPropsSpec extends AnyFunSuite {
   }
 
   test("wire frame files round-trip arbitrary payload lists") {
-    import graft.sources.wire.{GraftWireFrameReader, GraftWireTable}
+    import graft.sources.wire.{GraftWireFrameReader, GraftWirePartition,
+      GraftWireRange, GraftWireTable}
     val payloads = Gen.choose(0, 20).flatMap(n =>
       Gen.listOfN(n, Gen.choose(0, 200).flatMap(m =>
         Gen.containerOfN[Array, Byte](m, Gen.choose(
           Byte.MinValue, Byte.MaxValue)))))
+    // what may follow the last whole frame: nothing, a header cut short,
+    // a payload cut short, or a header whose length runs past the end of
+    // the file (0x7FFFFFFF bytes); each ends the file after the last
+    // whole frame
+    val tails = Seq(Array.emptyByteArray, Array[Byte](50, 0),
+      Array[Byte](50, 0, 0, 0, 1, 2, 3), Array[Byte](-1, -1, -1, 127, 9))
     check(Prop.forAll(payloads) { ps =>
-      val f = java.io.File.createTempFile("graft_prop", ".bin")
-      try {
-        val out = new java.io.FileOutputStream(f)
-        ps.foreach { p =>
-          out.write(Array[Byte](
-            (p.length & 0xff).toByte, ((p.length >> 8) & 0xff).toByte,
-            ((p.length >> 16) & 0xff).toByte,
-            ((p.length >> 24) & 0xff).toByte))
-          out.write(p)
-        }
-        out.close()
-        val r = new GraftWireFrameReader(
-          graft.sources.wire.GraftWirePartition(
-            f.getAbsolutePath, 0L, 0L, Long.MaxValue),
-          GraftWireTable.Schema)
-        val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Byte]]
-        while (r.next()) got += r.get().getBinary(2).toSeq
-        r.close()
-        got.toSeq == ps.map(_.toSeq)
-      } finally f.delete()
+      tails.forall { tail =>
+        val f = java.io.File.createTempFile("graft_prop", ".bin")
+        try {
+          val out = new java.io.FileOutputStream(f)
+          ps.foreach { p =>
+            out.write(Array[Byte](
+              (p.length & 0xff).toByte, ((p.length >> 8) & 0xff).toByte,
+              ((p.length >> 16) & 0xff).toByte,
+              ((p.length >> 24) & 0xff).toByte))
+            out.write(p)
+          }
+          out.write(tail)
+          out.close()
+          val r = new GraftWireFrameReader(
+            GraftWirePartition(Seq(GraftWireRange.whole(f.getAbsolutePath))),
+            GraftWireTable.Schema)
+          val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Byte]]
+          while (r.next()) got += r.get().getBinary(2).toSeq
+          r.close()
+          got.toSeq == ps.map(_.toSeq)
+        } finally f.delete()
+      }
     }, n = 100)
   }
 

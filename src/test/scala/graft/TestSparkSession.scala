@@ -13,14 +13,37 @@ trait TestSparkSession extends AnyFunSuite with BeforeAndAfterAll {
     * submits each shuffle stage as a job of its own). */
   def jobSitesDuring(build: => Unit): Seq[String] = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
+    listening(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         sites.add(j.stageInfos.sortBy(_.stageId).lastOption
           .fold("")(_.name)) // the result stage is named for the call site
-    }
+    })(build)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(sites.iterator())
+      .asScala.toSeq
+  }
+
+  /** The number of jobs started while `build` runs. */
+  def jobsDuring(build: => Unit): Int = jobSitesDuring(build).size
+
+  /** The number of tasks that ended while `build` runs. */
+  def tasksDuring(build: => Unit): Int = {
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    })(build)
+    tasks.get
+  }
+
+  /** Runs `build` with `listener` attached, the listener bus drained
+    * before and after, so `listener` sees every event of `build` and
+    * none from before it. */
+  private def listening(listener: org.apache.spark.scheduler.SparkListener)(
+      build: => Unit): Unit = {
     // LiveListenerBus is private[spark]: drain it through reflection so
-    // every job event has been delivered before the sites are read
+    // every event has been delivered before the listener is read
     def drain(): Unit = {
       val busM = spark.sparkContext.getClass.getMethod("listenerBus")
       busM.setAccessible(true)
@@ -31,15 +54,9 @@ trait TestSparkSession extends AnyFunSuite with BeforeAndAfterAll {
     }
     drain()
     spark.sparkContext.addSparkListener(listener)
-    try {
-      build; drain()
-      scala.jdk.CollectionConverters.IteratorHasAsScala(sites.iterator())
-        .asScala.toSeq
-    } finally spark.sparkContext.removeSparkListener(listener)
+    try { build; drain() }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
-
-  /** The number of jobs started while `build` runs. */
-  def jobsDuring(build: => Unit): Int = jobSitesDuring(build).size
 }
 
 object TestSparkSession {
